@@ -34,7 +34,11 @@ import traceback  # noqa: E402
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKLOAD_NAMES = ("rag_ingest", "query_mix")
 DRIVER_MEMORY = "2g"
-MIN_OPS = 1  # measured operations per run, even past --seconds
+MIN_OPS = 1  # untraced operations per run, even past --seconds
+# a traced run measures at least untraced, traced, untraced: the traced
+# operation sits between two untraced ones, so a steady drift (JIT
+# warm-up, growing state) cancels out of trace.overhead_s
+MIN_OPS_TRACED = 2
 MAX_OPS = 6  # operations per run, warm-up included, even before --seconds
 
 # (name, unit) of the end-to-end metrics every workload reports in its
@@ -184,6 +188,14 @@ class Session:
                 proc.wait(timeout=30)
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of the host since boot: time other guests
+    of the hypervisor took from this machine's CPUs."""
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:9]]
+    return v[7], sum(v)
+
+
 def median(values: list[float]) -> float:
     return statistics.median(values) if values else 0.0
 
@@ -207,7 +219,6 @@ def run_workload(args) -> int:
     wl = None
     try:
         # set-up: process start to a live session with the registry loaded
-        # (one cold JVM start: each costs about 6 s of the run's budget)
         session_s = session.start()
         setup_s = time.perf_counter() - T_PROCESS
         spark = session.spark
@@ -227,7 +238,6 @@ def run_workload(args) -> int:
         def attempt(i: int, traced: bool):
             nonlocal attempted, failed
             attempted += 1
-            start = time.time()
             try:
                 op = wl.op(i, tracer if traced else None) if i else wl.warm_up()
             except Exception:
@@ -242,17 +252,19 @@ def run_workload(args) -> int:
                 print(f"perfbench: operation {i} failed its checks: {op.problems}",
                       file=sys.stderr)
             if traced:
-                op.layers.update(tracer.engine_counters(i, start, time.time()))
+                op.layers.update(tracer.engine_counters(i))
             return op
 
+        ticks = cpu_ticks()
         with RssSampler(session.jvm_pid()) as rss:
             warmup_s = time.perf_counter()
             attempt(0, traced=False)
             warmup_s = time.perf_counter() - warmup_s
             deadline = time.perf_counter() + args.seconds
             i = 1
+            min_ops = MIN_OPS_TRACED if args.trace else MIN_OPS
             while attempted < MAX_OPS and not wl.exhausted:
-                if (time.perf_counter() >= deadline and len(walls) >= MIN_OPS
+                if (time.perf_counter() >= deadline and len(walls) >= min_ops
                         and (traced_walls or not args.trace)):
                     break
                 traced = bool(args.trace) and i % 2 == 0
@@ -264,6 +276,7 @@ def run_workload(args) -> int:
                     for k, v in op.layers.items():
                         layers.setdefault(k, []).append(v)
                 i += 1
+        steal, total = (b - a for a, b in zip(ticks, cpu_ticks()))
         extra = wl.summary()
     except Exception:
         traceback.print_exc(file=sys.stderr)
@@ -281,6 +294,9 @@ def run_workload(args) -> int:
         "failed_frac": (failed / attempted if attempted else 1.0, "ratio", attempted),
         "prepare_s": (prepare_s, "s", 1),
         "warmup_s": (warmup_s, "s", 1),
+        # share of the host's CPU time that other guests took while this
+        # run warmed up and measured: high values explain slow runs
+        "host_steal_frac": (steal / total if total else 0.0, "ratio", 1),
     }
     if "batch_commit_s" in samples:
         c = samples["batch_commit_s"]
@@ -305,6 +321,8 @@ def run_workload(args) -> int:
         per_layer = {name: median(layers.get(name, [])) for name, _ in PER_LAYER}
         per_layer["session.start_s"] = session_s
         per_layer["trace.overhead_s"] = median(traced_walls) - median(walls)
+        print(f"# trace.overhead_s compares {len(traced_walls)} traced with "
+              f"{len(walls)} untraced operations")
         for name, unit in PER_LAYER:
             print(f"# {name:<40} {per_layer[name]:>14.6g} {unit:<6} "
                   f"{len(layers.get(name, traced_walls)):>4}")

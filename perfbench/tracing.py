@@ -44,9 +44,11 @@ class Tracer:
         self._n = 0
 
     @contextlib.contextmanager
-    def span(self, name: str, op: int):
+    def span(self, name: str, op: int, measured: bool = True):
         """Time one layer call; its Spark jobs run under their own group.
-        Spans do not nest."""
+        Spans do not nest. A span with `measured=False` times a layer
+        outside the operation's measured region: it has a self time but
+        stays out of the engine counters."""
         group = f"perfbench/{op}/{self._n}/{name}"
         self._n += 1
         self.sc.setJobGroup(group, name)
@@ -57,14 +59,14 @@ class Tracer:
             end = time.time()
             self.sc.setLocalProperty("spark.jobGroup.id", None)
             self.sc.setLocalProperty("spark.job.description", None)
-            self.spans.append(
-                {"name": name, "op": op, "group": group, "start": start, "end": end}
-            )
+            self.add_span(name, op, start, end, group, measured)
 
-    def add_span(self, name: str, op: int, start: float, end: float, group: str) -> None:
+    def add_span(self, name: str, op: int, start: float, end: float, group: str,
+                 measured: bool = True) -> None:
         """Record a span timed elsewhere (a streaming trigger, whose jobs
         run under the query's run id as their group)."""
-        self.spans.append({"name": name, "op": op, "group": group, "start": start, "end": end})
+        self.spans.append({"name": name, "op": op, "group": group, "start": start,
+                           "end": end, "measured": measured})
 
     def op_spans(self, op: int) -> list[dict]:
         return [s for s in self.spans if s["op"] == op]
@@ -133,11 +135,14 @@ class Tracer:
         times = [t for t in times if t is not None]
         return min(times) if times else None
 
-    def engine_counters(self, op: int, start: float, end: float) -> dict:
-        """Engine counters over every job the op's spans ran."""
-        groups = sorted({s["group"] for s in self.op_spans(op) if s["group"]})
-        n_jobs, stages = self._stages(groups)
-        wall = end - start
+    def engine_counters(self, op: int) -> dict:
+        """Engine counters over every job the op's measured spans ran.
+        Wall time is the union of those spans, so the benchmark's own
+        checks between them count neither as wall nor as driver gap."""
+        spans = [s for s in self.op_spans(op) if s["measured"]]
+        n_jobs, stages = self._stages(sorted({s["group"] for s in spans}))
+        wall = _union_length([(s["start"], s["end"]) for s in spans])
+        start, end = min(s["start"] for s in spans), max(s["end"] for s in spans)
         busy = _union_length([
             (max(s["start"], start), min(s["end"], end))
             for s in stages
@@ -202,12 +207,14 @@ def tree_rss_bytes(root: int) -> int:
     return total
 
 
+RSS_INTERVAL_S = 0.5  # seconds between two samples of the process tree
+
+
 class RssSampler:
     """Samples the resident memory of a process tree on a thread."""
 
-    def __init__(self, root_pid: int, interval_s: float = 0.5):
+    def __init__(self, root_pid: int):
         self.root_pid = root_pid
-        self.interval_s = interval_s
         self.peak = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -215,7 +222,7 @@ class RssSampler:
     def _run(self) -> None:
         while True:
             self.peak = max(self.peak, tree_rss_bytes(self.root_pid))
-            if self._stop.wait(self.interval_s):
+            if self._stop.wait(RSS_INTERVAL_S):
                 return
 
     def __enter__(self) -> RssSampler:

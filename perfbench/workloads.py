@@ -397,53 +397,36 @@ QUERIES = (
 LIFECYCLE = ("q_pretraining_prep_checksum", "q_substring_dedup")
 
 
-def _md5_shard(col: str = "doc_id"):
-    """The md5-prefix pack shard of q_pretraining_prep_checksum."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10).cast("long"),
-        F.lit(32),
-    )
-
-
-def _packed_checksum(packed):
-    """Per-shard (n_docs, n_seqs, tok_sum, xor_sig): the reduction
-    q_pretraining_prep_checksum returns."""
-    from rag_pipelines_spark.queries._util import md5_long_digest
-
-    seq_id = F.expr("seq_start div 512")
-    return packed.groupBy("pack_shard").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct(seq_id).cast("long").alias("n_seqs"),
-        F.sum("n_tokens").alias("tok_sum"),
-        F.bit_xor(
-            md5_long_digest(F.col("doc_id"), F.col("n_tokens"), F.col("seq_start"), seq_id)
-        ).alias("xor_sig"),
-    )
-
-
 class QueryMix(Workload):
     """One pass over ten registered queries, each result collected and
-    compared with its DuckDB oracle. A traced pass runs the lifecycle
-    query's plan (`pretraining_prep_pipeline` with its stages persisted)
-    layer by layer instead, with the same result and oracle."""
+    compared with its DuckDB oracle. A traced pass runs the same queries,
+    each under a span, then, outside the measured pass, times the
+    pretraining pipeline's layers one by one (`pretraining_prep_pipeline`
+    with its stages persisted, its default)."""
 
     name = "query_mix"
     SCALE = 0.01  # x sf1 row counts (sf1 lineitem ~6M rows)
     DOCS = 2_500
+
+    def __init__(self, ctx: Ctx):
+        super().__init__(ctx)
+        # warm-up queries and the DuckDB oracle, all outside any timed region
+        self._pool = ThreadPoolExecutor(max_workers=5)
 
     def prepare(self) -> dict:
         from rag_pipelines_spark.registry import load_all
 
         spark = self.ctx.spark
         self.data = os.path.join(self.ctx.work, "data")
-        rows = gen.relational_tables(spark, self.ctx.seed, self.data, self.SCALE)
         self.facts = gen.corpus_docs(spark, self.ctx.seed, self.data, self.DOCS)
         reg = load_all()
         self.queries = {n: reg[n] for n in QUERIES + LIFECYCLE}
-        # oracle hashes, computed in DuckDB on a thread while the warm-up
-        # pass runs (outside any timed region); the first check waits
-        self._oracle = ThreadPoolExecutor(max_workers=1)
-        self.oracle = self._oracle.submit(self._oracle_hashes)
+        # the two corpus queries, the slowest to warm up, start while the
+        # relational tables are written
+        self._warm = {n: self._pool.submit(self._result_hash, self.queries[n]) for n in LIFECYCLE}
+        rows = gen.relational_tables(spark, self.ctx.seed, self.data, self.SCALE)
+        # the oracle hashes; the first check waits for them
+        self.oracle = self._pool.submit(self._oracle_hashes)
         self.docs = spark.read.parquet(os.path.join(self.data, "documents.parquet"))
         return {"scale": self.SCALE, "rows": rows | {"documents": self.facts["docs"]},
                 "planted": self.facts["roles"]}
@@ -459,43 +442,40 @@ class QueryMix(Workload):
             con.close()
 
     def close(self) -> None:
-        self._oracle.shutdown(wait=True)
+        self._pool.shutdown(wait=True, cancel_futures=True)
+
+    def _result_hash(self, q):
+        return vhash(q.fn(self.ctx.spark, self.data).toPandas())
 
     def warm_up(self) -> Op:
-        """Every query once, four at a time: the same plans compile and
-        warm the JVM as in a serial pass, in about half the wall time."""
+        """Every query once, several at a time on the pool: the same plans
+        compile and warm the JVM as in a serial pass, in about half the
+        wall time. The corpus queries started during `prepare`."""
         t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = {
-                n: pool.submit(lambda q=q: vhash(q.fn(self.ctx.spark, self.data).toPandas()))
-                for n, q in self.queries.items()
-            }
-            got = {n: f.result() for n, f in futures.items()}
+        warm = self._warm | {
+            n: self._pool.submit(self._result_hash, q)
+            for n, q in self.queries.items() if n not in self._warm
+        }
+        got = {n: f.result() for n, f in warm.items()}
         oracle = self.oracle.result()
         problems = [f"{n}: hash differs from the oracle" for n, h in got.items() if h != oracle[n]]
         return Op(time.perf_counter() - t0, problems)
 
     def op(self, i: int, tr) -> Op:
-        lat, problems, layers, calls, got = {}, [], {}, {}, {}
+        lat, calls, got = {}, {}, {}
         for name, q in self.queries.items():
-            if tr is not None and name == "q_pretraining_prep_checksum":
-                t0 = time.perf_counter()
-                pdf, counts = self._lifecycle_layers(i, tr)
-                lat[name] = time.perf_counter() - t0
-                problems += self._check_stages(counts)
-                layers.update(self._counters(i, tr, counts))
-            else:
-                with _span(tr, f"queries.{name}", i):
-                    calls[name] = time.time()
-                    pdf, lat[name] = _timed(lambda q=q: q.fn(self.ctx.spark, self.data).toPandas())
+            with _span(tr, f"queries.{name}", i):
+                calls[name] = time.time()
+                pdf, lat[name] = _timed(lambda q=q: q.fn(self.ctx.spark, self.data).toPandas())
             got[name] = vhash(pdf)
         oracle = self.oracle.result()
-        problems += [
+        problems = [
             f"{n}: {h[1]} rows, oracle {oracle[n][1]} rows, hashes differ"
             for n, h in got.items() if h != oracle[n]
         ]
         wall = sum(lat.values())
         geomean = math.exp(sum(math.log(v) for v in lat.values()) / len(lat))
+        layers = {}
         if tr is not None:
             plan = []
             for s in tr.op_spans(i):
@@ -506,27 +486,31 @@ class QueryMix(Workload):
             layers.update({f"queries.{n}_s": v for n, v in lat.items()})
             layers["queries.plan_s"] = sum(plan)
             layers["operators.substrdedup.substring_dedup_s"] = lat["q_substring_dedup"]
+            res, counts = self._lifecycle_layers(i, tr)
+            problems += self._check_stages(counts)
+            layers.update(self._counters(i, tr, res, counts))
         return Op(wall, problems, {"query_geomean_s": geomean}, layers)
 
     def _lifecycle_layers(self, i: int, tr):
-        """q_pretraining_prep_checksum's result, from the pipeline run layer
-        by layer: each persisted stage, then packing, then the ledger."""
+        """The pretraining pipeline run layer by layer, outside the
+        measured pass: each persisted stage, then packing, then the
+        stage-count ledger."""
         from rag_pipelines_spark.plans.pretraining import pretraining_prep_pipeline
 
         bench = self.docs.filter(F.col("doc_id") % 97 == 0).select(
             F.col("doc_id").alias("bench_id"), "text"
         )
-        res = pretraining_prep_pipeline(self.docs, bench, shard_col=_md5_shard())
-        self._res = res
-        with tr.span("operators.dedup.line_dedup", i):
+        res = pretraining_prep_pipeline(self.docs, bench)
+        with tr.span("operators.dedup.line_dedup", i, measured=False):
             res.persisted[0].count()
-        with tr.span("operators.dedup.minhash_bands", i):
+        with tr.span("operators.dedup.minhash_bands", i, measured=False):
             res.persisted[1].count()
-        with tr.span("operators.packing.pack", i):
-            pdf = _packed_checksum(res.packed).toPandas()
-        with tr.span("plans.pretraining.stage_counts", i):
+        with tr.span("operators.packing.pack", i, measured=False):
+            # an aggregate over the packing layout, so the window runs
+            res.packed.agg(F.sum("seq_start")).collect()
+        with tr.span("plans.pretraining.stage_counts", i, measured=False):
             counts = {r["stage"]: r["n_docs"] for r in res.stage_counts.collect()}
-        return pdf, counts
+        return res, counts
 
     def _check_stages(self, counts: dict) -> list[str]:
         """Stage counts against the planted structure."""
@@ -548,9 +532,8 @@ class QueryMix(Workload):
             problems.append(f"decontamination dropped {dropped}, planted {roles.get('contam', 0)}")
         return problems
 
-    def _counters(self, i: int, tr, counts: dict) -> dict:
-        """Dedup counters of the traced lifecycle run, then unpersist it."""
-        res = self._res
+    def _counters(self, i: int, tr, res, counts: dict) -> dict:
+        """Dedup counters of the layer-by-layer pipeline run, then unpersist it."""
         try:
             n1, n2, n3 = counts["1_quality"], counts["2_line_dedup"], counts["3_near_dedup"]
             lined, deduped = res.persisted
