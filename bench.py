@@ -156,6 +156,16 @@ HEADLINE = CORE + EXTRAS + CORE_R4
 
 def main() -> None:
     t0 = time.time()
+    # SPARK_GRAFT_BENCH_QUERIES=q_a,q_b restricts the measured set (the
+    # sf1 scaling rung runs the top-10 entries only); unset = the full
+    # HEADLINE set. An unknown name exits non-zero before any work, so a
+    # typo'd list cannot emit a near-empty headline.
+    only_env = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
+    only = {s.strip() for s in only_env.split(",") if s.strip()} or None
+    unknown = sorted((only or set()) - set(HEADLINE) - {"pipeline_watcher"})
+    if unknown:
+        sys.exit(f"SPARK_GRAFT_BENCH_QUERIES: unknown names {unknown}")
+
     from rag_pipelines_spark.registry import load_all
     from rag_pipelines_spark.session import get_spark
 
@@ -174,14 +184,6 @@ def main() -> None:
         "org.apache.spark.sql.execution.window.WindowExec",
         jvm.org.apache.logging.log4j.Level.ERROR,
     )
-    # SPARK_GRAFT_BENCH_QUERIES=q_a,q_b restricts the measured set (the
-    # sf1 scaling rung runs the top-10 entries only — r10 VERDICT "Next
-    # round" #3). Unset (the driver's invocation) = full HEADLINE set,
-    # identical behavior to before. Additions-only: protocol, sinks,
-    # min-of-N unchanged.
-    only_env = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
-    only = {s for s in only_env.split(",") if s} or None
-
     # warm-up: run every headline shape once at the smallest SF so JIT/
     # codegen/parquet-footer costs don't land on the first measured query
     warm_dir = "/root/testdata/sf0.001"
@@ -192,8 +194,8 @@ def main() -> None:
         if q is not None:
             try:
                 q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception:
-                pass
+            except Exception as e:  # measured below; say why warm-up missed
+                print(f"# warm-up {name} failed: {e!r:.300}", file=sys.stderr)
 
     # warm the measured-SF inputs too (footer parse + OS page cache):
     # without this the first measured query absorbs the whole cold-read
@@ -205,8 +207,8 @@ def main() -> None:
             _tbl(spark, SF_DIR, tname).write.format("noop").mode(
                 "overwrite"
             ).save()
-        except Exception:
-            pass
+        except Exception as e:
+            print(f"# warm-up table {tname} failed: {e!r:.300}", file=sys.stderr)
 
     # min-of-N protocol (tools/isolated_bench.py discipline, now the
     # default): N round-major passes, min per query. A single shared-JVM

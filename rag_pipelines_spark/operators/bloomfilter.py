@@ -131,7 +131,7 @@ def bloom_anti_join(
 
 
 # ---------------------------------------------------------------------------
-# Accreted bloom state (manifest/epoch/lease contract) — the continuous-
+# Accreted bloom state (operators/state.py::fold_state) — the continuous-
 # ingest front door's prefilter. Word-wise bit_or is commutative,
 # associative and idempotent, so accretion == one-shot bloom EXACTLY and
 # replayed epochs cannot corrupt the bitmap.
@@ -150,58 +150,28 @@ def merge_bloom(spark, keys_df: DataFrame, state_path: str, *,
                 key: str, m_bits: int = 1 << 20, k: int = 5,
                 epoch: int | None = None,
                 state_partitions: int = 1) -> None:
-    """Fold one batch's keys into the accreted (w, bits) bloom state.
+    """Fold one batch's keys into the accreted (w, bits) bloom state
+    (operators/state.py::fold_state).
 
-    The state carries its (m_bits, k) in-band; merging with DIFFERENT
-    parameters raises instead of silently mixing position spaces — a
-    mixed bitmap would produce probe FALSE NEGATIVES, i.e. silently
-    admitted duplicates (same posture as hll_union_agg's lgk mismatch).
+    Different (m_bits, k) are refused on every fold, the first included,
+    instead of silently mixing position spaces — a mixed bitmap would
+    produce probe FALSE NEGATIVES, i.e. silently admitted duplicates.
+    The state also carries (m_bits, k) in-band for bloom_state_params.
     """
-    import os
+    from rag_pipelines_spark.operators.state import fold_state
 
-    from rag_pipelines_spark.operators.state import (
-        commit_version,
-        epoch_already_applied,
-        live_version_dir,
-        writer_lease,
+    fold_state(
+        spark, state_path, what="bloom state",
+        params={"m_bits": m_bits, "k": k},
+        partial=lambda: bloom_build(keys_df.select(key), key, m_bits, k),
+        combine=lambda old, part: old().select("w", "bits")
+        .unionByName(part).groupBy("w")
+        .agg(F.expr("bit_or(bits)").alias("bits")),
+        write=lambda vdir, m: m.withColumn("m_bits", F.lit(m_bits))
+        .withColumn("k", F.lit(k)).coalesce(state_partitions)
+        .write.mode("overwrite").parquet(vdir),
+        epoch=epoch,
     )
-
-    if epoch_already_applied(state_path, "bloom state", epoch):
-        return
-    partial = bloom_build(keys_df.select(key), key, m_bits, k)
-    with writer_lease(state_path, what="bloom state"):
-        if epoch_already_applied(state_path, "bloom state", epoch):
-            return
-        live = live_version_dir(state_path, what="bloom state")
-        if live is not None:
-            state = spark.read.parquet(live)
-            got = bloom_state_params(state)
-            if got is not None and got != (m_bits, k):
-                raise ValueError(
-                    f"bloom state at {state_path} was built with "
-                    f"(m_bits, k)={got}; refusing to merge with "
-                    f"({m_bits}, {k}) — mixed position spaces cause probe "
-                    "false negatives (silent duplicates)"
-                )
-            merged = (
-                state.select("w", "bits")
-                .unionByName(partial)
-                .groupBy("w")
-                .agg(F.expr("bit_or(bits)").alias("bits"))
-            )
-        else:
-            merged = partial
-        stamped = merged.withColumn("m_bits", F.lit(m_bits)).withColumn(
-            "k", F.lit(k)
-        )
-        commit_version(
-            state_path,
-            lambda vdir: stamped.coalesce(state_partitions)
-            .write.mode("overwrite")
-            .parquet(vdir),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
 
 
 def read_bloom_words(spark, state_path: str) -> DataFrame | None:

@@ -36,8 +36,8 @@ Scale design (100 TB):
     counter state on (keys, d, bucket) — an equi-join, never a scan of
     raw history.
 
-Manifest/versioned-prefix state + epoch guard + writer lease: identical
-contract to operators/rollup.py (see operators/state.py).
+Manifest/versioned-prefix state + epoch guard + writer lease + geometry
+check: the one fold contract, operators/state.py::fold_state.
 
 ref: fda_watcher.py recomputes pandas value_counts per run and keeps no
 frequency state at all; this is the fixed-space engine-native upgrade
@@ -52,12 +52,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.freqsketch import _join_null_safe
-from rag_pipelines_spark.operators.statefs import backend_for, is_uri
 from rag_pipelines_spark.operators.state import (
-    commit_version,
-    epoch_already_applied,
+    fold_state,
     live_version_dir,
-    writer_lease,
+    read_state_params,
+    stamp_params,
 )
 
 _CNT = "decimal(30,0)"
@@ -81,7 +80,8 @@ def cm_partial(batch: DataFrame, keys: list[str], item_col: str, *,
     One exact hash-agg over the batch (map-side combined), then the
     depth-fold runs on the vocabulary-sized counted frame. NULL items
     are excluded (nothing to count, matching the freq/HLL convention);
-    NULL group keys are a first-class group (groupBy keeps them)."""
+    NULL group keys are a first-class group (groupBy keeps them). `cnt`
+    carries (depth, width) as column metadata (state.py::stamp_params)."""
     nn = batch.filter(F.col(item_col).isNotNull())
     counted = nn.groupBy(*keys, F.col(item_col).alias("item")).agg(
         F.count("*").cast(_CNT).alias("n")
@@ -92,35 +92,9 @@ def cm_partial(batch: DataFrame, keys: list[str], item_col: str, *,
         "n",
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("d"),
     ).withColumn("bucket", cm_bucket(F.col("d"), F.col("item"), width))
-    return rows.groupBy(*keys, "d", "bucket").agg(
-        F.sum("n").cast(_CNT).alias("cnt")
-    )
-
-
-def _read_meta(spark, live: str) -> tuple[int, int]:
-    # meta is two ints — a backend text file since r10 (reading it as a
-    # Spark parquet job cost ~0.2-0.3 s per read, 3+ reads per serve
-    # query; the text read is ~1 ms through the same statefs backend the
-    # crash drills exercise). Legacy parquet `meta` dirs still resolve.
-    from rag_pipelines_spark.operators.statefs import backend_for
-
-    fs = backend_for(live)
-    pj = os.path.join(live, "meta.json")
-    if fs.isfile(pj):
-        import json
-
-        m = json.loads(fs.read_text(pj))
-        return int(m["depth"]), int(m["width"])
-    p = os.path.join(live, "meta")
-    if not is_uri(p):
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(p)
-        return int(tbl.column("depth")[0].as_py()), int(
-            tbl.column("width")[0].as_py()
-        )
-    m = spark.read.parquet(p).collect()[0]
-    return int(m.depth), int(m.width)
+    return rows.groupBy(*keys, "d", "bucket").agg(stamp_params(
+        F.sum("n").cast(_CNT), "cnt", {"depth": depth, "width": width}
+    ))
 
 
 def merge_cm(spark, batch: DataFrame, state_path: str, *,
@@ -129,101 +103,44 @@ def merge_cm(spark, batch: DataFrame, state_path: str, *,
              state_partitions: int = 1,
              partial: DataFrame | None = None) -> None:
     """Fold one batch into the Count-Min state (element-wise counter
-    add). Additive state: pass `epoch` (foreachBatch's epoch_id) for
-    exactly-once under replay. (depth, width) are pinned in the state's
-    meta table — merging with different params raises (counters from
-    different geometries are not addable).
+    add; operators/state.py::fold_state, pass `epoch` for exactly-once
+    under replay). (depth, width) are pinned in the version's _meta.json
+    and stamped on cm_partial's `cnt` — counters from different
+    geometries are not addable, so a mismatch raises on every fold.
 
     State files default to ONE partition: the counter table is hard-
     capped at |groups|·depth·width rows (~4k per group at the 4×1024
     default) — `state_partitions` fans out for high-cardinality keys.
 
     `partial`, when given, is this batch's counter frame already
-    produced by `cm_partial(batch, keys, item_col, depth, width)` with
-    the SAME parameters and already materialized (localCheckpoint) — a
+    produced by `cm_partial(batch, keys, item_col, depth, width)` — a
     caller draining several pending batches builds the per-batch
     partials concurrently (operators/concurrency.checkpoint_all) while
     the state folds stay strictly sequential; counters are element-wise
     adds, so state bytes are bit-identical to the sequential path."""
-    if epoch_already_applied(state_path, "count-min state", epoch):
-        return
-    # materialize the batch partial BEFORE anything else (freqsketch
-    # discipline): the corpus-sized pre-count runs exactly once, with
-    # the plan's full parallelism, and every downstream consumer (the
-    # merge union + the state write) reads the KB-sized counter frame —
-    # a lazy partial would re-run the corpus agg inside the write job,
-    # where a coalesce(1) would ALSO collapse it to one task
-    # defensively materialize EITHER source (r10 ADVICE): a caller-
-    # supplied lazy partial would silently reintroduce the re-run-inside-
-    # the-write pathology this comment warns about; localCheckpoint on an
-    # already-checkpointed KB-sized frame is a few ms — cheap insurance
-    b = (
-        partial
-        if partial is not None
-        else cm_partial(batch, keys, item_col, depth=depth, width=width)
-    ).localCheckpoint(eager=True)
-    with writer_lease(state_path, what="count-min state"):
-        if epoch_already_applied(state_path, "count-min state", epoch):
-            return
-        live = live_version_dir(state_path, what="count-min state")
-        if live is None and partial is not None:
-            # FIRST fold of a caller-built partial (r10 ADVICE): the
-            # geometry guards below only compare LATER merges against
-            # meta.json, so a partial built with different depth/width
-            # would be written as state unchecked and meta would record
-            # the CALL's geometry, not the bytes'. Validate on the
-            # KB-sized counter frame: a non-empty cm_partial carries
-            # every d in 0..depth-1 (the depth explode), and every
-            # bucket is < width by construction.
-            bounds = b.agg(
-                F.max("d").alias("md"), F.max("bucket").alias("mb")
-            ).first()
-            if bounds["md"] is not None and (
-                int(bounds["md"]) != depth - 1 or int(bounds["mb"]) >= width
-            ):
-                raise ValueError(
-                    "count-min partial geometry mismatch: partial has "
-                    f"max d={bounds['md']} max bucket={bounds['mb']}, "
-                    f"merge called with depth={depth} width={width}"
-                )
-        if live is not None:
-            sd, sw = _read_meta(spark, live)
-            if (sd, sw) != (depth, width):
-                raise ValueError(
-                    f"count-min geometry mismatch: state is depth={sd} "
-                    f"width={sw}, merge called with depth={depth} "
-                    f"width={width}"
-                )
-            old = spark.read.parquet(os.path.join(live, "counters"))
-            counters = (
-                old.unionByName(b)
-                .groupBy(*keys, "d", "bucket")
-                .agg(F.sum("cnt").cast(_CNT).alias("cnt"))
-            )
-        else:
-            counters = b
 
-        def _write(vdir: str) -> None:
-            counters.coalesce(state_partitions).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(vdir, "counters"))
-            # meta = two ints: an atomic backend text file, not a Spark
-            # parquet job. History: createDataFrame cost ~6 s/commit,
-            # the r9 range()+lit rewrite ~0.5 s — still a whole job for
-            # two ints; the text publish is ~1 ms and rides the same
-            # statefs backend (temp + rename) the crash drills cover.
-            import json
+    def build() -> DataFrame:
+        # materialize the batch partial BEFORE the fold (freqsketch
+        # discipline): the corpus-sized pre-count runs exactly once, with
+        # the plan's full parallelism; a lazy partial would re-run the
+        # corpus agg inside the write job, where coalesce(1) would ALSO
+        # collapse it to one task. A caller's partial is checkpointed too
+        # (r10 ADVICE) — a few ms on an already-checkpointed KB frame.
+        p = partial if partial is not None else cm_partial(
+            batch, keys, item_col, depth=depth, width=width)
+        return p.localCheckpoint(eager=True)
 
-            backend_for(state_path).publish_text(
-                vdir, "meta.json", json.dumps({"depth": depth, "width": width})
-            )
-
-        commit_version(
-            state_path,
-            _write,
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    fold_state(
+        spark, state_path, what="count-min state",
+        params={"depth": depth, "width": width},
+        partial=build,
+        combine=lambda old, b: old("counters").unionByName(b)
+        .groupBy(*keys, "d", "bucket")
+        .agg(F.sum("cnt").cast(_CNT).alias("cnt")),
+        write=lambda vdir, c: c.coalesce(state_partitions)
+        .write.mode("overwrite").parquet(os.path.join(vdir, "counters")),
+        epoch=epoch,
+    )
 
 
 def read_cm(spark, state_path: str):
@@ -231,9 +148,10 @@ def read_cm(spark, state_path: str):
     live = live_version_dir(state_path, what="count-min state")
     if live is None:
         raise FileNotFoundError(f"no count-min state at {state_path}")
+    meta = read_state_params(live)
     return (
         spark.read.parquet(os.path.join(live, "counters")),
-        _read_meta(spark, live),
+        (meta["depth"], meta["width"]),
     )
 
 

@@ -34,8 +34,8 @@ distinct regime is pinned locally by the error-bound test
 Counts ride decimal(30,0): exact, associative — merge-order invariant
 in the no-prune regime (a double sum would not be).
 
-Manifest/versioned-prefix state + epoch guard + writer lease: identical
-contract to operators/rollup.py (see operators/state.py).
+Manifest/versioned-prefix state + epoch guard + writer lease + geometry
+check (``m``): the one fold contract, operators/state.py::fold_state.
 
 ref: fda_watcher.py keeps no frequency state at all (the reference
 recomputes pandas value_counts per run) — this is the engine-native
@@ -49,12 +49,7 @@ import os
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from rag_pipelines_spark.operators.state import (
-    commit_version,
-    epoch_already_applied,
-    live_version_dir,
-    writer_lease,
-)
+from rag_pipelines_spark.operators.state import fold_state, live_version_dir
 
 _CNT = "decimal(30,0)"
 
@@ -208,105 +203,86 @@ def merge_freq(spark, batch: DataFrame, state_path: str, *,
                epoch: int | None = None,
                state_partitions: int | None = None,
                partial: tuple[DataFrame, DataFrame] | None = None) -> None:
-    """Fold one batch into the frequent-items state.
+    """Fold one batch into the frequent-items state (operators/state.py::
+    fold_state; pass `epoch` for exactly-once under replay).
 
     Merge rule (mergeable-summaries MG): per-item ests ADD across the two
     summaries (outer-union + sum), then the merged list re-prunes to m.
-    totals add exactly. Additive state: pass `epoch` (foreachBatch's
-    epoch_id) for exactly-once under replay (state.py::applied_epoch).
+    totals add exactly.
 
     `state_partitions` sizes the state files. Default None DERIVES the
     count from the merged summary's measured size (state is
     O(|groups|·m) rows): the common vocabulary-sized state stays one
-    file, avoiding a shuffle-partition-count spray of tiny files re-read
-    every merge, while a high-cardinality group key (e.g. per-domain)
-    fans out automatically instead of funneling one task (r5 advice).
+    file, while a high-cardinality group key (e.g. per-domain) fans out
+    instead of funneling one task (r5 advice).
 
     `partial`, when given, is this batch's (items, totals) summary
     already produced by `freq_partial(batch, keys, item_col, m, ...)`
     with the SAME keys/item_col/m — a caller draining several pending
-    batches (backfill/catch-up) builds the per-batch partials
-    concurrently (operators/concurrency.run_all: each partial's
-    materialization job overlaps the others and the earlier merges'
-    fsync-bound commits) while the state folds stay strictly sequential.
+    batches builds the per-batch partials concurrently
+    (operators/concurrency.run_all) while the folds stay sequential.
     The fold consumes exactly the frame the internal call would have
-    produced, in the same order — state bytes are bit-identical.
+    produced — state bytes are bit-identical.
     """
-    if epoch_already_applied(state_path, "freq-sketch state", epoch):
-        return  # replayed micro-batch: already folded in
-    b_items, b_totals = partial if partial is not None else freq_partial(
-        batch, keys, item_col, m, partial_partitions=state_partitions)
-    with writer_lease(state_path, what="freq-sketch state"):
-        # authoritative re-check INSIDE the lease (see rollup.py: the
-        # pre-lease check is a fast path; a concurrent holder may have
-        # committed this epoch while we computed the partial)
-        if epoch_already_applied(state_path, "freq-sketch state", epoch):
-            return
-        live = live_version_dir(state_path, what="freq-sketch state")
-        if live is not None:
-            o_items = spark.read.parquet(os.path.join(live, "items"))
-            o_totals = spark.read.parquet(os.path.join(live, "totals"))
-            # materialize the summed union once (state-sized, tiny): the
-            # prune consumes it three times (ranked, d, totals-join) and
-            # would otherwise re-run the read+union+shuffle per consumer
-            summed = (
-                o_items.unionByName(b_items)
-                .groupBy(*keys, "item")
-                .agg(F.sum("est").cast(_CNT).alias("est"))
-                .localCheckpoint(eager=True)
-            )
-            n_parts = _derived_partitions(summed, state_partitions)
-            summed = _sized(summed, n_parts)
-            items, d = _prune(summed, keys, m)
-            # same union-sum shape as freq_partial's totals (r10): old +
-            # batch totals rows and the <=1-per-group merge-prune row
-            # (0, _d) fold in one groupBy — no null-safe d-join. Exact
-            # decimal sums; bit-identical to the join formulation.
-            totals = (
-                o_totals.unionByName(b_totals)
-                .select(*keys, "n_total", "err")
-                .unionByName(
-                    d.select(
-                        *keys,
-                        F.lit(0).cast(_CNT).alias("n_total"),
-                        F.col("_d").alias("err"),
-                    )
-                )
-                .groupBy(*keys)
-                .agg(
-                    F.sum("n_total").cast(_CNT).alias("n_total"),
-                    F.sum("err").cast(_CNT).alias("err"),
-                )
-            )
-        else:
-            items, totals = b_items, b_totals
-            # first init only: one extra vocab-sized count to size the
-            # files (b_items derives from the checkpointed partial)
-            n_parts = (state_partitions if state_partitions is not None
-                       else max(1, -(-b_items.count()
-                                     // _ROWS_PER_STATE_PARTITION)))
+    n_parts = state_partitions
 
-        def _write(vdir: str) -> None:
-            # the two state tables derive from the same checkpointed
-            # summed frame and write to disjoint paths — overlap the two
-            # KB-sized write jobs (guide §2.6); the version only becomes
-            # live at the MANIFEST flip after BOTH jobs return, so the
-            # commit atomicity contract is unchanged
-            from rag_pipelines_spark.operators.concurrency import run_all
-
-            run_all(
-                lambda: _sized(items, n_parts).write.mode(
-                    "overwrite").parquet(os.path.join(vdir, "items")),
-                lambda: _sized(totals, n_parts).write.mode(
-                    "overwrite").parquet(os.path.join(vdir, "totals")),
-            )
-
-        commit_version(
-            state_path,
-            _write,
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
+    def combine(old, part):
+        nonlocal n_parts
+        b_items, b_totals = part
+        # materialize the summed union once (state-sized, tiny): the
+        # prune consumes it three times (ranked, d, totals-join) and
+        # would otherwise re-run the read+union+shuffle per consumer
+        summed = (
+            old("items").unionByName(b_items)
+            .groupBy(*keys, "item")
+            .agg(F.sum("est").cast(_CNT).alias("est"))
+            .localCheckpoint(eager=True)
         )
+        n_parts = _derived_partitions(summed, state_partitions)
+        items, d = _prune(_sized(summed, n_parts), keys, m)
+        # same union-sum shape as freq_partial's totals (r10): old +
+        # batch totals rows and the <=1-per-group merge-prune row
+        # (0, _d) fold in one groupBy — no null-safe d-join
+        totals = (
+            old("totals").unionByName(b_totals)
+            .select(*keys, "n_total", "err")
+            .unionByName(
+                d.select(
+                    *keys,
+                    F.lit(0).cast(_CNT).alias("n_total"),
+                    F.col("_d").alias("err"),
+                )
+            )
+            .groupBy(*keys)
+            .agg(
+                F.sum("n_total").cast(_CNT).alias("n_total"),
+                F.sum("err").cast(_CNT).alias("err"),
+            )
+        )
+        return items, totals
+
+    def write(vdir: str, merged) -> None:
+        # first init sizes from the batch items (derived from the
+        # checkpointed partial); the two KB-sized write jobs go to
+        # disjoint paths and overlap (guide §2.6) — the version only
+        # becomes live at the MANIFEST flip after BOTH return
+        from rag_pipelines_spark.operators.concurrency import run_all
+
+        items, totals = merged
+        n = n_parts or _derived_partitions(items, None)
+        run_all(
+            lambda: _sized(items, n).write.mode("overwrite").parquet(
+                os.path.join(vdir, "items")),
+            lambda: _sized(totals, n).write.mode("overwrite").parquet(
+                os.path.join(vdir, "totals")),
+        )
+
+    fold_state(
+        spark, state_path, what="freq-sketch state", params={"m": m},
+        partial=lambda: partial if partial is not None else freq_partial(
+            batch, keys, item_col, m, partial_partitions=state_partitions),
+        combine=combine, write=write, epoch=epoch,
+    )
 
 
 def read_freq(spark, state_path: str):

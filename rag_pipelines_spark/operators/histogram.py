@@ -18,17 +18,10 @@ rows per partition at any corpus size — never data-sized).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from rag_pipelines_spark.operators.state import (
-    commit_version,
-    epoch_already_applied,
-    live_version_dir,
-    writer_lease,
-)
+from rag_pipelines_spark.operators.state import fold_state, live_version_dir
 
 
 def histogram_partial(batch: DataFrame, keys: list[str], col: str,
@@ -50,34 +43,18 @@ def histogram_partial(batch: DataFrame, keys: list[str], col: str,
 def merge_histogram(spark, batch: DataFrame, state_path: str, *,
                     keys: list[str], col: str, width: float,
                     epoch: int | None = None) -> None:
-    """Fold one batch into histogram state (manifest scheme,
-    operators/state.py). counts add ⇒ N merges == one-shot, pinned by
-    test. Additive state: pass `epoch` for exactly-once under replay
-    (operators/state.py::applied_epoch)."""
-    if epoch_already_applied(state_path, "histogram state", epoch):
-        return  # replayed micro-batch: already folded in
-    partial = histogram_partial(batch, keys, col, width)
-    with writer_lease(state_path, what="histogram state"):
-        # authoritative re-check INSIDE the lease (see rollup.py: the
-        # pre-lease check is a fast path; a concurrent holder may have
-        # committed this epoch while we computed the partial)
-        if epoch_already_applied(state_path, "histogram state", epoch):
-            return
-        live = live_version_dir(state_path, what="histogram state")
-        if live is not None:
-            partial = (
-                spark.read.parquet(live)
-                .unionByName(partial)
-                .groupBy(*keys, "bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        merged = partial
-        commit_version(
-            state_path,
-            lambda vdir: merged.write.mode("overwrite").parquet(vdir),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    """Fold one batch into histogram state (operators/state.py::
+    fold_state; pass `epoch` for exactly-once under replay). counts add
+    ⇒ N merges == one-shot, pinned by test. Bins of different widths do
+    not add, so a different `width` is refused."""
+    fold_state(
+        spark, state_path, what="histogram state", params={"width": width},
+        partial=lambda: histogram_partial(batch, keys, col, width),
+        combine=lambda old, part: old().unionByName(part)
+        .groupBy(*keys, "bin").agg(F.sum("n").alias("n")),
+        write=lambda vdir, m: m.write.mode("overwrite").parquet(vdir),
+        epoch=epoch,
+    )
 
 
 def read_histogram(spark, state_path: str) -> DataFrame:

@@ -8,8 +8,8 @@ Spark ships the sketch natively (`hll_sketch_agg` / `hll_union_agg` /
 no UDF): per-group state is ONE binary register array of
 2^lgConfigK * ~1 byte, so a 100 TB stream's per-key distinct-user counts
 live in a |groups|-row, KB-per-row state folded batch-by-batch — the
-same incremental-view-maintenance shape as merge_rollup, with the
-histogram/freqsketch modules' manifest + epoch + lease contract.
+same incremental-view-maintenance shape as merge_rollup, folded through
+the one state contract (operators/state.py::fold_state).
 
 Merge-exactness: HLL union is a per-register MAX — commutative,
 associative, idempotent — so `union(partials) == sketch(union)` holds at
@@ -28,16 +28,13 @@ per run, full rescan) — engine-native upgrade for the 100 TB path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.state import (
-    commit_version,
-    epoch_already_applied,
+    fold_state,
     live_version_dir,
-    writer_lease,
+    stamp_params,
 )
 
 DEFAULT_LGK = 12  # 4096 registers, ~2.5% standard error
@@ -45,11 +42,13 @@ DEFAULT_LGK = 12  # 4096 registers, ~2.5% standard error
 
 def hll_partial(batch: DataFrame, keys: list[str], item_col: str,
                 lgk: int = DEFAULT_LGK) -> DataFrame:
-    """One (keys..., sketch) row per group for a single batch."""
+    """One (keys..., sketch) row per group for a single batch; `sketch`
+    carries its lgConfigK as column metadata (state.py::stamp_params)."""
     return (
         batch.filter(F.col(item_col).isNotNull())
         .groupBy(*keys)
-        .agg(F.hll_sketch_agg(F.col(item_col), F.lit(lgk)).alias("sketch"))
+        .agg(stamp_params(F.hll_sketch_agg(F.col(item_col), F.lit(lgk)),
+                          "sketch", {"lgConfigK": lgk}))
     )
 
 
@@ -58,13 +57,13 @@ def merge_hll(spark, batch: DataFrame, state_path: str, *,
               epoch: int | None = None,
               state_partitions: int = 1,
               partial: DataFrame | None = None) -> None:
-    """Fold one batch into the per-group HLL state.
+    """Fold one batch into the per-group HLL state (operators/state.py::
+    fold_state; pass `epoch` for exactly-once under replay).
 
-    union(state ∪ partial(batch)) at the register level; additive state,
-    so pass `epoch` (foreachBatch's epoch_id) for exactly-once under
-    replay (operators/state.py::applied_epoch). All sketches in a state
-    dir share one lgk (hll_union_agg would raise on a mismatch — the
-    loud failure we want, not a silent precision downgrade).
+    union(state ∪ partial(batch)) at the register level. All sketches in
+    a state dir share one lgConfigK: a different `lgk`, or a caller
+    partial stamped with one, is refused on every fold, the first
+    included — never a silent precision rebase.
 
     `partial`, when given, is this batch's (keys..., sketch) frame from
     `hll_partial(batch, keys, item_col, lgk)` with the SAME params — a
@@ -73,52 +72,19 @@ def merge_hll(spark, batch: DataFrame, state_path: str, *,
     while the register-union folds stay sequential. Register union is
     per-slot MAX (associative/idempotent), so the state is identical.
     """
-    if epoch_already_applied(state_path, "hll-sketch state", epoch):
-        return  # replayed micro-batch: already folded in
-    caller_partial = partial is not None
-    if partial is None:
-        partial = hll_partial(batch, keys, item_col, lgk)
-    with writer_lease(state_path, what="hll-sketch state"):
-        # authoritative re-check INSIDE the lease (see rollup.py: the
-        # pre-lease check is a fast path; a concurrent holder may have
-        # committed this epoch while we computed the partial)
-        if epoch_already_applied(state_path, "hll-sketch state", epoch):
-            return
-        live = live_version_dir(state_path, what="hll-sketch state")
-        if live is None and caller_partial:
-            # FIRST fold of a caller-built partial (r10 ADVICE): later
-            # merges fail loudly on an lgk mismatch inside hll_union_agg,
-            # but the first version would be written unchecked, silently
-            # rebasing the state's precision on the caller's error. Probe
-            # by unioning the partial's sketches with one declared-lgk
-            # sketch — hll_union_agg raises on differing lgConfigK
-            # (allowDifferentLgConfigK defaults to false). One tiny job
-            # over the |groups|-row frame, only on state creation.
-            probe = spark.range(1).agg(
-                F.hll_sketch_agg(F.col("id"), F.lit(lgk)).alias("sketch")
-            )
-            partial.select("sketch").unionByName(probe).agg(
-                F.hll_union_agg("sketch")
-            ).first()
-        if live is not None:
-            merged = (
-                spark.read.parquet(live)
-                .unionByName(partial)
-                .groupBy(*keys)
-                .agg(F.hll_union_agg(F.col("sketch")).alias("sketch"))
-            )
-        else:
-            merged = partial
+    fold_state(
+        spark, state_path, what="hll-sketch state",
+        params={"lgConfigK": lgk},
+        partial=lambda: partial if partial is not None else hll_partial(
+            batch, keys, item_col, lgk),
+        combine=lambda old, part: old().unionByName(part).groupBy(*keys)
+        .agg(F.hll_union_agg(F.col("sketch")).alias("sketch")),
         # |groups|-row state: one file per merge by default (avoid a
         # shuffle-partition-count spray of tiny files re-read every merge)
-        commit_version(
-            state_path,
-            lambda vdir: merged.coalesce(state_partitions)
-            .write.mode("overwrite")
-            .parquet(vdir),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+        write=lambda vdir, m: m.coalesce(state_partitions)
+        .write.mode("overwrite").parquet(vdir),
+        epoch=epoch,
+    )
 
 
 def read_hll(spark, state_path: str) -> DataFrame:

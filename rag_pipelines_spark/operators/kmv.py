@@ -147,11 +147,11 @@ def kmv_intersect(
 
 
 # ---------------------------------------------------------------------------
-# Incremental state (7th family): manifest/epoch/lease contract, same as
-# rollup / histogram / freq / hll — accrete batches, never re-scan history.
-# KMV union is idempotent and associative (k smallest of a union of
-# k-smallest sets == k smallest of the union), so accretion == one-shot
-# EXACTLY, merge-tree-invariant at the ARRAY level (asserted in tests).
+# Incremental state: folded through operators/state.py::fold_state —
+# accrete batches, never re-scan history. KMV union is idempotent and
+# associative (k smallest of a union of k-smallest sets == k smallest of
+# the union), so accretion == one-shot EXACTLY, merge-tree-invariant at
+# the ARRAY level (asserted in tests).
 # ---------------------------------------------------------------------------
 
 
@@ -159,49 +159,19 @@ def merge_kmv(spark, batch: DataFrame, state_path: str, *,
               keys: list[str], item_col: str, k: int = 256,
               epoch: int | None = None,
               state_partitions: int = 1) -> None:
-    """Fold one batch into the per-group KMV state (see merge_hll for the
-    lease/epoch choreography this mirrors)."""
-    from rag_pipelines_spark.operators.state import (
-        commit_version,
-        epoch_already_applied,
-        live_version_dir,
-        writer_lease,
-    )
-    import os
+    """Fold one batch into the per-group KMV state. A different `k` is
+    refused on every fold: the size<k exact/estimate branch reads array
+    length against the CALLER's k. `k` also stays in-band as a column."""
+    from rag_pipelines_spark.operators.state import fold_state
 
-    if epoch_already_applied(state_path, "kmv-sketch state", epoch):
-        return  # replayed micro-batch: already folded in
-    partial = kmv_sketch(batch, keys, item_col, k)
-    with writer_lease(state_path, what="kmv-sketch state"):
-        # authoritative re-check inside the lease (fast path above may
-        # have raced a concurrent holder committing this epoch)
-        if epoch_already_applied(state_path, "kmv-sketch state", epoch):
-            return
-        live = live_version_dir(state_path, what="kmv-sketch state")
-        if live is not None:
-            state = spark.read.parquet(live)
-            # k travels in-band: a k mismatch would silently corrupt the
-            # size<k exact/estimate branch (the full-sketch test reads
-            # array length against the CALLER's k) — refuse loudly, the
-            # same posture as hll_union_agg's lgk mismatch
-            row = state.select("k").first()
-            if row is not None and row.k != k:
-                raise ValueError(
-                    f"kmv state at {state_path} was built with k={row.k}; "
-                    f"refusing to merge with k={k}"
-                )
-            merged = kmv_merge(state.drop("k"), partial, keys, k)
-        else:
-            merged = partial
-        commit_version(
-            state_path,
-            lambda vdir: merged.withColumn("k", F.lit(k))
-            .coalesce(state_partitions)
-            .write.mode("overwrite")
-            .parquet(vdir),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    fold_state(
+        spark, state_path, what="kmv-sketch state", params={"k": k},
+        partial=lambda: kmv_sketch(batch, keys, item_col, k),
+        combine=lambda old, part: kmv_merge(old().drop("k"), part, keys, k),
+        write=lambda vdir, m: m.withColumn("k", F.lit(k))
+        .coalesce(state_partitions).write.mode("overwrite").parquet(vdir),
+        epoch=epoch,
+    )
 
 
 def read_kmv(spark, state_path: str) -> DataFrame:

@@ -279,74 +279,46 @@ def merge_corpus_stats(spark, batch: DataFrame, state_path: str, *,
     """Accrete BM25 corpus statistics with a new document batch.
 
     merged dfreq = old + batch per term (full-outer sum); totals add.
-    The merged state is written to a NEW version dir (terms/ + totals/),
-    the MANIFEST flips atomically, superseded versions are GC'd — the
-    crash-safety contract of operators/state.py, shared with the near-dup
-    state. Identity pinned by test: N merges == one batch over the union.
-
-    Single-writer like the reference's singleton watcher cron. The stats
-    are additive COUNTS, so a replayed batch would double-count — pass
-    `epoch` (foreachBatch's epoch_id) and the merge becomes idempotent:
-    a replay of an already-applied epoch is skipped (exactly-once state
-    under Structured Streaming's at-least-once replays).
+    Each merge writes a new version (terms/ + totals/) through the one
+    fold contract, operators/state.py::fold_state (shared with every
+    rewrite-style state). Identity pinned by test: N merges == one batch
+    over the union. The stats are additive COUNTS, so pass `epoch`
+    (foreachBatch's epoch_id) and a replayed epoch is skipped.
     """
     import os
 
-    from rag_pipelines_spark.operators.state import (
-        commit_version,
-        epoch_already_applied,
-        live_version_dir,
-        writer_lease,
-    )
+    from rag_pipelines_spark.operators.concurrency import run_all
+    from rag_pipelines_spark.operators.state import fold_state
 
-    if epoch_already_applied(state_path, "corpus-stats state", epoch):
-        return  # replayed micro-batch: already folded in
-
-    b_terms, b_totals = batch_corpus_stats(batch, text_col=text_col)
-    with writer_lease(state_path, what="corpus-stats state"):
-        # authoritative re-check INSIDE the lease (see rollup.py: the
-        # pre-lease check is a fast path; a concurrent holder may have
-        # committed this epoch while we computed the partial)
-        if epoch_already_applied(state_path, "corpus-stats state", epoch):
-            return
-        live = live_version_dir(state_path, what="corpus-stats state")
-        if live is not None:
-            o_terms = spark.read.parquet(os.path.join(live, "terms"))
-            o_totals = spark.read.parquet(os.path.join(live, "totals"))
-            terms = (
-                o_terms.unionByName(b_terms)
-                .groupBy("term")
-                .agg(F.sum("dfreq").alias("dfreq"))
-            )
-            totals = (
-                o_totals.unionByName(b_totals)
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("sum_dl").alias("sum_dl"),
-                )
-            )
-        else:
-            terms, totals = b_terms, b_totals
-
-        def _write(vdir: str) -> None:
-            # two independent write jobs to disjoint paths inside the
-            # uncommitted version dir — overlap them (guide §2.6); the
-            # MANIFEST flip after both return stays the commit point
-            from rag_pipelines_spark.operators.concurrency import run_all
-
-            run_all(
-                lambda: terms.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "terms")),
-                lambda: totals.write.mode("overwrite").parquet(
-                    os.path.join(vdir, "totals")),
-            )
-
-        commit_version(
-            state_path,
-            _write,
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
+    def combine(old, part):
+        b_terms, b_totals = part
+        terms = (
+            old("terms").unionByName(b_terms)
+            .groupBy("term")
+            .agg(F.sum("dfreq").alias("dfreq"))
         )
+        totals = old("totals").unionByName(b_totals).agg(
+            F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
+        )
+        return terms, totals
+
+    def write(vdir: str, merged) -> None:
+        # two independent write jobs to disjoint paths inside the
+        # uncommitted version dir — overlap them (guide §2.6); the
+        # MANIFEST flip after both return stays the commit point
+        terms, totals = merged
+        run_all(
+            lambda: terms.write.mode("overwrite").parquet(
+                os.path.join(vdir, "terms")),
+            lambda: totals.write.mode("overwrite").parquet(
+                os.path.join(vdir, "totals")),
+        )
+
+    fold_state(
+        spark, state_path, what="corpus-stats state", params={},
+        partial=lambda: batch_corpus_stats(batch, text_col=text_col),
+        combine=combine, write=write, epoch=epoch,
+    )
 
 
 def assemble_context(ranked: DataFrame, *, snippet_col: str = "snippet",

@@ -37,8 +37,10 @@ from pyspark.sql import functions as F
 from rag_pipelines_spark.operators.state import (
     applied_epoch,
     commit_version,
-    epoch_already_applied,
+    fold_state,
     live_version_dir,
+    read_state_params,
+    write_state_params,
     writer_lease,
 )
 
@@ -102,40 +104,21 @@ def rollup_batch(batch: DataFrame, keys: list[str],
 def merge_rollup(spark, batch: DataFrame, state_path: str, *,
                  keys: list[str], measures: dict[str, list[str]],
                  epoch: int | None = None) -> None:
-    """Fold one batch into the keyed rollup state.
+    """Fold one batch into the keyed rollup state (operators/state.py::
+    fold_state; pass `epoch` for exactly-once under replay).
 
     combine(state ∪ partial(batch)) == partial(history ∪ batch) — pinned
-    by test (N merges == one-shot groupBy over the union). Additive
-    state: pass `epoch` (foreachBatch's epoch_id) to make replays of an
-    already-applied micro-batch a no-op (exactly-once, see
-    operators/state.py::applied_epoch).
+    by test (N merges == one-shot groupBy over the union).
     """
-    if epoch_already_applied(state_path, "rollup state", epoch):
-        return  # replayed micro-batch: already folded in
-    partial = rollup_batch(batch, keys, measures)
-    with writer_lease(state_path, what="rollup state"):
-        # authoritative re-check INSIDE the lease: the pre-lease check is a
-        # fast path only — a writer that held the lease while we computed
-        # the partial may have committed this very epoch (zombie-driver
-        # replay); without this, the additive merge double-counts
-        if epoch_already_applied(state_path, "rollup state", epoch):
-            return
-        live = live_version_dir(state_path, what="rollup state")
-        if live is not None:
-            merged = (
-                spark.read.parquet(live)
-                .unionByName(partial)
-                .groupBy(*keys)
-                .agg(*_combine_aggs(measures))
-            )
-        else:
-            merged = partial
-        commit_version(
-            state_path,
-            lambda vdir: merged.write.mode("overwrite").parquet(vdir),
-            epoch=epoch,
-            prev=os.path.basename(live) if live else None,
-        )
+    fold_state(
+        spark, state_path, what="rollup state",
+        params={"keys": keys, "measures": measures},
+        partial=lambda: rollup_batch(batch, keys, measures),
+        combine=lambda old, part: old().unionByName(part)
+        .groupBy(*keys).agg(*_combine_aggs(measures)),
+        write=lambda vdir, m: m.write.mode("overwrite").parquet(vdir),
+        epoch=epoch,
+    )
 
 
 def read_rollup(spark, state_path: str) -> DataFrame:
@@ -184,8 +167,9 @@ def compact_rollup_state(
 
     Crash safety is the shared version-commit ritual (operators/state.py):
     new version dir -> atomic manifest flip -> GC with one-generation
-    reader grace; the live version's applied epoch is carried forward so
-    a replayed micro-batch is still recognized after compaction.
+    reader grace; the live version's applied epoch and ``_meta.json`` are
+    carried forward so a replayed micro-batch is still recognized and the
+    next fold's geometry check still passes after compaction.
     Single-writer under the state lease, like every merge.
     """
     if (min_count is None) != (count_col is None):
@@ -204,13 +188,18 @@ def compact_rollup_state(
             else state.repartition(n)
         )
         n_after = compacted.count()
-        # epoch carried forward BEFORE the flip (applied_epoch resolves the
-        # manifest, which still names the old live inside this lease)
+        # epoch and geometry carried forward BEFORE the flip
+        # (applied_epoch resolves the manifest, which still names the old
+        # live inside this lease); without _meta.json the next merge_rollup
+        # would refuse the compacted version
         epoch = applied_epoch(state_path, what="rollup state")
-        commit_version(
-            state_path,
-            lambda vdir: compacted.write.mode("overwrite").parquet(vdir),
-            epoch=epoch,
-            prev=os.path.basename(live),
-        )
+        params = read_state_params(live)
+
+        def _write(vdir: str) -> None:
+            compacted.write.mode("overwrite").parquet(vdir)
+            if params is not None:
+                write_state_params(vdir, params)
+
+        commit_version(state_path, _write, epoch=epoch,
+                       prev=os.path.basename(live))
     return n_before, n_after

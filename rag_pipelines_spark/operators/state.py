@@ -34,10 +34,18 @@ and since round 5 the assumption is ENFORCED, not assumed: every mutating
 operator acquires `writer_lease` (pid+timestamp lease file, stale-lease
 takeover) and a concurrent second writer raises instead of interleaving
 manifest flips.
+
+`fold_state` is the one fold contract for the rewrite-style state
+families (rollup, histogram, freq, HLL, KMV, bloom, Count-Min, corpus
+stats): each family supplies its batch partial, its combine and its
+write; fold_state owns the epoch guards, the lease, the geometry check
+against the version's ``_meta.json`` and the version commit (the
+Summingbird split: a per-family monoid, one generic fold).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -266,9 +274,8 @@ def applied_epoch(state_path: str, what: str = "state") -> int | None:
 
 def epoch_already_applied(state_path: str, what: str,
                           epoch: int | None) -> bool:
-    """Shared epoch guard for every rewrite-style merge (rollup,
-    histogram, corpus-stats, freq-sketch, hll-sketch): True when this
-    exact epoch is already folded into the live version (replayed
+    """Shared epoch guard (fold_state and the append-style states): True
+    when this exact epoch is already folded into the live version (replayed
     micro-batch — caller returns without touching state); raises when
     the state has applied a LATER epoch (the stream checkpoint was reset
     against existing state — epoch counters restart per checkpoint, and
@@ -308,6 +315,102 @@ def commit_version(state_path: str, write_fn, *, epoch: int | None,
     write_manifest(state_path, version)
     gc_orphans(state_path)  # retains the predecessor for in-flight readers
     return vdir
+
+
+# Hidden from Spark's file listing (like _epoch/_prev): single-table
+# states keep their parquet parts at the version root. Count-Min versions
+# written before the shared file carry the same JSON as "meta.json".
+META_FILE = "_meta.json"
+STAMP = "state_params"
+
+
+def write_state_params(version_dir: str, params: dict) -> None:
+    """Record a version's geometry (``_meta.json``) inside its dir, so it
+    commits with the data at the manifest flip (like write_epoch)."""
+    backend_for(version_dir).write_text(
+        os.path.join(version_dir, META_FILE), json.dumps(params)
+    )
+
+
+def read_state_params(version_dir: str) -> dict | None:
+    """The geometry a version was built with, or None if it has none."""
+    fs = backend_for(version_dir)
+    for name in (META_FILE, "meta.json"):
+        p = os.path.join(version_dir, name)
+        if fs.isfile(p):
+            return json.loads(fs.read_text(p))
+    return None
+
+
+def stamp_params(col, name: str, params: dict):
+    """``col`` aliased ``name`` with ``params`` as column metadata: a
+    caller-built partial then names its own geometry, which fold_state
+    checks from the schema (the metadata survives localCheckpoint,
+    filter, unionByName and parquet) without running a job."""
+    return col.alias(name, metadata={STAMP: params})
+
+
+def _check_params(what: str, state_path: str, source: str,
+                  got: dict | None, params: dict) -> None:
+    def fmt(p: dict) -> str:
+        return ", ".join(f"{k}={v}" for k, v in p.items())
+
+    if got is None:
+        raise ValueError(
+            f"{what} at {state_path}: live version has no {META_FILE}; "
+            f"refusing to merge with {fmt(params)} unchecked"
+        )
+    if got != json.loads(json.dumps(params)):
+        raise ValueError(
+            f"{what} geometry mismatch at {state_path}: {source} has "
+            f"{fmt(got)}; refusing to merge with {fmt(params)}"
+        )
+
+
+def fold_state(spark, state_path: str, *, what: str, params: dict,
+               partial, combine, write, epoch: int | None) -> None:
+    """Fold one batch into a rewrite-style state — the one fold contract.
+
+    ``partial()`` builds the batch's partial (a frame or a tuple of
+    frames), outside the lease. ``combine(old, part)`` merges it with the
+    live version, where ``old(*sub)`` reads ``<live>/<sub...>``.
+    ``write(vdir, merged)`` writes the new version's data. Sequence:
+    epoch fast path; partial; lease; authoritative epoch re-check (a
+    writer that held the lease while we built the partial may have
+    committed this very epoch — a zombie process's replay — and an additive
+    merge would double-count); live version; geometry check; commit with
+    the predecessor recorded. ``params`` (JSON-able) are the state's
+    geometry: recorded as ``_meta.json`` in every version and compared on
+    every fold with the live file and with any stamp (stamp_params) on
+    the partial's columns, so a first fold of a caller-built partial is
+    checked too. A live version without the file is refused.
+    """
+    if epoch_already_applied(state_path, what, epoch):
+        return  # replayed micro-batch: already folded in
+    part = partial()
+    with writer_lease(state_path, what=what):
+        if epoch_already_applied(state_path, what, epoch):
+            return
+        live = live_version_dir(state_path, what=what)
+        for df in part if isinstance(part, tuple) else (part,):
+            for f in df.schema.fields:
+                if STAMP in f.metadata:
+                    _check_params(what, state_path, "partial",
+                                  f.metadata[STAMP], params)
+        if live is not None:
+            _check_params(what, state_path, "state",
+                          read_state_params(live), params)
+            part = combine(
+                lambda *sub: spark.read.parquet(os.path.join(live, *sub)),
+                part,
+            )
+
+        def _write(vdir: str) -> None:
+            write(vdir, part)
+            write_state_params(vdir, params)
+
+        commit_version(state_path, _write, epoch=epoch,
+                       prev=os.path.basename(live) if live else None)
 
 
 def gc_orphans(state_path: str) -> list[str]:

@@ -52,8 +52,12 @@ def get_spark(
         # (1.30x) and 20.43 -> 17.05 s at 8 cores (1.20x), every query
         # >= 1.0x. The AQE threshold bounds the runtime SMJ->SHJ rewrite
         # to partitions whose build side is < 256 MB (with AQE
-        # coalescing targeting ~64 MB partitions, an OOM-safe margin);
-        # both knobs are env-overridable for cluster postures where
+        # coalescing targeting ~64 MB partitions, an OOM-safe margin).
+        # The flag also steers the STATIC planner, which picks SHJ
+        # whenever stats say the build side fits a local hash map — the
+        # 256m AQE bound does not apply there, so a misestimated build
+        # side on a skewed or stats-poor source can OOM an executor.
+        # Both knobs are env-overridable for cluster postures where
         # build-side memory is tighter.
         .config(
             "spark.sql.join.preferSortMergeJoin",
@@ -78,7 +82,7 @@ def get_spark(
         # this is the same knob you point at the fast local SSD array.
         .config(
             "spark.local.dir",
-            os.environ.get("SPARK_LOCAL_DIRS", _scratch_local_dir()),
+            os.environ.get("SPARK_LOCAL_DIRS") or _scratch_local_dir(),
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -104,3 +104,16 @@ def test_bloom_state_param_mismatch_refused(spark, tmp_path):
         )
     )
     assert got == want
+
+
+def test_bloom_empty_first_fold_pins_params(spark, tmp_path):
+    """An empty first fold leaves no rows for bloom_state_params to read,
+    yet it still pins (m_bits, k): a fold with other params is refused."""
+    from rag_pipelines_spark.operators.bloomfilter import merge_bloom
+
+    st = str(tmp_path / "bloom_empty_first")
+    none = spark.range(0).select(F.col("id").cast("string").alias("fp"))
+    merge_bloom(spark, none, st, key="fp", m_bits=1 << 14, k=4, epoch=0)
+    keys = spark.range(0, 300).select(F.col("id").cast("string").alias("fp"))
+    with pytest.raises(ValueError, match="refusing to merge"):
+        merge_bloom(spark, keys, st, key="fp", m_bits=1 << 16, k=5, epoch=1)

@@ -242,3 +242,17 @@ def test_first_fold_lazy_partial_is_materialized_defensively(spark, tmp_path):
     merge_cm(spark, df, state2, keys=[], item_col="item",
              depth=4, width=64)
     assert a == read_cm(spark, state2)[0].orderBy("d", "bucket").collect()
+
+
+def test_first_fold_smaller_width_partial_refused(spark, tmp_path):
+    """A caller partial built with a SMALLER width has every bucket below
+    the call's width, so no bound on its rows can catch it; its stamped
+    geometry is refused on the first fold and nothing is committed."""
+    df = _stream(spark)
+    narrow = cm_partial(df, ["grp"], "item", depth=4, width=32).localCheckpoint()
+    state = str(tmp_path / "cm_narrow")
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        merge_cm(spark, df, state, keys=["grp"], item_col="item",
+                 depth=4, width=64, partial=narrow)
+    with pytest.raises(FileNotFoundError):
+        read_cm(spark, state)

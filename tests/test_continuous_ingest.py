@@ -20,6 +20,8 @@ from rag_pipelines_spark.streaming.incremental import continuous_ingest_pipeline
 
 # Fsync-bound slow partition (tools/slow_tests.txt): deselected by the
 # default `-m "not slow"` addopts; run via tools/run_slow_suite.sh.
+# Naming this file explicitly still selects nothing without `-m slow`
+# (e.g. `pytest -m slow tests/test_continuous_ingest.py`).
 pytestmark = pytest.mark.slow
 
 SCHEMA = StructType(

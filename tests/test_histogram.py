@@ -42,6 +42,24 @@ def test_n_merges_equal_union_histogram(spark, tmp_path):
     assert got == want
 
 
+def test_width_mismatch_refused(spark, tmp_path):
+    """Bins of different widths do not add: a fold at another width is
+    refused and the state is left as it was."""
+    import pytest
+
+    ev = spark.createDataFrame(
+        [("a", 1.5), ("a", 3.5), ("b", 0.5)], "event_type STRING, value DOUBLE"
+    )
+    state = str(tmp_path / "hist_width")
+    merge_histogram(spark, ev, state, keys=["event_type"], col="value",
+                    width=1.0)
+    before = sorted(map(tuple, read_histogram(spark, state).collect()))
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        merge_histogram(spark, ev, state, keys=["event_type"], col="value",
+                        width=2.0)
+    assert sorted(map(tuple, read_histogram(spark, state).collect())) == before
+
+
 def test_quantile_error_bounded_by_width(spark):
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
         "event_type", "value"

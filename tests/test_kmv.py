@@ -107,3 +107,17 @@ def test_state_k_mismatch_refused(spark, tmp_path):
     got = read_kmv(spark, st).collect()[0].kmv
     want = kmv_sketch(df.unionByName(more), ["g"], "item", k=64).collect()[0].kmv
     assert got == want
+
+
+def test_empty_first_fold_pins_k(spark, tmp_path):
+    """An empty first fold has no rows to carry k in-band, yet it still
+    pins the state's k: a later fold with another k is refused."""
+    from rag_pipelines_spark.operators.kmv import merge_kmv, read_kmv
+
+    st = str(tmp_path / "kmv_empty_first")
+    merge_kmv(spark, _items(spark, 0), st, keys=["g"], item_col="item",
+              k=256, epoch=0)
+    assert read_kmv(spark, st).count() == 0
+    with pytest.raises(ValueError, match="k=256"):
+        merge_kmv(spark, _items(spark, 500), st, keys=["g"],
+                  item_col="item", k=64, epoch=1)

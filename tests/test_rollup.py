@@ -227,3 +227,18 @@ def test_state_schema_stable_across_merges(spark, tmp_path):
         schemas.append(dict(read_rollup(spark, state).dtypes))
     assert all(s["sum_value"] == "decimal(30,15)" for s in schemas), schemas
     assert schemas[0] == schemas[1] == schemas[2]
+
+
+def test_live_version_without_geometry_refused(spark, tmp_path):
+    """A live version with no recorded geometry (_meta.json) is refused,
+    not folded unchecked."""
+    import os
+
+    from rag_pipelines_spark.operators.state import META_FILE, live_version_dir
+
+    ev = spark.createDataFrame([("a", 1.0)], "event_type STRING, value DOUBLE")
+    state = str(tmp_path / "rollup-nometa")
+    merge_rollup(spark, ev, state, keys=["event_type"], measures=MEASURES)
+    os.remove(os.path.join(live_version_dir(state), META_FILE))
+    with pytest.raises(ValueError, match="no _meta.json"):
+        merge_rollup(spark, ev, state, keys=["event_type"], measures=MEASURES)

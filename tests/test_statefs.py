@@ -13,6 +13,8 @@ import pytest
 
 # Fsync-bound slow partition (tools/slow_tests.txt): deselected by the
 # default `-m "not slow"` addopts; run via tools/run_slow_suite.sh.
+# Naming this file explicitly still selects nothing without `-m slow`
+# (e.g. `pytest -m slow tests/test_statefs.py`).
 pytestmark = pytest.mark.slow
 
 

@@ -136,6 +136,19 @@ def test_fully_duplicated_doc_empties(spark):
     assert got[1] == ""
 
 
+def test_null_text_returns_empty_string(spark):
+    """A NULL-text document comes back as '' (the DuckDB oracle's
+    answer), not NULL, alongside deduped neighbours."""
+    df = spark.createDataFrame(
+        [(0, "a b c d"), (1, None), (2, "a b c d")], "doc_id INT, text STRING"
+    )
+    got = {
+        r.doc_id: r.clean_text
+        for r in substring_dedup(df, "doc_id", "text", n=2).collect()
+    }
+    assert got == {0: "a b c d", 1: "", 2: ""}
+
+
 def test_adjacent_spans_merge(spark):
     """Two dup grams whose coverage is contiguous-but-not-overlapping in
     the probe doc merge into one maximal span."""
