@@ -26,11 +26,9 @@ Design choices, each load-bearing at scale:
     own (cell, id) assignment pass against the broadcast seeds; state
     grows by |batch| rows (vector-sized — this family stores the
     vectors themselves, the price any re-rank-capable index pays).
-  * **Exactly-once via commit markers.** Identical choreography to the
-    near-dup key append: rows land in the live version dir, an fsync'd
-    epoch marker is written only after the job commit returns, and a
-    replayed epoch skips (marker present) or redoes (absent) — row
-    presence is never the done signal.
+  * **Exactly-once via commit markers.** The append runs under
+    operators/state.py::append_state, the contract the near-dup key
+    append shares: row presence is never the done signal.
 
 Serving (`ann_query_from_state`) is ivf_topk_exact's probe phase against
 the stored postings: queries assign to their nprobe nearest stored
@@ -41,21 +39,16 @@ re-rank, round-9 cosines — identical output contract to q_cosine_topk.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.semdedup import _cos9, _dot_dec
 from rag_pipelines_spark.operators.state import (
-    epoch_is_committed,
+    append_state,
+    compact_append_state,
     live_version_dir,
-    mark_epoch_committed,
-    max_committed_epoch,
-    write_manifest,
-    writer_lease,
 )
-from rag_pipelines_spark.operators.statefs import backend_for
 
 __all__ = [
     "merge_ann_index",
@@ -121,50 +114,36 @@ def merge_ann_index(
     the batch's (cell, id, v, n2) postings under the commit-marker
     protocol. Safe to replay a marked epoch (no-op)."""
     norms = _norms(batch, id_col, vec_col).localCheckpoint(eager=True)
-    with writer_lease(state_path, what=_WHAT):
-        live = live_version_dir(state_path, what=_WHAT)
-        if live is None and not norms.take(1):
-            return  # nothing to freeze seeds from: state stays fresh
-        if live is None:
-            seeds = (
-                norms.select(
-                    F.col("id").alias("seed_id"),
-                    F.col("v").alias("sv"),
-                    F.col("n2").alias("sn2"),
-                    F.md5(F.col("id").cast("string")).alias("h"),
-                )
-                .orderBy("h", "seed_id")
-                .limit(k_seeds)
-                .drop("h")
+    if live_version_dir(state_path, what=_WHAT) is None and not norms.take(1):
+        return  # nothing to freeze seeds from: state stays fresh
+
+    def _init() -> None:
+        # seeds BEFORE the manifest: a crash in between leaves a
+        # manifest-less root, which live_version_dir reports as fresh
+        # (refuse-to-look-empty holds: postings cannot exist yet)
+        seeds = (
+            norms.select(
+                F.col("id").alias("seed_id"),
+                F.col("v").alias("sv"),
+                F.col("n2").alias("sn2"),
+                F.md5(F.col("id").cast("string")).alias("h"),
             )
-            # seeds BEFORE the manifest: a crash in between leaves a
-            # manifest-less root, which live_version_dir reports as fresh
-            # (refuse-to-look-empty holds: postings cannot exist yet)
-            seeds.coalesce(1).write.mode("overwrite").parquet(
-                _seeds_dir(state_path)
-            )
-            version = f"v-{uuid.uuid4().hex[:8]}"
-            live = os.path.join(state_path, version)
-            backend_for(state_path).makedirs(live)
-            write_manifest(state_path, version)
-        if epoch is not None:
-            done_max = max_committed_epoch(live)
-            if done_max is not None and done_max > epoch:
-                raise RuntimeError(
-                    f"ann index state at {state_path} holds committed epoch "
-                    f"{done_max} > incoming {epoch} — checkpoint reset "
-                    "against existing state; restore the checkpoint or "
-                    "start a fresh state root"
-                )
-            if epoch_is_committed(live, epoch):
-                return  # replayed micro-batch: postings already visible
-        seeds = _read_seeds(spark, state_path)
-        postings = _nearest_cells(norms, seeds, 1)
+            .orderBy("h", "seed_id")
+            .limit(k_seeds)
+            .drop("h")
+        )
+        seeds.coalesce(1).write.mode("overwrite").parquet(
+            _seeds_dir(state_path)
+        )
+
+    def _append(vdir: str) -> None:
+        postings = _nearest_cells(norms, _read_seeds(spark, state_path), 1)
         if epoch is not None:
             postings = postings.withColumn("epoch", F.lit(epoch))
-        postings.write.mode("append").parquet(live)
-        if epoch is not None:
-            mark_epoch_committed(live, epoch)
+        postings.write.mode("append").parquet(vdir)
+
+    append_state(state_path, what=_WHAT, epoch=epoch, write=_append,
+                 init=_init)
 
 
 def read_ann_postings(spark, state_path: str) -> DataFrame:
@@ -231,33 +210,10 @@ def compact_ann_postings(
     replay redo the append (merge_ann_index's contract) — doubled rows
     are invisible to top-k (distinct before ranking) and reclaimed here.
 
-    Same crash-safe choreography as compact_neardup_state: new version
-    dir while the MANIFEST names the old one, atomic pointer flip,
-    newest epoch marker carried forward, predecessor retained one
-    generation for in-flight readers, orphans GC'd. Single-writer via
-    the shared lease.
+    Thin wrapper over operators/state.py::compact_append_state (the
+    crash-safe rewrite compact_neardup_state shares).
     """
-    from rag_pipelines_spark.operators.state import (
-        gc_orphans,
-        write_prev,
+    return compact_append_state(
+        spark, state_path, what=_WHAT, cluster_col="cell",
+        num_partitions=num_partitions,
     )
-
-    with writer_lease(state_path, what=_WHAT):
-        live = live_version_dir(state_path, what=_WHAT)
-        if live is None:
-            raise FileNotFoundError(f"no ann index state at {state_path}")
-        state = spark.read.parquet(live).dropDuplicates()
-        n_rows = state.count()
-        n = num_partitions or spark.sparkContext.defaultParallelism
-        new_version = f"v-{uuid.uuid4().hex[:8]}"
-        new_dir = os.path.join(state_path, new_version)
-        state.repartition(n, "cell").sortWithinPartitions("cell").write.mode(
-            "overwrite"
-        ).parquet(new_dir)
-        done_max = max_committed_epoch(live)
-        if done_max is not None:
-            mark_epoch_committed(new_dir, done_max)
-        write_prev(new_dir, os.path.basename(live))
-        write_manifest(state_path, new_version)
-        gc_orphans(state_path)
-    return n_rows

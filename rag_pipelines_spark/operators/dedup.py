@@ -15,6 +15,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from rag_pipelines_spark.operators.state import (
+    append_state,
+    compact_append_state,
+    live_version_dir,
+)
+from rag_pipelines_spark.operators.statefs import backend_for
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -527,17 +534,11 @@ def near_dedup_pairs(
     )
 
 
-# Manifest/versioned-prefix state addressing is shared with every other
-# incremental operator (BM25 corpus stats in operators/retrieval.py) —
-# mechanics and crash-safety rationale live in operators/state.py; the
-# crash drills that pin this behavior are tests/test_incremental_neardup.py.
-from rag_pipelines_spark.operators.state import (  # noqa: E402
-    write_manifest as _write_manifest,
-)
-from rag_pipelines_spark.operators.state import (  # noqa: E402
-    live_version_dir as _live_version_dir,
-)
-from rag_pipelines_spark.operators.statefs import backend_for  # noqa: E402
+# The near-dup state is an append-style state: the exactly-once append,
+# the manifest addressing and the compaction rewrite are
+# operators/state.py's append_state / compact_append_state (crash drills:
+# tests/test_incremental_neardup.py).
+_ND_STATE = "neardup state"
 
 
 def neardup_state_dir(state_path: str) -> str | None:
@@ -546,7 +547,7 @@ def neardup_state_dir(state_path: str) -> str | None:
     Thin wrapper over operators/state.py::live_version_dir (see that
     module for the layout and the refuse-to-look-empty contract).
     """
-    return _live_version_dir(state_path, what="neardup state")
+    return live_version_dir(state_path, what=_ND_STATE)
 
 
 def incremental_neardup(
@@ -568,42 +569,24 @@ def incremental_neardup(
     within-batch keeper). Survivors' band keys append to state; returns
     the surviving rows of `batch`.
 
-    State is addressed through a MANIFEST pointer (see neardup_state_dir):
-    appends land in the live version directory; compaction swaps the
-    pointer, never the directory. Single-writer: batches and compactions
-    are assumed serialized (the reference's watcher is a singleton cron —
-    fda_watcher.py scheduling); a crashed append leaves only uncommitted
-    temp files, so retrying the batch is safe and idempotent w.r.t.
-    verdicts (replayed content collides with its own accepted keys).
+    The append runs under operators/state.py::append_state (lease, first
+    init, checkpoint-reset and replay guards, commit marker); a crashed
+    append leaves only uncommitted temp files, so retrying the batch is
+    safe and idempotent w.r.t. verdicts (replayed content collides with
+    its own accepted keys).
 
     `epoch` (foreachBatch's epoch_id) upgrades that idempotence from
     "verdicts preserved" to "OUTPUT preserved": state rows carry the
-    epoch they were appended in, collision checks see only EARLIER
-    epochs, and the append is recorded done by an fsync'd COMMIT MARKER
-    (state.py::mark_epoch_committed) written only after the append's job
-    commit returned — row presence is NOT the done signal, because a
-    crash mid job-commit leaves a partial file set visible and skipping
-    the append on that evidence would lose the remaining survivors' band
-    keys forever (future near-dups re-admitted). With the marker, a
-    replayed micro-batch either redoes the append (marker absent; the
-    crash-window duplicates this can leave are invisible to the
-    left_semi collision probes and swept by compaction's dropDuplicates)
-    or skips it (marker present) — and either way returns the SAME
-    `clean` set, letting downstream epoch-guarded merges (corpus stats,
-    rollup) repair themselves after a mid-batch crash. A state dir must
-    be used consistently with or without epochs (the column is part of
-    the parquet schema).
+    epoch they were appended in and collision checks see only EARLIER
+    epochs, so a replayed micro-batch either redoes the append (marker
+    absent; the crash-window duplicates this can leave are invisible to
+    the left_semi collision probes and swept by compaction's
+    dropDuplicates) or skips it (marker present) — and either way returns
+    the SAME `clean` set, letting downstream epoch-guarded merges (corpus
+    stats, rollup) repair themselves after a mid-batch crash. A state dir
+    must be used consistently with or without epochs (the column is part
+    of the parquet schema).
     """
-    import os
-    import uuid
-
-    from rag_pipelines_spark.operators.state import (
-        epoch_is_committed,
-        mark_epoch_committed,
-        max_committed_epoch,
-        writer_lease,
-    )
-
     new_bands = minhash_band_keys(batch, id_col, text_col).localCheckpoint(
         eager=True
     )
@@ -613,25 +596,12 @@ def incremental_neardup(
         n.endswith(".parquet") for n in backend_for(live).listdir(live)
     )
     dup_vs_state = None
-    already_applied = False
     if state_exists:
         state = spark.read.parquet(live)
         if epoch is not None:
             # replay-stable: this epoch's own keys never count as
-            # collisions. A committed state epoch AHEAD of the incoming
-            # one means the stream checkpoint was reset against existing
-            # state (epoch counters restart per checkpoint) — raise,
-            # because filtering those rows out would silently corrupt
-            # verdicts.
-            done_max = max_committed_epoch(live)
-            if done_max is not None and done_max > epoch:
-                raise RuntimeError(
-                    f"neardup state at {state_path} holds committed epoch "
-                    f"{done_max} > incoming {epoch} — checkpoint reset "
-                    "against existing state; restore the checkpoint or "
-                    "start a fresh state root"
-                )
-            already_applied = epoch_is_committed(live, epoch)
+            # collisions (a checkpoint reset raises in append_state
+            # before anything is written)
             state = state.filter(
                 F.col("epoch").isNull() | (F.col("epoch") < epoch)
             )
@@ -656,32 +626,19 @@ def incremental_neardup(
         else dup_in_batch
     )
     clean = batch.join(dups, id_col, "left_anti").localCheckpoint(eager=True)
-    with writer_lease(state_path, what="neardup state"):
-        # re-resolve under the lease: a compaction between the collision
-        # probe and here may have swapped versions — appending into the
-        # superseded dir would lose this batch's keys at the next GC.
-        # (Verdicts computed above stay valid: compaction is a pure
-        # row-preserving repartition, and it carries the max epoch's
-        # commit marker forward.)
-        live = neardup_state_dir(state_path)
-        if live is None:
-            # first init: version dir BEFORE manifest — a crash between the
-            # two leaves a data-less v-dir, which neardup_state_dir proves
-            # harmless and still reports as fresh
-            version = f"v-{uuid.uuid4().hex[:8]}"
-            live = os.path.join(state_path, version)
-            backend_for(state_path).makedirs(live)
-            _write_manifest(state_path, version)
-        # append only the SURVIVORS' keys (one row set per accepted doc)
-        if not already_applied:
-            keys = new_bands.join(clean.select(id_col), id_col, "left_semi")
-            if epoch is not None:
-                keys = keys.withColumn("epoch", F.lit(epoch))
-            keys.write.mode("append").parquet(live)
-            if epoch is not None:
-                # COMMIT RECORD, after the job commit returned: proves the
-                # full file set is visible (see docstring)
-                mark_epoch_committed(live, epoch)
+
+    def _append(vdir: str) -> None:
+        # append_state re-resolves the live dir under the lease: a
+        # compaction since the probe above may have swapped versions.
+        # Verdicts stay valid: compaction is a pure row-preserving
+        # repartition that carries the max epoch's marker forward.
+        # Only the SURVIVORS' keys append (one row set per accepted doc).
+        keys = new_bands.join(clean.select(id_col), id_col, "left_semi")
+        if epoch is not None:
+            keys = keys.withColumn("epoch", F.lit(epoch))
+        keys.write.mode("append").parquet(vdir)
+
+    append_state(state_path, what=_ND_STATE, epoch=epoch, write=_append)
     return clean
 
 
@@ -697,63 +654,17 @@ def compact_neardup_state(
     Compaction reads the whole live version ONCE and rewrites it
     hash-partitioned on bkey — collision probes against compacted state
     shuffle-prune to the matching partitions, and the file count is fixed
-    at num_partitions regardless of how many batches accreted.
+    at num_partitions regardless of how many batches accreted. Cadence
+    guidance in SCALE.md: compact when the file count exceeds ~10x
+    cluster parallelism.
 
-    The rewrite runs dropDuplicates: the steady state holds one
-    (id, band, bkey) row per accepted doc-band, but a crash between an
-    epoch append's job commit and its commit marker makes the replay
-    redo the append (incremental_neardup's marker contract), which can
-    leave one epoch's keys doubled — semantically invisible to the
-    left_semi probes, reclaimed here. Cadence guidance in SCALE.md:
-    compact when the file count exceeds ~10x cluster parallelism.
-
-    Crash safety — manifest/versioned-prefix scheme (object-store safe):
-    the compacted copy is written to a NEW version directory while the
-    MANIFEST still names the old one, then the pointer is flipped with one
-    atomic replace (one small-key PUT on an object store — no multi-key
-    rename anywhere), then superseded version dirs are GC'd. The live
-    state path therefore exists at every instant:
-
-    * crash before the flip → MANIFEST still names the old version; the
-      orphaned new dir is unreferenced and removed by the next
-      compaction's GC sweep;
-    * crash after the flip, before GC → MANIFEST names the new version;
-      the stale old dir is unreferenced and GC'd next time;
-    * neardup_state_dir refuses to resolve a state whose pointer is
-      missing/dangling, so no crash mode degrades to "state looks empty".
-
-    Single-writer, like the append path: one compaction at a time (a
-    concurrent compactor's un-pointered new dir would be GC'd as an
-    orphan).
+    Thin wrapper over operators/state.py::compact_append_state, which
+    owns the crash-safe choreography (new version dir, atomic MANIFEST
+    flip, newest epoch marker carried forward, predecessor kept one
+    generation, orphans GC'd) and the dropDuplicates that reclaims
+    crash-window doubled keys. Single-writer via the shared lease.
     """
-    import os
-    import uuid
-
-    from rag_pipelines_spark.operators.state import (
-        gc_orphans,
-        mark_epoch_committed,
-        max_committed_epoch,
-        write_prev,
-        writer_lease,
+    return compact_append_state(
+        spark, state_path, what=_ND_STATE, cluster_col="bkey",
+        num_partitions=num_partitions,
     )
-
-    with writer_lease(state_path, what="neardup state"):
-        live = neardup_state_dir(state_path)
-        if live is None:
-            raise FileNotFoundError(f"no neardup state at {state_path}")
-        state = spark.read.parquet(live).dropDuplicates()
-        n_rows = state.count()
-        n = num_partitions or spark.sparkContext.defaultParallelism
-        new_version = f"v-{uuid.uuid4().hex[:8]}"
-        new_dir = os.path.join(state_path, new_version)
-        state.repartition(n, "bkey").write.mode("overwrite").parquet(new_dir)
-        # carry the newest epoch's commit marker: only the LATEST epoch can
-        # ever be replayed (the stream advances past N only after N's
-        # checkpoint commit), so older markers are dead weight and dropped
-        done_max = max_committed_epoch(live)
-        if done_max is not None:
-            mark_epoch_committed(new_dir, done_max)
-        write_prev(new_dir, os.path.basename(live))  # reader-grace record
-        _write_manifest(state_path, new_version)  # atomic pointer flip
-        gc_orphans(state_path)  # sweeps all but live + its predecessor
-    return n_rows

@@ -35,12 +35,20 @@ operator acquires `writer_lease` (pid+timestamp lease file, stale-lease
 takeover) and a concurrent second writer raises instead of interleaving
 manifest flips.
 
-`fold_state` is the one fold contract for the rewrite-style state
-families (rollup, histogram, freq, HLL, KMV, bloom, Count-Min, corpus
-stats): each family supplies its batch partial, its combine and its
-write; fold_state owns the epoch guards, the lease, the geometry check
-against the version's ``_meta.json`` and the version commit (the
-Summingbird split: a per-family monoid, one generic fold).
+Two fold contracts, one per state shape (the Summingbird split: the
+family supplies its per-batch logic, one generic fold owns the
+exactly-once epoch policy):
+
+* `fold_state` for the rewrite-style families (rollup, histogram, freq,
+  HLL, KMV, bloom, Count-Min, corpus stats): each family supplies its
+  batch partial, its combine and its write; fold_state owns the epoch
+  guards, the lease, the geometry check against the version's
+  ``_meta.json`` and the version commit.
+* `append_state` / `compact_append_state` for the append-style families
+  (near-dup band keys, ANN postings): the family supplies its append
+  (and first-init side files); append_state owns the lease, the first
+  init, the checkpoint-reset and replay guards and the epoch commit
+  marker; compact_append_state owns the dedup-and-recluster rewrite.
 """
 
 from __future__ import annotations
@@ -495,3 +503,77 @@ def max_committed_epoch(dir_: str) -> int | None:
         if n.startswith("_epoch-") and n.endswith(".committed")
     ]
     return max(epochs) if epochs else None
+
+
+def append_state(state_path: str, *, what: str, epoch: int | None,
+                 write, init=None) -> None:
+    """Append one batch to an append-style state — the exactly-once
+    append contract (near-dup band keys, ANN postings).
+
+    Under the lease: resolve the live version, or on first init run
+    ``init()`` (side files such as frozen seeds) and create the version
+    dir BEFORE the manifest — a crash in between leaves a data-less
+    v-dir, which live_version_dir reports as fresh. A committed epoch
+    AHEAD of the incoming one means the stream checkpoint was reset
+    against existing state: raise. A committed incoming epoch is a
+    replay: skip. Otherwise ``write(live)`` appends into the live dir and
+    the commit marker follows the append's job commit (see the marker
+    section above: row presence is never the done signal).
+    """
+    with writer_lease(state_path, what=what):
+        live = live_version_dir(state_path, what=what)
+        if live is None:
+            if init is not None:
+                init()
+            version = new_version_name()
+            live = os.path.join(state_path, version)
+            backend_for(state_path).makedirs(live)
+            write_manifest(state_path, version)
+        if epoch is not None:
+            done_max = max_committed_epoch(live)
+            if done_max is not None and done_max > epoch:
+                raise RuntimeError(
+                    f"{what} at {state_path} holds committed epoch "
+                    f"{done_max} > incoming {epoch} — checkpoint reset "
+                    "against existing state; restore the checkpoint or "
+                    "start a fresh state root"
+                )
+            if epoch_is_committed(live, epoch):
+                return  # replayed micro-batch: the append is visible
+        write(live)
+        if epoch is not None:
+            mark_epoch_committed(live, epoch)
+
+
+def compact_append_state(spark, state_path: str, *, what: str,
+                         cluster_col: str,
+                         num_partitions: int | None = None) -> int:
+    """Rewrite an append-style state's live version clustered on
+    ``cluster_col``; returns the row count.
+
+    dropDuplicates reclaims the rows a crash between an append's job
+    commit and its marker doubles (the replay redoes the append). The
+    new version is written while the MANIFEST still names the old one,
+    then flipped (commit_version); only the newest epoch marker is
+    carried forward, because only the latest epoch can ever be replayed
+    (the stream advances past N only after N's checkpoint commit).
+    """
+    with writer_lease(state_path, what=what):
+        live = live_version_dir(state_path, what=what)
+        if live is None:
+            raise FileNotFoundError(f"no {what} at {state_path}")
+        state = spark.read.parquet(live).dropDuplicates()
+        n_rows = state.count()
+        n = num_partitions or spark.sparkContext.defaultParallelism
+
+        def _write(vdir: str) -> None:
+            state.repartition(n, cluster_col).sortWithinPartitions(
+                cluster_col
+            ).write.mode("overwrite").parquet(vdir)
+            done_max = max_committed_epoch(live)
+            if done_max is not None:
+                mark_epoch_committed(vdir, done_max)
+
+        commit_version(state_path, _write, epoch=None,
+                       prev=os.path.basename(live))
+    return n_rows

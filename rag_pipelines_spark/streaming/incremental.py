@@ -454,7 +454,9 @@ def continuous_ingest_pipeline(
     seen_path = os.path.join(root, "seen")
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
+        from rag_pipelines_spark.operators.rollup import read_rollup
         from rag_pipelines_spark.operators.state import (
+            epoch_already_applied,
             mark_epoch_committed,
             max_committed_epoch,
         )
@@ -507,6 +509,34 @@ def continuous_ingest_pipeline(
         def crash(step: str) -> None:
             if _crash_after == step:
                 raise RuntimeError(f"injected crash after step {step!r}")
+
+        def _score_then_fold(name, what, ref_schema, part, score):
+            """Score-before-ingest gate: score the batch against the
+            ``<root>/<name>`` rollup state as it stood BEFORE this batch
+            (an empty ``ref_schema`` frame on epoch 0), overwrite
+            ``<root>/<name>score/epoch=N``, then fold ``part()`` in. One
+            guard for the WHOLE block: once the fold committed, re-scoring
+            would see a reference that already contains this batch, so
+            score + fold replay as a unit or not at all (see docstring)."""
+            path = os.path.join(root, name)
+            if epoch_already_applied(path, what, epoch_id):
+                return
+            frame = part()
+            empty = s.createDataFrame([], ref_schema)
+            *keys, cnt = empty.columns
+            try:
+                ref = read_rollup(s, path).select(
+                    *keys, F.col(f"count_{id_col}").alias(cnt)
+                )
+            except FileNotFoundError:  # epoch 0: empty reference
+                ref = empty
+            score(frame, ref).write.mode("overwrite").parquet(
+                os.path.join(root, f"{name}score", f"epoch={epoch_id}")
+            )
+            merge_rollup(
+                s, frame, path, keys=keys, measures={id_col: ["count"]},
+                epoch=epoch_id,
+            )
 
         crash("delta")
         clean = incremental_neardup(
@@ -575,53 +605,24 @@ def continuous_ingest_pipeline(
             crash("countmin")
         if lm_gate:
             from rag_pipelines_spark.operators.lm import bigrams, familiarity
-            from rag_pipelines_spark.operators.state import (
-                epoch_already_applied,
-            )
 
-            lm_path = os.path.join(root, "lm")
-            # one guard for the WHOLE block: once the merge committed,
-            # re-scoring would run against a model that already contains
-            # this batch and produce different numbers — so score+merge
-            # replay as a unit or not at all (see docstring)
-            if not epoch_already_applied(lm_path, "lm bigram state", epoch_id):
-                try:
-                    from rag_pipelines_spark.operators.rollup import (
-                        read_rollup,
-                    )
-
-                    model = read_rollup(s, lm_path).select(
-                        "w1", "w2", F.col(f"count_{id_col}").alias("c12")
-                    )
-                except FileNotFoundError:  # epoch 0: empty model
-                    model = s.createDataFrame(
-                        [], "w1 string, w2 string, c12 bigint"
-                    )
-                familiarity(clean, model, text_col=text_col, id_col=id_col) \
-                    .write.mode("overwrite").parquet(
-                        os.path.join(root, "lmscore", f"epoch={epoch_id}")
-                    )
-                pairs = clean.select(
+            _score_then_fold(
+                "lm", "lm bigram state", "w1 string, w2 string, c12 bigint",
+                lambda: clean.select(
                     F.col(id_col), F.explode(bigrams(text_col)).alias("p")
-                ).select(id_col, "p.w1", "p.w2")
-                merge_rollup(
-                    s, pairs, lm_path,
-                    keys=["w1", "w2"], measures={id_col: ["count"]},
-                    epoch=epoch_id,
-                )
+                ).select(id_col, "p.w1", "p.w2"),
+                lambda pairs, model: familiarity(
+                    clean, model, text_col=text_col, id_col=id_col
+                ),
+            )
             crash("lm")
         if dsir_target is not None:
             from rag_pipelines_spark.operators.dsir import (
                 dsir_score_against,
                 hashed_ngram_features,
             )
-            from rag_pipelines_spark.operators.rollup import read_rollup
-            from rag_pipelines_spark.operators.state import (
-                epoch_already_applied,
-                live_version_dir,
-            )
+            from rag_pipelines_spark.operators.state import live_version_dir
 
-            dsir_path = os.path.join(root, "dsir")
             tgt_path = os.path.join(root, "dsirtarget")
             # frozen target distribution: written once, never accreted
             # (live-version check, not an epoch guard — any later epoch
@@ -637,80 +638,46 @@ def continuous_ingest_pipeline(
                     measures={id_col: ["count"]},
                     epoch=0,
                 )
-            # same one-guard-for-the-block rule as lm_gate: once the raw
-            # merge committed, re-scoring would run against a raw
-            # distribution that already contains this batch
-            if not epoch_already_applied(
-                dsir_path, "dsir raw state", epoch_id
-            ):
-                feats = hashed_ngram_features(
-                    clean, id_col, text_col, dsir_n_buckets
-                )
-                try:
-                    raw = read_rollup(s, dsir_path).select(
-                        "bucket", F.col(f"count_{id_col}").alias("cr")
-                    )
-                except FileNotFoundError:  # epoch 0: empty raw side
-                    raw = s.createDataFrame([], "bucket bigint, cr bigint")
+
+            def dsir_score(feats, raw):
                 tgt = read_rollup(s, tgt_path).select(
                     "bucket", F.col(f"count_{id_col}").alias("ct")
                 )
-                dsir_score_against(
+                return dsir_score_against(
                     feats, raw, tgt, id_col, n_buckets=dsir_n_buckets
-                ).write.mode("overwrite").parquet(
-                    os.path.join(root, "dsirscore", f"epoch={epoch_id}")
                 )
-                merge_rollup(
-                    s, feats, dsir_path,
-                    keys=["bucket"], measures={id_col: ["count"]},
-                    epoch=epoch_id,
-                )
+
+            _score_then_fold(
+                "dsir", "dsir raw state", "bucket bigint, cr bigint",
+                lambda: hashed_ngram_features(
+                    clean, id_col, text_col, dsir_n_buckets
+                ),
+                dsir_score,
+            )
             crash("dsir")
         if drift_gate:
             from rag_pipelines_spark.operators.drift import kl_against
             from rag_pipelines_spark.operators.dsir import (
                 hashed_ngram_features,
             )
-            from rag_pipelines_spark.operators.rollup import read_rollup
-            from rag_pipelines_spark.operators.state import (
-                epoch_already_applied,
-            )
 
-            drift_path = os.path.join(root, "drift")
-            # one guard for the block (lm_gate rule): the KL is scored
-            # against the state BEFORE this batch folds in — replaying
-            # after the merge committed would score a reference that
-            # already contains the batch
-            if not epoch_already_applied(
-                drift_path, "drift bucket state", epoch_id
-            ):
-                dfeats = hashed_ngram_features(
+            _score_then_fold(
+                "drift", "drift bucket state", "bucket bigint, cnt bigint",
+                lambda: hashed_ngram_features(
                     clean, id_col, text_col, 10_000
-                ).localCheckpoint(eager=True)  # score + merge consume it
-                bcounts = dfeats.groupBy("bucket").agg(
-                    F.count("*").alias("cnt")
-                )
-                try:
-                    ref = read_rollup(s, drift_path).select(
-                        "bucket", F.col(f"count_{id_col}").alias("cnt")
-                    )
-                except FileNotFoundError:  # epoch 0: uniform reference
-                    ref = s.createDataFrame([], "bucket bigint, cnt bigint")
-                kl_against(bcounts, ref, n_buckets=10_000).select(
+                ).localCheckpoint(eager=True),  # score + fold consume it
+                lambda feats, ref: kl_against(
+                    feats.groupBy("bucket").agg(F.count("*").alias("cnt")),
+                    ref,
+                    n_buckets=10_000,
+                ).select(
                     F.lit(epoch_id).cast("long").alias("epoch"),
                     "occupied",
                     "kl",
-                ).write.mode("overwrite").parquet(
-                    os.path.join(root, "driftscore", f"epoch={epoch_id}")
-                )
-                merge_rollup(
-                    s, dfeats, drift_path,
-                    keys=["bucket"], measures={id_col: ["count"]},
-                    epoch=epoch_id,
-                )
+                ),
+            )
             crash("drift")
-        if ann_k_seeds is not None:
-            from rag_pipelines_spark.operators.annstate import merge_ann_index
+        if ann_k_seeds is not None or kmeans_k is not None or pca_moments:
             from rag_pipelines_spark.operators.embedding import (
                 hashed_bow_embedding,
             )
@@ -718,40 +685,31 @@ def continuous_ingest_pipeline(
             emb = hashed_bow_embedding(
                 clean, id_col=id_col, text_col=text_col, dim=64
             )
+        if ann_k_seeds is not None:
+            from rag_pipelines_spark.operators.annstate import merge_ann_index
+
             merge_ann_index(
                 s, emb, os.path.join(root, "ann"), id_col, "embedding",
                 k_seeds=ann_k_seeds, epoch=epoch_id,
             )
             crash("ann")
         if kmeans_k is not None:
-            from rag_pipelines_spark.operators.embedding import (
-                hashed_bow_embedding,
-            )
             from rag_pipelines_spark.operators.kmeansstate import (
                 merge_kmeans_state,
             )
 
-            emb_km = hashed_bow_embedding(
-                clean, id_col=id_col, text_col=text_col, dim=64
-            )
             merge_kmeans_state(
-                s, emb_km, os.path.join(root, "kmeans"), id_col, "embedding",
+                s, emb, os.path.join(root, "kmeans"), id_col, "embedding",
                 k=kmeans_k, d=64, epoch=epoch_id,
             )
             crash("kmeans")
         if pca_moments:
-            from rag_pipelines_spark.operators.embedding import (
-                hashed_bow_embedding,
-            )
             from rag_pipelines_spark.operators.pcastate import (
                 merge_pca_moments,
             )
 
-            emb_pca = hashed_bow_embedding(
-                clean, id_col=id_col, text_col=text_col, dim=64
-            )
             merge_pca_moments(
-                s, emb_pca, os.path.join(root, "pca"), epoch=epoch_id
+                s, emb, os.path.join(root, "pca"), epoch=epoch_id
             )
             crash("pca")
         if bpe_vocab:

@@ -159,3 +159,51 @@ def test_compaction_preserves_serve_and_carries_marker(spark, tmp_path):
         epoch=2,
     )
     assert read_ann_postings(spark, str(s)).count() == 24
+
+
+def test_partial_epoch_append_is_repaired_on_replay(spark, tmp_path):
+    """A crash mid job-commit of an epoch's postings append leaves a
+    PARTIAL file set visible with no marker. The replay must redo the
+    append (row presence is not the done signal) so every posting of the
+    epoch is present again, and then write the marker."""
+    import glob
+    import os
+
+    from rag_pipelines_spark.operators.state import (
+        _marker_path,
+        epoch_is_committed,
+        live_version_dir,
+    )
+
+    full = _emb(spark, _vectors(24))
+    b0 = full.filter(full.vec_id < 12)
+    b1 = full.filter(full.vec_id >= 12)
+    s = str(tmp_path / "s")
+    merge_ann_index(spark, b0, s, "vec_id", "embedding", k_seeds=3, epoch=0)
+    live = live_version_dir(s, what="ann index state")
+    before = set(glob.glob(os.path.join(live, "part-*.parquet")))
+    # several task files for epoch 1, so deleting one leaves a partial set
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        merge_ann_index(
+            spark, b1, s, "vec_id", "embedding", k_seeds=3, epoch=1
+        )
+    finally:
+        spark.conf.set(key, saved)
+    epoch1_files = sorted(
+        set(glob.glob(os.path.join(live, "part-*.parquet"))) - before
+    )
+    assert len(epoch1_files) >= 2
+
+    # the crash: epoch 1's marker and its last part file never landed
+    os.unlink(_marker_path(live, 1))
+    os.unlink(epoch1_files[-1])
+    ids = {r.id for r in read_ann_postings(spark, s).collect()}
+    assert ids & set(range(12, 24)) and not set(range(12, 24)) <= ids
+
+    merge_ann_index(spark, b1, s, "vec_id", "embedding", k_seeds=3, epoch=1)
+    ids = {r.id for r in read_ann_postings(spark, s).collect()}
+    assert set(range(12, 24)) <= ids
+    assert epoch_is_committed(live, 1)

@@ -571,3 +571,47 @@ def test_lease_guards_every_merge_family(spark, tmp_path):
             with _pytest.raises(RuntimeError, match="locked by another writer"):
                 fn(path)
         fn(path)  # released -> proceeds
+
+
+def test_compaction_with_epochs_keeps_rows_and_marker(spark, tmp_path):
+    """Epoch-tagged state through compaction: the row count is unchanged,
+    the newest epoch's marker is carried into the new version, and a
+    replay of that epoch is a no-op that returns the same clean set."""
+    from rag_pipelines_spark.operators.dedup import (
+        compact_neardup_state,
+        incremental_neardup,
+        neardup_state_dir,
+    )
+    from rag_pipelines_spark.operators.state import epoch_is_committed
+
+    state = str(tmp_path / "sig_state")
+    schema = "doc_id long, text string"
+
+    def text(i):
+        return " ".join(f"tok{i}word{k}" for k in range(20))
+
+    batches = [
+        spark.createDataFrame(
+            [(e * 10 + j, text(e * 10 + j)) for j in range(3)], schema
+        )
+        for e in range(3)
+    ]
+    clean = [
+        {r.doc_id for r in incremental_neardup(
+            spark, b, state, "doc_id", "text", epoch=e).collect()}
+        for e, b in enumerate(batches)
+    ]
+    old_live = neardup_state_dir(state)
+    n_before = spark.read.parquet(old_live).count()
+
+    assert compact_neardup_state(spark, state, num_partitions=2) == n_before
+    new_live = neardup_state_dir(state)
+    assert new_live != old_live
+    assert epoch_is_committed(new_live, 2)
+
+    replay = {r.doc_id for r in incremental_neardup(
+        spark, batches[2], state, "doc_id", "text", epoch=2).collect()}
+    assert replay == clean[2] == {20, 21, 22}
+    assert neardup_state_dir(state) == new_live
+    assert spark.read.parquet(new_live).count() == n_before
+    assert epoch_is_committed(new_live, 2)
