@@ -17,11 +17,10 @@ Design choices, each load-bearing at scale:
     re-train = rebuild, here = new state root). Frozen seeds are also
     what makes N appends == one-shot build EXACTLY (pinned by test) —
     re-deriving seeds per batch would re-shuffle history's assignments.
-  * **Hash-seeded deterministic seeds** (same scheme as semdedup /
-    ivf_topk_exact): min (md5(id), id) of the init batch, no float
-    averaging — so the DuckDB oracle reproduces the whole index life
-    cycle and the serve query is driver-grade hash-checked
-    (q_ann_from_state).
+  * **Hash-seeded deterministic seeds** (semdedup.hash_min_seeds of
+    the init batch): no float averaging, so the DuckDB oracle
+    reproduces the whole index life cycle and the serve query is
+    hash-checked against it (q_ann_from_state).
   * **Append = postings rows only.** A batch shuffles nothing but its
     own (cell, id) assignment pass against the broadcast seeds; state
     grows by |batch| rows (vector-sized — this family stores the
@@ -30,25 +29,31 @@ Design choices, each load-bearing at scale:
     operators/state.py::append_state, the contract the near-dup key
     append shares: row presence is never the done signal.
 
-Serving (`ann_query_from_state`) is ivf_topk_exact's probe phase against
-the stored postings: queries assign to their nprobe nearest stored
-seeds, candidates come from an equi-join on the cell id, exact decimal
-re-rank, round-9 cosines — identical output contract to q_cosine_topk.
+Assignment and serving are operators/semdedup.py's IVF core:
+postings are `nearest_seeds` against the stored seeds, and
+`ann_query_from_state` is `probe_topk` over the stored seeds and
+postings — the same call ivf_topk_exact makes on a one-shot index, with
+the same output contract as q_cosine_topk.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rag_pipelines_spark.operators.semdedup import _cos9, _dot_dec
+from rag_pipelines_spark.operators.semdedup import (
+    hash_min_seeds,
+    nearest_seeds,
+    probe_topk,
+)
 from rag_pipelines_spark.operators.state import (
     append_state,
     compact_append_state,
     live_version_dir,
 )
+from rag_pipelines_spark.operators.vecexpr import norm2
 
 __all__ = [
     "merge_ann_index",
@@ -62,34 +67,6 @@ _WHAT = "ann index state"
 
 def _seeds_dir(state_path: str) -> str:
     return os.path.join(state_path, "seeds")
-
-
-def _norms(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _dot_dec(F.col(vec_col), F.col(vec_col)).cast("double").alias("n2"),
-    )
-
-
-def _nearest_cells(frame: DataFrame, seeds: DataFrame, n_cells: int) -> DataFrame:
-    """(id, v, n2, cell) — each row's n_cells nearest stored seeds, by
-    (round-9 cosine desc, seed_id asc), nulls last on both engines."""
-    scored = frame.crossJoin(F.broadcast(seeds)).select(
-        frame["id"],
-        frame["v"],
-        frame["n2"],
-        "seed_id",
-        _cos9(_dot_dec(frame["v"], F.col("sv")), frame["n2"], F.col("sn2")).alias(
-            "scos"
-        ),
-    )
-    w = Window.partitionBy("id").orderBy(F.desc_nulls_last("scos"), F.asc("seed_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= n_cells)
-        .select("id", "v", "n2", F.col("seed_id").alias("cell"))
-    )
 
 
 def _read_seeds(spark, state_path: str) -> DataFrame:
@@ -113,7 +90,11 @@ def merge_ann_index(
     vectors OF THIS BATCH (frozen thereafter), then every call appends
     the batch's (cell, id, v, n2) postings under the commit-marker
     protocol. Safe to replay a marked epoch (no-op)."""
-    norms = _norms(batch, id_col, vec_col).localCheckpoint(eager=True)
+    norms = batch.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        norm2(F.col(vec_col)).alias("n2"),
+    ).localCheckpoint(eager=True)
     if live_version_dir(state_path, what=_WHAT) is None and not norms.take(1):
         return  # nothing to freeze seeds from: state stays fresh
 
@@ -121,23 +102,12 @@ def merge_ann_index(
         # seeds BEFORE the manifest: a crash in between leaves a
         # manifest-less root, which live_version_dir reports as fresh
         # (refuse-to-look-empty holds: postings cannot exist yet)
-        seeds = (
-            norms.select(
-                F.col("id").alias("seed_id"),
-                F.col("v").alias("sv"),
-                F.col("n2").alias("sn2"),
-                F.md5(F.col("id").cast("string")).alias("h"),
-            )
-            .orderBy("h", "seed_id")
-            .limit(k_seeds)
-            .drop("h")
-        )
-        seeds.coalesce(1).write.mode("overwrite").parquet(
-            _seeds_dir(state_path)
-        )
+        hash_min_seeds(norms, k_seeds).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(_seeds_dir(state_path))
 
     def _append(vdir: str) -> None:
-        postings = _nearest_cells(norms, _read_seeds(spark, state_path), 1)
+        postings = nearest_seeds(norms, _read_seeds(spark, state_path), 1)
         if epoch is not None:
             postings = postings.withColumn("epoch", F.lit(epoch))
         postings.write.mode("append").parquet(vdir)
@@ -166,33 +136,14 @@ def ann_query_from_state(
     probing each query's nprobe nearest STORED seeds. History is touched
     only as the postings table; no re-assignment, no text/vector rescan
     outside the probed cells."""
-    seeds = _read_seeds(spark, state_path)
-    qn = _norms(queries, id_col, vec_col)
-    probes = _nearest_cells(qn, seeds, nprobe).select(
-        F.col("id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("qn2"),
-        "cell",
+    postings = read_ann_postings(spark, state_path)  # fresh root raises
+    qnorms = queries.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("v"),
+        norm2(F.col(vec_col)).alias("n2"),
     )
-    posts = read_ann_postings(spark, state_path).select(
-        F.col("id").alias("c_id"),
-        F.col("v").alias("cv"),
-        F.col("n2").alias("cn2"),
-        "cell",
-    )
-    cand = probes.join(posts, "cell").filter(F.col("q_id") != F.col("c_id"))
-    scored = cand.select(
-        "q_id",
-        "c_id",
-        _cos9(_dot_dec(F.col("qv"), F.col("cv")), F.col("qn2"), F.col("cn2")).alias(
-            "cosine"
-        ),
-    ).distinct()
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cosine", "rk")
+    return probe_topk(
+        qnorms, _read_seeds(spark, state_path), postings, nprobe, k
     )
 
 

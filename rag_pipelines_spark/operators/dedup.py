@@ -245,23 +245,17 @@ def line_dedup(
     """
     from pyspark.sql import Window
 
-    esc = "".join("\\" + c if c in r"\.[]{}()*+?^$|" else c for c in sep)
     lines = df.select(
-        F.col(id_col), F.posexplode(F.split(F.col(text_col), esc)).alias("pos", "line")
+        F.col(id_col),
+        F.posexplode(F.split(F.col(text_col), _sep_regex(sep))).alias("pos", "line"),
     )
     w = Window.partitionBy("line").orderBy(id_col, "pos")
     # The keeper decision needs the global window (shuffle lower bound),
     # but the REBUILD does not need the whole corpus: only docs that
-    # LOST a line can change (r11: 8 of 5000 docs at sf0.1), and
-    # split-on-sep then join-with-sep is the identity for every string,
-    # so an untouched doc's rebuilt form IS its original text. Keep only
+    # LOST a line can change (r11: 8 of 5000 docs at sf0.1). Keep only
     # the output-sized removal events (the guide §8 decision table,
     # materialized once — it feeds the affected-id set and the
-    # anti-join probe), re-derive the affected docs' lines from source
-    # (same split => same positions, deterministic), and pass everything
-    # else through verbatim. The second O(corpus-text) shuffle (the
-    # rebuild groupBy) shrinks to the affected fraction; the
-    # affected-id joins broadcast a tiny set.
+    # anti-join probe) and rebuild just those docs (rebuild_affected).
     # lazy: the decision table is materialized by whichever consumer's
     # broadcast build touches it first inside the final action — an
     # eager checkpoint here cost one extra blocking job per call
@@ -272,36 +266,61 @@ def line_dedup(
         .select(id_col, "pos")
         .localCheckpoint(eager=False)
     )
+    return rebuild_affected(df.select(id_col, text_col), removed, sep, out_col)
+
+
+def _sep_regex(sep: str) -> str:
+    """`sep` escaped for F.split's regex argument."""
+    return "".join("\\" + c if c in r"\.[]{}()*+?^$|" else c for c in sep)
+
+
+def rebuild_affected(
+    src: DataFrame, removed: DataFrame, sep: str, out_col: str
+) -> DataFrame:
+    """(id, out_col) for every (id, text) row of `src`: documents with a
+    row in the (id, pos) removal table are split on `sep`, lose those
+    positions and are re-joined with `sep` in position order; every
+    other document passes its text through. NULL text comes back as ''
+    (it never splits into removable pieces), and so does a document
+    whose every piece was removed.
+
+    Only AFFECTED documents pay the explode + (id, pos) shuffle + sorted
+    reassembly: split-on-sep then join-with-sep is the identity for
+    every string (consecutive/trailing separators round-trip as empty
+    pieces), so an untouched document's rebuilt form IS its original
+    text, and the corpus-sized rebuild shrinks to the affected fraction
+    at any scale. The affected-id joins broadcast a tiny set.
+
+    Single-branch pass-through (src LEFT JOIN the affected-sized
+    rebuild, coalesce to the original text) instead of a
+    union(untouched, affected): a union splices TWO copies of the
+    source subtree into every downstream consumer, and in persist-free
+    compositions (q_pretraining_prep's registered form) that fan-out
+    compounds multiplicatively through later stages — measured 16->60
+    exchanges in prep's static plan before this form. "" is non-NULL,
+    so the coalesce keeps fully-removed docs empty.
+    """
+    id_col, text_col = src.columns
+    pos = removed.columns[1]
     affected = removed.select(id_col).distinct()
-    src = df.select(
+    src = src.select(
         F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias("_txt")
     )
     aff = src.join(affected, id_col)
-    aff_lines = aff.select(
-        F.col(id_col), F.posexplode(F.split(F.col("_txt"), esc)).alias("pos", "line")
+    pieces = aff.select(
+        F.col(id_col),
+        F.posexplode(F.split(F.col("_txt"), _sep_regex(sep))).alias(pos, "_piece"),
     )
-    kept = aff_lines.join(removed, [id_col, "pos"], "left_anti")
+    kept = pieces.join(removed, [id_col, pos], "left_anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda s: s["line"],
+                F.array_sort(F.collect_list(F.struct(pos, "_piece"))),
+                lambda s: s["_piece"],
             ),
             sep,
         ).alias(out_col)
     )
-    # a doc whose every line was removed has no kept rows -> "" (the
-    # pre-r11 left-join form gave the same); a NULL text never explodes
-    # into lines, so it is never affected and passes through as "" via
-    # the coalesce above (also the pre-r11 behavior).
-    # Single-branch pass-through (src LEFT JOIN the affected-sized
-    # rebuild, coalesce to the original text) instead of a
-    # union(untouched, affected): a union splices TWO copies of the
-    # source subtree into every downstream consumer, and in persist-free
-    # compositions (q_pretraining_prep's registered form) that fan-out
-    # compounds multiplicatively through later stages — measured 16->60
-    # exchanges in prep's static plan before this form. "" is non-NULL,
-    # so the coalesce keeps fully-deduped docs empty.
     aff_out = affected.join(rebuilt, id_col, "left").select(
         id_col, F.coalesce(out_col, F.lit("")).alias("_aff_txt")
     )

@@ -432,7 +432,7 @@ def embedding_tokens(embs: DataFrame, *, id_col: str = "vec_id",
 
     Returns (id, tok, tvec, n2): n2 is the exact squared norm of the
     sub-vector via the decimal fold (order-independent, bitwise equal in
-    DuckDB — see queries/extensions.py::_dot_dec). Downstream MaxSim
+    DuckDB — see operators/vecexpr.py::dot_dec). Downstream MaxSim
     scoring requires nonzero norms; `maxsim_scores` filters n2 = 0
     tokens itself (a zero sub-vector has no defined cosine), so callers
     may pass this frame through unfiltered.

@@ -12,13 +12,13 @@ north-star; the reference dedups exact records only).
 
 Spark-first, oracle-checkable design:
 
-  * **Deterministic hash-seeded centroids.** Seeds are the k corpus
-    vectors with the smallest (md5(id), id) — layout-stable, engine-
-    portable (DuckDB computes the identical seed set), and no float
-    averaging, so the "centroids" are exact fp32 data vectors. Callers
-    with real cluster structure can pass kmeans-refined centroids
-    (operators/similarity.py::kmeans_refine) via `seeds` instead; the
-    hash-seeded default is the oracle-checked tier.
+  * **Deterministic hash-seeded centroids** (`hash_min_seeds`): the k
+    corpus vectors with the smallest (md5(id), id) — layout-stable,
+    engine-portable (DuckDB computes the identical seed set), and no
+    float averaging, so the "centroids" are exact fp32 data vectors.
+    Callers with real cluster structure can pass kmeans-refined
+    centroids (operators/similarity.py::kmeans_refine) via `seeds`
+    instead; the hash-seeded default is the oracle-checked tier.
   * **Assignment is the IVF pattern, two-phase**: one Arrow-batched
     float64 matmul pass over the corpus against the driver-collected
     seed matrix prunes each row's k seeds to a provably-sufficient
@@ -29,12 +29,10 @@ Spark-first, oracle-checkable design:
     corpus grows. (One-phase scored all |N|·k pairs through the
     interpreted decimal fold: |N|²/target interpreted BigDecimal ops,
     the scale bug the sf100 rung caught in r8.)
-  * **Bitwise-deterministic scores.** Dot products are double products
-    (exact for fp32 inputs) folded through decimal(30,15) — order-
-    independent — and cosines are rounded to 9 decimals before ANY
-    comparison, so assignment, tie-breaks, and the threshold test make
-    identical decisions in Spark and DuckDB (same scheme as
-    q_cosine_topk).
+  * **Bitwise-deterministic scores**: operators/vecexpr.py's
+    dot_dec / norm2 / cos9, the exact-cosine scheme q_cosine_topk
+    shares, so assignment, tie-breaks, and the threshold test make
+    identical decisions in Spark and DuckDB.
   * **Greedy min-id witness rule**: a document is dropped iff some
     SAME-CLUSTER document with a smaller id has cosine >= threshold to
     it — deterministic under any partitioning, one equi-join on the
@@ -63,25 +61,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-__all__ = ["semantic_dedup", "ivf_topk_exact"]
+from rag_pipelines_spark.operators.vecexpr import cos9, dot_dec, norm2
 
-_DEC = "decimal(30,15)"
-
-
-def _dot_dec(a, b):
-    """Order-independent exact dot product (double products summed as
-    decimals via a left fold) — the cross-engine-bitwise scheme shared
-    with q_cosine_topk."""
-    prods = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(_DEC)
-    )
-    return F.aggregate(
-        prods, F.lit(0).cast(_DEC), lambda acc, x: (acc + x).cast(_DEC)
-    )
-
-
-def _cos9(dot, n2a, n2b):
-    return F.round(dot / (F.sqrt(n2a) * F.sqrt(n2b)), 9)
+__all__ = [
+    "semantic_dedup",
+    "ivf_topk_exact",
+    "hash_min_seeds",
+    "nearest_seeds",
+    "probe_topk",
+]
 
 
 # Margin between the float64-matmul cosine and the exact decimal-fold
@@ -161,27 +149,16 @@ def semantic_dedup(
     norms = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        _dot_dec(F.col(vec_col), F.col(vec_col)).cast("double").alias("n2"),
+        norm2(F.col(vec_col)).alias("n2"),
     )
     if seeds is None:
         n = emb.count()
-        k = max(1, math.ceil(n / target_cluster))
-        seed_frame = (
-            norms.select(
-                F.col("id").alias("seed_id"),
-                F.col("v").alias("sv"),
-                F.col("n2").alias("sn2"),
-                F.md5(F.col("id").cast("string")).alias("h"),
-            )
-            .orderBy("h", "seed_id")  # distributed top-k, no global sort
-            .limit(k)
-            .drop("h")
-        )
+        seed_frame = hash_min_seeds(norms, max(1, math.ceil(n / target_cluster)))
     else:
         seed_frame = seeds.select(
             F.col(seeds.columns[0]).alias("seed_id"),
             F.col(seeds.columns[1]).alias("sv"),
-        ).withColumn("sn2", _dot_dec(F.col("sv"), F.col("sv")).cast("double"))
+        ).withColumn("sn2", norm2(F.col("sv")))
 
     # Assignment is two-phase (r8 — the sf100 rung exposed the one-phase
     # form): a float64 Arrow matmul against the driver-collected seed
@@ -237,8 +214,8 @@ def semantic_dedup(
             "v",
             "n2",
             "seed_id",
-            _cos9(
-                _dot_dec(F.col("v"), F.col("sv")), F.col("n2"), F.col("sn2")
+            cos9(
+                dot_dec(F.col("v"), F.col("sv")), F.col("n2"), F.col("sn2")
             ).alias("scos"),
         )
     )
@@ -265,7 +242,7 @@ def semantic_dedup(
         a.join(b, "cluster_id")
         .filter(F.col("a_id") < F.col("b_id"))
         .filter(
-            _cos9(_dot_dec(F.col("av"), F.col("bv")), F.col("an2"), F.col("bn2"))
+            cos9(dot_dec(F.col("av"), F.col("bv")), F.col("an2"), F.col("bn2"))
             >= F.lit(threshold)
         )
         .select("b_id")
@@ -278,6 +255,84 @@ def semantic_dedup(
             "cluster_id",
             F.when(F.col("b_id").isNull(), 1).otherwise(0).alias("kept"),
         )
+    )
+
+
+def hash_min_seeds(norms: DataFrame, k: int) -> DataFrame:
+    """(seed_id, sv, sn2) — the k rows of an (id, v, n2) frame with the
+    smallest (md5(id), id): the deterministic IVF cells semantic_dedup,
+    ivf_topk_exact and the incremental ANN state (operators/annstate.py)
+    all use, reproduced bit-for-bit by the DuckDB oracles."""
+    return (
+        norms.select(
+            F.col("id").alias("seed_id"),
+            F.col("v").alias("sv"),
+            F.col("n2").alias("sn2"),
+            F.md5(F.col("id").cast("string")).alias("h"),
+        )
+        .orderBy("h", "seed_id")  # distributed top-k, no global sort
+        .limit(k)
+        .drop("h")
+    )
+
+
+def nearest_seeds(frame: DataFrame, seeds: DataFrame, n: int) -> DataFrame:
+    """(id, v, n2, cell) — each (id, v, n2) row's n nearest seeds, by
+    (round-9 cosine desc, seed_id asc), nulls last on both engines."""
+    scored = frame.crossJoin(F.broadcast(seeds)).select(
+        frame["id"],
+        frame["v"],
+        frame["n2"],
+        "seed_id",
+        cos9(dot_dec(frame["v"], F.col("sv")), frame["n2"], F.col("sn2")).alias(
+            "scos"
+        ),
+    )
+    w = Window.partitionBy("id").orderBy(F.desc_nulls_last("scos"), F.asc("seed_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= n)
+        .select("id", "v", "n2", F.col("seed_id").alias("cell"))
+    )
+
+
+def probe_topk(
+    queries_norms: DataFrame,
+    seeds: DataFrame,
+    postings: DataFrame,
+    nprobe: int,
+    k: int,
+) -> DataFrame:
+    """(q_id, c_id, cosine, rk) — each (id, v, n2) query probes its
+    `nprobe` nearest seeds and exact-scores ONLY the (id, v, n2, cell)
+    postings in those cells: candidates come from an equi-join on the
+    cell id, never query x corpus. Ranked by (cosine desc, c_id asc),
+    the exact-baseline contract of q_cosine_topk."""
+    probes = nearest_seeds(queries_norms, seeds, nprobe).select(
+        F.col("id").alias("q_id"),
+        F.col("v").alias("qv"),
+        F.col("n2").alias("qn2"),
+        "cell",
+    )
+    posts = postings.select(
+        F.col("id").alias("c_id"),
+        F.col("v").alias("cv"),
+        F.col("n2").alias("cn2"),
+        "cell",
+    )
+    cand = probes.join(posts, "cell").filter(F.col("q_id") != F.col("c_id"))
+    scored = cand.select(
+        "q_id",
+        "c_id",
+        cos9(dot_dec(F.col("qv"), F.col("cv")), F.col("qn2"), F.col("cn2")).alias(
+            "cosine"
+        ),
+    ).distinct()  # a candidate reachable via two probed cells scores once
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "c_id", "cosine", "rk")
     )
 
 
@@ -294,16 +349,12 @@ def ivf_topk_exact(
     semantics — the oracle-checked twin of the numpy IVF tier
     (operators/similarity.py::cosine_topk_ivf, rows-only by design).
 
-    Same centroid scheme as semantic_dedup: the k_seeds corpus vectors
-    with smallest (md5(id), id) are the cells — no float averaging, so
-    DuckDB reproduces cells, assignments, probes, and scores
-    bit-for-bit. Corpus rows assign to their nearest cell (decimal-fold
-    cosine, round-9, tie-break min seed id); each query probes its
-    `nprobe` nearest cells and exact-scores ONLY the vectors in them
-    (the IVF contract: candidates come from an equi-join on the cell
-    id, never query x corpus). Output (q_id, c_id, cosine, rk) matches
-    the exact-baseline contract of q_cosine_topk, so recall against the
-    exact answer is directly measurable.
+    The one-shot case of the incremental ANN state
+    (operators/annstate.py): cells are `hash_min_seeds` of the corpus,
+    every corpus row posts to its nearest cell (`nearest_seeds`), and
+    `probe_topk` serves the queries. No float averaging, so DuckDB
+    reproduces cells, assignments, probes, and scores bit-for-bit, and
+    recall against q_cosine_topk's exact answer is directly measurable.
 
     Scale: one N·k_seeds assignment pass against broadcast seeds (the
     corpus never shuffles for index build) + candidate scoring sized
@@ -314,70 +365,12 @@ def ivf_topk_exact(
     norms = corpus.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        _dot_dec(F.col(vec_col), F.col(vec_col)).cast("double").alias("n2"),
+        norm2(F.col(vec_col)).alias("n2"),
     )
-    seed_frame = (
-        norms.select(
-            F.col("id").alias("seed_id"),
-            F.col("v").alias("sv"),
-            F.col("n2").alias("sn2"),
-            F.md5(F.col("id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "seed_id")
-        .limit(k_seeds)
-        .drop("h")
-    )
-
-    def nearest(frame, n_cells):
-        scored = frame.crossJoin(F.broadcast(seed_frame)).select(
-            frame["id"],
-            frame["v"],
-            frame["n2"],
-            "seed_id",
-            _cos9(
-                _dot_dec(frame["v"], F.col("sv")), frame["n2"], F.col("sn2")
-            ).alias("scos"),
-        )
-        w = Window.partitionBy("id").orderBy(
-            F.desc_nulls_last("scos"), F.asc("seed_id")
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= n_cells)
-            .select("id", "v", "n2", F.col("seed_id").alias("cell"))
-        )
-
-    cells = nearest(norms, 1)
+    seeds = hash_min_seeds(norms, k_seeds)
     qnorms = queries.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        _dot_dec(F.col(vec_col), F.col(vec_col)).cast("double").alias("n2"),
+        norm2(F.col(vec_col)).alias("n2"),
     )
-    probes = nearest(qnorms, nprobe).select(
-        F.col("id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("qn2"),
-        "cell",
-    )
-    cand = probes.join(
-        cells.select(
-            F.col("id").alias("c_id"),
-            F.col("v").alias("cv"),
-            F.col("n2").alias("cn2"),
-            "cell",
-        ),
-        "cell",
-    ).filter(F.col("q_id") != F.col("c_id"))
-    scored = cand.select(
-        "q_id",
-        "c_id",
-        _cos9(_dot_dec(F.col("qv"), F.col("cv")), F.col("qn2"), F.col("cn2")).alias(
-            "cosine"
-        ),
-    ).distinct()  # a candidate reachable via two probed cells scores once
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cosine", "rk")
-    )
+    return probe_topk(qnorms, seeds, nearest_seeds(norms, seeds, 1), nprobe, k)

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from rag_pipelines_spark.operators.dedup import rebuild_affected
+
 __all__ = [
     "ngram_occurrences",
     "merge_covered_spans",
@@ -234,48 +236,8 @@ def substring_dedup(
     )
     # Only AFFECTED documents (any covered position — r11: measured 4.9 %
     # of docs at sf0.1, ~0 % at the synthetic sf1; a minority in real
-    # corpora too) pay the token explode + (id, pos) shuffle + sorted
-    # reassembly. Untouched docs pass their text through verbatim:
-    # split-on-" " then join-with-" " is the identity for EVERY string
-    # (consecutive/trailing separators round-trip as empty tokens), so
-    # the rebuilt form of an uncovered doc IS its original text. The
-    # affected-id join and the pass-through anti-join broadcast the tiny
-    # id set — zero added corpus shuffle, and the corpus-sized rebuild
-    # shrinks to the affected fraction at any scale.
-    affected = covered.select("id").distinct()
-    # NULL text has no tokens and comes back as '' (the oracle's answer,
-    # and line_dedup's)
-    src = df.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("_txt"),
-    )
-    aff_docs = src.join(affected, "id")
-    toks = aff_docs.select(
-        "id",
-        F.posexplode(F.split(F.col("_txt"), " ")).alias("cpos", "tok"),
-    )
-    kept = toks.join(covered, ["id", "cpos"], "left_anti")
-    rebuilt = kept.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("cpos", "tok"))),
-                lambda s: s["tok"],
-            ),
-            " ",
-        ).alias(out_col)
-    )
-    # an affected doc whose EVERY token was covered has no kept rows ->
-    # absent from rebuilt -> empty string (the pre-r11 left-join gave
-    # the same). Single-branch pass-through (src LEFT JOIN the
-    # affected-sized rebuild, coalesce to the original text) instead of
-    # a union(untouched, affected): a union splices two copies of the
-    # source subtree into every downstream consumer of the operator
-    # (see line_dedup's rationale). "" is non-NULL, so fully-covered
-    # docs stay empty through the coalesce.
-    aff_out = affected.join(rebuilt, "id", "left").select(
-        "id", F.coalesce(out_col, F.lit("")).alias("_aff_txt")
-    )
-    return src.join(aff_out, "id", "left").select(
-        F.col("id").alias(id_col),
-        F.coalesce("_aff_txt", "_txt").alias(out_col),
+    # corpora too) pay the token rebuild; see rebuild_affected.
+    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
+    return rebuild_affected(src, covered, " ", out_col).withColumnRenamed(
+        "id", id_col
     )

@@ -1,4 +1,12 @@
-"""Flat SQL builders for the exact-decimal vector arithmetic contract.
+"""The exact-decimal vector arithmetic contract: Column-API helpers and
+their flat SQL builders.
+
+``dot_dec`` / ``norm2`` / ``cos9`` are the one Column-API copy of the
+exact-cosine scheme every embedding query and the IVF operators share:
+double products (exact for fp32 inputs) folded through DECIMAL(30,15) —
+order-independent — per-vector squared norms, and cosines rounded to 9
+decimals before any comparison, so Spark and DuckDB make identical
+decisions.
 
 Round-10 optimization (guide §1.2 step 2 — per-task work, and §4.1 —
 prefer JVM expressions): the engine's exact dot products / squared
@@ -37,7 +45,12 @@ as DECIMAL and change the arithmetic).
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 __all__ = [
+    "dot_dec",
+    "norm2",
+    "cos9",
     "dlit",
     "dbl_array_sql",
     "dec_to_dbl_sql",
@@ -50,6 +63,28 @@ __all__ = [
 ]
 
 _DEC = "DECIMAL(30,15)"
+
+
+def dot_dec(a, b):
+    """Order-independent exact dot product of two array columns: double
+    products cast to DECIMAL(30,15), summed by a left fold."""
+    prods = F.zip_with(
+        a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(_DEC)
+    )
+    # re-cast inside the fold: decimal addition widens (30,15)+(30,15)->(31,15)
+    return F.aggregate(prods, F.lit(0).cast(_DEC), lambda acc, x: (acc + x).cast(_DEC))
+
+
+def norm2(col):
+    """Exact squared norm of an array column, as a double."""
+    return dot_dec(col, col).cast("double")
+
+
+def cos9(dot, n2a, n2b):
+    """Cosine rounded to 9 decimals. Spark casts double->decimal via the
+    shortest string repr while DuckDB rounds the exact binary expansion;
+    at 9 decimals both agree bitwise."""
+    return F.round(dot / (F.sqrt(n2a) * F.sqrt(n2b)), 9)
 
 
 def dlit(x: float) -> str:
@@ -76,7 +111,7 @@ def flat_fold_dec_sql(terms: list[str]) -> str:
 
 def flat_dot_dec_sql(a_elems: list[str], b_elems: list[str]) -> str:
     """Exact decimal dot product of two element-expression lists —
-    the flat twin of queries/extensions._dot_dec / operators/pca._dot_dec
+    the flat twin of dot_dec / operators/pca._dot_dec
     (per-element double product, cast to DECIMAL(30,15), exact fold)."""
     assert len(a_elems) == len(b_elems)
     return flat_fold_dec_sql(
@@ -112,7 +147,7 @@ def hof_fold_dec_sql(arr_sql: str) -> str:
 
 def hof_dot_dec_sql(a_arr_sql: str, b_arr_sql: str,
                     cast_inputs: bool = True) -> str:
-    """SQL twin of queries/extensions._dot_dec (cast_inputs=True: both
+    """SQL twin of dot_dec (cast_inputs=True: both
     elements cast to double inside the lambda) or operators/pca._dot_dec
     (cast_inputs=False: elements used as-is, e.g. already-double centered
     arrays against a literal double array)."""

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from rag_pipelines_spark.operators.vecexpr import cos9, dot_dec, norm2
 from rag_pipelines_spark.registry import register
 from rag_pipelines_spark.queries._util import md5_long_digest, t
 
@@ -399,19 +400,6 @@ def q_ngram_jaccard(spark, sf_dir):
 # Embedding similarity search
 # ---------------------------------------------------------------------------
 
-_DOT_DEC = "decimal(30,15)"
-
-
-def _dot_dec(a, b):
-    """Order-independent exact dot product: double products (exact for fp32
-    inputs) summed as decimals via a left fold."""
-    prods = F.zip_with(a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(_DOT_DEC))
-    # re-cast inside the fold: decimal addition widens (30,15)+(30,15)->(31,15)
-    return F.aggregate(
-        prods, F.lit(0).cast(_DOT_DEC), lambda acc, x: (acc + x).cast(_DOT_DEC)
-    )
-
-
 @register(
     "q_cosine_topk",
     oracle="""
@@ -455,11 +443,7 @@ def _dot_dec(a, b):
 def q_cosine_topk(spark, sf_dir):
     e = t(spark, sf_dir, "embeddings")
     # norms once per VECTOR, not per pair (3x less decimal-fold work)
-    norms = e.select(
-        "vec_id",
-        "embedding",
-        _dot_dec(F.col("embedding"), F.col("embedding")).cast("double").alias("n2"),
-    )
+    norms = e.select("vec_id", "embedding", norm2(F.col("embedding")).alias("n2"))
     q = norms.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
@@ -476,12 +460,9 @@ def q_cosine_topk(spark, sf_dir):
         "c_id",
         "qn2",
         "cn2",
-        _dot_dec(F.col("q_emb"), F.col("c_emb")).cast("double").alias("dot"),
+        dot_dec(F.col("q_emb"), F.col("c_emb")).cast("double").alias("dot"),
     )
-    # round to 9 decimals: Spark casts double->decimal via the shortest
-    # string repr while DuckDB rounds the exact binary expansion — at 9
-    # decimals both agree bitwise after the final decimal->double cast
-    cosine = F.round(F.col("dot") / (F.sqrt("qn2") * F.sqrt("cn2")), 9)
+    cosine = cos9(F.col("dot"), F.col("qn2"), F.col("cn2"))
     w = W.partitionBy("q_id").orderBy(cosine.desc(), F.col("c_id"))
     return (
         dots.withColumn("cosine", cosine)
@@ -522,12 +503,21 @@ def q_cosine_topk(spark, sf_dir):
     "block key is an LSH bucket — same join shape, operators/similarity.py)",
 )
 def q_embed_neardup(spark, sf_dir):
+    return _label_neardup_pairs(
+        spark, sf_dir, None, F.col("b_id") > F.col("a_id")
+    )
+
+
+def _label_neardup_pairs(spark, sf_dir, probe_filter, pair_cond):
+    """(a_id, b_id, cosine): embedding pairs in the same label block that
+    pass `pair_cond` (over a_id, b_id), with exact round-9 cosine >= 0.5.
+    The probe side is the embeddings slice `probe_filter` keeps (all of
+    them when None)."""
+    from rag_pipelines_spark.operators.similarity import _cosine_udf
+
     e = t(spark, sf_dir, "embeddings")
     norms = e.select(
-        "vec_id",
-        "label",
-        "embedding",
-        _dot_dec(F.col("embedding"), F.col("embedding")).cast("double").alias("n2"),
+        "vec_id", "label", "embedding", norm2(F.col("embedding")).alias("n2")
     )
     a = norms.select(
         F.col("vec_id").alias("a_id"),
@@ -535,13 +525,14 @@ def q_embed_neardup(spark, sf_dir):
         F.col("embedding").alias("a_emb"),
         F.col("n2").alias("na2"),
     )
-    b = norms.select(
+    b = norms if probe_filter is None else norms.filter(probe_filter)
+    b = b.select(
         F.col("vec_id").alias("b_id"),
         F.col("label").alias("b_label"),
         F.col("embedding").alias("b_emb"),
         F.col("n2").alias("nb2"),
     )
-    pairs = a.join(b, (a.a_label == b.b_label) & (b.b_id > a.a_id))
+    pairs = a.join(b, (F.col("a_label") == F.col("b_label")) & pair_cond)
     # Cheap double prefilter before the exact-decimal scoring: a float64
     # 64-dim cosine is within ~1e-12 of the exact value, so a 1e-6 margin
     # can never drop a pair the exact filter would keep — the hash-checked
@@ -554,13 +545,11 @@ def q_embed_neardup(spark, sf_dir):
     # BroadcastHashJoin's condition). Referencing the UDF output makes the
     # predicate unpushable and when() short-circuits the fold to
     # near-threshold survivors only (22 s -> ~2 s).
-    from rag_pipelines_spark.operators.similarity import _cosine_udf
-
     approx = _cosine_udf()(F.col("a_emb"), F.col("b_emb"))
-    exact = F.round(
-        _dot_dec(F.col("a_emb"), F.col("b_emb")).cast("double")
-        / (F.sqrt("na2") * F.sqrt("nb2")),
-        9,
+    exact = cos9(
+        dot_dec(F.col("a_emb"), F.col("b_emb")).cast("double"),
+        F.col("na2"),
+        F.col("nb2"),
     )
     cosine = F.when(F.col("_cos_approx") >= 0.5 - 1e-6, exact)
     return (
@@ -3303,42 +3292,8 @@ def q_chunk_udtf_checksum(spark, sf_dir):
     "condition)",
 )
 def q_embed_neardup_small(spark, sf_dir):
-    from rag_pipelines_spark.operators.similarity import _cosine_udf
-
-    e = t(spark, sf_dir, "embeddings")
-    norms = e.select(
-        "vec_id",
-        "label",
-        "embedding",
-        _dot_dec(F.col("embedding"), F.col("embedding")).cast("double").alias("n2"),
-    )
-    a = norms.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("label").alias("a_label"),
-        F.col("embedding").alias("a_emb"),
-        F.col("n2").alias("na2"),
-    )
-    b = norms.filter(F.col("vec_id") % 1000 == 0).select(
-        F.col("vec_id").alias("b_id"),
-        F.col("label").alias("b_label"),
-        F.col("embedding").alias("b_emb"),
-        F.col("n2").alias("nb2"),
-    )
-    pairs = a.join(
-        b, (a.a_label == b.b_label) & (a.a_id != b.b_id)
-    )
-    approx = _cosine_udf()(F.col("a_emb"), F.col("b_emb"))
-    exact = F.round(
-        _dot_dec(F.col("a_emb"), F.col("b_emb")).cast("double")
-        / (F.sqrt("na2") * F.sqrt("nb2")),
-        9,
-    )
-    cosine = F.when(F.col("_cos_approx") >= 0.5 - 1e-6, exact)
-    scored = (
-        pairs.withColumn("_cos_approx", approx)
-        .withColumn("cosine", cosine)
-        .filter(F.col("cosine") >= 0.5)
-        .select("a_id", "cosine")
+    scored = _label_neardup_pairs(
+        spark, sf_dir, F.col("vec_id") % 1000 == 0, F.col("a_id") != F.col("b_id")
     )
     return scored.groupBy("a_id").agg(
         F.count("*").cast("long").alias("n_matches"),

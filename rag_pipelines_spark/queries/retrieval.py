@@ -32,8 +32,8 @@ from rag_pipelines_spark.operators.retrieval import (
     term_hits,
     topk_per_query,
 )
+from rag_pipelines_spark.operators.vecexpr import cos9, dot_dec, norm2
 from rag_pipelines_spark.queries._util import o_dec_to_dbl, t
-from rag_pipelines_spark.queries.extensions import _dot_dec
 from rag_pipelines_spark.registry import register
 
 # The serving batch: fixed literal queries over the fixture vocabulary
@@ -150,11 +150,7 @@ def _cosine_ranked(spark, sf_dir, k: int):
     path is operators/similarity.py's LSH/IVF candidate generation.
     """
     e = t(spark, sf_dir, "embeddings")
-    norms = e.select(
-        "vec_id",
-        "embedding",
-        _dot_dec(F.col("embedding"), F.col("embedding")).cast("double").alias("n2"),
-    )
+    norms = e.select("vec_id", "embedding", norm2(F.col("embedding")).alias("n2"))
     nq = len(QUERY_SET)
     q = norms.filter(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("query_id"),
@@ -167,10 +163,10 @@ def _cosine_ranked(spark, sf_dir, k: int):
         F.col("n2").alias("cn2"),
     )
     pairs = F.broadcast(q).crossJoin(c).filter(F.col("query_id") != F.col("doc_id"))
-    cosine = F.round(
-        _dot_dec(F.col("q_emb"), F.col("c_emb")).cast("double")
-        / (F.sqrt("qn2") * F.sqrt("cn2")),
-        9,
+    cosine = cos9(
+        dot_dec(F.col("q_emb"), F.col("c_emb")).cast("double"),
+        F.col("qn2"),
+        F.col("cn2"),
     )
     ranked = topk_per_query(
         pairs.withColumn("score", cosine), k, score_col="score"

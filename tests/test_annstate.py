@@ -207,3 +207,42 @@ def test_partial_epoch_append_is_repaired_on_replay(spark, tmp_path):
     ids = {r.id for r in read_ann_postings(spark, s).collect()}
     assert set(range(12, 24)) <= ids
     assert epoch_is_committed(live, 1)
+
+
+def test_serve_on_fresh_root_raises(spark, tmp_path):
+    """A state root that was never folded is reported as missing state,
+    not as a missing seeds directory."""
+    q = _emb(spark, _vectors(3))
+    with pytest.raises(FileNotFoundError, match="no ann index state"):
+        ann_query_from_state(spark, str(tmp_path), q, "vec_id", "embedding")
+
+
+def test_ivf_topk_exact_equals_one_batch_state_serve(spark, tmp_path):
+    """ivf_topk_exact is the one-shot case of the ANN state: the corpus
+    folded as ONE batch (same k_seeds) and served from state gives the
+    batch operator's rows exactly."""
+    from rag_pipelines_spark.operators.semdedup import ivf_topk_exact
+
+    # four planted directions, six perturbed copies each
+    base = [(3, 0, 0, 1), (0, 4, 1, 0), (-2, 1, 3, 0), (1, -3, 0, 2)]
+    vecs = [
+        (i, tuple(x + (i % 3 if d == i % 4 else 0) for d, x in enumerate(base[i % 4])))
+        for i in range(24)
+    ]
+    corpus = _emb(spark, vecs)
+    queries = _emb(spark, vecs[:6] + [(100, (3, 1, 0, 1)), (101, (0, 3, 2, 0))])
+    direct = ivf_topk_exact(
+        corpus, queries, "vec_id", "embedding", k_seeds=4, nprobe=2, k=3
+    )
+    s = str(tmp_path / "s")
+    merge_ann_index(spark, corpus, s, "vec_id", "embedding", k_seeds=4)
+    served = ann_query_from_state(
+        spark, s, queries, "vec_id", "embedding", nprobe=2, k=3
+    )
+
+    def rows(df):
+        return sorted((r.q_id, r.c_id, r.cosine, r.rk) for r in df.collect())
+
+    want = rows(direct)
+    assert len(want) == 8 * 3
+    assert rows(served) == want

@@ -1,7 +1,6 @@
-"""Test the applyInPandasWithState first-seen dedup across micro-batches:
-state must persist between runs (same checkpoint) so a key seen in run 1
-is suppressed in run 2. Parquet sink — the memory sink cannot recover
-from a checkpoint."""
+"""Streaming state across resumed runs: watermark semantics of
+windowed_counts_query and the stream-stream interval join. Parquet
+sinks — the memory sink cannot recover from a checkpoint."""
 
 from __future__ import annotations
 
@@ -21,52 +20,6 @@ def spark():
     from rag_pipelines_spark.session import get_spark
 
     return get_spark("stateful-tests", shuffle_partitions=4)
-
-
-def test_seen_keys_dedup_across_batches(spark, tmp_path):
-    from rag_pipelines_spark.streaming.stateful import seen_keys_dedup
-
-    src = str(tmp_path / "src")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src, exist_ok=True)
-    schema = "rag_id string, source string, payload string"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            seen_keys_dedup(stream.groupBy("source"))
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out_dir)
-
-    # run 1: a, b (plus an in-batch duplicate of a)
-    write_batch([("a", "s1", "p1"), ("b", "s1", "p2"), ("a", "s1", "p1x")])
-    first = run_once()
-    assert {r["rag_id"] for r in first.collect()} == {"a", "b"}
-
-    # run 2 resumes the same checkpoint: a suppressed by state, c is new
-    write_batch([("a", "s1", "p-again"), ("c", "s1", "p3")])
-    second = run_once()
-    ids = sorted(r["rag_id"] for r in second.collect())
-    assert ids == ["a", "b", "c"], f"state did not persist: {ids}"
-    # and 'a' was emitted exactly once across both runs
-    assert second.filter("rag_id = 'a'").count() == 1
 
 
 def test_watermark_drops_late_keeps_in_bound(spark, tmp_path):
@@ -213,148 +166,3 @@ def test_stream_interval_join_colliding_names(spark, tmp_path):
     assert out.columns == ["user_id", "ts", "source", "r_ts", "r_source", "amount"]
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["amount"] == 3.0
-
-
-def test_seen_keys_dedup_tws_matches_apipws(spark, tmp_path):
-    """The transformWithStateInPandas twin must reproduce the
-    applyInPandasWithState path exactly across resumed runs: same
-    first-seen survivors, same exactly-once emission.
-
-    transformWithState's Python<->JVM state server speaks protobuf;
-    environments without the protobuf package (this container) can't
-    start the driver worker, so the parity pin runs only where the
-    dependency exists (the operator itself is plain pyspark API)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server requires protobuf",
-    )
-    from rag_pipelines_spark.streaming.stateful import seen_keys_dedup_tws
-
-    src = str(tmp_path / "src")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src, exist_ok=True)
-    schema = "rag_id string, source string, payload string"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        def run_once():
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            q = (
-                seen_keys_dedup_tws(stream.groupBy("source"))
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return spark.read.parquet(out_dir)
-
-        write_batch([("a", "s1", "p1"), ("b", "s1", "p2"), ("a", "s1", "p1x")])
-        first = run_once()
-        assert {r["rag_id"] for r in first.collect()} == {"a", "b"}
-
-        write_batch([("a", "s1", "p-again"), ("c", "s1", "p3")])
-        second = run_once()
-        ids = sorted(r["rag_id"] for r in second.collect())
-        assert ids == ["a", "b", "c"], f"state did not persist: {ids}"
-        assert second.filter("rag_id = 'a'").count() == 1
-        # the first-seen payload (not the replayed one) is what survives
-        assert (
-            second.filter("rag_id = 'a'").collect()[0]["payload"] == "p1"
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
-
-
-def test_first_seen_processor_logic_matches_dedup_fn():
-    """Pin the StatefulProcessor twin's Python logic against _dedup_fn
-    WITHOUT the streaming engines: drive both over the same micro-batch
-    sequence with fake state objects. This runs in any environment —
-    the protobuf-gated test above covers only the wire protocol."""
-    import pandas as pd
-
-    from rag_pipelines_spark.streaming.stateful import (
-        FirstSeenProcessor,
-        _dedup_fn,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.vs = FakeValueState()
-
-        def getValueState(self, name, schema):
-            return self.vs
-
-    class FakeGroupState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    batches = [
-        pd.DataFrame(
-            {"rag_id": ["a", "b", "a"], "source": "s1",
-             "payload": ["p1", "p2", "p1x"]}
-        ),
-        pd.DataFrame(
-            {"rag_id": ["a", "c"], "source": "s1",
-             "payload": ["p-again", "p3"]}
-        ),
-    ]
-
-    proc = FirstSeenProcessor()
-    proc.init(FakeHandle())
-    gs = FakeGroupState()
-    out_tws, out_apipws = [], []
-    for b in batches:
-        out_tws.extend(
-            df for df in proc.handleInputRows(("s1",), iter([b.copy()]), None)
-        )
-        out_apipws.extend(
-            df for df in _dedup_fn(("s1",), iter([b.copy()]), gs)
-        )
-    tws = pd.concat(out_tws, ignore_index=True)
-    ap = pd.concat(out_apipws, ignore_index=True)
-    pd.testing.assert_frame_equal(tws, ap)
-    assert list(tws["rag_id"]) == ["a", "b", "c"]
-    assert list(tws["payload"]) == ["p1", "p2", "p3"]
