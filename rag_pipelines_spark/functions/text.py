@@ -371,14 +371,6 @@ def url_absolutize(href: Column | str, base: str) -> Column:
     )
 
 
-def clean_search_term(col: Column | str) -> Column:
-    """F17: search-term cleaning — ``[;:,]`` → space before API lookup.
-
-    ref: pubmed_enrichment.py:148-151.
-    """
-    return F.regexp_replace(_c(col), r"[;:,]", " ")
-
-
 def redact_pii(col: Column | str) -> Column:
     """Redact emails, URLs, and phone-like digit runs — LLM training-data
     hygiene (north star). Order matters: emails first (a URL scrubber would

@@ -1,4 +1,4 @@
-"""Enrichment & verification joins (J3/J4/J5) as reusable builders.
+"""Enrichment match verification (J4): the verdict column over joined pairs.
 
 The reference verifies each doc against its PubMed lookup: exact
 normalized-DOI equality first; on DOI absence, title similarity
@@ -11,7 +11,7 @@ key or a blocking key); the ratio only scores already-matched pairs.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
@@ -66,51 +66,3 @@ def verify_match(
         .when(title_ok, "title")
         .otherwise("unverified")
     )
-
-
-def enrich_left_join(
-    docs: DataFrame,
-    lookup: DataFrame,
-    on: str,
-    fallbacks: dict[str, Column],
-    broadcast_lookup: bool = True,
-) -> DataFrame:
-    """J3: left-outer enrichment with per-column fallbacks for misses.
-
-    ref: pubmed_enrichment.py:394-448 (fallback doc at 438-448). The lookup
-    (distinct keys actually queried) is usually tiny vs the corpus ->
-    broadcast by default; misses get `fallbacks[col]`.
-    """
-    right = F.broadcast(lookup) if broadcast_lookup else lookup
-    joined = docs.join(right, on=on, how="left")
-    out = joined
-    for col_name, fallback in fallbacks.items():
-        out = out.withColumn(col_name, F.coalesce(F.col(col_name), fallback))
-    return out
-
-
-def fallback_key_join(
-    docs: DataFrame,
-    lookup: DataFrame,
-    key1: tuple[str, str],
-    key2: tuple[str, str],
-    payload_cols: list[str],
-) -> DataFrame:
-    """J5: join on key1; only the misses retry on key2; union tagged results.
-
-    ref: pubmed_enrichment.py:394-420 (DOI esearch first, title esearch only
-    on miss — the cheap exact key runs before the fuzzy one). Both stages
-    are equi-joins; stage 2's input is only the stage-1 anti-join.
-    """
-    l1, r1 = key1
-    l2, r2 = key2
-    stage1 = docs.join(
-        F.broadcast(lookup), docs[l1] == lookup[r1], "inner"
-    ).select(*docs.columns, *payload_cols, F.lit("key1").alias("matched_by"))
-    misses = docs.join(
-        F.broadcast(lookup.select(r1).distinct()), docs[l1] == F.col(r1), "left_anti"
-    )
-    stage2 = misses.join(
-        F.broadcast(lookup), misses[l2] == lookup[r2], "inner"
-    ).select(*docs.columns, *payload_cols, F.lit("key2").alias("matched_by"))
-    return stage1.unionByName(stage2)

@@ -26,9 +26,11 @@ from rag_pipelines_spark.operators.clustering import (
     kmeans_fit,
 )
 from rag_pipelines_spark.queries._util import (
+    Key,
+    Part,
     dec_to_dbl,
-    md5_long_digest,
     o_dec_to_dbl,
+    register_checksum,
     t,
 )
 from rag_pipelines_spark.registry import register
@@ -100,7 +102,6 @@ def _kmeans_with(k: int = _K, iters: int = _ITERS, d: int = _D) -> str:
 
 _FINAL = f"a{_ITERS}"
 
-# shared with the checksum twin (the two cannot diverge)
 _KMC_ORACLE = f"""
     {_kmeans_with()}
     SELECT vec_id, cluster,
@@ -128,59 +129,16 @@ def q_kmeans_clusters(spark, sf_dir):
     )
 
 
-def _checksum32_df(base, other_cols: list[str], float_col: str):
-    """32-bucket md5-prefix reduction of a (vec_id, ..., round-9 float)
-    frame — the sf-scaling twin shape (q_dsir_weights_checksum
-    precedent). The float is a round-9 double, so *1e9 rounds back to
-    its exact integer in both engines; floats never enter the digest as
-    formatted strings."""
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("long"),
-        F.lit(32),
-    )
-    digest = md5_long_digest(
-        F.col("vec_id").cast("string"),
-        *[F.col(c).cast("string") for c in other_cols],
-        F.round(F.col(float_col) * 1e9).cast("long").cast("string"),
-    )
-    return (
-        base.withColumn("bucket", bucket)
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig"))
-    )
-
-
-def _checksum32_sql(oracle_base: str, other_cols: list[str], float_col: str) -> str:
-    """DuckDB mirror of _checksum32_df, wrapping the headline oracle
-    VERBATIM so twin and headline cannot diverge."""
-    fields = " || '|' || ".join(
-        f"CAST({c} AS VARCHAR)" for c in ["vec_id", *other_cols]
-    )
-    return f"""
-    SELECT CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 32 AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               {fields} || '|' ||
-               CAST(CAST(round({float_col} * 1000000000) AS BIGINT)
-                    AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM ({oracle_base}) base
-    GROUP BY bucket
-    """
-
-
-@register(
-    "q_kmeans_clusters_checksum",
-    oracle=_checksum32_sql(_KMC_ORACLE, ["cluster"], "dist9"),
+register_checksum(
+    "q_kmeans_clusters",
+    key=Key("vec_id", buckets=32),
+    parts=["vec_id", "cluster", Part("dist9", scale=9)],
     doc="bounded differential form of q_kmeans_clusters for the "
     "sf-scaling sweeps (headline output is one row per vector): wraps "
     "the headline fn and oracle VERBATIM and reduces to 32 md5-prefix "
     "bucket rows — count plus an XOR of per-vector digests over "
     "(vec_id, cluster, round(dist9*1e9))",
 )
-def q_kmeans_clusters_checksum(spark, sf_dir):
-    return _checksum32_df(q_kmeans_clusters(spark, sf_dir), ["cluster"], "dist9")
 
 
 @register(
@@ -245,7 +203,6 @@ def q_cluster_sample_balanced(spark, sf_dir):
     return cluster_balanced_topm(assigned, m=_M)
 
 
-# shared with the checksum twin (the two cannot diverge)
 _KMS_ORACLE = f"""
     WITH b0 AS (
         SELECT vec_id, embedding FROM embeddings WHERE vec_id % 3 = 0),
@@ -349,14 +306,11 @@ def q_kmeans_from_state(spark, sf_dir):
     )
 
 
-@register(
-    "q_kmeans_from_state_checksum",
-    oracle=_checksum32_sql(_KMS_ORACLE, ["cluster"], "dist9"),
+register_checksum(
+    "q_kmeans_from_state",
+    key=Key("vec_id", buckets=32),
+    parts=["vec_id", "cluster", Part("dist9", scale=9)],
     doc="bounded differential form of q_kmeans_from_state for the "
     "sf-scaling sweeps: wraps the headline fn and oracle VERBATIM, "
     "reduced to 32 md5-prefix bucket rows",
 )
-def q_kmeans_from_state_checksum(spark, sf_dir):
-    return _checksum32_df(
-        q_kmeans_from_state(spark, sf_dir), ["cluster"], "dist9"
-    )

@@ -23,7 +23,13 @@ from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.vecexpr import cos9, dot_dec, norm2
 from rag_pipelines_spark.registry import register
-from rag_pipelines_spark.queries._util import md5_long_digest, t
+from rag_pipelines_spark.queries._util import (
+    Key,
+    Part,
+    md5_long_digest,
+    register_checksum,
+    t,
+)
 
 # ---------------------------------------------------------------------------
 # Text analytics
@@ -1248,53 +1254,10 @@ def q_minhash_neardup(spark, sf_dir):
     return band_candidate_pairs(bands, "doc_id")
 
 
-@register(
-    "q_minhash_neardup_checksum",
-    oracle="""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 1000000000000, text || ' near dup tail'
-        FROM documents WHERE doc_id % 10 = 0
-    ),
-    tok AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, greatest(len(ws) - 1, 1)),
-                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingles
-        FROM tok
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_aggregate(list_transform(shingles, x -> md5('0|' || x)), 'min') AS s0,
-               list_aggregate(list_transform(shingles, x -> md5('1|' || x)), 'min') AS s1,
-               list_aggregate(list_transform(shingles, x -> md5('2|' || x)), 'min') AS s2,
-               list_aggregate(list_transform(shingles, x -> md5('3|' || x)), 'min') AS s3,
-               list_aggregate(list_transform(shingles, x -> md5('4|' || x)), 'min') AS s4,
-               list_aggregate(list_transform(shingles, x -> md5('5|' || x)), 'min') AS s5,
-               list_aggregate(list_transform(shingles, x -> md5('6|' || x)), 'min') AS s6,
-               list_aggregate(list_transform(shingles, x -> md5('7|' || x)), 'min') AS s7
-        FROM sh
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band, md5(s0 || s1) AS bkey FROM sig
-        UNION ALL SELECT doc_id, 1, md5(s2 || s3) FROM sig
-        UNION ALL SELECT doc_id, 2, md5(s4 || s5) FROM sig
-        UNION ALL SELECT doc_id, 3, md5(s6 || s7) FROM sig
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM bands a
-        JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-                    AND a.doc_id < b.doc_id
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(a_id AS VARCHAR) || '|' || CAST(b_id AS VARCHAR)),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM cand
-    """,
+register_checksum(
+    "q_minhash_neardup",
+    count="n_pairs",
+    parts=["a_id", "b_id"],
     doc="bounded differential form of q_minhash_neardup for the sf10 "
     "scaling rung (SCALE.md): the candidate-pair set reduced to ONE row — "
     "pair count plus an order-insensitive XOR of 60-bit md5 pair digests, "
@@ -1303,27 +1266,6 @@ def q_minhash_neardup(spark, sf_dir):
     "bucket together); the verified q_near_dedup output stays small "
     "because exact-Jaccard verification rejects the template collisions",
 )
-def q_minhash_neardup_checksum(spark, sf_dir):
-    from rag_pipelines_spark.operators.dedup import (
-        band_candidate_pairs,
-        minhash_band_keys,
-    )
-
-    d = t(spark, sf_dir, "documents")
-    mutated = d.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + F.lit(1000000000000)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" near dup tail")).alias("text"),
-    )
-    corpus = d.select("doc_id", "text").unionByName(mutated)
-    pairs = band_candidate_pairs(
-        minhash_band_keys(corpus, "doc_id", "text"), "doc_id"
-    )
-    digest = md5_long_digest(
-        F.col("a_id").cast("string"), F.col("b_id").cast("string")
-    )
-    return pairs.agg(
-        F.count("*").alias("n_pairs"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
 _SIMHASH_BITS = 60  # 15 md5 hex chars -> fits a signed 64-bit long exactly
@@ -2015,21 +1957,12 @@ def q_dsir_weights(spark, sf_dir):
     return dsir_logweights(d, target, "doc_id", "text", n_buckets=10_000)
 
 
-@register(
-    "q_dsir_weights_checksum",
-    oracle=f"""
-    SELECT CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 32 AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_feats) AS BIGINT) AS feats_sum,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(doc_id AS VARCHAR) || '|' ||
-               CAST(n_feats AS VARCHAR) || '|' ||
-               CAST(CAST(round(logw * 1000000) AS BIGINT) AS VARCHAR)),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM ({_DSIR_ORACLE}) base
-    GROUP BY bucket
-    """,
+register_checksum(
+    "q_dsir_weights",
+    key=Key("doc_id", buckets=32),
+    count="n_docs",
+    sums={"feats_sum": "n_feats"},
+    parts=["doc_id", "n_feats", Part("logw", scale=6)],
     doc="bounded differential form of q_dsir_weights for the sf-scaling "
     "sweeps (output is one row per corpus doc — over the harness row cap "
     "from sf100 on): wraps the headline fn and oracle VERBATIM (shared "
@@ -2040,27 +1973,6 @@ def q_dsir_weights(spark, sf_dir):
     "to the exact integer in both engines — floats never enter the md5 "
     "digest as formatted strings",
 )
-def q_dsir_weights_checksum(spark, sf_dir):
-    base = q_dsir_weights(spark, sf_dir)
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long"),
-        F.lit(32),
-    )
-    digest = md5_long_digest(
-        F.col("doc_id").cast("string"),
-        F.col("n_feats").cast("string"),
-        F.round(F.col("logw") * 1e6).cast("long").cast("string"),
-    )
-    return (
-        base.withColumn("bucket", bucket)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_feats").alias("feats_sum"),
-            F.bit_xor(digest).alias("xor_sig"),
-        )
-    )
 
 
 def _q_dsir_select_fn(spark, sf_dir):
@@ -3103,38 +3015,11 @@ def q_fuzzy_decontaminate_small(spark, sf_dir):
     )
 
 
-@register(
-    "q_embed_generate_checksum",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               unnest(list_filter(
-                   string_split_regex(lower(text), '[^a-z0-9]+'),
-                   x -> x <> '')) AS tok
-        FROM documents
-    ),
-    counts AS (
-        SELECT doc_id,
-               ('0x' || substring(md5(tok), 1, 8))::BIGINT % 64 AS bucket,
-               COUNT(*) AS cnt
-        FROM toks GROUP BY doc_id, bucket
-    ),
-    weights AS (
-        SELECT doc_id, bucket,
-               CAST(cnt AS DOUBLE)
-                   / sqrt(CAST(SUM(cnt * cnt) OVER (PARTITION BY doc_id)
-                               AS DOUBLE)) AS weight
-        FROM counts
-    )
-    SELECT bucket,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(doc_id AS VARCHAR) || '|' ||
-               CAST(bucket AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig,
-           CAST(SUM(CAST(round(weight * 1000000000) AS BIGINT)) AS BIGINT)
-               AS weight_e9_sum
-    FROM weights GROUP BY bucket
-    """,
+register_checksum(
+    "q_embed_generate",
+    key="bucket",
+    sums={"weight_e9_sum": Part("weight", scale=9)},
+    parts=["doc_id", "bucket"],
     doc="bounded differential form of q_embed_generate for the sf10 "
     "scaling rung (SCALE.md): the 10M-entry sparse-embedding frame "
     "reduced to one row per hash bucket (64) — entry count, an XOR of "
@@ -3145,95 +3030,30 @@ def q_fuzzy_decontaminate_small(spark, sf_dir):
     "but each engine FORMATS floats and rounds double->decimal "
     "differently (measured 1-ulp weight_sum drift with DECIMAL(38,15))",
 )
-def q_embed_generate_checksum(spark, sf_dir):
-    from rag_pipelines_spark.operators.embedding import hashed_bow_sparse
-
-    d = t(spark, sf_dir, "documents")
-    w = hashed_bow_sparse(d, id_col="doc_id", text_col="text", dim=64)
-    digest = md5_long_digest(
-        F.col("doc_id").cast("string"), F.col("bucket").cast("string")
-    )
-    return w.groupBy("bucket").agg(
-        F.count("*").alias("n"),
-        F.bit_xor(digest).alias("xor_sig"),
-        F.sum(F.round(F.col("weight") * 1e9).cast("long")).alias(
-            "weight_e9_sum"
-        ),
-    )
 
 
-_CHUNKING_CHECKSUM_ORACLE = """
-    WITH idx AS (
-        SELECT doc_id, text,
-               unnest(range(0, (length(text) - 1) // 80 + 1)) AS i
-        FROM documents
-    ),
-    chunks AS (
-        SELECT doc_id, i AS chunk_idx,
-               substring(text, 1 + i * 80, 100) AS chunk
-        FROM idx
-        WHERE substring(text, 1 + i * 80, 100) <> ''
-    )
-    SELECT doc_id,
-           COUNT(*) AS n_chunks,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(chunk_idx AS VARCHAR) || '|' || chunk),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM chunks GROUP BY doc_id
-    """
-
-
-@register(
-    "q_chunking_checksum",
-    oracle=_CHUNKING_CHECKSUM_ORACLE,
+register_checksum(
+    "q_chunking",
+    key="doc_id",
+    count="n_chunks",
+    parts=["chunk_idx", "chunk"],
     doc="bounded differential form of q_chunking for the sf10 scaling "
     "rung (SCALE.md): the chunk set (2.1M rows at sf10, just over the "
     "harness row cap) reduced to one row per document — chunk count plus "
     "an XOR of md5 digests over (chunk_idx, chunk text)",
 )
-def q_chunking_checksum(spark, sf_dir):
-    d = t(spark, sf_dir, "documents")
-    n_chunks = F.floor((F.length("text") - 1) / 80).cast("int")
-    chunks = (
-        d.select(
-            "doc_id", "text", F.explode(F.sequence(F.lit(0), n_chunks)).alias("i")
-        )
-        .select(
-            "doc_id",
-            F.col("i").cast("bigint").alias("chunk_idx"),
-            F.expr("substring(text, 1 + i * 80, 100)").alias("chunk"),
-        )
-        .filter(F.col("chunk") != "")
-    )
-    digest = md5_long_digest(F.col("chunk_idx").cast("string"), F.col("chunk"))
-    return chunks.groupBy("doc_id").agg(
-        F.count("*").alias("n_chunks"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
-@register(
-    "q_chunk_udtf_checksum",
-    oracle=_CHUNKING_CHECKSUM_ORACLE,
+register_checksum(
+    "q_chunk_udtf",
+    key="doc_id",
+    count="n_chunks",
+    parts=["chunk_idx", "chunk"],
     doc="bounded differential form of q_chunk_udtf: the SAME reduction as "
     "q_chunking_checksum but fed by the Python UDTF chunker (Spark 4 "
     "lateral table function) — proving the UDTF path chunk-for-chunk "
     "equal to the column plan at the sf10 rung, not just at sf0.01",
 )
-def q_chunk_udtf_checksum(spark, sf_dir):
-    from rag_pipelines_spark.functions.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    t(spark, sf_dir, "documents").createOrReplaceTempView("_docs_for_udtf_ck")
-    chunks = spark.sql(
-        """
-        SELECT d.doc_id, c.chunk_idx, c.chunk
-        FROM _docs_for_udtf_ck d, LATERAL chunk_udtf(d.text) c
-        """
-    )
-    digest = md5_long_digest(F.col("chunk_idx").cast("string"), F.col("chunk"))
-    return chunks.groupBy("doc_id").agg(
-        F.count("*").alias("n_chunks"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
 @register(

@@ -26,7 +26,7 @@ from rag_pipelines_spark.operators.pagerank import (
     pagerank,
     personalized_pagerank,
 )
-from rag_pipelines_spark.queries._util import t
+from rag_pipelines_spark.queries._util import Key, register_checksum, t
 from rag_pipelines_spark.registry import register
 
 _ITERS = 8
@@ -255,48 +255,12 @@ def q_pagerank_personalized(spark, sf_dir):
     )
 
 
-@register(
-    "q_pagerank_checksum",
-    oracle=f"""
-    WITH base AS ({_pagerank_with()} {_FINAL_SELECT})
-    SELECT CAST(concat('0x', substr(md5(node), 1, 15)) AS BIGINT) % 32
-               AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               node || '|' || CAST(rank_num AS VARCHAR)), 1, 15))
-               AS BIGINT)) AS xor_sig
-    FROM base GROUP BY bucket
-    """,
+register_checksum(
+    "q_pagerank",
+    key=Key("node", buckets=32),
+    parts=["node", "rank_num"],
     doc="bounded differential form of q_pagerank for the sf-scaling "
     "sweeps: wraps the headline fn and oracle VERBATIM and reduces to "
     "32 md5-prefix bucket rows — count plus an XOR of per-node "
     "(node, rank) digests",
 )
-def q_pagerank_checksum(spark, sf_dir):
-    base = q_pagerank(spark, sf_dir)
-    dig = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|", F.col("node"), F.col("rank_num").cast("string")
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("node")), 1, 15), 16, 10)
-        .cast("long")
-        % 32
-    )
-    return (
-        base.select(bucket.alias("bucket"), dig.alias("d"))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.expr("bit_xor(d)").alias("xor_sig"),
-        )
-    )

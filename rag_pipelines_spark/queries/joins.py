@@ -15,7 +15,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
-from rag_pipelines_spark.queries._util import dsum, md5_long_digest, o_dsum, t
+from rag_pipelines_spark.queries._util import (
+    Key,
+    Part,
+    dsum,
+    o_dsum,
+    register_checksum,
+    t,
+)
 
 # ---------------------------------------------------------------------------
 # J1 — delta anti-join: new records = scraped ∖ master (by key)
@@ -70,43 +77,15 @@ def q_checkpoint_semi(spark, sf_dir):
     ).select("o_orderkey", "o_totalprice")
 
 
-@register(
-    "q_checkpoint_semi_checksum",
-    oracle="""
-    WITH kept AS (
-        SELECT o.o_orderkey, o.o_totalprice
-        FROM orders o
-        WHERE EXISTS (
-            SELECT 1 FROM lineitem l
-            WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45
-        )
-    )
-    SELECT o_orderkey % 64 AS shard,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(o_orderkey AS VARCHAR) || '|' ||
-               CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR)),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM kept GROUP BY o_orderkey % 64
-    """,
+register_checksum(
+    "q_checkpoint_semi",
+    key=Key("o_orderkey", shards=64),
+    parts=["o_orderkey", Part("o_totalprice", dec="18,2")],
     doc="bounded differential form of q_checkpoint_semi for the sf10 "
     "scaling rung (SCALE.md): the semi-join survivor set (4.9M orders at "
     "sf10) reduced to 64 hash shards -- count plus an XOR of md5 digests "
     "over (orderkey, totalprice as DECIMAL(18,2) string)",
 )
-def q_checkpoint_semi_checksum(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    done = t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
-    kept = o.join(
-        done, o.o_orderkey == done.l_orderkey, "left_semi"
-    ).select("o_orderkey", "o_totalprice")
-    digest = md5_long_digest(
-        F.col("o_orderkey").cast("string"),
-        F.col("o_totalprice").cast("decimal(18,2)").cast("string"),
-    )
-    return kept.groupBy((F.col("o_orderkey") % 64).alias("shard")).agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -533,21 +512,10 @@ def q_snapshot_diff(spark, sf_dir):
     return snapshot_diff(old, new, "doc_id", ["text"])
 
 
-from rag_pipelines_spark.registry import REGISTRY as _REG  # noqa: E402
-
-
-@register(
-    "q_join_asof_checksum",
-    oracle=f"""
-    WITH base AS ({_REG["q_join_asof"].oracle})
-    SELECT user_id,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(event_id AS VARCHAR) || '|' ||
-               COALESCE(CAST(last_orderkey AS VARCHAR), 'NONE')),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM base GROUP BY user_id
-    """,
+register_checksum(
+    "q_join_asof",
+    key="user_id",
+    parts=["event_id", Part("last_orderkey", null="NONE")],
     doc="bounded differential form of q_join_asof for the sf10 scaling "
     "rung (SCALE.md): the 10M-row as-of result reduced to one row per "
     "user — count plus an XOR of md5 digests over (event_id, matched "
@@ -555,15 +523,6 @@ from rag_pipelines_spark.registry import REGISTRY as _REG  # noqa: E402
     "query fn and oracle verbatim, so twin and original can never "
     "diverge in dataflow",
 )
-def q_join_asof_checksum(spark, sf_dir):
-    base = _REG["q_join_asof"].fn(spark, sf_dir)
-    digest = md5_long_digest(
-        F.col("event_id").cast("string"),
-        F.coalesce(F.col("last_orderkey").cast("string"), F.lit("NONE")),
-    )
-    return base.groupBy("user_id").agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
 @register(

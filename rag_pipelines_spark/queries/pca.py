@@ -27,10 +27,12 @@ from rag_pipelines_spark.operators.pca import (
     pca_project,
     quantize_linear,
 )
-from rag_pipelines_spark.queries._util import md5_long_digest, o_dec_to_dbl, t
-from rag_pipelines_spark.queries.clustering import (
-    _checksum32_df,
-    _checksum32_sql,
+from rag_pipelines_spark.queries._util import (
+    Key,
+    Part,
+    o_dec_to_dbl,
+    register_checksum,
+    t,
 )
 from rag_pipelines_spark.registry import register
 
@@ -107,7 +109,6 @@ def q_pca_component(spark, sf_dir):
     return pca_component_frame(t(spark, sf_dir, "embeddings"), d=_D, iters=_ITERS)
 
 
-# shared with the checksum twin (the two cannot diverge)
 _PP_ORACLE = f"""
     {_power_with()}
     SELECT z.vec_id AS vec_id,
@@ -133,7 +134,6 @@ def q_pca_project(spark, sf_dir):
     return pca_project(t(spark, sf_dir, "embeddings"), d=_D, iters=_ITERS)
 
 
-# shared with the checksum twin (the two cannot diverge)
 _EQ_ORACLE = f"""
     WITH stats AS (
         SELECT t.dim AS dim,
@@ -289,56 +289,25 @@ def q_pca_from_state(spark, sf_dir):
     )
 
 
-@register(
-    "q_pca_project_checksum",
-    oracle=_checksum32_sql(_PP_ORACLE, [], "score"),
+register_checksum(
+    "q_pca_project",
+    key=Key("vec_id", buckets=32),
+    parts=["vec_id", Part("score", scale=9)],
     doc="bounded differential form of q_pca_project for the sf-scaling "
     "sweeps (headline output is one row per vector): wraps the headline "
     "fn and oracle VERBATIM, reduced to 32 md5-prefix bucket rows — "
     "count plus an XOR of per-vector digests over "
     "(vec_id, round(score*1e9))",
 )
-def q_pca_project_checksum(spark, sf_dir):
-    return _checksum32_df(q_pca_project(spark, sf_dir), [], "score")
 
 
-@register(
-    "q_embed_quantize_checksum",
-    oracle=f"""
-    SELECT CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 32 AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(code) AS BIGINT) AS code_sum,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(vec_id AS VARCHAR) || '|' ||
-               CAST(dim AS VARCHAR) || '|' ||
-               CAST(code AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM ({_EQ_ORACLE}) base
-    GROUP BY bucket
-    """,
+register_checksum(
+    "q_embed_quantize",
+    key=Key("vec_id", buckets=32),
+    sums={"code_sum": "code"},
+    parts=["vec_id", "dim", "code"],
     doc="bounded differential form of q_embed_quantize for the "
     "sf-scaling sweeps (headline output is n x d rows): wraps the "
     "headline fn and oracle VERBATIM, reduced to 32 md5-prefix bucket "
     "rows — count, code sum, and an XOR of per-(vector, dim) digests",
 )
-def q_embed_quantize_checksum(spark, sf_dir):
-    base = q_embed_quantize(spark, sf_dir)
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("long"),
-        F.lit(32),
-    )
-    digest = md5_long_digest(
-        F.col("vec_id").cast("string"),
-        F.col("dim").cast("string"),
-        F.col("code").cast("string"),
-    )
-    return (
-        base.withColumn("bucket", bucket)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("code").alias("code_sum"),
-            F.bit_xor(digest).alias("xor_sig"),
-        )
-    )

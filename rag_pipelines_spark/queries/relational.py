@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
-from rag_pipelines_spark.queries._util import md5_long_digest, t
+from rag_pipelines_spark.queries._util import Part, register_checksum, t
 
 # ---------------------------------------------------------------------------
 # P1 — projection + rename + constants (the RAG-record transform)
@@ -317,45 +317,13 @@ def q_unpivot(spark, sf_dir):
     ).unpivot("o_orderkey", ["o_totalprice", "o_custkey"], "metric", "value")
 
 
-@register(
-    "q_filter_nullkey_checksum",
-    oracle="""
-    WITH kept AS (
-        SELECT event_id, user_id, event_type, value
-        FROM events
-        WHERE event_id IS NOT NULL
-          AND event_type IS NOT NULL
-          AND event_type <> ''
-          AND user_id IS NOT NULL
-    )
-    SELECT event_type,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(event_id AS VARCHAR) || '|' ||
-               CAST(user_id AS VARCHAR) || '|' ||
-               CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR)),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM kept GROUP BY event_type
-    """,
+register_checksum(
+    "q_filter_nullkey",
+    key="event_type",
+    parts=["event_id", "user_id", Part("value", dec="18,2")],
     doc="bounded differential form of q_filter_nullkey for the sf10 "
     "scaling rung (SCALE.md): the kept row set (all 10M events survive "
     "the null filter at sf10) reduced to one row per event_type — count "
     "plus an order-insensitive XOR of md5 digests over the full kept "
     "tuple (value as DECIMAL(18,2) string, the fixture's value scale)",
 )
-def q_filter_nullkey_checksum(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    kept = e.filter(
-        F.col("event_id").isNotNull()
-        & F.col("event_type").isNotNull()
-        & (F.col("event_type") != "")
-        & F.col("user_id").isNotNull()
-    ).select("event_id", "user_id", "event_type", "value")
-    digest = md5_long_digest(
-        F.col("event_id").cast("string"),
-        F.col("user_id").cast("string"),
-        F.col("value").cast("decimal(18,2)").cast("string"),
-    )
-    return kept.groupBy("event_type").agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )

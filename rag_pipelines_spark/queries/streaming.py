@@ -12,7 +12,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
-from rag_pipelines_spark.queries._util import dsum, md5_long_digest, o_dsum, t
+from rag_pipelines_spark.queries._util import (
+    Part,
+    dsum,
+    o_dsum,
+    register_checksum,
+    t,
+)
 
 
 @register(
@@ -114,40 +120,16 @@ def q_session_agg(spark, sf_dir):
     )
 
 
-@register(
-    "q_session_agg_checksum",
-    oracle="""
-    WITH gaps AS (
-        SELECT user_id, ts,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL '30 minutes'
-                    THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ),
-    ids AS (
-        SELECT user_id, ts,
-               SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        FROM gaps
-    ),
-    sess AS (
-        SELECT user_id,
-               MIN(ts) AS session_start,
-               MAX(ts) + INTERVAL '30 minutes' AS session_end,
-               COUNT(*) AS n_events
-        FROM ids
-        GROUP BY user_id, session_id
-    )
-    SELECT user_id,
-           COUNT(*) AS n_sessions,
-           CAST(SUM(n_events) AS BIGINT) AS total_events,
-           bit_xor(CAST(concat('0x', substr(md5(
-               strftime(session_start, '%Y-%m-%d %H:%M:%S.%f') || '|' ||
-               strftime(session_end, '%Y-%m-%d %H:%M:%S.%f') || '|' ||
-               CAST(n_events AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM sess GROUP BY user_id
-    """,
+register_checksum(
+    "q_session_agg",
+    key="user_id",
+    count="n_sessions",
+    sums={"total_events": "n_events"},
+    parts=[
+        Part("session_start", ts="us"),
+        Part("session_end", ts="us"),
+        "n_events",
+    ],
     doc="bounded differential form of q_session_agg for the sf10 scaling "
     "rung (SCALE.md): the same session_window dataflow reduced to one row "
     "per user — session count, event total, and an order-insensitive XOR "
@@ -158,28 +140,6 @@ def q_session_agg(spark, sf_dir):
     "differently per engine. A single session boundary moved by one "
     "event flips the signature",
 )
-def q_session_agg_checksum(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    sess = (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    digest = md5_long_digest(
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-        F.date_format("session_end", "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-        F.col("n_events").cast("string"),
-    )
-    return sess.groupBy("user_id").agg(
-        F.count("*").alias("n_sessions"),
-        F.sum("n_events").alias("total_events"),
-        F.bit_xor(digest).alias("xor_sig"),
-    )
 
 
 @register(
@@ -334,32 +294,16 @@ def q_downsample(spark, sf_dir):
     )
 
 
-@register(
-    "q_downsample_checksum",
-    oracle="""
-    WITH ohlc AS (
-        SELECT user_id,
-               date_trunc('hour', ts) AS bucket,
-               MIN_BY(value, ts) AS open_v,
-               MAX_BY(value, ts) AS close_v,
-               MIN(value) AS low_v,
-               MAX(value) AS high_v,
-               COUNT(*) AS n
-        FROM events
-        GROUP BY user_id, date_trunc('hour', ts)
-    )
-    SELECT user_id,
-           COUNT(*) AS n_buckets,
-           CAST(SUM(n) AS BIGINT) AS total_events,
-           bit_xor(CAST(concat('0x', substr(md5(
-               strftime(bucket, '%Y-%m-%d %H:%M:%S') || '|' ||
-               CAST(CAST(open_v AS DECIMAL(18,2)) AS VARCHAR) || '|' ||
-               CAST(CAST(close_v AS DECIMAL(18,2)) AS VARCHAR) || '|' ||
-               CAST(CAST(low_v AS DECIMAL(18,2)) AS VARCHAR) || '|' ||
-               CAST(CAST(high_v AS DECIMAL(18,2)) AS VARCHAR) || '|' ||
-               CAST(n AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM ohlc GROUP BY user_id
-    """,
+register_checksum(
+    "q_downsample",
+    key="user_id",
+    count="n_buckets",
+    sums={"total_events": "n"},
+    parts=[
+        Part("bucket", ts="s"),
+        *(Part(c, dec="18,2") for c in ("open_v", "close_v", "low_v", "high_v")),
+        "n",
+    ],
     doc="bounded differential form of q_downsample for the sf10 scaling "
     "rung (SCALE.md): the hourly OHLC frame reduced to one row per user "
     "— bucket count, event total, and an order-insensitive XOR of md5 "
@@ -368,31 +312,6 @@ def q_downsample(spark, sf_dir):
     "rendering both engines); buckets as fixed-width second strings "
     "(hour-truncated NTZ — no tz, no fraction)",
 )
-def q_downsample_checksum(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    ohlc = (
-        e.groupBy("user_id", F.date_trunc("hour", "ts").alias("bucket"))
-        .agg(
-            F.min_by("value", "ts").alias("open_v"),
-            F.max_by("value", "ts").alias("close_v"),
-            F.min("value").alias("low_v"),
-            F.max("value").alias("high_v"),
-            F.count("*").alias("n"),
-        )
-    )
-    digest = md5_long_digest(
-        F.date_format("bucket", "yyyy-MM-dd HH:mm:ss"),
-        F.col("open_v").cast("decimal(18,2)").cast("string"),
-        F.col("close_v").cast("decimal(18,2)").cast("string"),
-        F.col("low_v").cast("decimal(18,2)").cast("string"),
-        F.col("high_v").cast("decimal(18,2)").cast("string"),
-        F.col("n").cast("string"),
-    )
-    return ohlc.groupBy("user_id").agg(
-        F.count("*").alias("n_buckets"),
-        F.sum("n").alias("total_events"),
-        F.bit_xor(digest).alias("xor_sig"),
-    )
 
 
 def _events_stream(spark, sf_dir):

@@ -29,7 +29,7 @@ from rag_pipelines_spark.functions.text import (
     url_absolutize,
 )
 from rag_pipelines_spark.registry import register
-from rag_pipelines_spark.queries._util import md5_long_digest, t
+from rag_pipelines_spark.queries._util import register_checksum, t
 
 
 def _sq(s: str) -> str:
@@ -672,21 +672,10 @@ def q_map_explode(spark, sf_dir):
     )
 
 
-@register(
-    "q_map_explode_checksum",
-    oracle="""
-    WITH ex AS (
-        SELECT e.event_id, k AS key,
-               CAST(json_extract(e.props::JSON, '$.' || k) AS BIGINT) AS val
-        FROM events e, unnest(json_keys(e.props::JSON)) AS t(k)
-    )
-    SELECT key,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(
-               md5(CAST(event_id AS VARCHAR) || '|' || CAST(val AS VARCHAR)),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM ex GROUP BY key
-    """,
+register_checksum(
+    "q_map_explode",
+    key="key",
+    parts=["event_id", "val"],
     doc="bounded differential form of q_map_explode for the sf10 scaling "
     "rung (SCALE.md): the same from_json->explode dataflow reduced to one "
     "row per distinct map key — entry count plus an order-insensitive "
@@ -695,37 +684,12 @@ def q_map_explode(spark, sf_dir):
     "signature. Exact integers end-to-end; no float canonicalization "
     "needed",
 )
-def q_map_explode_checksum(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    m = F.from_json("props", "map<string,bigint>")
-    ex = e.select("event_id", m.alias("_m")).select(
-        "event_id", F.explode("_m").alias("key", "val")
-    )
-    digest = md5_long_digest(
-        F.col("event_id").cast("string"), F.col("val").cast("string")
-    )
-    return ex.groupBy("key").agg(
-        F.count("*").alias("n"),
-        F.bit_xor(digest).alias("xor_sig"),
-    )
 
 
-@register(
-    "q_json_get_checksum",
-    oracle="""
-    WITH j AS (
-        SELECT event_id,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-               to_json({id: event_id, et: event_type}) AS packed
-        FROM events
-    )
-    SELECT k,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(event_id AS VARCHAR) || '|' || packed),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM j GROUP BY k
-    """,
+register_checksum(
+    "q_json_get",
+    key="k",
+    parts=["event_id", "packed"],
     doc="bounded differential form of q_json_get for the sf10 scaling "
     "rung (SCALE.md): the per-event decode/encode frame reduced to one "
     "row per extracted k value — count plus an XOR of md5 digests over "
@@ -733,16 +697,3 @@ def q_map_explode_checksum(spark, sf_dir):
     "verbatim, so the twin still proves both engines SERIALIZE the "
     "struct identically, not just that they extract the same k",
 )
-def q_json_get_checksum(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    j = e.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-        F.to_json(
-            F.struct(F.col("event_id").alias("id"), F.col("event_type").alias("et"))
-        ).alias("packed"),
-    )
-    digest = md5_long_digest(F.col("event_id").cast("string"), F.col("packed"))
-    return j.groupBy("k").agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
-from rag_pipelines_spark.queries._util import md5_long_digest, t
+from rag_pipelines_spark.queries._util import Key, Part, register_checksum, t
 
 # ---------------------------------------------------------------------------
 # SCD2 — type-2 slowly-changing dimension from a change/event stream
@@ -1012,44 +1012,17 @@ def q_ann_from_state(spark, sf_dir):
     )
 
 
-@register(
-    "q_scd2_versions_checksum",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, event_type, ts, event_id,
-               lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-               ) AS prev_attr
-        FROM events
-    ),
-    changes AS (
-        SELECT user_id, event_type, ts, event_id
-        FROM ordered
-        WHERE prev_attr IS NULL OR prev_attr <> event_type
-    ),
-    versions AS (
-        SELECT user_id,
-               event_type AS attr,
-               ts AS valid_from,
-               lead(ts) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-               ) AS valid_to,
-               CAST(CASE WHEN lead(ts) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-               ) IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
-        FROM changes
-    )
-    SELECT user_id,
-           COUNT(*) AS n_versions,
-           CAST(SUM(is_current) AS BIGINT) AS n_open,
-           bit_xor(CAST(concat('0x', substr(md5(
-               attr || '|' ||
-               strftime(valid_from, '%Y-%m-%d %H:%M:%S.%f') || '|' ||
-               COALESCE(strftime(valid_to, '%Y-%m-%d %H:%M:%S.%f'),
-                        'OPEN') || '|' ||
-               CAST(is_current AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM versions GROUP BY user_id
-    """,
+register_checksum(
+    "q_scd2_versions",
+    key="user_id",
+    count="n_versions",
+    sums={"n_open": "is_current"},
+    parts=[
+        "attr",
+        Part("valid_from", ts="us"),
+        Part("valid_to", ts="us", null="OPEN"),
+        "is_current",
+    ],
     doc="bounded differential form of q_scd2_versions for the sf10 "
     "scaling rung (SCALE.md): the version history reduced to one row per "
     "dimension key — version count, open-row count (the exactly-one "
@@ -1059,79 +1032,30 @@ def q_ann_from_state(spark, sf_dir):
     "Spark while || nulls out in DuckDB, so unhandled nulls would make "
     "the digests structurally different",
 )
-def q_scd2_versions_checksum(spark, sf_dir):
-    from rag_pipelines_spark.operators.cdc import scd2_from_events
-
-    v = scd2_from_events(t(spark, sf_dir, "events"))
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    digest = md5_long_digest(
-        F.col("attr"),
-        F.date_format("valid_from", fmt),
-        F.coalesce(F.date_format("valid_to", fmt), F.lit("OPEN")),
-        F.col("is_current").cast("string"),
-    )
-    return v.groupBy("user_id").agg(
-        F.count("*").alias("n_versions"),
-        F.sum("is_current").alias("n_open"),
-        F.bit_xor(digest).alias("xor_sig"),
-    )
 
 
-from rag_pipelines_spark.registry import REGISTRY as _REG  # noqa: E402
-
-
-@register(
-    "q_zorder_key_checksum",
-    oracle=f"""
-    WITH base AS ({_REG["q_zorder_key"].oracle})
-    SELECT event_id % 64 AS shard,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(event_id AS VARCHAR) || '|' ||
-               CAST(zkey AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM base GROUP BY event_id % 64
-    """,
+register_checksum(
+    "q_zorder_key",
+    key=Key("event_id", shards=64),
+    parts=["event_id", "zkey"],
     doc="bounded differential form of q_zorder_key for the sf10 scaling "
     "rung (SCALE.md): 10M Morton keys reduced to 64 hash shards — count "
     "plus an XOR of (event_id, zkey) md5 digests; one interleaved bit "
     "wrong anywhere flips a shard signature. Wraps the original query fn "
     "and oracle verbatim",
 )
-def q_zorder_key_checksum(spark, sf_dir):
-    base = _REG["q_zorder_key"].fn(spark, sf_dir)
-    digest = md5_long_digest(
-        F.col("event_id").cast("string"), F.col("zkey").cast("string")
-    )
-    return base.groupBy((F.col("event_id") % 64).alias("shard")).agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
-@register(
-    "q_zorder_quantile_checksum",
-    oracle=f"""
-    WITH base AS ({_REG["q_zorder_quantile"].oracle})
-    SELECT zfile,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(event_id AS VARCHAR) || '|' ||
-               CAST(zkey AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM base GROUP BY zfile
-    """,
+register_checksum(
+    "q_zorder_quantile",
+    key="zfile",
+    parts=["event_id", "zkey"],
     doc="bounded differential form of q_zorder_quantile for the sf10 "
     "scaling rung (SCALE.md): reduced to one row per deterministic "
     "z-cell FILE id (the layout the operator exists to produce), with "
     "count + (event_id, zkey) digest XOR per file. Wraps the original "
     "query fn and oracle verbatim",
 )
-def q_zorder_quantile_checksum(spark, sf_dir):
-    base = _REG["q_zorder_quantile"].fn(spark, sf_dir)
-    digest = md5_long_digest(
-        F.col("event_id").cast("string"), F.col("zkey").cast("string")
-    )
-    return base.groupBy("zfile").agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
 @register(

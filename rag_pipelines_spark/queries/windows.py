@@ -11,7 +11,14 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
-from rag_pipelines_spark.queries._util import dec, md5_long_digest, o_dsum, t
+from rag_pipelines_spark.queries._util import (
+    Part,
+    dec,
+    md5_long_digest,
+    o_dsum,
+    register_checksum,
+    t,
+)
 
 
 @register(
@@ -439,119 +446,38 @@ def q_window_dist_checksum(spark, sf_dir):
     )
 
 
-@register(
-    "q_window_rank_checksum",
-    oracle="""
-    WITH d AS (
-        SELECT o_custkey, o_orderkey,
-               ROW_NUMBER() OVER w AS rn,
-               RANK() OVER w AS rnk,
-               DENSE_RANK() OVER w AS drnk
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey
-                     ORDER BY o_totalprice DESC, o_orderkey)
-    )
-    SELECT o_custkey,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(o_orderkey AS VARCHAR) || '|' ||
-               CAST(rn AS VARCHAR) || '|' ||
-               CAST(rnk AS VARCHAR) || '|' ||
-               CAST(drnk AS VARCHAR)), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM d GROUP BY o_custkey
-    """,
+register_checksum(
+    "q_window_rank",
+    key="o_custkey",
+    parts=["o_orderkey", "rn", "rnk", "drnk"],
     doc="bounded differential form of q_window_rank for the sf10 scaling "
     "rung (SCALE.md): the 15M-row per-order rank frame reduced to one row "
     "per customer — count plus an XOR of md5 digests over the full "
     "(orderkey, rn, rnk, drnk) tuple; any rank off by one flips the "
     "signature",
 )
-def q_window_rank_checksum(spark, sf_dir):
-    o = t(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    d = o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-    )
-    digest = md5_long_digest(
-        F.col("o_orderkey").cast("string"),
-        F.col("rn").cast("string"),
-        F.col("rnk").cast("string"),
-        F.col("drnk").cast("string"),
-    )
-    return d.groupBy("o_custkey").agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
-@register(
-    "q_window_lead_checksum",
-    oracle="""
-    WITH d AS (
-        SELECT event_id, user_id,
-               LAG(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_type,
-               LEAD(event_type) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS next_type
-        FROM events
-    )
-    SELECT user_id,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(event_id AS VARCHAR) || '|' ||
-               COALESCE(prev_type, 'NONE') || '|' ||
-               COALESCE(next_type, 'NONE')), 1, 15)) AS BIGINT)) AS xor_sig
-    FROM d GROUP BY user_id
-    """,
+register_checksum(
+    "q_window_lead",
+    key="user_id",
+    parts=[
+        "event_id",
+        Part("prev_type", null="NONE"),
+        Part("next_type", null="NONE"),
+    ],
     doc="bounded differential form of q_window_lead for the sf10 scaling "
     "rung (SCALE.md): one row per user — count plus an XOR of md5 "
     "digests over (event_id, prev, next); boundary NULLs COALESCEd to a "
     "sentinel before digesting (concat_ws silently skips nulls in Spark "
     "while || nulls out in DuckDB)",
 )
-def q_window_lead_checksum(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    d = e.select(
-        "event_id",
-        "user_id",
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.lead("event_type").over(w).alias("next_type"),
-    )
-    digest = md5_long_digest(
-        F.col("event_id").cast("string"),
-        F.coalesce(F.col("prev_type"), F.lit("NONE")),
-        F.coalesce(F.col("next_type"), F.lit("NONE")),
-    )
-    return d.groupBy("user_id").agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
-@register(
-    "q_window_frame_checksum",
-    oracle="""
-    WITH d AS (
-        SELECT event_id, user_id,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE)
-                 AS sum3
-        FROM events
-    )
-    SELECT user_id,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(event_id AS VARCHAR) || '|' ||
-               CAST(CAST(sum3 AS DECIMAL(20,2)) AS VARCHAR)),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM d GROUP BY user_id
-    """,
+register_checksum(
+    "q_window_frame",
+    key="user_id",
+    parts=["event_id", Part("sum3", dec="20,2")],
     doc="bounded differential form of q_window_frame for the sf10 scaling "
     "rung (SCALE.md): one row per user — count plus an XOR of md5 digests "
     "over (event_id, sum3). sum3 enters the digest re-cast to "
@@ -561,42 +487,12 @@ def q_window_lead_checksum(spark, sf_dir):
     "digesting raw double strings would hang on each engine's float "
     "formatter instead",
 )
-def q_window_frame_checksum(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-2, 0)
-    d = e.select(
-        "event_id",
-        "user_id",
-        F.sum(dec("value")).over(w).cast("double").alias("sum3"),
-    )
-    digest = md5_long_digest(
-        F.col("event_id").cast("string"),
-        F.col("sum3").cast("decimal(20,2)").cast("string"),
-    )
-    return d.groupBy("user_id").agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )
 
 
-@register(
-    "q_window_running_checksum",
-    oracle="""
-    WITH d AS (
-        SELECT event_id, user_id,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS DOUBLE) AS running_value
-        FROM events
-    )
-    SELECT user_id,
-           COUNT(*) AS n,
-           bit_xor(CAST(concat('0x', substr(md5(
-               CAST(event_id AS VARCHAR) || '|' ||
-               CAST(CAST(running_value AS DECIMAL(24,2)) AS VARCHAR)),
-               1, 15)) AS BIGINT)) AS xor_sig
-    FROM d GROUP BY user_id
-    """,
+register_checksum(
+    "q_window_running",
+    key="user_id",
+    parts=["event_id", Part("running_value", dec="24,2")],
     doc="bounded differential form of q_window_running for the sf10 "
     "scaling rung (SCALE.md): one row per user — count plus an XOR of "
     "md5 digests over (event_id, running_value), the running sum "
@@ -604,22 +500,3 @@ def q_window_frame_checksum(spark, sf_dir):
     "(q_window_frame_checksum rationale; wider precision because the "
     "running sum grows with history)",
 )
-def q_window_running_checksum(spark, sf_dir):
-    e = t(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    d = e.select(
-        "event_id",
-        "user_id",
-        F.sum(dec("value")).over(w).cast("double").alias("running_value"),
-    )
-    digest = md5_long_digest(
-        F.col("event_id").cast("string"),
-        F.col("running_value").cast("decimal(24,2)").cast("string"),
-    )
-    return d.groupBy("user_id").agg(
-        F.count("*").alias("n"), F.bit_xor(digest).alias("xor_sig")
-    )

@@ -1,4 +1,4 @@
-"""JSONL source/sink (S5/S6/S9) + dead-letter split writer (S13).
+"""JSONL source/sink (S5/S9), per-record layout (S7) and glob scan (S8).
 
 JSON Lines is Spark's native JSON encoding: `df.write.json` emits one
 compact object per line per partition file; `spark.read.json` with an
@@ -9,7 +9,7 @@ pdf…/combine_json_to_jsonl.py:143-150.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -23,32 +23,6 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 def read_jsonl(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
     """JSONL scan with explicit schema; multiLine=False (true JSONL)."""
     return spark.read.schema(schema).json(path)
-
-
-def read_json_batch(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
-    """Consolidated-JSON batch read (S6): a single JSON *array* document.
-
-    Mirrors the reference's tolerant object-or-array load
-    (fda…/combine_json_to_jsonl.py:26-58) via multiLine — Spark promotes a
-    top-level array to rows and a single object to one row.
-    """
-    return spark.read.schema(schema).option("multiLine", True).json(path)
-
-
-def deadletter_split(
-    df: DataFrame, ok: Column, main_path: str, failed_path: str
-) -> tuple[DataFrame, DataFrame]:
-    """Split-write: rows passing `ok` to the main sink, the rest (tagged
-    with a reason column upstream) to quarantine. Two filtered writes over
-    one cached plan — the classic Spark replacement for the reference's
-    move-to-failed-dir (ref: pubmed_enrichment.py:450-456).
-    """
-    tagged = df.withColumn("_ok", ok).cache()
-    good = tagged.filter(F.col("_ok")).drop("_ok")
-    bad = tagged.filter(~F.col("_ok")).drop("_ok")
-    write_jsonl(good, main_path)
-    write_jsonl(bad, failed_path)
-    return good, bad
 
 
 def write_per_record_json(df: DataFrame, path: str, key_col: str = "rag_id") -> None:

@@ -70,7 +70,8 @@ def _code_identifiers(src: str) -> set[str]:
 def _delegates(q) -> str:
     """operators/streaming modules the query delegates to: dotted
     references in the fn's own source PLUS module-level imports whose
-    names the fn's code actually uses."""
+    names the fn's code actually uses. A checksum twin (register_checksum)
+    wraps its base fn, so its module and source are the base's."""
     try:
         src = inspect.getsource(q.fn)
     except OSError:
