@@ -478,29 +478,43 @@ def q_cosine_topk(spark, sf_dir):
     )
 
 
-@register(
-    "q_embed_neardup",
-    oracle="""
-    WITH norms AS (
+def _sql_label_norms(src: str) -> str:
+    """(vec_id, label, embedding, n2) rows of `src`, n2 the exact-decimal
+    squared norm (vecexpr.norm2)."""
+    return f"""
         SELECT vec_id, label, embedding,
                CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
                              AS DECIMAL(30,15))) AS DOUBLE) AS n2
         FROM (SELECT vec_id, label, embedding, unnest(embedding) AS x
-              FROM embeddings)
+              FROM {src})
         GROUP BY vec_id, label, embedding
-    ),
+    """
+
+
+def _sql_label_dots(pairs: str) -> str:
+    """el/dots CTEs: exact-decimal dot (vecexpr.dot_dec) of every
+    (a_id, b_id) norm-row pair the `pairs` join keeps."""
+    return f"""
     el AS (
         SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.n2 AS na2, b.n2 AS nb2,
                unnest(a.embedding) AS x, unnest(b.embedding) AS y
-        FROM norms a JOIN norms b
-          ON a.label = b.label AND b.vec_id > a.vec_id
+        FROM {pairs}
     ),
     dots AS (
         SELECT a_id, b_id, na2, nb2,
                CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)
                              AS DECIMAL(30,15))) AS DOUBLE) AS dot
         FROM el GROUP BY a_id, b_id, na2, nb2
-    )
+    )"""
+
+
+@register(
+    "q_embed_neardup",
+    oracle=f"""
+    WITH norms AS ({_sql_label_norms("embeddings")}),
+    {_sql_label_dots(
+        "norms a JOIN norms b ON a.label = b.label AND b.vec_id > a.vec_id"
+    )}
     SELECT a_id, b_id, round(dot / (sqrt(na2) * sqrt(nb2)), 9) AS cosine
     FROM dots
     WHERE round(dot / (sqrt(na2) * sqrt(nb2)), 9) >= 0.5
@@ -566,33 +580,26 @@ def _label_neardup_pairs(spark, sf_dir, probe_filter, pair_cond):
     )
 
 
-@register(
-    "q_near_dedup",
-    oracle="""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 1000000000000, text || ' near dup tail'
-        FROM documents WHERE doc_id % 10 = 0
-    ),
-    tok AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
+def _sql_minhash_bands(tok: str) -> str:
+    """sh/sig/bands CTEs replaying operators/dedup.py minhash_band_keys
+    over the `tok` relation's (doc_id, ws) word arrays: distinct word
+    3-gram shingles, 8 md5 min-hashes, 4 bands of 2."""
+    sigs = ",\n".join(
+        f"list_aggregate(list_transform(shingles, x -> md5('{i}|' || x)), "
+        f"'min') AS s{i}"
+        for i in range(8)
+    )
+    return f"""
     sh AS (
         SELECT doc_id,
                list_distinct(list_transform(
                    range(1, greatest(len(ws) - 1, 1)),
                    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingles
-        FROM tok
+        FROM {tok}
     ),
     sig AS (
         SELECT doc_id,
-               list_aggregate(list_transform(shingles, x -> md5('0|' || x)), 'min') AS s0,
-               list_aggregate(list_transform(shingles, x -> md5('1|' || x)), 'min') AS s1,
-               list_aggregate(list_transform(shingles, x -> md5('2|' || x)), 'min') AS s2,
-               list_aggregate(list_transform(shingles, x -> md5('3|' || x)), 'min') AS s3,
-               list_aggregate(list_transform(shingles, x -> md5('4|' || x)), 'min') AS s4,
-               list_aggregate(list_transform(shingles, x -> md5('5|' || x)), 'min') AS s5,
-               list_aggregate(list_transform(shingles, x -> md5('6|' || x)), 'min') AS s6,
-               list_aggregate(list_transform(shingles, x -> md5('7|' || x)), 'min') AS s7
+               {sigs}
         FROM sh
     ),
     bands AS (
@@ -600,13 +607,47 @@ def _label_neardup_pairs(spark, sf_dir, probe_filter, pair_cond):
         UNION ALL SELECT doc_id, 1, md5(s2 || s3) FROM sig
         UNION ALL SELECT doc_id, 2, md5(s4 || s5) FROM sig
         UNION ALL SELECT doc_id, 3, md5(s6 || s7) FROM sig
+    )"""
+
+
+# The planted near-dup corpus (_planted_neardup_corpus) and its bands.
+_SQL_PLANTED_NEARDUP = f"""corpus AS (
+        SELECT doc_id, text FROM documents
+        UNION ALL
+        SELECT doc_id + 1000000000000, text || ' near dup tail'
+        FROM documents WHERE doc_id % 10 = 0
     ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM bands a
-        JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-                    AND a.doc_id < b.doc_id
-    ),
+    tok AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
+    {_sql_minhash_bands("tok")}"""
+
+# band_candidate_pairs: distinct (a_id < b_id) pairs sharing a band bucket
+_SQL_BAND_PAIRS = """
+    SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
+    FROM bands a
+    JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
+                AND a.doc_id < b.doc_id
+"""
+
+
+def _planted_neardup_corpus(spark, sf_dir):
+    """(doc_id, text) documents plus planted near-dups: every 10th doc
+    re-appears with a 3-word tail, so verification has known positives
+    AND known sub-threshold rejects (short docs fall under 0.8). The id
+    offset (1e12) is beyond any fixture range: at sf10 a +100000 offset
+    would COLLIDE with real doc_ids, planting duplicate ids."""
+    d = t(spark, sf_dir, "documents")
+    mutated = d.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + F.lit(1000000000000)).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" near dup tail")).alias("text"),
+    )
+    return d.select("doc_id", "text").unionByName(mutated)
+
+
+@register(
+    "q_near_dedup",
+    oracle=f"""
+    WITH {_SQL_PLANTED_NEARDUP},
+    cand AS ({_SQL_BAND_PAIRS}),
     v AS (
         SELECT c.a_id, c.b_id,
                len(list_intersect(sa.shingles, sb.shingles)) AS inter_size,
@@ -631,62 +672,17 @@ def _label_neardup_pairs(spark, sf_dir, probe_filter, pair_cond):
 def q_near_dedup(spark, sf_dir):
     from rag_pipelines_spark.operators.dedup import near_dedup_pairs
 
-    d = t(spark, sf_dir, "documents")
-    # planted near-dups (same scheme as q_minhash_neardup): every 10th doc
-    # re-appears with a 3-word tail at an id offset beyond any fixture
-    # range, so verification has known positives AND known sub-threshold
-    # rejects (short docs fall under 0.8)
-    mutated = d.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + F.lit(1000000000000)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" near dup tail")).alias("text"),
-    )
-    corpus = d.select("doc_id", "text").unionByName(mutated)
     return near_dedup_pairs(
-        corpus, id_col="doc_id", text_col="text", threshold_num=4, threshold_den=5
+        _planted_neardup_corpus(spark, sf_dir),
+        id_col="doc_id", text_col="text", threshold_num=4, threshold_den=5,
     )
 
 
 @register(
     "q_near_dedup_filter",
-    oracle="""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 1000000000000, text || ' near dup tail'
-        FROM documents WHERE doc_id % 10 = 0
-    ),
-    tok AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, greatest(len(ws) - 1, 1)),
-                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingles
-        FROM tok
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_aggregate(list_transform(shingles, x -> md5('0|' || x)), 'min') AS s0,
-               list_aggregate(list_transform(shingles, x -> md5('1|' || x)), 'min') AS s1,
-               list_aggregate(list_transform(shingles, x -> md5('2|' || x)), 'min') AS s2,
-               list_aggregate(list_transform(shingles, x -> md5('3|' || x)), 'min') AS s3,
-               list_aggregate(list_transform(shingles, x -> md5('4|' || x)), 'min') AS s4,
-               list_aggregate(list_transform(shingles, x -> md5('5|' || x)), 'min') AS s5,
-               list_aggregate(list_transform(shingles, x -> md5('6|' || x)), 'min') AS s6,
-               list_aggregate(list_transform(shingles, x -> md5('7|' || x)), 'min') AS s7
-        FROM sh
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band, md5(s0 || s1) AS bkey FROM sig
-        UNION ALL SELECT doc_id, 1, md5(s2 || s3) FROM sig
-        UNION ALL SELECT doc_id, 2, md5(s4 || s5) FROM sig
-        UNION ALL SELECT doc_id, 3, md5(s6 || s7) FROM sig
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM bands a
-        JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-                    AND a.doc_id < b.doc_id
-    ),
+    oracle=f"""
+    WITH {_SQL_PLANTED_NEARDUP},
+    cand AS ({_SQL_BAND_PAIRS}),
     losers AS (
         SELECT DISTINCT c.b_id
         FROM cand c
@@ -711,12 +707,7 @@ def q_near_dedup(spark, sf_dir):
 def q_near_dedup_filter(spark, sf_dir):
     from rag_pipelines_spark.operators.dedup import near_dedup_pairs
 
-    d = t(spark, sf_dir, "documents")
-    mutated = d.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + F.lit(1000000000000)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" near dup tail")).alias("text"),
-    )
-    corpus = d.select("doc_id", "text").unionByName(mutated)
+    corpus = _planted_neardup_corpus(spark, sf_dir)
     losers = (
         near_dedup_pairs(corpus, "doc_id", "text", 4, 5)
         .select(F.col("b_id").alias("doc_id"))
@@ -1184,44 +1175,9 @@ def q_chunk_udtf(spark, sf_dir):
 
 @register(
     "q_minhash_neardup",
-    oracle="""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 1000000000000, text || ' near dup tail'
-        FROM documents WHERE doc_id % 10 = 0
-    ),
-    tok AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, greatest(len(ws) - 1, 1)),
-                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingles
-        FROM tok
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_aggregate(list_transform(shingles, x -> md5('0|' || x)), 'min') AS s0,
-               list_aggregate(list_transform(shingles, x -> md5('1|' || x)), 'min') AS s1,
-               list_aggregate(list_transform(shingles, x -> md5('2|' || x)), 'min') AS s2,
-               list_aggregate(list_transform(shingles, x -> md5('3|' || x)), 'min') AS s3,
-               list_aggregate(list_transform(shingles, x -> md5('4|' || x)), 'min') AS s4,
-               list_aggregate(list_transform(shingles, x -> md5('5|' || x)), 'min') AS s5,
-               list_aggregate(list_transform(shingles, x -> md5('6|' || x)), 'min') AS s6,
-               list_aggregate(list_transform(shingles, x -> md5('7|' || x)), 'min') AS s7
-        FROM sh
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band, md5(s0 || s1) AS bkey FROM sig
-        UNION ALL SELECT doc_id, 1, md5(s2 || s3) FROM sig
-        UNION ALL SELECT doc_id, 2, md5(s4 || s5) FROM sig
-        UNION ALL SELECT doc_id, 3, md5(s6 || s7) FROM sig
-    )
-    SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-    FROM bands a
-    JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-                AND a.doc_id < b.doc_id
-    """,
+    oracle=f"""
+    WITH {_SQL_PLANTED_NEARDUP}
+    {_SQL_BAND_PAIRS}""",
     doc="hand-rolled MinHash LSH near-dedup, fully hash-checked end-to-end "
     "(unlike the MLlib q_near_dedup, whose random hash families force a "
     "rows-only check): 8 deterministic md5 min-hashes over word-3-gram "
@@ -1230,18 +1186,12 @@ def q_chunk_udtf(spark, sf_dir):
     "mutated tail) give known ground truth",
 )
 def q_minhash_neardup(spark, sf_dir):
-    d = t(spark, sf_dir, "documents")
-    # offset far beyond any fixture id range (1e12): at sf10 a +100000
-    # offset would COLLIDE with real doc_ids, planting duplicate ids
-    mutated = d.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + F.lit(1000000000000)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" near dup tail")).alias("text"),
-    )
-    corpus = d.select("doc_id", "text").unionByName(mutated)
     from rag_pipelines_spark.operators.dedup import (
         band_candidate_pairs,
         minhash_band_keys,
     )
+
+    corpus = _planted_neardup_corpus(spark, sf_dir)
 
     # signatures are explode + codegen'd hash-agg (NOT interpreted
     # array_min(transform) per seed — see minhash_band_keys); the same
@@ -1680,11 +1630,12 @@ def q_pretraining_prep(spark, sf_dir):
 # Staged-CTE oracle of the composed lifecycle, shared by the full
 # checksum twin and the sf100-bounded variant — {corpus_pred} narrows the
 # CORPUS side only (the 5-gram/shingle CTEs that OOM DuckDB at sf100);
-# the benchmark side stays the full table in both.
-_PRETRAIN_CHECKSUM_ORACLE_TMPL = r"""
+# the benchmark side stays the full table in both. The near-dedup stage
+# is _sql_minhash_bands over the line-deduped `mtok` words.
+_PRETRAIN_CHECKSUM_ORACLE_TMPL = rf"""
     WITH quality AS (
         SELECT doc_id, text FROM documents
-        WHERE {corpus_pred} len(string_split_regex(trim(text), '\s+')) >= 10
+        WHERE {{corpus_pred}} len(string_split_regex(trim(text), '\s+')) >= 10
           AND CAST(length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))
                    AS DOUBLE) / length(text) < 0.2
           AND CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
@@ -1706,31 +1657,7 @@ _PRETRAIN_CHECKSUM_ORACLE_TMPL = r"""
         HAVING length(string_agg(line, '. ' ORDER BY pos)) > 0
     ),
     mtok AS (SELECT doc_id, string_split(text, ' ') AS ws FROM lined),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, greatest(len(ws) - 1, 1)),
-                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingles
-        FROM mtok
-    ),
-    sig AS (
-        SELECT doc_id,
-               list_aggregate(list_transform(shingles, x -> md5('0|' || x)), 'min') AS s0,
-               list_aggregate(list_transform(shingles, x -> md5('1|' || x)), 'min') AS s1,
-               list_aggregate(list_transform(shingles, x -> md5('2|' || x)), 'min') AS s2,
-               list_aggregate(list_transform(shingles, x -> md5('3|' || x)), 'min') AS s3,
-               list_aggregate(list_transform(shingles, x -> md5('4|' || x)), 'min') AS s4,
-               list_aggregate(list_transform(shingles, x -> md5('5|' || x)), 'min') AS s5,
-               list_aggregate(list_transform(shingles, x -> md5('6|' || x)), 'min') AS s6,
-               list_aggregate(list_transform(shingles, x -> md5('7|' || x)), 'min') AS s7
-        FROM sh
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band, md5(s0 || s1) AS bkey FROM sig
-        UNION ALL SELECT doc_id, 1, md5(s2 || s3) FROM sig
-        UNION ALL SELECT doc_id, 2, md5(s4 || s5) FROM sig
-        UNION ALL SELECT doc_id, 3, md5(s6 || s7) FROM sig
-    ),
+    {_sql_minhash_bands('mtok')},
     dups AS (
         SELECT DISTINCT b.doc_id
         FROM bands a JOIN bands b
@@ -1790,73 +1717,14 @@ _PRETRAIN_CHECKSUM_ORACLE_TMPL = r"""
     """
 
 
-@register(
-    "q_pretraining_prep_checksum",
-    oracle=_PRETRAIN_CHECKSUM_ORACLE_TMPL.format(corpus_pred=""),
-    doc="hash-certified twin of the flagship composed lifecycle "
-    "(q_pretraining_prep): the staged CTE oracle replays quality gate -> "
-    "corpus line dedup -> md5-minhash near-dedup -> 5-gram benchmark "
-    "decontamination -> per-shard prefix-sum packing, and the result is "
-    "reduced to 32 per-shard rows (doc count, sequence count, token sum, "
-    "bit_xor of per-doc layout digests) so every surviving doc's packed "
-    "position is pinned. The only semantic substitution vs the headline "
-    "query is the shard key: pmod(md5-prefix, 32) instead of "
-    "pmod(xxhash64, 32), because DuckDB has no xxhash64 — an explicit "
-    "shard_col the pipeline accepts for exactly this purpose",
-)
-def q_pretraining_prep_checksum(spark, sf_dir):
+def _pretrain_checksum(spark, sf_dir, corpus_pred=None):
+    """The composed lifecycle over the documents `corpus_pred` keeps (all
+    of them when None) against the %97 benchmark slice of the full table,
+    reduced to the per-shard rows of _PRETRAIN_CHECKSUM_ORACLE_TMPL."""
     from rag_pipelines_spark.plans.pretraining import pretraining_prep_pipeline
 
     d = t(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 97 == 0).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    shard = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long"),
-        F.lit(32),
-    )
-    packed = pretraining_prep_pipeline(
-        d, bench, persist_stages=False, shard_col=shard
-    ).packed
-    seq_id = F.expr("seq_start div 512")
-    return (
-        packed.groupBy("pack_shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct(seq_id).cast("long").alias("n_seqs"),
-            F.sum("n_tokens").alias("tok_sum"),
-            F.bit_xor(
-                md5_long_digest(
-                    F.col("doc_id"), F.col("n_tokens"), F.col("seq_start"), seq_id
-                )
-            ).alias("xor_sig"),
-        )
-        .orderBy("pack_shard")
-    )
-
-
-@register(
-    "q_pretraining_prep_checksum_small",
-    oracle=_PRETRAIN_CHECKSUM_ORACLE_TMPL.format(
-        corpus_pred="doc_id % 10 = 0 AND"
-    ),
-    doc="sf100-grade bounded twin of the flagship lifecycle (the "
-    "q_fuzzy_decontaminate_small pattern): the SAME composed pipeline "
-    "and the SAME staged-CTE oracle, with the corpus side narrowed to "
-    "the deterministic doc_id % 10 == 0 tenth — the benchmark side and "
-    "every pipeline stage stay identical. Exists because the full "
-    "twin's DuckDB oracle OOMs >52 GiB at sf100 (a VERIFY-side ceiling, "
-    "not a plan defect): at sf100 this variant still pushes 500k docs "
-    "through quality -> line dedup -> minhash -> decontaminate -> pack "
-    "while the oracle stays within DuckDB's memory, so the lifecycle "
-    "keeps a hash-certified row on the top rung of the scale ladder",
-)
-def q_pretraining_prep_checksum_small(spark, sf_dir):
-    from rag_pipelines_spark.plans.pretraining import pretraining_prep_pipeline
-
-    d = t(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 10 == 0)
+    corpus = d if corpus_pred is None else d.filter(corpus_pred)
     bench = d.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
@@ -1885,7 +1753,47 @@ def q_pretraining_prep_checksum_small(spark, sf_dir):
     )
 
 
-_DSIR_ORACLE = r"""
+@register(
+    "q_pretraining_prep_checksum",
+    oracle=_PRETRAIN_CHECKSUM_ORACLE_TMPL.format(corpus_pred=""),
+    doc="hash-certified twin of the flagship composed lifecycle "
+    "(q_pretraining_prep): the staged CTE oracle replays quality gate -> "
+    "corpus line dedup -> md5-minhash near-dedup -> 5-gram benchmark "
+    "decontamination -> per-shard prefix-sum packing, and the result is "
+    "reduced to 32 per-shard rows (doc count, sequence count, token sum, "
+    "bit_xor of per-doc layout digests) so every surviving doc's packed "
+    "position is pinned. The only semantic substitution vs the headline "
+    "query is the shard key: pmod(md5-prefix, 32) instead of "
+    "pmod(xxhash64, 32), because DuckDB has no xxhash64 — an explicit "
+    "shard_col the pipeline accepts for exactly this purpose",
+)
+def q_pretraining_prep_checksum(spark, sf_dir):
+    return _pretrain_checksum(spark, sf_dir)
+
+
+@register(
+    "q_pretraining_prep_checksum_small",
+    oracle=_PRETRAIN_CHECKSUM_ORACLE_TMPL.format(
+        corpus_pred="doc_id % 10 = 0 AND"
+    ),
+    doc="sf100-grade bounded twin of the flagship lifecycle (the "
+    "q_fuzzy_decontaminate_small pattern): the SAME composed pipeline "
+    "and the SAME staged-CTE oracle, with the corpus side narrowed to "
+    "the deterministic doc_id % 10 == 0 tenth — the benchmark side and "
+    "every pipeline stage stay identical. Exists because the full "
+    "twin's DuckDB oracle OOMs >52 GiB at sf100 (a VERIFY-side ceiling, "
+    "not a plan defect): at sf100 this variant still pushes 500k docs "
+    "through quality -> line dedup -> minhash -> decontaminate -> pack "
+    "while the oracle stays within DuckDB's memory, so the lifecycle "
+    "keeps a hash-certified row on the top rung of the scale ladder",
+)
+def q_pretraining_prep_checksum_small(spark, sf_dir):
+    return _pretrain_checksum(spark, sf_dir, F.col("doc_id") % 10 == 0)
+
+
+# tok/pos/grams/feats CTEs of operators/dsir.py hashed_ngram_features:
+# every word uni- and bigram of a doc, md5-hashed into 10k buckets.
+_SQL_HASHED_FEATS = r"""
     WITH tok AS (
         SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws
         FROM documents
@@ -1905,7 +1813,9 @@ _DSIR_ORACLE = r"""
                CAST(concat('0x', substr(md5(g), 1, 15)) AS BIGINT) % 10000
                    AS bucket
         FROM grams
-    ),
+    )"""
+
+_DSIR_ORACLE = f"""{_SQL_HASHED_FEATS},
     raw_counts AS (SELECT bucket, COUNT(*) AS cr FROM feats GROUP BY bucket),
     tgt_counts AS (
         SELECT bucket, COUNT(*) AS ct FROM feats
@@ -2011,27 +1921,7 @@ register(
 
 @register(
     "q_dsir_from_state",
-    oracle=r"""
-    WITH tok AS (
-        SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, ws, unnest(range(1, greatest(len(ws), 1) + 1)) AS i
-        FROM tok
-    ),
-    grams AS (
-        SELECT doc_id, ws[i] AS g FROM pos WHERE i <= len(ws)
-        UNION ALL
-        SELECT doc_id, ws[i] || ' ' || ws[i+1] AS g FROM pos
-        WHERE i < len(ws)
-    ),
-    feats AS (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(g), 1, 15)) AS BIGINT) % 10000
-                   AS bucket
-        FROM grams
-    ),
+    oracle=f"""{_SQL_HASHED_FEATS},
     raw_counts AS (
         SELECT bucket, COUNT(*) AS cr FROM feats
         WHERE doc_id % 3 IN (0, 1) GROUP BY bucket
@@ -2373,9 +2263,9 @@ def q_jaccard_join(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "q_substring_spans",
-    oracle="""
+# toks/idx/g/dup CTEs of operators/substrdedup.py: md5 digests of every
+# token 8-gram, and the digests occurring >= 2 times corpus-wide.
+_SQL_DUP_8GRAMS = """
     WITH toks AS (
         SELECT doc_id, string_split(text, ' ') AS s FROM documents
     ),
@@ -2388,10 +2278,16 @@ def q_jaccard_join(spark, sf_dir):
                md5(array_to_string(s[i:i+7], ' ')) AS gh
         FROM idx
     ),
-    dup AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
+    dup AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2)"""
+
+
+def _sql_substring_spans(batch_where: str = "") -> str:
+    """Maximal per-doc spans covered by duplicated 8-grams (the
+    merge_covered_spans islands) of the docs `batch_where` keeps."""
+    return f"""{_SQL_DUP_8GRAMS},
     hits AS (
         SELECT g.doc_id, g.pos AS st, g.pos + 7 AS en
-        FROM g JOIN dup USING (gh)
+        FROM g JOIN dup USING (gh){batch_where}
     ),
     flagged AS (
         SELECT doc_id, st, en,
@@ -2415,7 +2311,12 @@ def q_jaccard_join(spark, sf_dir):
     SELECT doc_id, MIN(st) AS span_start, MAX(en) AS span_end,
            MAX(en) - MIN(st) + 1 AS span_len
     FROM isl GROUP BY doc_id, island
-    """,
+    """
+
+
+@register(
+    "q_substring_spans",
+    oracle=_sql_substring_spans(),
     doc="exact duplicated-substring DETECTION: maximal per-doc token spans "
     "covered by 8-grams occurring >= 2 times corpus-wide (Lee et al. 2022 "
     "exact substring dedup, token-granular). Grams built with zero-shuffle "
@@ -2438,20 +2339,7 @@ def q_substring_spans(spark, sf_dir):
 
 @register(
     "q_substring_dedup",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS s FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, s, unnest(range(1, len(s) - 8 + 2)) AS i
-        FROM toks WHERE len(s) >= 8
-    ),
-    g AS (
-        SELECT doc_id, i - 1 AS pos,
-               md5(array_to_string(s[i:i+7], ' ')) AS gh
-        FROM idx
-    ),
-    dup AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
+    oracle=f"""{_SQL_DUP_8GRAMS},
     hits AS (
         SELECT g.doc_id, g.pos, g.gh,
                row_number() OVER (
@@ -2781,9 +2669,11 @@ def q_token_budget_mixture(spark, sf_dir):
     )
 
 
-@register(
-    "q_ann_ivf_exact",
-    oracle="""
+def _sql_ivf_topk(seed_where: str = "") -> str:
+    """operators/semdedup.py ivf_topk_exact in DuckDB: 32 hash-min seeds
+    drawn from the vectors `seed_where` keeps, nearest-seed cells for the
+    whole table, nprobe=2 probes for queries vec_id < 10, exact top-5."""
+    return f"""
     WITH norms AS (
         SELECT vec_id, embedding,
                CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
@@ -2796,7 +2686,7 @@ def q_token_budget_mixture(spark, sf_dir):
                row_number() OVER (
                    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
                ) AS rh
-        FROM norms
+        FROM norms{seed_where}
     ),
     seeds AS (
         SELECT vec_id AS seed_id, embedding AS sv, n2 AS sn2
@@ -2867,7 +2757,12 @@ def q_token_budget_mixture(spark, sf_dir):
         FROM pdots
     )
     SELECT q_id, c_id, cosine, rk FROM scored WHERE rk <= 5
-    """,
+    """
+
+
+@register(
+    "q_ann_ivf_exact",
+    oracle=_sql_ivf_topk(),
     doc="IVF top-k with fully deterministic engine-portable semantics "
     "(operators/semdedup.py ivf_topk_exact): hash-seeded cells (32), "
     "nearest-cell corpus assignment, nprobe=2 query probes, exact "
@@ -2887,9 +2782,10 @@ def q_ann_ivf_exact(spark, sf_dir):
     )
 
 
-@register(
-    "q_fuzzy_decontaminate",
-    oracle="""
+def _sql_fuzzy_decontaminate(bench_mod: int) -> str:
+    """Per-corpus-doc (%10 slice) token-set Jaccard >= 0.8 verdicts
+    against the doc_id % bench_mod benchmark slice, self-pairs excluded."""
+    return f"""
     WITH ctoks AS (
         SELECT DISTINCT doc_id, tok
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -2899,7 +2795,7 @@ def q_ann_ivf_exact(spark, sf_dir):
     btoks AS (
         SELECT DISTINCT doc_id, tok
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-              FROM documents WHERE doc_id % 97 = 0)
+              FROM documents WHERE doc_id % {bench_mod} = 0)
         WHERE tok <> ''
     ),
     csz AS (SELECT doc_id, COUNT(*) AS n FROM ctoks GROUP BY doc_id),
@@ -2920,7 +2816,35 @@ def q_ann_ivf_exact(spark, sf_dir):
     SELECT left_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
            MAX(jaccard) AS best_jaccard
     FROM p GROUP BY left_id
-    """,
+    """
+
+
+def _fuzzy_decontaminate(bench_mod: int):
+    """The registered fn of _sql_fuzzy_decontaminate(bench_mod): the
+    bipartite prefix join of the %10 corpus and the benchmark slice."""
+
+    def fn(spark, sf_dir):
+        from rag_pipelines_spark.operators.setjoin import (
+            jaccard_prefix_join_bipartite,
+        )
+
+        d = t(spark, sf_dir, "documents")
+        corpus = d.filter(F.col("doc_id") % 10 == 0)
+        bench = d.filter(F.col("doc_id") % bench_mod == 0)
+        pairs = jaccard_prefix_join_bipartite(
+            corpus, bench, "doc_id", "text", threshold_num=4, threshold_den=5
+        ).filter(F.col("left_id") != F.col("right_id"))
+        return pairs.groupBy("left_id").agg(
+            F.count("*").cast("long").alias("n_matches"),
+            F.max("jaccard").alias("best_jaccard"),
+        )
+
+    return fn
+
+
+register(
+    "q_fuzzy_decontaminate",
+    oracle=_sql_fuzzy_decontaminate(97),
     doc="fuzzy benchmark decontamination: per-corpus-doc contamination "
     "verdict — which corpus docs have token-set Jaccard >= 0.8 to ANY "
     "benchmark doc, with match count and best score — via the BIPARTITE "
@@ -2934,58 +2858,12 @@ def q_ann_ivf_exact(spark, sf_dir):
     "|flagged|-sized even on the clique-heavy fixtures. The near-dup "
     "complement of q_decontaminate's exact n-gram containment; "
     "self-pairs excluded (the exact tier owns identity)",
-)
-def q_fuzzy_decontaminate(spark, sf_dir):
-    from rag_pipelines_spark.operators.setjoin import (
-        jaccard_prefix_join_bipartite,
-    )
-
-    d = t(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 10 == 0)
-    bench = d.filter(F.col("doc_id") % 97 == 0)
-    pairs = jaccard_prefix_join_bipartite(
-        corpus, bench, "doc_id", "text", threshold_num=4, threshold_den=5
-    ).filter(F.col("left_id") != F.col("right_id"))
-    return pairs.groupBy("left_id").agg(
-        F.count("*").cast("long").alias("n_matches"),
-        F.max("jaccard").alias("best_jaccard"),
-    )
+)(_fuzzy_decontaminate(97))
 
 
-@register(
+register(
     "q_fuzzy_decontaminate_small",
-    oracle="""
-    WITH ctoks AS (
-        SELECT DISTINCT doc_id, tok
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-              FROM documents WHERE doc_id % 10 = 0)
-        WHERE tok <> ''
-    ),
-    btoks AS (
-        SELECT DISTINCT doc_id, tok
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-              FROM documents WHERE doc_id % 970 = 0)
-        WHERE tok <> ''
-    ),
-    csz AS (SELECT doc_id, COUNT(*) AS n FROM ctoks GROUP BY doc_id),
-    bsz AS (SELECT doc_id, COUNT(*) AS n FROM btoks GROUP BY doc_id),
-    inter AS (
-        SELECT c.doc_id AS left_id, b.doc_id AS right_id, COUNT(*) AS i
-        FROM ctoks c JOIN btoks b ON c.tok = b.tok AND c.doc_id <> b.doc_id
-        GROUP BY 1, 2
-    ),
-    p AS (
-        SELECT left_id,
-               CAST(i AS DOUBLE) / CAST(cs.n + bs.n - i AS DOUBLE) AS jaccard
-        FROM inter
-        JOIN csz cs ON cs.doc_id = inter.left_id
-        JOIN bsz bs ON bs.doc_id = inter.right_id
-        WHERE i * 5 >= 4 * (cs.n + bs.n - i)
-    )
-    SELECT left_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
-           MAX(jaccard) AS best_jaccard
-    FROM p GROUP BY left_id
-    """,
+    oracle=_sql_fuzzy_decontaminate(970),
     doc="q_fuzzy_decontaminate with a ~500-doc benchmark slice (%970): "
     "the sf10-certifiable variant. The SPARK side is unchanged in shape "
     "and keeps the FULL 50k-doc corpus side — only the benchmark shrinks "
@@ -2997,22 +2875,7 @@ def q_fuzzy_decontaminate(spark, sf_dir):
     "bounds that fan-out ~10x so the oracle fits, certifying the "
     "bipartite prefix-join operator at sf10 row counts; the full-bench "
     "variant stays certified at sf1",
-)
-def q_fuzzy_decontaminate_small(spark, sf_dir):
-    from rag_pipelines_spark.operators.setjoin import (
-        jaccard_prefix_join_bipartite,
-    )
-
-    d = t(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 10 == 0)
-    bench = d.filter(F.col("doc_id") % 970 == 0)
-    pairs = jaccard_prefix_join_bipartite(
-        corpus, bench, "doc_id", "text", threshold_num=4, threshold_den=5
-    ).filter(F.col("left_id") != F.col("right_id"))
-    return pairs.groupBy("left_id").agg(
-        F.count("*").cast("long").alias("n_matches"),
-        F.max("jaccard").alias("best_jaccard"),
-    )
+)(_fuzzy_decontaminate(970))
 
 
 register_checksum(
@@ -3058,39 +2921,16 @@ register_checksum(
 
 @register(
     "q_embed_neardup_small",
-    oracle="""
+    oracle=f"""
     WITH bsel AS (
         SELECT vec_id, label, embedding FROM embeddings
         WHERE vec_id % 1000 = 0
     ),
-    anorm AS (
-        SELECT vec_id, label, embedding,
-               CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                             AS DECIMAL(30,15))) AS DOUBLE) AS n2
-        FROM (SELECT vec_id, label, embedding, unnest(embedding) AS x
-              FROM embeddings)
-        GROUP BY vec_id, label, embedding
-    ),
-    bnorm AS (
-        SELECT vec_id, label, embedding,
-               CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                             AS DECIMAL(30,15))) AS DOUBLE) AS n2
-        FROM (SELECT vec_id, label, embedding, unnest(embedding) AS x
-              FROM bsel)
-        GROUP BY vec_id, label, embedding
-    ),
-    el AS (
-        SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.n2 AS na2, b.n2 AS nb2,
-               unnest(a.embedding) AS x, unnest(b.embedding) AS y
-        FROM anorm a JOIN bnorm b
-          ON a.label = b.label AND a.vec_id <> b.vec_id
-    ),
-    dots AS (
-        SELECT a_id, b_id, na2, nb2,
-               CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)
-                             AS DECIMAL(30,15))) AS DOUBLE) AS dot
-        FROM el GROUP BY a_id, b_id, na2, nb2
-    ),
+    anorm AS ({_sql_label_norms("embeddings")}),
+    bnorm AS ({_sql_label_norms("bsel")}),
+    {_sql_label_dots(
+        "anorm a JOIN bnorm b ON a.label = b.label AND a.vec_id <> b.vec_id"
+    )},
     p AS (
         SELECT a_id, round(dot / (sqrt(na2) * sqrt(nb2)), 9) AS cosine
         FROM dots
@@ -3123,27 +2963,7 @@ def q_embed_neardup_small(spark, sf_dir):
 
 @register(
     "q_batch_drift",
-    oracle=r"""
-    WITH tok AS (
-        SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, ws, unnest(range(1, greatest(len(ws), 1) + 1)) AS i
-        FROM tok
-    ),
-    grams AS (
-        SELECT doc_id, ws[i] AS g FROM pos WHERE i <= len(ws)
-        UNION ALL
-        SELECT doc_id, ws[i] || ' ' || ws[i+1] AS g FROM pos
-        WHERE i < len(ws)
-    ),
-    feats AS (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(g), 1, 15)) AS BIGINT) % 10000
-                   AS bucket
-        FROM grams
-    ),
+    oracle=f"""{_SQL_HASHED_FEATS},
     fullc AS (SELECT bucket, COUNT(*) AS cq FROM feats GROUP BY bucket),
     per AS (
         SELECT CAST(doc_id % 3 AS INT) AS b, bucket, COUNT(*) AS cp
@@ -3245,27 +3065,7 @@ def _sql_drift_epoch(e: int) -> str:
 
 @register(
     "q_drift_from_state",
-    oracle=r"""
-    WITH tok AS (
-        SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws
-        FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, ws, unnest(range(1, greatest(len(ws), 1) + 1)) AS i
-        FROM tok
-    ),
-    grams AS (
-        SELECT doc_id, ws[i] AS g FROM pos WHERE i <= len(ws)
-        UNION ALL
-        SELECT doc_id, ws[i] || ' ' || ws[i+1] AS g FROM pos
-        WHERE i < len(ws)
-    ),
-    feats AS (
-        SELECT doc_id,
-               CAST(concat('0x', substr(md5(g), 1, 15)) AS BIGINT) % 10000
-                   AS bucket
-        FROM grams
-    ),""" + ",".join(_sql_drift_epoch(e) for e in (0, 1, 2)) + """
+    oracle=f"""{_SQL_HASHED_FEATS},""" + ",".join(_sql_drift_epoch(e) for e in (0, 1, 2)) + """
     SELECT * FROM fe0 UNION ALL SELECT * FROM fe1 UNION ALL
     SELECT * FROM fe2
     """,

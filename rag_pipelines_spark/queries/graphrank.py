@@ -32,46 +32,58 @@ from rag_pipelines_spark.registry import register
 _ITERS = 8
 
 
-def _pagerank_with(iters: int = _ITERS) -> str:
-    """WITH-chain replaying operators/pagerank.py in DuckDB: per
-    iteration one dangling-mass scalar, one edge-contribution agg, one
-    node-relabel — all integer arithmetic."""
-    parts = [
-        """pairs AS MATERIALIZED (
+# The customer<->supplier graph of _graph_frames with string node ids
+# ('c:<key>' / 's:<key>'), and its out-degrees.
+_SQL_GRAPH = [
+    """pairs AS MATERIALIZED (
         SELECT DISTINCT o.o_custkey AS ck, l.l_suppkey AS sk
         FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)""",
-        """edges AS MATERIALIZED (
+    """edges AS MATERIALIZED (
         SELECT 'c:' || CAST(ck AS VARCHAR) AS src,
                's:' || CAST(sk AS VARCHAR) AS dst FROM pairs
         UNION ALL
         SELECT 's:' || CAST(sk AS VARCHAR),
                'c:' || CAST(ck AS VARCHAR) FROM pairs)""",
-        """nodes AS MATERIALIZED (
+    """nodes AS MATERIALIZED (
         SELECT 'c:' || CAST(c_custkey AS VARCHAR) AS node FROM customer
         UNION ALL
         SELECT 's:' || CAST(s_suppkey AS VARCHAR) FROM supplier)""",
-        f"""params AS MATERIALIZED (
-        SELECT COUNT(*) AS n,
-               CAST({TOTAL_MASS} AS BIGINT) // COUNT(*) AS s FROM nodes)""",
-        """deg AS MATERIALIZED (
-        SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)""",
-        """r0 AS MATERIALIZED (
-        SELECT node, (SELECT s FROM params) AS r FROM nodes)""",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""d{i} AS MATERIALIZED (
+]
+_SQL_DEG = """deg AS MATERIALIZED (
+        SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)"""
+
+
+def _sql_pr_step(i: int) -> list[str]:
+    """Iteration i's shared CTEs: d{i} = rank mass of r{i-1}'s dangling
+    nodes, m{i} = per-node sum of in-neighbours' rank // outdeg."""
+    return [
+        f"""d{i} AS MATERIALIZED (
             SELECT COALESCE(SUM(r), 0) AS dang FROM r{i - 1}
-            WHERE node NOT IN (SELECT src FROM deg))"""
-        )
-        parts.append(
-            f"""m{i} AS MATERIALIZED (
+            WHERE node NOT IN (SELECT src FROM deg))""",
+        f"""m{i} AS MATERIALIZED (
             SELECT e.dst AS node, SUM(r.r // g.outdeg) AS m
             FROM r{i - 1} r
             JOIN edges e ON r.node = e.src
             JOIN deg g ON g.src = e.src
-            GROUP BY e.dst)"""
-        )
+            GROUP BY e.dst)""",
+    ]
+
+
+def _pagerank_with(iters: int = _ITERS) -> str:
+    """WITH-chain replaying operators/pagerank.py in DuckDB: per
+    iteration one dangling-mass scalar, one edge-contribution agg, one
+    node-relabel — all integer arithmetic."""
+    parts = [
+        *_SQL_GRAPH,
+        f"""params AS MATERIALIZED (
+        SELECT COUNT(*) AS n,
+               CAST({TOTAL_MASS} AS BIGINT) // COUNT(*) AS s FROM nodes)""",
+        _SQL_DEG,
+        """r0 AS MATERIALIZED (
+        SELECT node, (SELECT s FROM params) AS r FROM nodes)""",
+    ]
+    for i in range(1, iters + 1):
+        parts += _sql_pr_step(i)
         parts.append(
             f"""r{i} AS MATERIALIZED (
             SELECT n.node,
@@ -168,27 +180,14 @@ def _ppr_with(iters: int = _ITERS) -> str:
     """WITH-chain replaying personalized_pagerank: teleport + dangling
     mass return to the seed set only (suppliers with s_suppkey%10=0)."""
     parts = [
-        """pairs AS MATERIALIZED (
-        SELECT DISTINCT o.o_custkey AS ck, l.l_suppkey AS sk
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey)""",
-        """edges AS MATERIALIZED (
-        SELECT 'c:' || CAST(ck AS VARCHAR) AS src,
-               's:' || CAST(sk AS VARCHAR) AS dst FROM pairs
-        UNION ALL
-        SELECT 's:' || CAST(sk AS VARCHAR),
-               'c:' || CAST(ck AS VARCHAR) FROM pairs)""",
-        """nodes AS MATERIALIZED (
-        SELECT 'c:' || CAST(c_custkey AS VARCHAR) AS node FROM customer
-        UNION ALL
-        SELECT 's:' || CAST(s_suppkey AS VARCHAR) FROM supplier)""",
+        *_SQL_GRAPH,
         """seeds AS MATERIALIZED (
         SELECT 's:' || CAST(s_suppkey AS VARCHAR) AS node FROM supplier
         WHERE s_suppkey % 10 = 0)""",
         f"""params AS MATERIALIZED (
         SELECT COUNT(*) AS ns,
                CAST({TOTAL_MASS} AS BIGINT) // COUNT(*) AS s FROM seeds)""",
-        """deg AS MATERIALIZED (
-        SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)""",
+        _SQL_DEG,
         """r0 AS MATERIALIZED (
         SELECT n.node,
                CASE WHEN sd.node IS NOT NULL
@@ -196,19 +195,7 @@ def _ppr_with(iters: int = _ITERS) -> str:
         FROM nodes n LEFT JOIN seeds sd ON n.node = sd.node)""",
     ]
     for i in range(1, iters + 1):
-        parts.append(
-            f"""d{i} AS MATERIALIZED (
-            SELECT COALESCE(SUM(r), 0) AS dang FROM r{i - 1}
-            WHERE node NOT IN (SELECT src FROM deg))"""
-        )
-        parts.append(
-            f"""m{i} AS MATERIALIZED (
-            SELECT e.dst AS node, SUM(r.r // g.outdeg) AS m
-            FROM r{i - 1} r
-            JOIN edges e ON r.node = e.src
-            JOIN deg g ON g.src = e.src
-            GROUP BY e.dst)"""
-        )
+        parts += _sql_pr_step(i)
         parts.append(
             f"""r{i} AS MATERIALIZED (
             SELECT n.node,

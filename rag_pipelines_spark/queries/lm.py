@@ -18,9 +18,13 @@ from rag_pipelines_spark.registry import register
 _BUCKET_SQL = "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100"
 
 
-@register(
-    "q_lm_score",
-    oracle=f"""
+def _sql_familiarity(model_pred: str, batch_pred: str = "") -> str:
+    """operators/lm.py familiarity in DuckDB: a bigram model over the docs
+    `model_pred` keeps, scoring every doc, or only those `batch_pred` (a
+    predicate on an unqualified doc_id) keeps."""
+    p_where = f" WHERE p.{batch_pred}" if batch_pred else ""
+    d_where = f" WHERE d.{batch_pred}" if batch_pred else ""
+    return f"""
     WITH toks AS (
         SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents
     ),
@@ -32,9 +36,7 @@ _BUCKET_SQL = "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT %
     ),
     model AS (
         SELECT w1, w2, COUNT(*) AS c12
-        FROM pairs
-        WHERE doc_id IN (SELECT doc_id FROM documents
-                         WHERE {_BUCKET_SQL} < 30)
+        FROM pairs WHERE {model_pred}
         GROUP BY w1, w2
     ),
     scored AS (
@@ -42,7 +44,7 @@ _BUCKET_SQL = "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT %
                COUNT(*) AS n_bigrams,
                COUNT(m.c12) AS known_bigrams,
                CAST(SUM(COALESCE(m.c12, 0)) AS BIGINT) AS model_hits
-        FROM pairs p LEFT JOIN model m USING (w1, w2)
+        FROM pairs p LEFT JOIN model m USING (w1, w2){p_where}
         GROUP BY p.doc_id
     )
     SELECT d.doc_id,
@@ -52,8 +54,15 @@ _BUCKET_SQL = "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT %
            CASE WHEN s.n_bigrams > 0
                 THEN CAST(s.known_bigrams AS DOUBLE) / s.n_bigrams
            END AS familiarity
-    FROM documents d LEFT JOIN scored s USING (doc_id)
-    """,
+    FROM documents d LEFT JOIN scored s USING (doc_id){d_where}
+    """
+
+
+@register(
+    "q_lm_score",
+    oracle=_sql_familiarity(
+        f"doc_id IN (SELECT doc_id FROM documents WHERE {_BUCKET_SQL} < 30)"
+    ),
     doc="CCNet-style LM familiarity: bigram model trained on a "
     "deterministic 30%-hash slice, every doc scored by how many of its "
     "bigrams the model has seen. Integer-exact (one final IEEE division) "
@@ -71,40 +80,7 @@ def q_lm_score(spark, sf_dir):
 
 @register(
     "q_lm_from_state",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM toks
-    ),
-    pairs AS (
-        SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2 FROM idx
-    ),
-    model AS (
-        SELECT w1, w2, COUNT(*) AS c12
-        FROM pairs WHERE doc_id % 3 IN (0, 1)
-        GROUP BY w1, w2
-    ),
-    scored AS (
-        SELECT p.doc_id,
-               COUNT(*) AS n_bigrams,
-               COUNT(m.c12) AS known_bigrams,
-               CAST(SUM(COALESCE(m.c12, 0)) AS BIGINT) AS model_hits
-        FROM pairs p LEFT JOIN model m USING (w1, w2)
-        WHERE p.doc_id % 3 = 2
-        GROUP BY p.doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(s.n_bigrams, 0) AS n_bigrams,
-           COALESCE(s.known_bigrams, 0) AS known_bigrams,
-           COALESCE(s.model_hits, 0) AS model_hits,
-           CASE WHEN s.n_bigrams > 0
-                THEN CAST(s.known_bigrams AS DOUBLE) / s.n_bigrams
-           END AS familiarity
-    FROM documents d LEFT JOIN scored s USING (doc_id)
-    WHERE d.doc_id % 3 = 2
-    """,
+    oracle=_sql_familiarity("doc_id % 3 IN (0, 1)", "doc_id % 3 = 2"),
     doc="score-before-ingest LM familiarity from ACCRETED state: two "
     "time-sliced batches fold bigram counts into the manifest/epoch/lease "
     "rollup state (count is mergeable, so 2 merges == one-shot model over "

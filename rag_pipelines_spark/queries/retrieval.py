@@ -540,15 +540,19 @@ def q_hard_negatives(spark, sf_dir):
     return pos.unionByName(neg)
 
 
-@register(
-    "q_maxsim_topk",
-    oracle="""
+def _sql_maxsim_topk(corpus_pred: str = "") -> str:
+    """maxsim_scores + top-5 in DuckDB for queries vec_id < 8 against the
+    corpus vectors `corpus_pred` (a predicate on an unqualified vec_id)
+    keeps, every vector when empty."""
+    tok_where = f" WHERE vec_id < 8 OR {corpus_pred}" if corpus_pred else ""
+    doc_and = f" AND c.{corpus_pred}" if corpus_pred else ""
+    return f"""
     WITH toks AS (
         SELECT vec_id, CAST((s - 1) // 8 AS INT) AS tok,
                (s - 1) % 8 AS pos, x
         FROM (SELECT vec_id, unnest(embedding) AS x,
                      generate_subscripts(embedding, 1) AS s
-              FROM embeddings)
+              FROM embeddings){tok_where}
     ),
     tnorm AS (
         SELECT vec_id, tok,
@@ -562,7 +566,7 @@ def q_hard_negatives(spark, sf_dir):
                CAST(SUM(CAST(CAST(q.x AS DOUBLE) * CAST(c.x AS DOUBLE)
                              AS DECIMAL(30,15))) AS DOUBLE) AS dot
         FROM toks q JOIN toks c ON q.pos = c.pos
-        WHERE q.vec_id < 8 AND q.vec_id <> c.vec_id
+        WHERE q.vec_id < 8{doc_and} AND q.vec_id <> c.vec_id
         GROUP BY 1, 2, 3, 4
     ),
     tcos AS (
@@ -588,7 +592,12 @@ def q_hard_negatives(spark, sf_dir):
         FROM scored
     )
     SELECT query_id, doc_id, maxsim, rk FROM ranked WHERE rk <= 5
-    """,
+    """
+
+
+@register(
+    "q_maxsim_topk",
+    oracle=_sql_maxsim_topk(),
     doc="late-interaction (ColBERT MaxSim) top-k: each 64-dim embedding "
     "is split into 8 token sub-vectors; score(q,d) = Σ over query "
     "tokens of max over doc tokens of per-token cosine (Khattab & "
@@ -663,54 +672,7 @@ def q_maxsim_pruned(spark, sf_dir):
 
 @register(
     "q_maxsim_topk_small",
-    oracle="""
-    WITH toks AS (
-        SELECT vec_id, CAST((s - 1) // 8 AS INT) AS tok,
-               (s - 1) % 8 AS pos, x
-        FROM (SELECT vec_id, unnest(embedding) AS x,
-                     generate_subscripts(embedding, 1) AS s
-              FROM embeddings)
-        WHERE vec_id < 8 OR vec_id % 10 = 0
-    ),
-    tnorm AS (
-        SELECT vec_id, tok,
-               CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                             AS DECIMAL(30,15))) AS DOUBLE) AS n2
-        FROM toks GROUP BY vec_id, tok
-    ),
-    tdot AS (
-        SELECT q.vec_id AS query_id, q.tok AS q_tok,
-               c.vec_id AS doc_id, c.tok AS d_tok,
-               CAST(SUM(CAST(CAST(q.x AS DOUBLE) * CAST(c.x AS DOUBLE)
-                             AS DECIMAL(30,15))) AS DOUBLE) AS dot
-        FROM toks q JOIN toks c ON q.pos = c.pos
-        WHERE q.vec_id < 8 AND c.vec_id % 10 = 0 AND q.vec_id <> c.vec_id
-        GROUP BY 1, 2, 3, 4
-    ),
-    tcos AS (
-        SELECT d.query_id, d.doc_id, d.q_tok,
-               MAX(CAST(FLOOR(d.dot / (sqrt(qn.n2) * sqrt(cn.n2)) * 1e9
-                              + 0.5) AS BIGINT)) AS best_nanos
-        FROM tdot d
-        JOIN tnorm qn ON qn.vec_id = d.query_id AND qn.tok = d.q_tok
-                     AND qn.n2 > 0
-        JOIN tnorm cn ON cn.vec_id = d.doc_id AND cn.tok = d.d_tok
-                     AND cn.n2 > 0
-        GROUP BY 1, 2, 3
-    ),
-    scored AS (
-        SELECT query_id, doc_id,
-               CAST(SUM(best_nanos) AS DOUBLE) / 1e9 AS maxsim
-        FROM tcos GROUP BY 1, 2
-    ),
-    ranked AS (
-        SELECT query_id, doc_id, maxsim,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY maxsim DESC, doc_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, doc_id, maxsim, rk FROM ranked WHERE rk <= 5
-    """,
+    oracle=_sql_maxsim_topk("vec_id % 10 = 0"),
     doc="bounded big-SF twin of q_maxsim_topk (the "
     "q_pretraining_prep_checksum_small pattern): identical dataflow and "
     "nano-quantized arithmetic, corpus deterministically narrowed to "

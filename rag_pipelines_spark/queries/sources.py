@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
 from rag_pipelines_spark.queries._util import dsum, o_dsum, t
+from rag_pipelines_spark.session import SCRATCH_ROOT
 
 _FIXTURE_BIN = os.path.join(os.path.dirname(__file__), "../../tests/fixtures/bin")
 _FIXTURE_PNG = os.path.join(os.path.dirname(__file__), "../../tests/fixtures/png")
@@ -29,7 +30,7 @@ def _scratch(tag: str, sf_dir: str) -> str:
     directories across driver runs.
     """
     sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join("/root/repo/.scratch", f"{tag}-{sf_tag}")
+    return os.path.join(SCRATCH_ROOT, f"{tag}-{sf_tag}")
 
 
 @register(

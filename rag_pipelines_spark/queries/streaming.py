@@ -9,9 +9,14 @@ its tests, plus the rows-only `q_stream_dedup` below.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
+from rag_pipelines_spark.session import SCRATCH_ROOT
 from rag_pipelines_spark.queries._util import (
     Part,
     dsum,
@@ -142,83 +147,11 @@ register_checksum(
 )
 
 
-@register(
-    "q_stream_session",
-    oracle=None,  # true Structured Streaming run (merging session state,
-    # watermark-gated append emission) — rows-only; emission equality vs
-    # the batch lag-gap-cumsum oracle is pinned e2e in
-    # tests/test_pipelines.py::TestStreamingSessionWindows
-    doc="round-6 streaming session windows served through the registry: "
-    "readStream over events, session_window(30 min gap) + 1 h watermark, "
-    "availableNow, parquet sink + read-back "
-    "(streaming/incremental.py::session_windowed_query). Only sessions the "
-    "final watermark closed are emitted — the append-mode contract",
-)
-def q_stream_session(spark, sf_dir):
-    import os
-    import shutil
-    import uuid
-
-    from rag_pipelines_spark.streaming.incremental import (
-        session_windowed_query,
-    )
-
-    # events.ts is parquet TIMESTAMP(NANOS) — same nanosAsLong + integer
-    # div conversion as io.table, applied stream-side
+def _events_stream(spark, sf_dir):
+    """readStream over the events table with io.table's ts normalization
+    (TIMESTAMP(NANOS) parquet surfaces as bigint nanos under nanosAsLong
+    on some Spark/parquet combos, as TimestampNTZ on others)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    table_path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(table_path).schema
-    if os.path.isdir(table_path):
-        stream = spark.readStream.schema(raw_schema).parquet(table_path)
-    else:
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    # mirror io.table's conditional: some Spark/parquet combinations
-    # surface TIMESTAMP(NANOS) as TimestampNTZ natively, others (with
-    # nanosAsLong) as bigint nanoseconds
-    ts = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if dict(stream.dtypes).get("ts") == "bigint"
-        # watermarks demand TIMESTAMP (LTZ); the session tz is pinned
-        # UTC (io.table), so the NTZ -> LTZ cast is a no-op wall-clock
-        else F.col("ts").cast("timestamp")
-    )
-    ev = stream.select("user_id", ts.alias("ts"))
-    name = f"stream_session_{uuid.uuid4().hex[:8]}"
-    ckpt = f"/root/repo/.scratch/ckpt-{name}"
-    out = f"/root/repo/.scratch/out-{name}"
-    os.makedirs(ckpt, exist_ok=True)
-    try:
-        q = session_windowed_query(
-            ev, ckpt, gap="30 minutes", watermark="1 hour",
-            sink_path=out, queryName=name,
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    result = spark.read.parquet(out).localCheckpoint(eager=True)
-    shutil.rmtree(out, ignore_errors=True)
-    return result
-
-
-@register(
-    "q_stream_dedup",
-    oracle=None,  # true Structured Streaming run — rows-only
-    doc="T2 incremental dedup: readStream over the events parquet, "
-    "dropDuplicates on a content key, availableNow trigger, parquet sink + "
-    "read-back (no driver-side memory sink — results stay executor-written "
-    "files, matching the repo's no-driver-data posture). "
-    "ref: fda_watcher.py:373-416 (delta modes); checkpoint replaces Excel",
-)
-def q_stream_dedup(spark, sf_dir):
-    import os
-    import shutil
-    import uuid
-
-    # stream the same parquet through a file source with the on-disk schema
     table_path = os.path.join(sf_dir, "events.parquet")
     raw_schema = spark.read.parquet(table_path).schema
     if os.path.isdir(table_path):
@@ -234,33 +167,93 @@ def q_stream_dedup(spark, sf_dir):
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    # deterministic projection: the distinct key set (first-seen row is
-    # arbitrary under parallel read, so don't carry non-key columns)
-    deduped = stream.select("user_id", "event_type").dropDuplicates(
-        ["user_id", "event_type"]
+    ts = (
+        F.timestamp_micros(F.expr("ts div 1000"))
+        if dict(stream.dtypes).get("ts") == "bigint"
+        # watermarks demand TIMESTAMP (LTZ); the session tz is pinned
+        # UTC (io.table), so the NTZ -> LTZ cast is a no-op wall-clock
+        else F.col("ts").cast("timestamp")
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = f"/root/repo/.scratch/ckpt-{name}"
-    out = f"/root/repo/.scratch/out-{name}"
-    os.makedirs(ckpt, exist_ok=True)
+    return stream.withColumn("ts", ts)
+
+
+def _parquet_sink(df):
+    """`start` for _run_available_now: append `df` to the parquet sink."""
+    return lambda ckpt, out, name: (
+        df.writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _run_available_now(spark, tag, start):
+    """Run one availableNow streaming query, `start(ckpt, out, name)`,
+    into a parquet sink and read the sink back. localCheckpoint pins the
+    result in executor memory (the batch stays distributed, never
+    driver-side), so both scratch dirs are removed — on failure too."""
+    name = f"{tag}_{uuid.uuid4().hex[:8]}"
+    ckpt = os.path.join(SCRATCH_ROOT, f"ckpt-{name}")
+    out = os.path.join(SCRATCH_ROOT, f"out-{name}")
+    # a stale checkpoint would make availableNow read nothing
+    shutil.rmtree(ckpt, ignore_errors=True)
+    os.makedirs(ckpt)
     try:
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        start(ckpt, out, name).awaitTermination()
+        return spark.read.parquet(out).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    # read-back is a plain parquet scan; localCheckpoint pins the result in
-    # executor memory so the scratch files can be GC'd by the caller — the
-    # batch stays distributed, never driver-side
-    result = spark.read.parquet(out).localCheckpoint(eager=True)
-    shutil.rmtree(out, ignore_errors=True)
-    return result
+        shutil.rmtree(out, ignore_errors=True)
+
+
+@register(
+    "q_stream_session",
+    oracle=None,  # true Structured Streaming run (merging session state,
+    # watermark-gated append emission) — rows-only; emission equality vs
+    # the batch lag-gap-cumsum oracle is pinned e2e in
+    # tests/test_pipelines.py::TestStreamingSessionWindows
+    doc="round-6 streaming session windows served through the registry: "
+    "readStream over events, session_window(30 min gap) + 1 h watermark, "
+    "availableNow, parquet sink + read-back "
+    "(streaming/incremental.py::session_windowed_query). Only sessions the "
+    "final watermark closed are emitted — the append-mode contract",
+)
+def q_stream_session(spark, sf_dir):
+    from rag_pipelines_spark.streaming.incremental import (
+        session_windowed_query,
+    )
+
+    ev = _events_stream(spark, sf_dir).select("user_id", "ts")
+    return _run_available_now(
+        spark,
+        "stream_session",
+        lambda ckpt, out, name: session_windowed_query(
+            ev, ckpt, gap="30 minutes", watermark="1 hour",
+            sink_path=out, queryName=name,
+        ),
+    )
+
+
+@register(
+    "q_stream_dedup",
+    oracle=None,  # true Structured Streaming run — rows-only
+    doc="T2 incremental dedup: readStream over the events parquet, "
+    "dropDuplicates on a content key, availableNow trigger, parquet sink + "
+    "read-back (no driver-side memory sink — results stay executor-written "
+    "files, matching the repo's no-driver-data posture). "
+    "ref: fda_watcher.py:373-416 (delta modes); checkpoint replaces Excel",
+)
+def q_stream_dedup(spark, sf_dir):
+    # deterministic projection: the distinct key set (first-seen row is
+    # arbitrary under parallel read, so don't carry non-key columns)
+    deduped = (
+        _events_stream(spark, sf_dir)
+        .select("user_id", "event_type")
+        .dropDuplicates(["user_id", "event_type"])
+    )
+    return _run_available_now(spark, "stream_dedup", _parquet_sink(deduped))
 
 
 @register(
@@ -314,31 +307,6 @@ register_checksum(
 )
 
 
-def _events_stream(spark, sf_dir):
-    """readStream over the events table with io.table's ts normalization
-    (TIMESTAMP(NANOS) parquet surfaces as bigint nanos under nanosAsLong
-    on some Spark/parquet combos, as TimestampNTZ on others)."""
-    import os
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    table_path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(table_path).schema
-    if os.path.isdir(table_path):
-        stream = spark.readStream.schema(raw_schema).parquet(table_path)
-    else:
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    ts = (
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if dict(stream.dtypes).get("ts") == "bigint"
-        else F.col("ts").cast("timestamp")
-    )
-    return stream.withColumn("ts", ts)
-
-
 @register(
     "q_stream_join",
     oracle="""
@@ -357,10 +325,6 @@ def _events_stream(spark, sf_dir):
     "State stays O(key-rate x interval) per the both-side watermarks",
 )
 def q_stream_join(spark, sf_dir):
-    import os
-    import shutil
-    import uuid
-
     from rag_pipelines_spark.streaming.joins import stream_interval_join
 
     views = (
@@ -386,22 +350,4 @@ def q_stream_join(spark, sf_dir):
         max_delay="4 hours",
         watermark="4 hours",
     ).select("user_id", "view_ts", "buy_ts", "buy_value")
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    ckpt = f"/root/repo/.scratch/ckpt-{name}"
-    out = f"/root/repo/.scratch/out-{name}"
-    os.makedirs(ckpt, exist_ok=True)
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    result = spark.read.parquet(out).localCheckpoint(eager=True)
-    shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_available_now(spark, "stream_join", _parquet_sink(joined))

@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
 from rag_pipelines_spark.queries._util import Key, Part, register_checksum, t
+from rag_pipelines_spark.queries.extensions import (
+    _sql_ivf_topk,
+    _sql_substring_spans,
+)
 
 # ---------------------------------------------------------------------------
 # SCD2 — type-2 slowly-changing dimension from a change/event stream
@@ -532,18 +536,14 @@ def q_distinct_sketch_serve(spark, sf_dir):
 # the identical double before the single deterministic division.
 _KMV_NUM = "(255.0 * 1152921504606846976.0)"
 
-_KMV_HASHES = """
+# One-shot per-flag KMV estimate (k=256) of distinct order keys.
+_KMV_DISTINCT_ORACLE = f"""
+    WITH h AS (
         SELECT DISTINCT l_returnflag,
                CAST(concat('0x', substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15))
                     AS BIGINT) AS h
         FROM lineitem WHERE l_orderkey IS NOT NULL
-"""
-
-
-@register(
-    "q_kmv_distinct",
-    oracle=f"""
-    WITH h AS ({_KMV_HASHES}),
+    ),
     rk AS (
         SELECT l_returnflag, h,
                row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rk
@@ -557,7 +557,12 @@ _KMV_HASHES = """
            CASE WHEN nk < 256 THEN CAST(nk AS DOUBLE)
                 ELSE {_KMV_NUM} / CAST(hk AS DOUBLE) END AS est_distinct
     FROM agg
-    """,
+    """
+
+
+@register(
+    "q_kmv_distinct",
+    oracle=_KMV_DISTINCT_ORACLE,
     doc="KMV (k-minimum-values) distinct-count sketch, k=256: per return "
     "flag, the estimated distinct order keys (~11k true) from only the "
     "256 smallest md5-derived hashes (operators/kmv.py). The "
@@ -633,22 +638,7 @@ def q_kmv_intersect(spark, sf_dir):
 
 @register(
     "q_kmv_serve",
-    oracle=f"""
-    WITH h AS ({_KMV_HASHES}),
-    rk AS (
-        SELECT l_returnflag, h,
-               row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rk
-        FROM h
-    ),
-    agg AS (
-        SELECT l_returnflag, MAX(h) AS hk, COUNT(*) AS nk
-        FROM rk WHERE rk <= 256 GROUP BY l_returnflag
-    )
-    SELECT l_returnflag,
-           CASE WHEN nk < 256 THEN CAST(nk AS DOUBLE)
-                ELSE {_KMV_NUM} / CAST(hk AS DOUBLE) END AS est_distinct
-    FROM agg
-    """,
+    oracle=_KMV_DISTINCT_ORACLE,
     doc="KMV state served END-TO-END: three l_orderkey%3 batches folded "
     "into <root>/kmv via merge_kmv (manifest/epoch/lease contract, "
     "operators/kmv.py), then the estimate served from state alone. The "
@@ -687,48 +677,7 @@ def q_kmv_serve(spark, sf_dir):
 
 @register(
     "q_substring_from_state",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS s FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, s, unnest(range(1, len(s) - 8 + 2)) AS i
-        FROM toks WHERE len(s) >= 8
-    ),
-    g AS (
-        SELECT doc_id, i - 1 AS pos,
-               md5(array_to_string(s[i:i+7], ' ')) AS gh
-        FROM idx
-    ),
-    dup AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
-    hits AS (
-        SELECT g.doc_id, g.pos AS st, g.pos + 7 AS en
-        FROM g JOIN dup USING (gh)
-        WHERE g.doc_id % 3 = 2
-    ),
-    flagged AS (
-        SELECT doc_id, st, en,
-               CASE WHEN MAX(en) OVER (
-                        PARTITION BY doc_id ORDER BY st
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                    ) IS NULL
-                    OR st > MAX(en) OVER (
-                        PARTITION BY doc_id ORDER BY st
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                    ) + 1
-               THEN 1 ELSE 0 END AS nw
-        FROM hits
-    ),
-    isl AS (
-        SELECT doc_id, st, en,
-               SUM(nw) OVER (PARTITION BY doc_id ORDER BY st
-                             ROWS UNBOUNDED PRECEDING) AS island
-        FROM flagged
-    )
-    SELECT doc_id, MIN(st) AS span_start, MAX(en) AS span_end,
-           MAX(en) - MIN(st) + 1 AS span_len
-    FROM isl GROUP BY doc_id, island
-    """,
+    oracle=_sql_substring_spans(" WHERE g.doc_id % 3 = 2"),
     doc="incremental substring dedup served from accreted gram-count "
     "state: three time-sliced batches fold per-gram occurrence counts "
     "into the SAME manifest/epoch/lease rollup state the warehouse "
@@ -791,48 +740,7 @@ def q_substring_from_state(spark, sf_dir):
 
 @register(
     "q_substring_compacted",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS s FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, s, unnest(range(1, len(s) - 8 + 2)) AS i
-        FROM toks WHERE len(s) >= 8
-    ),
-    g AS (
-        SELECT doc_id, i - 1 AS pos,
-               md5(array_to_string(s[i:i+7], ' ')) AS gh
-        FROM idx
-    ),
-    dup AS (SELECT gh FROM g GROUP BY gh HAVING COUNT(*) >= 2),
-    hits AS (
-        SELECT g.doc_id, g.pos AS st, g.pos + 7 AS en
-        FROM g JOIN dup USING (gh)
-        WHERE g.doc_id % 3 = 2
-    ),
-    flagged AS (
-        SELECT doc_id, st, en,
-               CASE WHEN MAX(en) OVER (
-                        PARTITION BY doc_id ORDER BY st
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                    ) IS NULL
-                    OR st > MAX(en) OVER (
-                        PARTITION BY doc_id ORDER BY st
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                    ) + 1
-               THEN 1 ELSE 0 END AS nw
-        FROM hits
-    ),
-    isl AS (
-        SELECT doc_id, st, en,
-               SUM(nw) OVER (PARTITION BY doc_id ORDER BY st
-                             ROWS UNBOUNDED PRECEDING) AS island
-        FROM flagged
-    )
-    SELECT doc_id, MIN(st) AS span_start, MAX(en) AS span_end,
-           MAX(en) - MIN(st) + 1 AS span_len
-    FROM isl GROUP BY doc_id, island
-    """,
+    oracle=_sql_substring_spans(" WHERE g.doc_id % 3 = 2"),
     doc="q_substring_from_state's serve run against a PRUNED state: after "
     "the 3-batch accretion, compact_rollup_state(min_count=2) drops every "
     "singleton gram (the dominant row class) and hash-clusters the "
@@ -886,91 +794,7 @@ def q_substring_compacted(spark, sf_dir):
 
 @register(
     "q_ann_from_state",
-    oracle="""
-    WITH norms AS (
-        SELECT vec_id, embedding,
-               CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-                             AS DECIMAL(30,15))) AS DOUBLE) AS n2
-        FROM (SELECT vec_id, embedding, unnest(embedding) AS x FROM embeddings)
-        GROUP BY vec_id, embedding
-    ),
-    ranked AS (
-        SELECT vec_id, embedding, n2,
-               row_number() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-               ) AS rh
-        FROM norms WHERE vec_id % 3 = 0
-    ),
-    seeds AS (
-        SELECT vec_id AS seed_id, embedding AS sv, n2 AS sn2
-        FROM ranked WHERE rh <= 32
-    ),
-    cp AS (
-        SELECT n.vec_id, n.embedding AS v, n.n2, s.seed_id, s.sv, s.sn2
-        FROM norms n, seeds s
-    ),
-    cdots AS (
-        SELECT vec_id, seed_id, n2, sn2,
-               CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)
-                             AS DECIMAL(30,15))) AS DOUBLE) AS dot
-        FROM (SELECT vec_id, seed_id, n2, sn2,
-                     unnest(v) AS x, unnest(sv) AS y FROM cp)
-        GROUP BY vec_id, seed_id, n2, sn2
-    ),
-    cassign AS (
-        SELECT vec_id, seed_id AS cell,
-               row_number() OVER (
-                   PARTITION BY vec_id
-                   ORDER BY round(dot / (sqrt(n2) * sqrt(sn2)), 9)
-                            DESC NULLS LAST,
-                            seed_id
-               ) AS rk
-        FROM cdots
-    ),
-    cells AS (
-        SELECT a.vec_id AS c_id, a.cell, n.embedding AS cv, n.n2 AS cn2
-        FROM cassign a JOIN norms n USING (vec_id) WHERE a.rk = 1
-    ),
-    qassign AS (
-        SELECT vec_id AS q_id, seed_id AS cell,
-               row_number() OVER (
-                   PARTITION BY vec_id
-                   ORDER BY round(dot / (sqrt(n2) * sqrt(sn2)), 9)
-                            DESC NULLS LAST,
-                            seed_id
-               ) AS rk
-        FROM cdots WHERE vec_id < 10
-    ),
-    probes AS (
-        SELECT p.q_id, p.cell, n.embedding AS qv, n.n2 AS qn2
-        FROM qassign p JOIN norms n ON n.vec_id = p.q_id
-        WHERE p.rk <= 2
-    ),
-    cand AS (
-        SELECT DISTINCT p.q_id, c.c_id, p.qv, p.qn2, c.cv, c.cn2
-        FROM probes p JOIN cells c USING (cell)
-        WHERE p.q_id <> c.c_id
-    ),
-    pdots AS (
-        SELECT q_id, c_id, qn2, cn2,
-               CAST(SUM(CAST(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)
-                             AS DECIMAL(30,15))) AS DOUBLE) AS dot
-        FROM (SELECT q_id, c_id, qn2, cn2,
-                     unnest(qv) AS x, unnest(cv) AS y FROM cand)
-        GROUP BY q_id, c_id, qn2, cn2
-    ),
-    scored AS (
-        SELECT q_id, c_id,
-               round(dot / (sqrt(qn2) * sqrt(cn2)), 9) AS cosine,
-               row_number() OVER (
-                   PARTITION BY q_id
-                   ORDER BY round(dot / (sqrt(qn2) * sqrt(cn2)), 9) DESC,
-                            c_id
-               ) AS rk
-        FROM pdots
-    )
-    SELECT q_id, c_id, cosine, rk FROM scored WHERE rk <= 5
-    """,
+    oracle=_sql_ivf_topk(" WHERE vec_id % 3 = 0"),
     doc="incremental ANN (IVF) index maintenance served end-to-end "
     "(operators/annstate.py): three embedding batches accrete into "
     "frozen-centroid postings state (seeds = hash-min vectors of the "

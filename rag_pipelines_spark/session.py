@@ -17,8 +17,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+# Scratch space for state, checkpoints and sinks: `.scratch` beside the
+# package, so each checkout writes into its own tree.
+SCRATCH_ROOT = os.path.abspath(
+    os.path.join(os.path.dirname(__file__), "..", ".scratch")
+)
+
+
 def _scratch_local_dir() -> str:
-    path = "/root/repo/.scratch/spark-local"
+    path = os.path.join(SCRATCH_ROOT, "spark-local")
     os.makedirs(path, exist_ok=True)
     return path
 
