@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # Cleaning rule data (ref: fda_rag_extraction/scripts/json_split_and_clean.py)
-# Rule lists compile to single alternation regexes via compile_rule_list
-# (defined below) so one JVM rlike replaces a per-line Python regex loop.
+# Each rule list is joined into one alternation regex below, so one JVM
+# rlike replaces a per-line Python regex loop.
 # ---------------------------------------------------------------------------
 
 # Cutoff lines mark the end of useful content.
@@ -110,23 +110,6 @@ def fingerprint_key(url: Column | str, title: Column | str, date: Column | str) 
 # ---------------------------------------------------------------------------
 
 
-def compile_rule_list(
-    patterns: list[str] | tuple[str, ...],
-    anchored: bool = False,
-    flags: str = "is",
-) -> str:
-    """Compile a rule list into ONE alternation regex (SURVEY §4.3c).
-
-    The reference loops 20 regexes per line in Python
-    (json_split_and_clean.py:203-207); compiling them into a single
-    `(?is)^(?:p1|p2|…)` lets one JVM `rlike` do the whole rule set.
-    `anchored=True` reproduces re.match (start-of-line) semantics.
-    """
-    body = "|".join(f"(?:{p})" for p in patterns)
-    prefix = f"(?{flags})" if flags else ""
-    return f"{prefix}^(?:{body})" if anchored else f"{prefix}{body}"
-
-
 def strip_boilerplate_lines(
     col: Column | str,
     boilerplate_re: str = BOILERPLATE_RE,
@@ -137,8 +120,8 @@ def strip_boilerplate_lines(
     Declared column semantics (hash-checked): split on newline, trim each
     line, drop empties, drop lines matching `boilerplate_re` at line start,
     drop standalone repeated headers, rejoin with single newlines.
-    ref: json_split_and_clean.py:61-100,199-217. Custom rule sets:
-    `strip_boilerplate_lines(c, compile_rule_list(my_rules, anchored=True))`.
+    ref: json_split_and_clean.py:61-100,199-217. A custom rule set is any
+    line-start-anchored regex, built the way BOILERPLATE_RE is.
 
     All work happens JVM-side via higher-order functions — no shuffle, no
     Python; scales linearly with text volume.

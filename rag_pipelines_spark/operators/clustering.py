@@ -91,20 +91,6 @@ def seed_centroids(
     return [(j, list(r["_v"])) for j, r in enumerate(rows)]
 
 
-def _dist_dec(vec_col: Column, centroid: list[float]) -> Column:
-    """Exact squared-L2 distance to a literal centroid: per-dim double
-    (x - c)^2 summed through DECIMAL(30,15) — order-independent."""
-    lit_arr = F.array(*[F.lit(float(c)) for c in centroid])
-    sq = F.zip_with(
-        vec_col,
-        lit_arr,
-        lambda x, y: (
-            (x.cast("double") - y) * (x.cast("double") - y)
-        ).cast(_DEC),
-    )
-    return F.aggregate(sq, F.lit(0).cast(_DEC), lambda a, s: (a + s).cast(_DEC))
-
-
 def assign_clusters(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],

@@ -2,22 +2,19 @@
 
 The reference repo prepares documents *for* embedding (clean → split →
 JSONL, README.md:1-14) but never embeds; this module closes that gap with
-two generators sharing one contract — add a unit-L2-norm vector per doc:
+one generator — a unit-L2-norm vector per doc:
 
-1. `hashed_bow_sparse` / `hashed_bow_embedding` — hashed bag-of-words,
-   pure JVM column expressions: token → md5-prefix bucket → per-bucket
-   counts → L2 normalize → (sparse rows | dense `array<double>`). The
-   bucket hash is `conv(substring(md5(tok),1,8),16,10) % dim`, chosen
-   because DuckDB computes the identical value (`('0x'||…)::BIGINT`), so
-   the sparse form is hash-checked by the oracle (`q_embed_generate`).
-2. `tfidf_embedding` — MLlib `HashingTF → IDF → Normalizer`, the classic
-   sparse TF-IDF pipeline (IDF needs one corpus-statistics fit pass).
+`hashed_bow_sparse` / `hashed_bow_embedding` — hashed bag-of-words, pure
+JVM column expressions: token → md5-prefix bucket → per-bucket counts →
+L2 normalize → (sparse rows | dense `array<double>`). The bucket hash is
+`conv(substring(md5(tok),1,8),16,10) % dim`, chosen because DuckDB
+computes the identical value (`('0x'||…)::BIGINT`), so the sparse form is
+hash-checked by the oracle (`q_embed_generate`).
 
-Scale: hashed BoW shuffles once on (id, bucket) with map-side partial
-counts; TF-IDF adds one document-frequency aggregate (the `fit`). Both
-are otherwise embarrassingly parallel; nothing touches the driver. The
-normalized weight `cnt / sqrt(sum(cnt²))` divides exact integers, so the
-doubles are bitwise deterministic across partitionings and engines.
+Scale: one shuffle on (id, bucket) with map-side partial counts; otherwise
+embarrassingly parallel, nothing touches the driver. The normalized weight
+`cnt / sqrt(sum(cnt²))` divides exact integers, so the doubles are bitwise
+deterministic across partitionings and engines.
 """
 
 from __future__ import annotations
@@ -27,9 +24,9 @@ from pyspark.sql import functions as F
 
 
 def tokens(text_col) -> "F.Column":
-    """ASCII-alnum tokenizer shared by both generators (lowercase, split on
-    non-[a-z0-9] runs, drop empties) — same semantics in Java regex and
-    DuckDB's RE2, and tokens are pure ASCII so md5 bytes agree too."""
+    """ASCII-alnum tokenizer (lowercase, split on non-[a-z0-9] runs, drop
+    empties) — same semantics in Java regex and DuckDB's RE2, and tokens
+    are pure ASCII so md5 bytes agree too."""
     arr = F.split(F.lower(text_col), "[^a-z0-9]+")
     return F.filter(arr, lambda x: x != F.lit(""))
 
@@ -74,18 +71,3 @@ def hashed_bow_embedding(
         .agg(F.map_from_entries(F.collect_list(F.struct("bucket", "weight"))).alias("_m"))
         .select(id_col, dense.alias("embedding"))
     )
-
-
-def tfidf_embedding(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", dim: int = 1024
-) -> DataFrame:
-    """MLlib TF-IDF: HashingTF → IDF(fit) → L2 Normalizer. Output column
-    `embedding` is an MLlib sparse vector (rows-only surface; the fit is
-    one distributed doc-frequency aggregate, transform is map-only)."""
-    from pyspark.ml.feature import IDF, HashingTF, Normalizer
-
-    with_toks = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-    tf = HashingTF(inputCol="_toks", outputCol="_tf", numFeatures=dim).transform(with_toks)
-    tfidf = IDF(inputCol="_tf", outputCol="_tfidf").fit(tf).transform(tf)
-    out = Normalizer(inputCol="_tfidf", outputCol="embedding", p=2.0).transform(tfidf)
-    return out.select(id_col, "embedding")

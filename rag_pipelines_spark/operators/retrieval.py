@@ -477,8 +477,7 @@ def maxsim_scores(q_tokens: DataFrame, d_tokens: DataFrame, *,
     |Q|·n_tokens·|corpus| pre-reduced rows, linear in the corpus with a
     tiny constant. No index, no all-pairs blowup beyond the declared
     |Q|×corpus scoring (brute-force tier; the pruned tier passes
-    `candidates` from `maxsim_candidates_lsh` — q_cosine_topk → LSH
-    precedent, delivered r10).
+    `candidates` from `maxsim_candidates_ivf`, as q_maxsim_pruned does).
 
     Per-token cosine is the exact-decimal dot / sqrt-norm product,
     quantized to integer "nano-units" via FLOOR(cos·1e9 + 0.5) — the
@@ -494,7 +493,7 @@ def maxsim_scores(q_tokens: DataFrame, d_tokens: DataFrame, *,
 
     `candidates` (query_id, doc_id) switches the brute-force |Q|×corpus
     scan to exact-on-candidates scoring — the pruned tier's re-rank
-    stage (see `maxsim_candidates_lsh`). The pair frame then comes from
+    stage (see `maxsim_candidates_ivf`). The pair frame then comes from
     equi-joins (query_id against the broadcast query batch, doc_id
     against the corpus token frame), so cost is O(|candidates|·n_tok²)
     regardless of corpus size, and any (query, doc) scored by both
@@ -587,70 +586,6 @@ def maxsim_scores(q_tokens: DataFrame, d_tokens: DataFrame, *,
     )
     return per_qtok.groupBy("query_id", "doc_id").agg(
         (F.sum("best_nanos").cast("double") / F.lit(1e9)).alias("maxsim")
-    )
-
-
-def maxsim_candidates_lsh(q_tokens: DataFrame, d_tokens: DataFrame, *,
-                          token_dim: int = 8, bits: int = 16,
-                          tables: int = 4, min_matches: int = 2,
-                          seed: int = 42,
-                          exclude_self: bool = False) -> DataFrame:
-    """Candidate (query_id, doc_id) pairs for the pruned MaxSim tier:
-    a doc is a candidate for a query iff at least `min_matches` DISTINCT
-    query tokens have a sub-vector sharing a sign-sketch bucket with one
-    of the doc's tokens in some table — the ColBERT deployment recipe
-    (Khattab & Zaharia 2020 §3.6: per-query-token ANN over the corpus
-    token index, docs reached by several query tokens rank first), with
-    the same LSH machinery the cosine family uses
-    (operators/similarity.py::_hyperplanes/_buckets_udf, planes over
-    token_dim dims instead of the full embedding).
-
-    Scale posture: the corpus token frame is bucketed by ONE Arrow
-    matmul per batch and raw matches come from an equi-join on
-    (table, bucket) against the broadcast query-token buckets
-    (|Q|·n_tok·tables rows) — shuffle keyed by bucket, volume
-    O(matching tokens), never |Q|×corpus. The per-(query, doc)
-    distinct-q_tok count is a map-side-combinable hash agg shuffling
-    one row per surviving pair, before the exact re-rank pays n_tok²
-    cosines on it.
-
-    Recall tuning: more tables = more OR-chances per token (recall up);
-    more bits = finer buckets (candidates down); higher `min_matches` =
-    stronger multi-token evidence required (candidates down sharply —
-    a true neighbor matches on several tokens, a random bucket-mate
-    rarely on more than one). On the hash-uniform driver fixture —
-    the documented ANN worst case (SCALE.md "ANN recall ladder":
-    nearest neighbors barely closer than the bulk) — recall tracks the
-    candidate fraction for ANY index; the clustered regime where
-    pruning earns its keep is pinned in tests/test_retrieval.py and
-    measured by tools/ann_recall_ladder.py --maxsim. A zero-norm token
-    hashes like any other vector here, but scoring filters it
-    (maxsim_scores n2 > 0 guard), so a candidate produced only by a
-    zero-norm token match scores over its remaining tokens.
-    """
-    from rag_pipelines_spark.operators.similarity import (
-        _buckets_udf,
-        _hyperplanes,
-    )
-
-    bucketer = _buckets_udf(_hyperplanes(token_dim, bits, tables, seed))
-    qb = q_tokens.select(
-        F.col("id").alias("query_id"),
-        F.col("tok").alias("q_tok"),
-        F.posexplode(bucketer(F.col("tvec"))).alias("tbl", "bucket"),
-    )
-    db = d_tokens.select(
-        F.col("id").alias("doc_id"),
-        F.posexplode(bucketer(F.col("tvec"))).alias("tbl", "bucket"),
-    )
-    cand = F.broadcast(qb).join(db, ["tbl", "bucket"])
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("doc_id"))
-    return (
-        cand.groupBy("query_id", "doc_id")
-        .agg(F.countDistinct("q_tok").alias("_m"))
-        .filter(F.col("_m") >= min_matches)
-        .select("query_id", "doc_id")
     )
 
 

@@ -1,20 +1,18 @@
-"""Text analytics operators (north star §2.11): tokenization, language ID,
-quality scoring, rolling-hash fingerprints, chunking helpers.
+"""Text analytics operators (north star §2.11): token counts, quality
+ratios and the fixed-size chunker.
 
-All pure JVM column expressions — per-row, no shuffle, safe at any scale.
-The query-registry entries (queries/extensions.py) exercise the same logic
-against the DuckDB oracle; these builders are the reusable surface.
+All per-row JVM expressions — no shuffle, safe at any scale.
+The ratios feed the pretraining quality filter (plans/pretraining.py);
+`char_chunks` is the body of the oracle-checked `q_chunking`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# whitespace tokens (reference-style split) and a BPE-ish lexer: words,
-# numbers, or single punctuation marks — the shape subword tokenizers see
+# whitespace tokens (reference-style split)
 WORD_SPLIT_RE = r"\s+"
-BPE_ISH_RE = r"[A-Za-z]+|\d+|[^\sA-Za-z\d]"
 
 
 def _c(col: Column | str) -> Column:
@@ -24,29 +22,6 @@ def _c(col: Column | str) -> Column:
 def whitespace_token_count(col: Column | str) -> Column:
     """Token count under whitespace splitting."""
     return F.size(F.split(F.trim(_c(col)), WORD_SPLIT_RE))
-
-
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Token count under a BPE-ish lexer (words / numbers / punct marks) —
-    a cheap, deterministic proxy for subword token budgeting."""
-    return F.size(F.regexp_extract_all(_c(col), F.lit(BPE_ISH_RE), F.lit(0)))
-
-
-def rolling_fingerprint(col: Column | str, base: int = 131, mod: int = (1 << 31) - 1) -> Column:
-    """Order-sensitive polynomial rolling hash over tokens.
-
-    fp = fold(tokens, 0, (acc, t) -> (acc*base + h(t)) % mod) with
-    h = xxhash64 folded into [0, mod). Stays within long range
-    (acc < 2^31, base=131 -> products < 2^39), so no ANSI overflow.
-    Distinguishes token *order* (the bag fingerprint in q_doc_fingerprint
-    deliberately does not).
-    """
-    toks = F.split(F.lower(F.trim(_c(col))), WORD_SPLIT_RE)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, tok: (acc * base + F.pmod(F.xxhash64(tok), F.lit(mod))) % mod,
-    )
 
 
 def punct_ratio(col: Column | str) -> Column:
@@ -65,53 +40,24 @@ def stopword_ratio(col: Column | str, stopwords: tuple[str, ...]) -> Column:
     ) / F.size(toks)
 
 
-def char_chunks(col: Column | str, size: int = 100, stride: int = 80):
-    """(chunk_idx, chunk) pairs as an array column; explode for rows.
-    Overlap = size - stride. Empty (non-null) text yields an empty array —
-    without the guard, n = floor(-1/stride) = -1 and sequence(0, -1)
-    produces the DESCENDING sequence [0, -1], i.e. two bogus chunks."""
-    c = _c(col)
-    n = F.floor((F.length(c) - 1) / stride).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n),
-        lambda i: F.struct(
-            i.alias("chunk_idx"),
-            F.substring(c, F.lit(1) + i * stride, F.lit(size)).alias("chunk"),
-        ),
+def char_chunks(df: DataFrame, id_col: str, text_col: str, size: int = 100,
+                stride: int = 80) -> DataFrame:
+    """Fixed-size overlapping chunks as rows (id, chunk_idx bigint, chunk).
+
+    Overlap = size - stride. Chunk i is substring(text, 1 + i*stride,
+    size) for i in 0..floor((length - 1) / stride). NULL text explodes
+    no rows; empty text gives floor(-1/stride) = -1, so sequence(0, -1)
+    is the descending [0, -1] — both of its substrings are '', and the
+    empty-chunk filter drops them."""
+    n_chunks = F.floor((F.length(text_col) - 1) / stride).cast("int")
+    exploded = df.select(
+        id_col,
+        text_col,
+        F.explode(F.sequence(F.lit(0), n_chunks)).alias("i"),
     )
-    arr_type = "array<struct<chunk_idx:int,chunk:string>>"
-    return (
-        F.when(c.isNull(), F.lit(None).cast(arr_type))
-        .when(F.length(c) > 0, chunks)
-        .otherwise(F.array().cast(arr_type))
+    out = exploded.select(
+        id_col,
+        F.col("i").cast("bigint").alias("chunk_idx"),
+        F.expr(f"substring(`{text_col}`, 1 + i * {stride}, {size})").alias("chunk"),
     )
-
-
-def grouped_length_profile(df, group_col: str, text_col: str):
-    """Per-group length profile via applyInPandas (SURVEY §2.10b grouped-map).
-
-    Demonstrates the grouped-map UDF surface: each group's rows arrive as
-    one pandas DataFrame (use when the per-group algorithm needs the whole
-    group in memory — order statistics, per-group model fits). For plain
-    aggregates prefer groupBy().agg() (no Python). Output: one row per
-    group with min/median/max text lengths.
-    """
-    import pandas as pd
-
-    def profile(pdf: pd.DataFrame) -> pd.DataFrame:
-        lens = pdf[text_col].str.len()
-        return pd.DataFrame(
-            {
-                group_col: [pdf[group_col].iloc[0]],
-                "n_docs": [len(pdf)],
-                "min_len": [int(lens.min())],
-                "median_len": [float(lens.median())],
-                "max_len": [int(lens.max())],
-            }
-        )
-
-    schema = (
-        f"{group_col} string, n_docs long, min_len long, "
-        "median_len double, max_len long"
-    )
-    return df.groupBy(group_col).applyInPandas(profile, schema=schema)
+    return out.filter(F.col("chunk") != "")

@@ -56,7 +56,6 @@ __all__ = [
     "dec_to_dbl_sql",
     "flat_fold_dec_sql",
     "flat_dot_dec_sql",
-    "flat_sqdist_dec_sql",
     "hof_fold_dec_sql",
     "hof_dot_dec_sql",
     "hof_sqdist_dec_sql",
@@ -161,9 +160,10 @@ def hof_dot_dec_sql(a_arr_sql: str, b_arr_sql: str,
 
 
 def hof_sqdist_dec_sql(vec_arr_sql: str, lit_vals: list[float]) -> str:
-    """SQL twin of operators/clustering._dist_dec: per-dim double
-    (CAST(x AS DOUBLE) - c)^2 cast to DECIMAL(30,15), exact fold, with
-    the centroid embedded as a literal double array."""
+    """Exact squared-L2 distance to a literal centroid (the k-means
+    assignment distance): per-dim double (CAST(x AS DOUBLE) - c)^2 cast
+    to DECIMAL(30,15), exact fold, with the centroid embedded as a
+    literal double array."""
     arr = dbl_array_sql(lit_vals)
     body = (
         f"CAST((CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)"
@@ -171,14 +171,4 @@ def hof_sqdist_dec_sql(vec_arr_sql: str, lit_vals: list[float]) -> str:
     )
     return hof_fold_dec_sql(
         f"zip_with({vec_arr_sql}, {arr}, (x, y) -> {body})"
-    )
-
-
-def flat_sqdist_dec_sql(a_elems: list[str], b_elems: list[str]) -> str:
-    """Exact decimal squared L2 distance — the flat twin of
-    operators/clustering._dist_dec (per-dim double (x-c)^2 cast to
-    DECIMAL(30,15), exact fold)."""
-    assert len(a_elems) == len(b_elems)
-    return flat_fold_dec_sql(
-        [f"(({x}) - ({y})) * (({x}) - ({y}))" for x, y in zip(a_elems, b_elems)]
     )

@@ -53,7 +53,7 @@ _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "it")
     GROUP BY lang
     """,
     doc="token counting per document, rolled up per language "
-    "(whitespace tokenizer; BPE-ish regex variant in operators/textstats.py)",
+    "(whitespace tokenizer; GPT-2-style subword count in q_bpe_token_count)",
 )
 def q_token_stats(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
@@ -286,9 +286,8 @@ def q_gopher_rules(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "q_chunking",
-    oracle="""
+# Size-100, stride-80 chunk rows (q_chunking, q_chunk_udtf).
+_SQL_CHUNKS = """
     WITH idx AS (
         SELECT doc_id, text,
                unnest(range(0, (length(text) - 1) // 80 + 1)) AS i
@@ -298,24 +297,19 @@ def q_gopher_rules(spark, sf_dir):
            substring(text, 1 + i * 80, 100) AS chunk
     FROM idx
     WHERE substring(text, 1 + i * 80, 100) <> ''
-    """,
+    """
+
+
+@register(
+    "q_chunking",
+    oracle=_SQL_CHUNKS,
     doc="fixed-size overlapping chunking (size=100, stride=80) via "
     "explode(sequence) — pure column math, no shuffle",
 )
 def q_chunking(spark, sf_dir):
-    d = t(spark, sf_dir, "documents")
-    n_chunks = F.floor((F.length("text") - 1) / 80).cast("int")
-    exploded = d.select(
-        "doc_id",
-        "text",
-        F.explode(F.sequence(F.lit(0), n_chunks)).alias("i"),
-    )
-    out = exploded.select(
-        "doc_id",
-        F.col("i").cast("bigint").alias("chunk_idx"),
-        F.expr("substring(text, 1 + i * 80, 100)").alias("chunk"),
-    )
-    return out.filter(F.col("chunk") != "")
+    from rag_pipelines_spark.operators.textstats import char_chunks
+
+    return char_chunks(t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -332,8 +326,8 @@ def q_chunking(spark, sf_dir):
     FROM documents
     """,
     doc="document fingerprint: md5 over the sorted distinct token bag "
-    "(order-insensitive content signature; rolling-hash variant in "
-    "operators/dedup.py)",
+    "(order-insensitive content signature; order-sensitive rolling-hash "
+    "variant in q_rolling_hash)",
 )
 def q_doc_fingerprint(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
@@ -775,9 +769,9 @@ def q_ann_ivf(spark, sf_dir):
     return cosine_topk_ivf(q, e, k=5, n_cells=16, nprobe=4)
 
 
-@register(
-    "q_dup_clusters",
-    oracle="""
+# Recursive reachability over consecutive same-lang doc pairs: the
+# connected components of q_dup_clusters and q_split_leakage_safe.
+_SQL_CC_REACH = """
     WITH RECURSIVE
     e0 AS (
         SELECT a.doc_id AS a_id, b.doc_id AS b_id
@@ -794,7 +788,12 @@ def q_ann_ivf(spark, sf_dir):
         UNION
         SELECT reach.node, edges.b_id AS r
         FROM reach JOIN edges ON edges.a_id = reach.r
-    )
+    )"""
+
+
+@register(
+    "q_dup_clusters",
+    oracle=f"""{_SQL_CC_REACH}
     SELECT node AS doc_id,
            MIN(r) AS cluster_id,
            node = MIN(r) AS is_representative
@@ -820,24 +819,7 @@ def q_dup_clusters(spark, sf_dir):
 
 @register(
     "q_split_leakage_safe",
-    oracle="""
-    WITH RECURSIVE
-    e0 AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM documents a JOIN documents b
-          ON b.doc_id = a.doc_id + 1 AND a.lang = b.lang
-    ),
-    edges AS (
-        SELECT a_id, b_id FROM e0
-        UNION
-        SELECT b_id, a_id FROM e0
-    ),
-    reach AS (
-        SELECT doc_id AS node, doc_id AS r FROM documents
-        UNION
-        SELECT reach.node, edges.b_id AS r
-        FROM reach JOIN edges ON edges.a_id = reach.r
-    ),
+    oracle=f"""{_SQL_CC_REACH},
     clusters AS (
         SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY node
     )
@@ -989,8 +971,8 @@ def q_ngram_diversity(spark, sf_dir):
     FROM counts
     """,
     doc="embedding generation: hashed bag-of-words, sparse L2-normalized "
-    "(token -> md5-prefix bucket -> count -> normalize; dense array + MLlib "
-    "TF-IDF variants in operators/embedding.py). Bitwise-deterministic "
+    "(token -> md5-prefix bucket -> count -> normalize; dense array "
+    "variant in operators/embedding.py). Bitwise-deterministic "
     "doubles: exact-int count / sqrt(exact-int sum of squares)",
 )
 def q_embed_generate(spark, sf_dir):
@@ -1144,17 +1126,7 @@ def q_stratified_sample(spark, sf_dir):
 
 @register(
     "q_chunk_udtf",
-    oracle="""
-    WITH idx AS (
-        SELECT doc_id, text,
-               unnest(range(0, (length(text) - 1) // 80 + 1)) AS i
-        FROM documents
-    )
-    SELECT doc_id, i AS chunk_idx,
-           substring(text, 1 + i * 80, 100) AS chunk
-    FROM idx
-    WHERE substring(text, 1 + i * 80, 100) <> ''
-    """,
+    oracle=_SQL_CHUNKS,
     doc="Python UDTF chunker (Spark 4 lateral table function, Arrow "
     "batched) — same oracle as q_chunking, proving the UDTF and the "
     "pure-column explode(sequence) plan are equivalent; the column "

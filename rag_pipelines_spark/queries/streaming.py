@@ -12,11 +12,13 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from functools import partial
 
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.registry import register
 from rag_pipelines_spark.session import SCRATCH_ROOT
+from rag_pipelines_spark.streaming.incremental import available_now_parquet
 from rag_pipelines_spark.queries._util import (
     Part,
     dsum,
@@ -177,18 +179,6 @@ def _events_stream(spark, sf_dir):
     return stream.withColumn("ts", ts)
 
 
-def _parquet_sink(df):
-    """`start` for _run_available_now: append `df` to the parquet sink."""
-    return lambda ckpt, out, name: (
-        df.writeStream.format("parquet")
-        .option("path", out)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def _run_available_now(spark, tag, start):
     """Run one availableNow streaming query, `start(ckpt, out, name)`,
     into a parquet sink and read the sink back. localCheckpoint pins the
@@ -253,7 +243,9 @@ def q_stream_dedup(spark, sf_dir):
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    return _run_available_now(spark, "stream_dedup", _parquet_sink(deduped))
+    return _run_available_now(
+        spark, "stream_dedup", partial(available_now_parquet, deduped)
+    )
 
 
 @register(
@@ -350,4 +342,6 @@ def q_stream_join(spark, sf_dir):
         max_delay="4 hours",
         watermark="4 hours",
     ).select("user_id", "view_ts", "buy_ts", "buy_value")
-    return _run_available_now(spark, "stream_join", _parquet_sink(joined))
+    return _run_available_now(
+        spark, "stream_join", partial(available_now_parquet, joined)
+    )

@@ -1,17 +1,23 @@
 """Incremental delta processing (T1/T2/T5) — Structured Streaming replaces
 the watcher's schedule-loop + master-Excel state.
 
-Two equivalent formulations (SURVEY §7 phase 5):
+Two delta paths (SURVEY §7 phase 5):
 
-(a) batch-incremental: `incremental_merge` — one availableNow-style run
-    that anti-joins arrivals against a parquet state table and appends the
-    delta (ref: fda_watcher.py:373-416 initial/delta modes; the Excel
-    becomes a parquet dir). Rerunnable: processing the same input twice
-    adds nothing (T5 resume, ref: pdf_marker_extraction.py:354-360).
+(a) streaming: `continuous_ingest_pipeline` — file source + foreachBatch;
+    the front door anti-joins arrivals against per-epoch seen-key dirs
+    that only a commit marker makes visible, then folds every state
+    family, exactly once across crashes and replays (ref:
+    fda_watcher.py:373-416 initial/delta modes; the Excel becomes
+    marker-committed parquet state; T5 resume = checkpoint replay).
 
-(b) streaming: `streaming_dedup_query` — file source + dropDuplicates
-    with state + checkpoint; `windowed_counts_query` adds watermarked
-    event-time aggregation (late data dropped past the watermark).
+(b) batch: `plans/pipelines.py::watcher_pipeline` — one run that
+    anti-joins the scraped rows against the master frame.
+
+State-store forms: `streaming_dedup_query` (dropDuplicates with state +
+checkpoint), `streaming_dedup_bounded_query` (keys expire past the
+watermark), and `windowed_counts_query` / `session_windowed_query`
+(watermarked event-time aggregation; late data dropped past the
+watermark).
 
 The scheduler's daily 09:00 trigger (scheduler.py:19,102-123) maps to
 `trigger(availableNow=True)` under cron, or processingTime for a resident
@@ -26,37 +32,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from rag_pipelines_spark.operators.statefs import backend_for
 
-
-def incremental_merge(
-    spark: SparkSession,
-    arrivals: DataFrame,
-    state_path: str,
-    key: str = "rag_id",
-) -> DataFrame:
-    """Anti-join arrivals vs persisted state; append the delta; return it.
-
-    State read is the plan's only barrier (SURVEY §3.1). Append-mode write
-    keeps history (new-first ordering is a read-side orderBy); the state
-    side of the anti-join broadcasts when small, sort-merge otherwise —
-    Catalyst/AQE decides.
-    """
-    fs = backend_for(state_path)
-    state_exists = fs.isdir(state_path) and any(
-        n.endswith(".parquet") for n in fs.listdir(state_path)
+def available_now_parquet(
+    df: DataFrame, checkpoint: str, sink_path: str, queryName: str
+) -> StreamingQuery:
+    """Start `df` as an append-mode availableNow query into a parquet
+    sink at `sink_path` (read it back after awaitTermination)."""
+    return (
+        df.writeStream.format("parquet")
+        .queryName(queryName)
+        .outputMode("append")
+        .option("path", sink_path)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if state_exists:
-        state_keys = spark.read.parquet(state_path).select(key)
-        delta = arrivals.join(state_keys, key, "left_anti")
-    else:  # initial mode, ref: fda_watcher.py:373
-        delta = arrivals
-    # materialize BEFORE the append: writing into state_path invalidates
-    # any cached plan that scans it, so a lazy delta would re-evaluate
-    # against the post-write state and come back empty
-    delta = delta.dropDuplicates([key]).localCheckpoint(eager=True)
-    delta.write.mode("append").parquet(state_path)
-    return delta
 
 
 def _file_stream(spark: SparkSession, source_dir: str, schema,
@@ -94,20 +84,13 @@ def streaming_dedup_query(
     key FOREVER — fine for availableNow batch-style runs under a bounded
     keyspace, but a resident query over an unbounded keyspace must bound
     state with `streaming_dedup_bounded_query` (keys expire past the
-    watermark) or use the anti-join-vs-parquet-state form
-    (incremental_stream_pipeline), whose state lives on disk instead of
+    watermark) or use the anti-join-vs-parquet-state front door of
+    `continuous_ingest_pipeline`, whose state lives on disk instead of
     in the state store.
     """
     stream = _file_stream(spark, source_dir, schema, glob)
-    return (
-        stream.dropDuplicates(key_cols)
-        .writeStream.format("parquet")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return available_now_parquet(
+        stream.dropDuplicates(key_cols), checkpoint, sink_path, queryName
     )
 
 
@@ -133,23 +116,20 @@ def streaming_dedup_bounded_query(
     all. Semantics differ from exact dedup by design: a duplicate
     arriving AFTER its twin expired past the watermark is re-admitted
     (the same contract as watermarked aggregation's late-data drop); use
-    the disk-state anti-join pipeline when re-admission is unacceptable.
+    the disk-state anti-join front door of `continuous_ingest_pipeline`
+    when re-admission is unacceptable.
 
     `event_time_col` must be a TimestampType column; `key_cols` should
     not include it (keys match on identity, the timestamp only drives
     expiry).
     """
     stream = _file_stream(spark, source_dir, schema, glob)
-    return (
+    return available_now_parquet(
         stream.withWatermark(event_time_col, watermark)
-        .dropDuplicatesWithinWatermark(key_cols)
-        .writeStream.format("parquet")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .dropDuplicatesWithinWatermark(key_cols),
+        checkpoint,
+        sink_path,
+        queryName,
     )
 
 
@@ -177,15 +157,14 @@ def windowed_counts_query(
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    writer = agg.writeStream.outputMode("append").option(
-        "checkpointLocation", checkpoint
-    ).trigger(availableNow=True)
-    if sink_path is None:
-        return writer.format("memory").queryName(queryName).start()
+    if sink_path is not None:
+        return available_now_parquet(agg, checkpoint, sink_path, queryName)
     return (
-        writer.format("parquet")
+        agg.writeStream.format("memory")
         .queryName(queryName)
-        .option("path", sink_path)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
         .start()
     )
 
@@ -229,46 +208,7 @@ def session_windowed_query(
             "n_events",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def incremental_stream_pipeline(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    state_path: str,
-    checkpoint: str,
-    key: str = "rag_id",
-    glob: str = "*.parquet",
-):
-    """T2(a): streaming source -> foreachBatch(anti-join vs parquet state).
-
-    Each micro-batch runs `incremental_merge`: only keys absent from state
-    are appended. Combining foreachBatch with the checkpoint gives
-    end-to-end effectively-once: replayed batches re-anti-join against
-    state and add nothing (idempotence is tested batch-side).
-    ref: fda_watcher.py:373-416 — this IS the watcher loop, with the Excel
-    replaced by parquet state and the scheduler replaced by the trigger.
-    """
-    stream = _file_stream(spark, source_dir, schema, glob)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        incremental_merge(batch_df.sparkSession, batch_df, state_path, key=key)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return available_now_parquet(agg, checkpoint, sink_path, queryName)
 
 
 def continuous_ingest_pipeline(

@@ -82,11 +82,9 @@ def test_format_authors_null_array(spark):
 def test_chunking_text_shorter_than_chunk(spark):
     from rag_pipelines_spark.operators.textstats import char_chunks
 
-    df = spark.createDataFrame([("tiny",)], ["text"]).select(
-        F.explode(char_chunks(F.col("text"), size=100, stride=80)).alias("c")
-    )
-    rows = df.collect()
-    assert len(rows) == 1 and rows[0]["c"]["chunk"] == "tiny"
+    df = spark.createDataFrame([(1, "tiny")], ["id", "text"])
+    rows = char_chunks(df, "id", "text", size=100, stride=80).collect()
+    assert len(rows) == 1 and rows[0]["chunk"] == "tiny"
 
 
 def test_split_on_expectations_routes_and_reasons(spark):

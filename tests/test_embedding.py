@@ -1,4 +1,4 @@
-"""Embedding generation (operators/embedding.py): hashed BoW + MLlib TF-IDF."""
+"""Embedding generation (operators/embedding.py): hashed BoW."""
 
 import math
 
@@ -7,7 +7,6 @@ import pytest
 from rag_pipelines_spark.operators.embedding import (
     hashed_bow_embedding,
     hashed_bow_sparse,
-    tfidf_embedding,
 )
 
 
@@ -58,14 +57,3 @@ def test_case_and_punctuation_insensitive_tokens(spark):
     w = {(r["doc_id"], r["bucket"]): r["weight"] for r in out}
     assert {k[1] for k in w if k[0] == 1} == {k[1] for k in w if k[0] == 2}
     assert all(v == 1.0 for v in w.values())  # one bucket per doc -> unit weight
-
-
-def test_tfidf_embedding_unit_norm(docs):
-    out = {r["doc_id"]: r["embedding"] for r in tfidf_embedding(docs, dim=64).collect()}
-    # docs with tokens get (near-)unit-norm vectors; rare-term docs score high
-    for doc_id in (1, 2, 4):
-        vec = out[doc_id]
-        assert vec.size == 64
-        norm = math.sqrt(sum(v * v for v in vec.toArray()))
-        # IDF can zero a vector only if every term appears in every doc
-        assert norm == pytest.approx(1.0, rel=1e-9) or norm == 0.0

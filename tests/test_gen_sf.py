@@ -4,6 +4,8 @@ exercise the very same query code paths), with deterministic content."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 
@@ -15,12 +17,13 @@ def spark():
 
 
 DRIVER_SF = "/root/testdata/sf0.01"
+TOOLS = str(Path(__file__).resolve().parent.parent / "tools")
 
 
 def test_generated_schemas_match_driver_fixtures(spark, tmp_path):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_sf
 
     out = str(tmp_path / "sfx")
@@ -59,7 +62,7 @@ def test_skewed_events_plant_heavy_hitter(spark):
     all rows, the rest stay ~uniform, and the schema is unchanged."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_sf
 
     n, users, frac = 20_000, 200, 0.25

@@ -3,8 +3,6 @@ pipeline graphs (SURVEY §5.3, FIXTURES.md §B)."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -144,27 +142,6 @@ class TestPdfChain:
         assert all(r["date"] == "2023" for r in out)
 
 
-class TestIncrementalMerge:
-    def test_merge_is_idempotent(self, spark, tmp_path):
-        from rag_pipelines_spark.streaming.incremental import incremental_merge
-
-        state = str(tmp_path / "state")
-        batch1 = spark.createDataFrame(
-            [("a", 1), ("b", 2)], ["rag_id", "v"]
-        )
-        d1 = incremental_merge(spark, batch1, state)
-        assert d1.count() == 2
-        # same batch again: nothing new
-        d2 = incremental_merge(spark, batch1, state)
-        assert d2.count() == 0
-        # one overlap, one new
-        batch2 = spark.createDataFrame([("b", 2), ("c", 3)], ["rag_id", "v"])
-        d3 = incremental_merge(spark, batch2, state)
-        assert [r["rag_id"] for r in d3.collect()] == ["c"]
-        assert spark.read.parquet(state).count() == 3
-        shutil.rmtree(state, ignore_errors=True)
-
-
 class TestStreamingQueries:
     def test_windowed_counts_with_watermark(self, spark, tmp_path):
         from rag_pipelines_spark.streaming.incremental import windowed_counts_query
@@ -193,19 +170,6 @@ class TestStreamingQueries:
 
 
 class TestObservedMetrics:
-    def test_metrics_computed_in_same_pass(self, spark, tmp_path):
-        from rag_pipelines_spark.operators.metrics import observed_scrape_metrics
-
-        df = spark.createDataFrame(
-            [("a", "fetched text"), ("b", ""), ("c", "more text")],
-            ["rag_id", "text"],
-        )
-        observed, obs = observed_scrape_metrics(df)
-        observed.write.mode("overwrite").parquet(str(tmp_path / "out"))
-        m = obs.get
-        assert m["n_total"] == 3 and m["n_ok"] == 2 and m["n_failed"] == 1
-        assert abs(m["success_rate_pct"] - 200 / 3) < 1e-9
-
     def test_per_record_json_roundtrip(self, spark, tmp_path):
         from rag_pipelines_spark.sources.jsonl import (
             read_jsonl_glob,
@@ -252,35 +216,6 @@ class TestStreamingPacing:
         assert len(progress) >= 2, "expected multiple micro-batches"
         rows = spark.read.parquet(sink).collect()
         assert sorted(r["rag_id"] for r in rows) == sorted(f"id{i}" for i in range(8))
-
-
-class TestForeachBatchPipeline:
-    def test_stream_to_state_effectively_once(self, spark, tmp_path):
-        """T2(a): streaming foreachBatch anti-join into parquet state —
-        duplicate keys across micro-batches reach state exactly once."""
-        from rag_pipelines_spark.streaming.incremental import (
-            incremental_stream_pipeline,
-        )
-
-        src = str(tmp_path / "src")
-        state = str(tmp_path / "state")
-        schema = "rag_id string, v int"
-        # 3 files -> with maxFilesPerTrigger=4 still one batch; write 6 for 2+
-        batches = [
-            [("a", 1)], [("b", 2)], [("a", 3)],
-            [("c", 4)], [("b", 5)], [("d", 6)],
-        ]
-        for rows in batches:
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-        q = incremental_stream_pipeline(
-            spark, src, schema, state, checkpoint=str(tmp_path / "ckpt")
-        )
-        q.awaitTermination()
-        final = spark.read.parquet(state)
-        ids = sorted(r["rag_id"] for r in final.collect())
-        assert ids == ["a", "b", "c", "d"], ids
 
 
 class TestRetryingTransport:

@@ -74,17 +74,19 @@ def test_topk_uses_take_ordered(spark):
 def test_partition_prune_uses_partition_filters(spark):
     """q_partition_prune's read side must prune directories at planning
     time (PartitionFilters on the hive-layout scan), not post-filter."""
+    import os
     import uuid
 
     from pyspark.sql import functions as F
 
     from rag_pipelines_spark.io import table
+    from rag_pipelines_spark.session import SCRATCH_ROOT
     from rag_pipelines_spark.sources.files import (
         read_partitioned_parquet,
         write_partitioned_parquet,
     )
 
-    path = f"/root/repo/.scratch/part-plan-{uuid.uuid4().hex[:8]}"
+    path = os.path.join(SCRATCH_ROOT, f"part-plan-{uuid.uuid4().hex[:8]}")
     src = table(spark, SF, "documents").select("doc_id", "source")
     write_partitioned_parquet(src, path, "source")
     df = read_partitioned_parquet(spark, path).filter(

@@ -446,42 +446,6 @@ def test_maxsim_pruned_recall_pin_clustered(spark):
     assert recall >= 0.8, recall
 
 
-def test_maxsim_candidates_lsh_smoke(spark):
-    """The distribution-free LSH candidate generator (the tier for
-    adversarial/unknown geometry): produces a nonempty candidate set
-    whose re-ranked scores are a subset of the exact tier's, and the
-    min_matches knob is monotone (higher threshold, fewer pairs)."""
-    from rag_pipelines_spark.operators.retrieval import (
-        embedding_tokens,
-        maxsim_candidates_lsh,
-        maxsim_scores,
-    )
-
-    toks = embedding_tokens(_clustered_embeddings(spark, n=200))
-    toks = toks.localCheckpoint()
-    qtoks = toks.filter(F.col("id") < 4)
-    loose = maxsim_candidates_lsh(
-        qtoks, toks, bits=10, tables=4, min_matches=2, exclude_self=True
-    )
-    strict = maxsim_candidates_lsh(
-        qtoks, toks, bits=10, tables=4, min_matches=5, exclude_self=True
-    )
-    n_loose, n_strict = loose.count(), strict.count()
-    assert n_loose > 0
-    assert n_strict <= n_loose
-    exact = {
-        (r.query_id, r.doc_id): r.maxsim
-        for r in maxsim_scores(qtoks, toks, exclude_self=True).collect()
-    }
-    pruned = {
-        (r.query_id, r.doc_id): r.maxsim
-        for r in maxsim_scores(qtoks, toks, candidates=loose).collect()
-    }
-    assert set(pruned) <= set(exact)
-    for pair, score in pruned.items():
-        assert score == exact[pair], pair
-
-
 def test_maxsim_guarded_double_equals_decimal_path(spark, monkeypatch):
     """The r10 guarded evaluation (double fast path, decimal fold only on
     boundary-risky rows) must be bit-identical to the always-decimal

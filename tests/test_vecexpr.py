@@ -17,7 +17,6 @@ from rag_pipelines_spark.operators.vecexpr import (
     dec_to_dbl_sql,
     dlit,
     flat_dot_dec_sql,
-    flat_sqdist_dec_sql,
 )
 from rag_pipelines_spark.queries._util import dec_to_dbl
 from tests.conftest import SF_DIR_SMOKE
@@ -56,28 +55,6 @@ def test_flat_dot_matches_hof_fold(spark):
     a = {r["vec_id"]: r["s"] for r in hof.collect()}
     b = {r["vec_id"]: r["s"] for r in flat.collect()}
     assert a == b  # exact float equality, not approx
-
-
-def test_flat_sqdist_matches_hof_fold(spark):
-    """flat_sqdist_dec_sql == clustering._dist_dec to the bit."""
-    from rag_pipelines_spark.operators.clustering import _dist_dec
-
-    c = [0.25 * ((-1) ** i) for i in range(_D)]
-    hof = _emb(spark).select(
-        "vec_id", dec_to_dbl(_dist_dec(F.col("embedding"), c)).alias("s")
-    )
-    elems = [f"CAST(`embedding`[{i}] AS DOUBLE)" for i in range(_D)]
-    flat = (
-        _emb(spark)
-        .selectExpr(
-            "vec_id",
-            f"{flat_sqdist_dec_sql(elems, [dlit(x) for x in c])} AS _sd",
-        )
-        .selectExpr("vec_id", f"{dec_to_dbl_sql('_sd')} AS s")
-    )
-    a = {r["vec_id"]: r["s"] for r in hof.collect()}
-    b = {r["vec_id"]: r["s"] for r in flat.collect()}
-    assert a == b
 
 
 def test_dlit_round_trips_doubles(spark):

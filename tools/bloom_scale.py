@@ -8,12 +8,13 @@ Run on an otherwise idle machine — shared-JVM timing noise is ~±0.5 s.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rag_pipelines_spark.io import table  # noqa: E402
 from rag_pipelines_spark.operators.bloomfilter import (  # noqa: E402

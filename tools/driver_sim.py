@@ -12,8 +12,9 @@ Usage: python tools/driver_sim.py [sf_dir]
     the DuckDB views glob when the path is a directory.
 """
 import os, sys, duckdb, pandas as pd
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as E
+from rag_pipelines_spark.session import SCRATCH_ROOT
 from pyspark.sql import SparkSession
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -21,7 +22,7 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 # with none of session.py's confs (that mismatch hid the round-1 NANOS
 # bug: every events query ERR'd only under the driver). Everything the
 # queries need (nanosAsLong, UTC timezone) must come from io.table itself.
-_scratch = "/root/repo/.scratch/spark-local"
+_scratch = os.path.join(SCRATCH_ROOT, "spark-local")
 os.makedirs(_scratch, exist_ok=True)
 _b = (
     SparkSession.builder.master("local[*]")
@@ -41,6 +42,7 @@ if os.environ.get("SPARK_DRIVER_MEMORY"):
 spark = _b.getOrCreate()
 
 # t1 smoke
+print(f"ENTRY {E.__file__}")  # the checkout under test
 df = E.entry(spark)
 rows = df.collect()
 print(f"SMOKE entry(): {len(rows)} rows, schema={df.columns}")

@@ -10,10 +10,12 @@ judge can jump from a registry row straight to the engine code."""
 import ast
 import importlib
 import inspect
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from rag_pipelines_spark.registry import REGISTRY, load_all
 
 load_all()
@@ -67,23 +69,38 @@ def _code_identifiers(src: str) -> set[str]:
     return out
 
 
-def _delegates(q) -> str:
-    """operators/streaming modules the query delegates to: dotted
-    references in the fn's own source PLUS module-level imports whose
-    names the fn's code actually uses. A checksum twin (register_checksum)
-    wraps its base fn, so its module and source are the base's."""
-    try:
-        src = inspect.getsource(q.fn)
-    except OSError:
-        src = ""
+def _source_delegates(src: str, module_name: str) -> tuple[set[str], set[str]]:
+    """(operators/streaming modules, code identifiers) of one function
+    source: dotted references in it PLUS module-level imports whose
+    names its code actually uses."""
     idents = _code_identifiers(src)
-    imported = _module_import_map(q.fn.__module__)
-    mods = sorted(
+    imported = _module_import_map(module_name)
+    mods = (
         {f"operators/{m}" for m in _OP_RE.findall(src)}
         | {f"streaming/{m}" for m in _STREAM_RE.findall(src)}
         | {loc for name, loc in imported.items() if name in idents}
     )
-    return ", ".join(f"`{m}.py`" for m in mods) if mods else "—"
+    return mods, idents
+
+
+def _delegates(q) -> str:
+    """operators/streaming modules the query delegates to: those of the
+    fn's own source, plus those of every same-module private helper
+    (`_name`) its code calls, one level deep. A checksum twin
+    (register_checksum) wraps its base fn, so its module and source are
+    the base's."""
+    try:
+        src = inspect.getsource(q.fn)
+    except OSError:
+        src = ""
+    module_name = q.fn.__module__
+    module = importlib.import_module(module_name)
+    mods, idents = _source_delegates(src, module_name)
+    for name in sorted(i for i in idents if i.startswith("_")):
+        helper = getattr(module, name, None)
+        if inspect.isfunction(helper) and helper.__module__ == module_name:
+            mods |= _source_delegates(inspect.getsource(helper), module_name)[0]
+    return ", ".join(f"`{m}.py`" for m in sorted(mods)) if mods else "—"
 
 
 rows = []
@@ -100,7 +117,7 @@ for name in sorted(REGISTRY):
 n_oracle = sum(1 for q in REGISTRY.values() if q.oracle)
 n_rows = len(REGISTRY) - n_oracle
 
-with open("/root/repo/REGISTRY.md", "w") as f:
+with open(os.path.join(ROOT, "REGISTRY.md"), "w") as f:
     f.write(
         "# REGISTRY — query inventory (generated by tools/gen_registry.py)\n\n"
         f"{len(REGISTRY)} registered queries; **oracle** = hash-checked vs DuckDB at\n"

@@ -4,8 +4,8 @@ the claim that merge cost tracks the BATCH, not the accumulated state.
 
 Protocol: for each batch size B, a fresh state root ingests 3
 consecutive disjoint batches of B documents from the sf10 fixture
-through every state family (seen-keys front door, near-dup manifest
-state, BM25 corpus stats, keyed rollup, MG freq sketch, HLL sketch,
+through every state family (near-dup manifest state, BM25 corpus
+stats, keyed rollup, MG freq sketch, HLL sketch,
 KMV sketch, seen-keys bloom, frozen-centroid ANN postings, DSIR
 bucket counts, k-means centroid sums, PCA moment sums — r9 completed
 the set), timing each family's merge per batch. If merges scaled with history, batch 3 (2B docs of state
@@ -61,7 +61,6 @@ def run(spark, sf_dir: str, batch_sizes: list[int]) -> list[dict]:
     from rag_pipelines_spark.operators.drift import kl_against
     from rag_pipelines_spark.operators.retrieval import merge_corpus_stats
     from rag_pipelines_spark.operators.rollup import merge_rollup, read_rollup
-    from rag_pipelines_spark.streaming.incremental import incremental_merge
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     results = []
@@ -75,13 +74,8 @@ def run(spark, sf_dir: str, batch_sizes: list[int]) -> list[dict]:
             # every family's timing
             rec = {"batch_size": bsize, "batch_idx": bi}
             t0 = time.time()
-            delta = incremental_merge(
-                spark, batch, os.path.join(root, "seen"), key="doc_id"
-            )
-            rec["seen_s"] = round(time.time() - t0, 2)
-            t0 = time.time()
             clean = incremental_neardup(
-                spark, delta, os.path.join(root, "neardup"),
+                spark, batch, os.path.join(root, "neardup"),
                 "doc_id", "text", epoch=bi,
             ).localCheckpoint(eager=True)
             rec["neardup_s"] = round(time.time() - t0, 2)
@@ -121,7 +115,7 @@ def run(spark, sf_dir: str, batch_sizes: list[int]) -> list[dict]:
             rec["kmv_s"] = round(time.time() - t0, 2)
             t0 = time.time()
             merge_bloom(
-                spark, delta.select("doc_id"), os.path.join(root, "bloom"),
+                spark, batch.select("doc_id"), os.path.join(root, "bloom"),
                 key="doc_id", m_bits=1 << 22, epoch=bi,
             )
             rec["bloom_s"] = round(time.time() - t0, 2)

@@ -16,11 +16,13 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 from pyspark.sql import SparkSession
 
+from rag_pipelines_spark.session import SCRATCH_ROOT
+
 spark = (
     SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
     .appName("profile-pagerank")
     .config("spark.ui.enabled", "false")
-    .config("spark.local.dir", "/root/repo/.scratch/spark-local")
+    .config("spark.local.dir", os.path.join(SCRATCH_ROOT, "spark-local"))
     .getOrCreate()
 )
 

@@ -5,10 +5,11 @@ a quadratic one doubles its ratio every doubling. Results recorded in
 SCALE.md. Run: python tools/scale_probe.py [sf_dir]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -17,12 +17,13 @@ Deterministic (pure column math, no RNG). Run on an idle machine.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rag_pipelines_spark.operators.setjoin import (  # noqa: E402
     _tokens,

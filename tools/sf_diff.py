@@ -186,7 +186,9 @@ def main() -> int:
 
     # vanilla session like driver_sim — everything queries need must come
     # from io.table
-    _scratch = "/root/repo/.scratch/spark-local"
+    from rag_pipelines_spark.session import SCRATCH_ROOT
+
+    _scratch = os.path.join(SCRATCH_ROOT, "spark-local")
     os.makedirs(_scratch, exist_ok=True)
     spark = (
         SparkSession.builder.master("local[*]")
