@@ -88,11 +88,6 @@ def _c(col: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def md5_id(col: Column | str) -> Column:
-    """MD5 hex fingerprint of a column. ref: fda_watcher.py:86-93."""
-    return F.md5(_c(col).cast("string"))
-
-
 def fingerprint_key(url: Column | str, title: Column | str, date: Column | str) -> Column:
     """RAG_ID key: md5(url) if url non-empty else md5(title_date).
 

@@ -55,9 +55,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for spark.sql paths)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,4 +1,4 @@
-"""Change-data-capture operators: snapshot diff and file compaction.
+"""Change-data-capture operators: snapshot diff and type-2 history.
 
 The reference's whole incremental story is "which scraped rows are new vs
 the master table" (fda_watcher.py:397-416) — a one-sided anti-join (J1).
@@ -12,10 +12,6 @@ Scale notes:
     handles skewed keys; payload comparison is an md5 over concatenated
     columns computed map-side, so the shuffle carries (key, hash), never
     the payload itself when `project_hash_early=True`.
-  * `compact` addresses the other CDC by-product: incremental writes
-    leave many small files; periodic compaction rewrites a table into
-    size-targeted partitions (small-file reads are the top cause of slow
-    100 TB scans — file-open overhead and lost column-chunk locality).
 """
 
 from __future__ import annotations
@@ -180,31 +176,3 @@ def scd2_merge(
     )
     rebuilt = scd2_from_events(replay, key, attr, ts, tiebreak)
     return closed.unionByName(untouched_open).unionByName(rebuilt)
-
-
-def compact(df: DataFrame, path: str, target_rows_per_file: int,
-            uniform: bool = False) -> int:
-    """Rewrite `df` at `path` with size-targeted files; returns file count.
-
-    Default path is pre-count-FREE: `maxRecordsPerFile` caps every task's
-    output file size during the one write pass — the right default,
-    because the sizing count is metadata-cheap only on columnar sources;
-    on a non-columnar input (JSON/CSV/join output) it is a full extra
-    scan of the data being compacted. `uniform=True` adds the count +
-    round-robin repartition so files come out equal-sized AND the file
-    COUNT is exact (without it, file count is bounded per task, not
-    globally — fine for the small-file problem compaction exists to
-    solve, where any bounded layout beats ten thousand shard files).
-    """
-    if uniform:
-        n = df.count()
-        df = df.repartition(max(1, -(-n // target_rows_per_file)))
-    (
-        df.write.mode("overwrite")
-        .option("maxRecordsPerFile", target_rows_per_file)
-        .parquet(path)
-    )
-    import glob
-    import os
-
-    return len(glob.glob(os.path.join(path, "part-*.parquet")))

@@ -1,27 +1,27 @@
-"""Mergeable histogram sketch: quantiles for the incremental-rollup family.
+"""Fixed-width histogram quantiles: a partial that adds, and an estimator.
 
 operators/rollup.py refuses holistic aggregates (median/percentiles) —
-they are not mergeable from partials. This module is the standing answer:
-a fixed-bin-width histogram IS mergeable (bin counts add), deterministic
-(bin = floor(value/width), no randomized sketch state), and gives
-quantile estimates with error bounded by the bin width. Trade-off vs
-t-digest/KLL: you pick the resolution up front (width), in exchange for
-exact mergeability, bitwise-reproducible state, and an oracle-checkable
-formula — the right trade for a differential-tested engine.
+they are not mergeable from partials. A fixed-bin-width histogram is
+mergeable (bin counts add), deterministic (bin = floor(value/width), no
+randomized sketch state), and gives quantile estimates with error
+bounded by the bin width. Trade-off vs t-digest/KLL: you pick the
+resolution up front (width), in exchange for exact mergeability,
+bitwise-reproducible bins, and an oracle-checkable formula — the right
+trade for a differential-tested engine. `q_histogram_quantiles` runs
+`histogram_partial` -> `histogram_quantile` in one shot; no state family
+folds these partials.
 
-Scale posture: the state is one row per (key, occupied bin) — bounded by
-range/width per key regardless of row count. The batch partial is one
-hash aggregate; the merge is a union + re-aggregate keyed like the
-state. Quantile extraction windows over bins WITHIN a key (a few hundred
-rows per partition at any corpus size — never data-sized).
+Scale posture: the histogram is one row per (key, occupied bin) —
+bounded by range/width per key regardless of row count. The partial is
+one hash aggregate. Quantile extraction windows over bins WITHIN a key
+(a few hundred rows per partition at any corpus size — never
+data-sized).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-
-from rag_pipelines_spark.operators.state import fold_state, live_version_dir
 
 
 def histogram_partial(batch: DataFrame, keys: list[str], col: str,
@@ -38,30 +38,6 @@ def histogram_partial(batch: DataFrame, keys: list[str], col: str,
         .groupBy(*keys, "bin")
         .agg(F.count("*").alias("n"))
     )
-
-
-def merge_histogram(spark, batch: DataFrame, state_path: str, *,
-                    keys: list[str], col: str, width: float,
-                    epoch: int | None = None) -> None:
-    """Fold one batch into histogram state (operators/state.py::
-    fold_state; pass `epoch` for exactly-once under replay). counts add
-    ⇒ N merges == one-shot, pinned by test. Bins of different widths do
-    not add, so a different `width` is refused."""
-    fold_state(
-        spark, state_path, what="histogram state", params={"width": width},
-        partial=lambda: histogram_partial(batch, keys, col, width),
-        combine=lambda old, part: old().unionByName(part)
-        .groupBy(*keys, "bin").agg(F.sum("n").alias("n")),
-        write=lambda vdir, m: m.write.mode("overwrite").parquet(vdir),
-        epoch=epoch,
-    )
-
-
-def read_histogram(spark, state_path: str) -> DataFrame:
-    live = live_version_dir(state_path, what="histogram state")
-    if live is None:
-        raise FileNotFoundError(f"no histogram state at {state_path}")
-    return spark.read.parquet(live)
 
 
 def histogram_quantile(hist: DataFrame, keys: list[str], width: float,

@@ -56,11 +56,6 @@ def hash_split(
     return df.withColumn(out, expr)
 
 
-def hash_sample(df: DataFrame, key: str, fraction: float, salt: str = "") -> DataFrame:
-    """Deterministic ~`fraction` sample, stable across runs/layouts."""
-    return df.filter(hash_bucket(key, salt, granularity=10_000) < int(fraction * 10_000))
-
-
 def balance_groups(df: DataFrame, group_col: str, key_col: str, salt: str = "") -> DataFrame:
     """Deterministically downsample every group to the smallest group's
     size (uniform source mixing — the degenerate "equal weights" case of

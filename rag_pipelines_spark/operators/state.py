@@ -39,8 +39,8 @@ Two fold contracts, one per state shape (the Summingbird split: the
 family supplies its per-batch logic, one generic fold owns the
 exactly-once epoch policy):
 
-* `fold_state` for the rewrite-style families (rollup, histogram, freq,
-  HLL, KMV, bloom, Count-Min, corpus stats): each family supplies its
+* `fold_state` for the rewrite-style families (rollup, freq, HLL, KMV,
+  bloom, Count-Min, corpus stats): each family supplies its
   batch partial, its combine and its write; fold_state owns the epoch
   guards, the lease, the geometry check against the version's
   ``_meta.json`` and the version commit.

@@ -1787,9 +1787,11 @@ _SQL_HASHED_FEATS = r"""
         FROM grams
     )"""
 
-_DSIR_ORACLE = f"""{_SQL_HASHED_FEATS},
-    raw_counts AS (SELECT bucket, COUNT(*) AS cr FROM feats GROUP BY bucket),
-    tgt_counts AS (
+# DSIR's bucket-count join (given raw_counts(bucket, cr); the target is
+# every 50th doc) and its per-doc score: the 6-decimal log-ratios summed
+# as DECIMAL(28,6), then split at the floor so both engines render the
+# same double.
+_SQL_DSIR_COUNTS = """tgt_counts AS (
         SELECT bucket, COUNT(*) AS ct FROM feats
         WHERE doc_id % 50 = 0 GROUP BY bucket
     ),
@@ -1797,7 +1799,15 @@ _DSIR_ORACLE = f"""{_SQL_HASHED_FEATS},
         SELECT COALESCE(r.bucket, t.bucket) AS bucket,
                COALESCE(cr, 0) AS cr, COALESCE(ct, 0) AS ct
         FROM raw_counts r FULL OUTER JOIN tgt_counts t ON r.bucket = t.bucket
-    ),
+    )"""
+
+_SQL_DSIR_LOGW = """(CAST(FLOOR(SUM(CAST(lr AS DECIMAL(28,6)))) AS DOUBLE)
+            + CAST(SUM(CAST(lr AS DECIMAL(28,6)))
+                   - FLOOR(SUM(CAST(lr AS DECIMAL(28,6)))) AS DOUBLE)) AS logw"""
+
+_DSIR_ORACLE = f"""{_SQL_HASHED_FEATS},
+    raw_counts AS (SELECT bucket, COUNT(*) AS cr FROM feats GROUP BY bucket),
+    {_SQL_DSIR_COUNTS},
     lr AS (
         SELECT bucket,
                round(ln((ct + 1) / CAST((SELECT SUM(ct) FROM counts) + 10000
@@ -1808,9 +1818,7 @@ _DSIR_ORACLE = f"""{_SQL_HASHED_FEATS},
     )
     SELECT f.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_feats,
-           (CAST(FLOOR(SUM(CAST(lr AS DECIMAL(28,6)))) AS DOUBLE)
-            + CAST(SUM(CAST(lr AS DECIMAL(28,6)))
-                   - FLOOR(SUM(CAST(lr AS DECIMAL(28,6)))) AS DOUBLE)) AS logw
+           {_SQL_DSIR_LOGW}
     FROM feats f JOIN lr USING (bucket)
     GROUP BY f.doc_id
     """
@@ -1898,15 +1906,7 @@ register(
         SELECT bucket, COUNT(*) AS cr FROM feats
         WHERE doc_id % 3 IN (0, 1) GROUP BY bucket
     ),
-    tgt_counts AS (
-        SELECT bucket, COUNT(*) AS ct FROM feats
-        WHERE doc_id % 50 = 0 GROUP BY bucket
-    ),
-    counts AS (
-        SELECT COALESCE(r.bucket, t.bucket) AS bucket,
-               COALESCE(cr, 0) AS cr, COALESCE(ct, 0) AS ct
-        FROM raw_counts r FULL OUTER JOIN tgt_counts t ON r.bucket = t.bucket
-    ),
+    {_SQL_DSIR_COUNTS},
     tot AS (SELECT SUM(cr) AS rt, SUM(ct) AS tt FROM counts),
     lr AS (
         SELECT bucket,
@@ -1926,9 +1926,7 @@ register(
     )
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_feats,
-           (CAST(FLOOR(SUM(CAST(lr AS DECIMAL(28,6)))) AS DOUBLE)
-            + CAST(SUM(CAST(lr AS DECIMAL(28,6)))
-                   - FLOOR(SUM(CAST(lr AS DECIMAL(28,6)))) AS DOUBLE)) AS logw
+           {_SQL_DSIR_LOGW}
     FROM scored GROUP BY doc_id
     """,
     doc="score-before-ingest DSIR from ACCRETED state (the 9th "
@@ -1993,28 +1991,38 @@ def q_dsir_from_state(spark, sf_dir):
     return dsir_score_against(batch, raw, tgt, "doc_id", n_buckets=10_000)
 
 
-@register(
-    "q_mixture_weights",
-    oracle="""
-    WITH n AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang),
-    w(lang, wt) AS (VALUES ('en', 0.5), ('zh', 0.3), ('es', 0.2)),
-    s AS (SELECT MIN(n.cnt / w.wt) AS scale FROM n JOIN w USING (lang)),
-    q AS (
-        SELECT w.lang, CAST(FLOOR(w.wt * s.scale) AS BIGINT) AS quota
-        FROM w, s
-    ),
-    r AS (
+# Per-lang md5 rank of every document: the layout-stable selection order
+# of operators/sampling.py's mixture samplers.
+_SQL_LANG_MD5_RANK = """r AS (
         SELECT doc_id, lang,
                row_number() OVER (
                    PARTITION BY lang
                    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
                ) AS sample_rank
         FROM documents
-    )
+    )"""
+
+# Quota tail of the downsampling mixture oracles: given w(lang, wt) and
+# s(scale), keep each lang's first floor(wt * scale) docs by md5 rank
+# (mixture_sample, temperature_sample).
+_SQL_MIXTURE_TAIL = f"""q AS (
+        SELECT w.lang, CAST(FLOOR(w.wt * s.scale) AS BIGINT) AS quota
+        FROM w, s
+    ),
+    {_SQL_LANG_MD5_RANK}
     SELECT r.doc_id, r.lang, r.sample_rank
     FROM r JOIN q USING (lang)
     WHERE r.sample_rank <= q.quota
-    """,
+    """
+
+
+@register(
+    "q_mixture_weights",
+    oracle=f"""
+    WITH n AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang),
+    w(lang, wt) AS (VALUES ('en', 0.5), ('zh', 0.3), ('es', 0.2)),
+    s AS (SELECT MIN(n.cnt / w.wt) AS scale FROM n JOIN w USING (lang)),
+    {_SQL_MIXTURE_TAIL}""",
     doc="weighted data-mixture schedule: downsample so surviving language "
     "proportions match target weights en:zh:es = 5:3:2 (unweighted langs "
     "drop). quota_g = floor(w_g * min_g(n_g/w_g)) — the largest total with "
@@ -2506,28 +2514,13 @@ def q_quality_model(spark, sf_dir):
 
 @register(
     "q_temperature_mixture",
-    oracle="""
+    oracle=f"""
     WITH n AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang),
     w AS (
         SELECT lang, cnt, sqrt(CAST(cnt AS DOUBLE)) AS wt FROM n
     ),
     s AS (SELECT MIN(CAST(cnt AS DOUBLE) / wt) AS scale FROM w),
-    q AS (
-        SELECT w.lang, CAST(FLOOR(w.wt * s.scale) AS BIGINT) AS quota
-        FROM w, s
-    ),
-    r AS (
-        SELECT doc_id, lang,
-               row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-               ) AS sample_rank
-        FROM documents
-    )
-    SELECT r.doc_id, r.lang, r.sample_rank
-    FROM r JOIN q USING (lang)
-    WHERE r.sample_rank <= q.quota
-    """,
+    {_SQL_MIXTURE_TAIL}""",
     doc="temperature-scaled data mixture (T=2): surviving language sizes "
     "proportional to sqrt(n_g) — the multilingual rebalancing rule "
     "(UniMax-style), weights computed FROM the corpus counts instead of "
@@ -2547,7 +2540,7 @@ def q_temperature_mixture(spark, sf_dir):
 
 @register(
     "q_repeat_upsample",
-    oracle="""
+    oracle=f"""
     WITH tgt(lang, t) AS (VALUES ('en', 120), ('zh', 500), ('es', 70)),
     n AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang),
     q AS (
@@ -2556,14 +2549,7 @@ def q_temperature_mixture(spark, sf_dir):
                CASE WHEN t // cnt >= 4 THEN 0 ELSE t % cnt END AS rem
         FROM n JOIN tgt USING (lang)
     ),
-    r AS (
-        SELECT doc_id, lang,
-               row_number() OVER (
-                   PARTITION BY lang
-                   ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-               ) AS sample_rank
-        FROM documents
-    ),
+    {_SQL_LANG_MD5_RANK},
     c AS (
         SELECT r.doc_id, r.lang, r.sample_rank,
                q.fullc + CASE WHEN r.sample_rank <= q.rem

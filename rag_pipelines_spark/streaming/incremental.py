@@ -13,11 +13,20 @@ Two delta paths (SURVEY §7 phase 5):
 (b) batch: `plans/pipelines.py::watcher_pipeline` — one run that
     anti-joins the scraped rows against the master frame.
 
-State-store forms: `streaming_dedup_query` (dropDuplicates with state +
-checkpoint), `streaming_dedup_bounded_query` (keys expire past the
-watermark), and `windowed_counts_query` / `session_windowed_query`
-(watermarked event-time aggregation; late data dropped past the
-watermark).
+State-store forms: `q_stream_dedup` (queries/streaming.py: stateful
+dropDuplicates + checkpoint over `available_now_parquet`) and
+`session_windowed_query` (watermarked event-time aggregation; late data
+dropped past the watermark).
+
+Bounding dedup state: plain dropDuplicates keeps one state entry per
+distinct key forever — fine for availableNow runs over a bounded
+keyspace. A resident query over an unbounded keyspace either bounds the
+store with `withWatermark(ts, delay).dropDuplicatesWithinWatermark(keys)`
+(a key is kept only until the watermark passes its timestamp, so state
+is O(keys per watermark window); a duplicate arriving after its twin
+expired is re-admitted, the same contract as watermarked aggregation's
+late-data drop), or uses the disk-state anti-join front door of
+`continuous_ingest_pipeline` below when re-admission is unacceptable.
 
 The scheduler's daily 09:00 trigger (scheduler.py:19,102-123) maps to
 `trigger(availableNow=True)` under cron, or processingTime for a resident
@@ -61,111 +70,6 @@ def _file_stream(spark: SparkSession, source_dir: str, schema,
         .option("pathGlobFilter", glob)
         .option("maxFilesPerTrigger", 4)
         .parquet(source_dir)
-    )
-
-
-def streaming_dedup_query(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    key_cols: list[str],
-    checkpoint: str,
-    sink_path: str,
-    queryName: str = "incremental_dedup",
-    glob: str = "*.parquet",
-) -> StreamingQuery:
-    """File-source stream with stateful dropDuplicates (T2 streaming form).
-
-    Sinks to parquet at `sink_path` (read it back after awaitTermination)
-    — a memory sink is driver-side and cannot resume a checkpoint, so it
-    has no place outside single-run inspection.
-
-    State caveat: plain dropDuplicates keeps one state entry per distinct
-    key FOREVER — fine for availableNow batch-style runs under a bounded
-    keyspace, but a resident query over an unbounded keyspace must bound
-    state with `streaming_dedup_bounded_query` (keys expire past the
-    watermark) or use the anti-join-vs-parquet-state front door of
-    `continuous_ingest_pipeline`, whose state lives on disk instead of
-    in the state store.
-    """
-    stream = _file_stream(spark, source_dir, schema, glob)
-    return available_now_parquet(
-        stream.dropDuplicates(key_cols), checkpoint, sink_path, queryName
-    )
-
-
-def streaming_dedup_bounded_query(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    key_cols: list[str],
-    event_time_col: str,
-    watermark: str,
-    checkpoint: str,
-    sink_path: str,
-    queryName: str = "incremental_dedup_bounded",
-    glob: str = "*.parquet",
-) -> StreamingQuery:
-    """BOUNDED-state streaming dedup: dropDuplicatesWithinWatermark.
-
-    The resident-query form the plain variant's docstring prescribes: the
-    state store keeps a key only while it can still collide — i.e. until
-    the event-time watermark passes its timestamp — so state size is
-    O(keys per watermark window), not O(all keys ever), which is what
-    makes a 100 TB/day continuous dedup feasible in the state store at
-    all. Semantics differ from exact dedup by design: a duplicate
-    arriving AFTER its twin expired past the watermark is re-admitted
-    (the same contract as watermarked aggregation's late-data drop); use
-    the disk-state anti-join front door of `continuous_ingest_pipeline`
-    when re-admission is unacceptable.
-
-    `event_time_col` must be a TimestampType column; `key_cols` should
-    not include it (keys match on identity, the timestamp only drives
-    expiry).
-    """
-    stream = _file_stream(spark, source_dir, schema, glob)
-    return available_now_parquet(
-        stream.withWatermark(event_time_col, watermark)
-        .dropDuplicatesWithinWatermark(key_cols),
-        checkpoint,
-        sink_path,
-        queryName,
-    )
-
-
-def windowed_counts_query(
-    events: DataFrame,
-    checkpoint: str,
-    queryName: str = "windowed_counts",
-    watermark: str = "1 hour",
-    window: str = "15 minutes",
-    sink_path: str | None = None,
-) -> StreamingQuery:
-    """Watermarked tumbling-window counts (declared capability, SURVEY §2.9).
-
-    Append mode only emits a window once the watermark passes its end —
-    late events beyond `watermark` are dropped, bounding state size (the
-    property that makes event-time aggregation feasible at 100 TB/day).
-
-    `sink_path=None` uses the memory sink (single-run inspection only — it
-    cannot resume a checkpoint); pass a path for a parquet sink when the
-    query must stop/resume across runs.
-    """
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    if sink_path is not None:
-        return available_now_parquet(agg, checkpoint, sink_path, queryName)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

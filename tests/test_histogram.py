@@ -1,6 +1,6 @@
-"""Mergeable-histogram sketch (operators/histogram.py): N merges == union
-identity, quantile error bounded by bin width, window partitioned by key
-(never data-sized)."""
+"""Fixed-width histogram quantiles (operators/histogram.py): quantile
+error bounded by bin width, window partitioned by key (never
+data-sized)."""
 
 from __future__ import annotations
 
@@ -9,55 +9,10 @@ from pyspark.sql import functions as F
 from rag_pipelines_spark.operators.histogram import (
     histogram_partial,
     histogram_quantile,
-    merge_histogram,
-    read_histogram,
 )
 from tests.conftest import SF_DIR
 
 WIDTH = 1.0
-
-
-def test_n_merges_equal_union_histogram(spark, tmp_path):
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        "event_id", "event_type", "value"
-    )
-    state = str(tmp_path / "hist")
-    for r in range(3):
-        merge_histogram(
-            spark,
-            ev.filter(F.col("event_id") % 3 == r),
-            state,
-            keys=["event_type"],
-            col="value",
-            width=WIDTH,
-        )
-    got = {
-        (r.event_type, r.bin): r.n
-        for r in read_histogram(spark, state).collect()
-    }
-    want = {
-        (r.event_type, r.bin): r.n
-        for r in histogram_partial(ev, ["event_type"], "value", WIDTH).collect()
-    }
-    assert got == want
-
-
-def test_width_mismatch_refused(spark, tmp_path):
-    """Bins of different widths do not add: a fold at another width is
-    refused and the state is left as it was."""
-    import pytest
-
-    ev = spark.createDataFrame(
-        [("a", 1.5), ("a", 3.5), ("b", 0.5)], "event_type STRING, value DOUBLE"
-    )
-    state = str(tmp_path / "hist_width")
-    merge_histogram(spark, ev, state, keys=["event_type"], col="value",
-                    width=1.0)
-    before = sorted(map(tuple, read_histogram(spark, state).collect()))
-    with pytest.raises(ValueError, match="geometry mismatch"):
-        merge_histogram(spark, ev, state, keys=["event_type"], col="value",
-                        width=2.0)
-    assert sorted(map(tuple, read_histogram(spark, state).collect())) == before
 
 
 def test_quantile_error_bounded_by_width(spark):

@@ -541,7 +541,6 @@ def test_lease_guards_every_merge_family(spark, tmp_path):
     import pytest as _pytest
 
     from rag_pipelines_spark.operators.freqsketch import merge_freq
-    from rag_pipelines_spark.operators.histogram import merge_histogram
     from rag_pipelines_spark.operators.hllsketch import merge_hll
     from rag_pipelines_spark.operators.retrieval import merge_corpus_stats
     from rag_pipelines_spark.operators.rollup import merge_rollup
@@ -553,9 +552,6 @@ def test_lease_guards_every_merge_family(spark, tmp_path):
     cases = {
         "rollup": lambda p: merge_rollup(
             spark, docs, p, keys=["lang"], measures={"v": ["count", "sum"]}
-        ),
-        "histogram": lambda p: merge_histogram(
-            spark, docs, p, keys=["lang"], col="v", width=1.0
         ),
         "corpus_stats": lambda p: merge_corpus_stats(spark, docs, p),
         "freq": lambda p: merge_freq(

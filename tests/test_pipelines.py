@@ -142,58 +142,14 @@ class TestPdfChain:
         assert all(r["date"] == "2023" for r in out)
 
 
-class TestStreamingQueries:
-    def test_windowed_counts_with_watermark(self, spark, tmp_path):
-        from rag_pipelines_spark.streaming.incremental import windowed_counts_query
-
-        src = str(tmp_path / "events_src")
-        events = spark.createDataFrame(
-            [
-                (1, "2024-01-01 00:01:00", "click"),
-                (2, "2024-01-01 00:05:00", "click"),
-                (3, "2024-01-01 02:00:00", "view"),  # advances watermark
-            ],
-            ["event_id", "ts_s", "event_type"],
-        ).withColumn("ts", F.to_timestamp("ts_s")).drop("ts_s")
-        events.write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(events.schema).parquet(src)
-        )
-        q = windowed_counts_query(
-            stream, checkpoint=str(tmp_path / "ckpt"), queryName="wm_counts"
-        )
-        q.awaitTermination()
-        rows = spark.table("wm_counts").collect()
-        # the 00:00 window closed (watermark @ 01:00) and emitted in append mode
-        emitted = {(str(r["window_start"]), r["event_type"]): r["n"] for r in rows}
-        assert emitted.get(("2024-01-01 00:00:00", "click")) == 2
-
-
-class TestObservedMetrics:
-    def test_per_record_json_roundtrip(self, spark, tmp_path):
-        from rag_pipelines_spark.sources.jsonl import (
-            read_jsonl_glob,
-            write_per_record_json,
-        )
-
-        df = spark.createDataFrame(
-            [("r1", "one"), ("r2", "two")], ["rag_id", "corpus"]
-        )
-        out = str(tmp_path / "records")
-        write_per_record_json(df, out, key_col="rag_id")
-        back = read_jsonl_glob(
-            spark, out + "/*/*.json", "corpus string", with_provenance=True
-        )
-        rows = back.collect()
-        assert {r["corpus"] for r in rows} == {"one", "two"}
-        assert all("rag_id=" in r["source_file"] for r in rows)
-
-
 class TestStreamingPacing:
     def test_max_files_per_trigger_multi_batch(self, spark, tmp_path):
         """T3 pacing: N input files with maxFilesPerTrigger=4 -> multiple
         micro-batches under availableNow, all rows processed exactly once."""
-        from rag_pipelines_spark.streaming.incremental import streaming_dedup_query
+        from rag_pipelines_spark.streaming.incremental import (
+            _file_stream,
+            available_now_parquet,
+        )
 
         src = str(tmp_path / "paced_src")
         schema = "rag_id string, source string"
@@ -202,11 +158,8 @@ class TestStreamingPacing:
                 "append"
             ).parquet(src)
         sink = str(tmp_path / "sink")
-        q = streaming_dedup_query(
-            spark,
-            src,
-            schema,
-            key_cols=["rag_id"],
+        q = available_now_parquet(
+            _file_stream(spark, src, schema).dropDuplicates(["rag_id"]),
             checkpoint=str(tmp_path / "ckpt"),
             sink_path=sink,
             queryName="paced_dedup",
@@ -262,127 +215,6 @@ class TestRetryingTransport:
         assert len(calls) == 1  # ref only retries connection errors
 
 
-class TestLateData:
-    def test_late_event_beyond_watermark_dropped(self, spark, tmp_path):
-        """Append-mode + watermark: once the watermark passes a window's
-        end and the window emits, a straggler inside that window arriving
-        in a later run is DROPPED (state was evicted)."""
-        from rag_pipelines_spark.streaming.incremental import windowed_counts_query
-
-        src = str(tmp_path / "late_src")
-        ckpt = str(tmp_path / "ckpt")
-        schema = None
-
-        def write(rows):
-            df = (
-                spark.createDataFrame(rows, ["event_id", "ts_s", "event_type"])
-                .withColumn("ts", F.to_timestamp("ts_s"))
-                .drop("ts_s")
-            )
-            df.coalesce(1).write.mode("append").parquet(src)
-            return df.schema
-
-        out_dir = str(tmp_path / "late_out")
-
-        def run(qname):
-            stream = spark.readStream.schema(schema).parquet(src)
-            q = windowed_counts_query(
-                stream, checkpoint=ckpt, queryName=qname, sink_path=out_dir
-            )
-            q.awaitTermination()
-            return spark.read.parquet(out_dir)
-
-        # run 1: two clicks in the 00:00 window; an 02:00 event advances the
-        # watermark (1h) past 00:15 -> the 00:00 window closes and emits
-        schema = write(
-            [
-                (1, "2024-01-01 00:01:00", "click"),
-                (2, "2024-01-01 00:05:00", "click"),
-                (3, "2024-01-01 02:00:00", "view"),
-            ]
-        )
-        out1 = run("late_r1")
-        emitted1 = {
-            (str(r["window_start"]), r["event_type"]): r["n"] for r in out1.collect()
-        }
-        assert emitted1.get(("2024-01-01 00:00:00", "click")) == 2
-
-        # run 2 (same checkpoint): a LATE click back in the closed 00:00
-        # window + a 04:00 event to advance the watermark further
-        write(
-            [
-                (4, "2024-01-01 00:07:00", "click"),  # late straggler
-                (5, "2024-01-01 04:00:00", "view"),
-            ]
-        )
-        out2 = run("late_r2")
-        emitted2 = {
-            (str(r["window_start"]), r["event_type"]): r["n"] for r in out2.collect()
-        }
-        # the parquet sink is cumulative; the closed click window must
-        # appear exactly once, still with n=2 (late row dropped, no re-emit)
-        click_rows = [
-            r
-            for r in out2.collect()
-            if str(r["window_start"]) == "2024-01-01 00:00:00"
-            and r["event_type"] == "click"
-        ]
-        assert len(click_rows) == 1 and click_rows[0]["n"] == 2, click_rows
-
-
-class TestBoundedStateDedup:
-    def test_drop_duplicates_within_watermark_expires_state(self, spark, tmp_path):
-        """Bounded-state resident dedup (r4 verdict item #3): a duplicate
-        key inside the watermark window is rejected; once the event-time
-        watermark passes the first occurrence's expiry the key's state is
-        EVICTED and a much-later duplicate is re-admitted — state is
-        O(keys per window), never O(all keys ever)."""
-        from rag_pipelines_spark.streaming.incremental import (
-            streaming_dedup_bounded_query,
-        )
-
-        src = str(tmp_path / "src")
-        sink = str(tmp_path / "sink")
-        ckpt = str(tmp_path / "ckpt")
-        schema = "rag_id string, ts timestamp"
-
-        def run(rows):
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            q = streaming_dedup_bounded_query(
-                spark,
-                src,
-                schema,
-                key_cols=["rag_id"],
-                event_time_col="ts",
-                watermark="10 minutes",
-                checkpoint=ckpt,
-                sink_path=sink,
-            )
-            q.awaitTermination(120)
-
-        import datetime as dt
-
-        t = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
-        run([("A", t(10, 0))])
-        # duplicate within the window: watermark (9:50) hasn't passed
-        # A@10:00's expiry -> rejected; B is new
-        run([("A", t(12, 0)), ("B", t(12, 0))])
-        # watermark now 11:50 > A@10:00 + 10min -> A's state evicted;
-        # the late twin is re-admitted BY DESIGN (the documented contract)
-        run([("A", t(13, 0))])
-
-        rows = sorted(
-            (r.rag_id, r.ts) for r in spark.read.parquet(sink).collect()
-        )
-        assert rows == [
-            ("A", t(10, 0)),
-            ("A", t(13, 0)),
-            ("B", t(12, 0)),
-        ]
-
-
 class TestStreamingSessionWindows:
     def test_exact_gap_boundary_merges(self, spark):
         """Probed semantics pin: an event at a gap of EXACTLY the session
@@ -413,8 +245,9 @@ class TestStreamingSessionWindows:
         """r5 verdict item #4: true-streaming session windows. Emitted
         sessions must equal the batch lag-gap-cumsum oracle over the
         admitted events; a closed session is emitted exactly once (its
-        merging state evicted — the re-run must not re-emit it), and an
-        event older than the watermark is dropped, not resurrected."""
+        merging state evicted — the re-run must not re-emit it), an
+        event older than the watermark is dropped, not resurrected, and a
+        late event still within the watermark is kept."""
         from rag_pipelines_spark.streaming.incremental import (
             _file_stream,
             session_windowed_query,
@@ -466,9 +299,11 @@ class TestStreamingSessionWindows:
 
         # run 2 (same checkpoint): a LATE event inside user 1's closed
         # session (< watermark 01:30) must be dropped — closed session
-        # NOT re-emitted, count unchanged (state evicted); a 04:00 event
-        # closes the 02:00 session
-        run([(1, t(0, 15)), (1, t(4, 0))], "sess_r2")
+        # NOT re-emitted, count unchanged (state evicted); user 2's 01:45
+        # event is late too but still within the watermark (>= 01:30),
+        # so it is kept and opens a session; a 04:00 event closes it and
+        # the 02:00 session
+        run([(1, t(0, 15)), (2, t(1, 45)), (1, t(4, 0))], "sess_r2")
         rows = spark.read.parquet(sink).collect()
         sessions = sorted(
             (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
@@ -481,6 +316,8 @@ class TestStreamingSessionWindows:
             == 1
         )
         assert (1, "2024-01-01 02:00:00", "2024-01-01 02:30:00", 1) in sessions
+        # the in-bound late event was kept and emitted once closed
+        assert (2, "2024-01-01 01:45:00", "2024-01-01 02:15:00", 1) in sessions
 
         # batch lag-gap-cumsum oracle over the ADMITTED events (the late
         # 00:15 row was dropped by the watermark; 04:00 is still open —
@@ -488,7 +325,7 @@ class TestStreamingSessionWindows:
         admitted = spark.createDataFrame(
             [
                 (1, t(0, 0)), (1, t(0, 20)), (1, t(0, 10)), (2, t(0, 5)),
-                (1, t(2, 0)),
+                (1, t(2, 0)), (2, t(1, 45)),
             ],
             schema,
         )

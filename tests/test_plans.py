@@ -71,22 +71,18 @@ def test_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan  # no global sort materialized
 
 
-def test_partition_prune_uses_partition_filters(spark):
+def test_partition_prune_uses_partition_filters(spark, tmp_path):
     """q_partition_prune's read side must prune directories at planning
     time (PartitionFilters on the hive-layout scan), not post-filter."""
-    import os
-    import uuid
-
     from pyspark.sql import functions as F
 
     from rag_pipelines_spark.io import table
-    from rag_pipelines_spark.session import SCRATCH_ROOT
     from rag_pipelines_spark.sources.files import (
         read_partitioned_parquet,
         write_partitioned_parquet,
     )
 
-    path = os.path.join(SCRATCH_ROOT, f"part-plan-{uuid.uuid4().hex[:8]}")
+    path = str(tmp_path / "part-plan")
     src = table(spark, SF, "documents").select("doc_id", "source")
     write_partitioned_parquet(src, path, "source")
     df = read_partitioned_parquet(spark, path).filter(

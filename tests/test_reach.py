@@ -4,11 +4,14 @@ reached, or it is a declared capability in KEPT with its reason.
 Reached means named — as an `ast.Name`, an `ast.Attribute` or an import
 alias, so a docstring mention does not count — from a root, or from the
 body of a reached definition. The roots are every module-level statement
-of the package other than a plain def/class (so every `@register(...)`
-query fn, its oracle and the `register_checksum` calls), and every module
-of perfbench/, tools/, bench.py and __spark_entry__.py. Tests are not
-roots: a second implementation that only its own unit test calls is what
-this lint exists to find.
+of the package other than a plain def/class or an import (so every
+`@register(...)` query fn, its oracle and the `register_checksum`
+calls), and every module of perfbench/, tools/, bench.py and
+__spark_entry__.py. A package module-level import is not a root: a name
+that is only imported or re-exported is not reached. Its `as` alias maps
+back to the imported name, so a reached use of the alias reaches the
+definition. Tests are not roots: a second implementation that only its
+own unit test calls is what this lint exists to find.
 """
 
 from __future__ import annotations
@@ -31,7 +34,6 @@ ENTRY_POINTS = [
 KEPT = {
     "scd2_merge": "SURVEY §2.11 warehouse family: the batch-sized "
     "incremental form of scd2_from_events",
-    "compact": "small-file compaction for incrementally written tables",
     "write_zordered": "SURVEY §2.11 z-order layout: the Morton-key "
     "writer behind multi-column file skipping",
     "compact_ann_postings": "cell-clustered rewrite of the accreted ANN "
@@ -43,21 +45,10 @@ KEPT = {
     "publish_projection": "P1/P3: final RAG-record projection with "
     "defaults",
     "retrying_transport": "T4: fetch retry with exponential backoff",
-    "windowed_counts_query": "SURVEY §2.9 watermarked tumbling-window "
-    "streaming counts",
-    "streaming_dedup_query": "T2 streaming dedup in the state store",
-    "streaming_dedup_bounded_query": "T2 bounded-state streaming dedup "
-    "(keys expire past the watermark)",
     "split_on_expectations": "S13: quarantine routing of rows that "
     "fail an expectation",
     "pil_resizer": "real image decode+resize where Pillow is installed",
     "stdlib_png_resizer": "real PNG decode+resize with no dependencies",
-    "register_views": "fixture tables as temp views for spark.sql callers",
-    "hash_sample": "deterministic keyed sample, stable across layouts",
-    "merge_histogram": "mergeable quantile histogram state (fold side)",
-    "read_histogram": "mergeable quantile histogram state (serve side)",
-    "write_per_record_json": "S7: one output directory per record key",
-    "read_jsonl_glob": "S8: recursive glob scan with file provenance",
 }
 
 
@@ -79,9 +70,11 @@ def _is_register(dec: ast.AST) -> bool:
 
 
 def _scan():
-    """(defs: name -> [(module, node)], root names)."""
+    """(defs: name -> [(module, node)], root names, alias -> imported
+    names of the package's module-level imports)."""
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     roots: set[str] = set()
+    aliases: dict[str, set[str]] = {}
     for path in sorted(PKG.rglob("*.py")):
         mod = str(path.relative_to(PKG))
         for node in ast.parse(path.read_text()).body:
@@ -90,29 +83,43 @@ def _scan():
             ) and not any(_is_register(d) for d in node.decorator_list)
             if plain_def:
                 defs.setdefault(node.name, []).append((mod, node))
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    if a.asname:
+                        aliases.setdefault(a.asname, set()).add(
+                            a.name.rsplit(".", 1)[-1]
+                        )
             else:
                 roots |= _names(node)
     for path in ENTRY_POINTS:
         roots |= _names(ast.parse(path.read_text()))
-    return defs, roots
+    return defs, roots, aliases
 
 
-def _closure(defs, start: set[str]) -> set[str]:
+def _closure(defs, aliases, start: set[str]) -> set[str]:
     reached, todo = set(), list(start)
     while todo:
         name = todo.pop()
         if name in reached:
             continue
         reached.add(name)
+        todo.extend(aliases.get(name, ()))
         for _, node in defs.get(name, []):
             todo.extend(_names(node) - reached)
     return reached
 
 
+def test_kept_stays_small():
+    assert len(KEPT) <= 10, (
+        f"KEPT has {len(KEPT)} entries; a declared capability that no "
+        "query, pipeline or tool reaches is deleted, not kept"
+    )
+
+
 def test_every_package_definition_is_reached_or_kept():
-    defs, roots = _scan()
-    reached = _closure(defs, roots)
-    kept_reach = _closure(defs, roots | set(KEPT))
+    defs, roots, aliases = _scan()
+    reached = _closure(defs, aliases, roots)
+    kept_reach = _closure(defs, aliases, roots | set(KEPT))
     unreached = sorted(
         f"{mod}::{name}"
         for name, locs in defs.items()

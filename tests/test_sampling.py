@@ -3,7 +3,7 @@
 import pytest
 
 from rag_pipelines_spark.functions.text import redact_pii
-from rag_pipelines_spark.operators.sampling import hash_bucket, hash_sample, hash_split
+from rag_pipelines_spark.operators.sampling import hash_bucket, hash_split
 
 
 @pytest.fixture()
@@ -37,16 +37,6 @@ def test_salt_redraws_assignment(ids):
     }
     moved = sum(1 for k in base if base[k] != salted[k])
     assert 400 < moved < 1600  # ~half move on an independent re-draw
-
-
-def test_hash_sample_fraction_and_determinism(ids):
-    s1 = hash_sample(ids, "doc_id", 0.1)
-    n = s1.count()
-    assert 150 < n < 250  # ~10% of 2000
-    assert s1.collect() == hash_sample(ids, "doc_id", 0.1).collect()
-    # a sample is a subset of a larger sample with the same salt
-    big = {r["doc_id"] for r in hash_sample(ids, "doc_id", 0.3).collect()}
-    assert {r["doc_id"] for r in s1.collect()} <= big
 
 
 def test_bad_weights_rejected(ids):

@@ -98,33 +98,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_compact_produces_size_targeted_files(spark, tmp_path):
-    """Small-file compaction. uniform=True: 500 rows at 100 rows/file =>
-    exactly 5 equal files (count + repartition). Default: no pre-count —
-    maxRecordsPerFile still caps every file at the target."""
-    from rag_pipelines_spark.io import table
-    from rag_pipelines_spark.operators.cdc import compact
-
-    d = table(spark, SF_DIR, "documents")
-    n_files = compact(
-        d, str(tmp_path / "compacted"), target_rows_per_file=100, uniform=True
-    )
-    assert n_files == 5
-    back = spark.read.parquet(str(tmp_path / "compacted"))
-    assert back.count() == d.count()
-
-    # default path: one pass, every file <= target
-    out2 = str(tmp_path / "compacted2")
-    compact(d.repartition(3), out2, target_rows_per_file=100)
-    import glob
-
-    sizes = [
-        spark.read.parquet(p).count()
-        for p in glob.glob(f"{out2}/part-*.parquet")
-    ]
-    assert sum(sizes) == d.count() and max(sizes) <= 100
-
-
 def test_snapshot_diff_shuffles_hash_not_payload(spark):
     """The full-outer join input projects (key, md5) only — the wide text
     column must not cross the shuffle."""

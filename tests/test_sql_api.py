@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from rag_pipelines_spark.io import register_views
+from rag_pipelines_spark.io import TABLES, table
 
 SF = "/root/testdata/sf0.01"
 
@@ -16,7 +16,8 @@ def spark():
     from rag_pipelines_spark.session import get_spark
 
     s = get_spark("sql-api-tests", shuffle_partitions=8)
-    register_views(s, SF)
+    for name in TABLES:
+        table(s, SF, name).createOrReplaceTempView(name)
     return s
 
 

@@ -1,10 +1,10 @@
-"""Streaming state across resumed runs: watermark semantics of
-windowed_counts_query and the stream-stream interval join. Parquet
-sinks — the memory sink cannot recover from a checkpoint."""
+"""Streaming state: the stream-stream interval join. Parquet sinks — the
+memory sink cannot recover from a checkpoint. Watermarked window
+emission across resumed runs (late event dropped, in-bound late event
+kept, no re-emit) is pinned in
+tests/test_pipelines.py::TestStreamingSessionWindows."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -20,65 +20,6 @@ def spark():
     from rag_pipelines_spark.session import get_spark
 
     return get_spark("stateful-tests", shuffle_partitions=4)
-
-
-def test_watermark_drops_late_keeps_in_bound(spark, tmp_path):
-    """End-to-end watermark semantics across two availableNow runs of
-    windowed_counts_query (1h watermark, 15min windows, append mode):
-
-    run 1 establishes watermark 11:00 (max ts 12:00 - 1h) and emits the
-    closed 10:00 window. Run 2 resumes the checkpoint and delivers two late
-    events: 10:03 (beyond the watermark -> its window is closed -> DROPPED,
-    no duplicate 10:00-window row may appear) and 11:10 (within the
-    watermark -> KEPT, emitted once 13:00 pushes the watermark past 11:15).
-    """
-    from datetime import datetime
-
-    from rag_pipelines_spark.streaming.incremental import windowed_counts_query
-
-    src = str(tmp_path / "wm-src")
-    sink = str(tmp_path / "wm-sink")
-    ckpt = str(tmp_path / "wm-ckpt")
-    os.makedirs(src, exist_ok=True)
-    schema = "ts timestamp, event_type string"
-
-    def ts(h, m):
-        return datetime(2024, 1, 15, h, m)
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = windowed_counts_query(
-            stream,
-            checkpoint=ckpt,
-            watermark="1 hour",
-            window="15 minutes",
-            sink_path=sink,
-        )
-        q.awaitTermination()
-        return spark.read.parquet(sink)
-
-    # run 1: two events in the 10:00 window; 12:00 advances the watermark
-    write_batch([(ts(10, 0), "ok"), (ts(10, 5), "ok"), (ts(12, 0), "ok")])
-    first = {
-        (r["window_start"], r["event_type"]): r["n"] for r in run_once().collect()
-    }
-    assert first == {(ts(10, 0), "ok"): 2}  # 12:00 window still open
-
-    # run 2: 10:03 is beyond the 11:00 watermark (drop); 11:10 is within
-    # (keep); 13:00 advances the watermark to 12:00 so 11:00 window emits
-    write_batch([(ts(10, 3), "ok"), (ts(11, 10), "ok"), (ts(13, 0), "ok")])
-    second = [
-        (r["window_start"], r["event_type"], r["n"]) for r in run_once().collect()
-    ]
-    assert sorted(second) == [
-        (ts(10, 0), "ok", 2),  # unchanged — the late 10:03 event was dropped
-        (ts(11, 0), "ok", 1),  # the in-bound late event was kept
-    ]
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
