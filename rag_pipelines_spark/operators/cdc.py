@@ -10,8 +10,9 @@ rows, not just add them.
 Scale notes:
   * one full-outer sort-merge join on the key — a single shuffle, AQE
     handles skewed keys; payload comparison is an md5 over concatenated
-    columns computed map-side, so the shuffle carries (key, hash), never
-    the payload itself when `project_hash_early=True`.
+    columns computed map-side: `snapshot_diff` always projects each side
+    to (key, md5) before the join, so the shuffle never carries the
+    payload itself.
 """
 
 from __future__ import annotations

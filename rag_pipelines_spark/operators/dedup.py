@@ -61,14 +61,15 @@ def word_shingles(ws, shingle_size: int = 3):
       * distinct keeps FIRST occurrence order (array_distinct semantics =
         dict.fromkeys).
 
-    Arrow-batched string joins replace the earlier column-expression
-    formulation (transform over sequence + try_element_at + concat_ws):
-    higher-order lambdas evaluate interpreted per element, measured ~9 s
-    for 5000 docs × ~100 shingles at sf0.1 vs ~0.3 s batched — the same
-    interpreted-fold trap as the LSH bucketize (SCALE.md). The historical
-    column-expr pitfalls (when()-wrapped generator input knocking Generate
-    off codegen; element_at throwing under ANSI) are documented at the
-    positions-explode note in SCALE.md.
+    Only callers that need the distinct *set* as one array use it:
+    near_dedup_pairs (exact Jaccard verification) and minhash_candidates
+    (HashingTF input). minhash_band_keys' default path needs no array —
+    it explodes shingle strings by positions-explode (SCALE.md), which
+    is codegen'd and beats this UDF's Python hop. Within an array, the
+    Arrow-batched join beats a column-expression formulation (transform
+    over sequence): higher-order lambdas evaluate interpreted per element,
+    measured ~9 s for 5000 docs × ~100 shingles at sf0.1 vs ~0.3 s
+    batched.
     """
     @pandas_udf("array<string>")
     def f(s: pd.Series) -> pd.Series:
@@ -356,16 +357,24 @@ def minhash_band_keys(
     `shingles_df` lets a caller that already built the (id, shingles)
     frame (e.g. near_dedup_pairs, which also needs the sets for exact
     verification) share the construction instead of duplicating it.
+    Without it, shingles are built by positions-explode (SCALE.md) with no
+    per-doc distinct: a min over a multiset equals the min over its set,
+    so the signatures match the distinct-set path exactly.
     """
     rows_per_band = n_hashes // bands
     if shingles_df is not None:
-        sh = shingles_df
+        ex = shingles_df.select(F.col(id_col), F.explode("shingles").alias("x"))
     else:
-        toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("ws"))
-        sh = toks.select(
-            F.col(id_col), word_shingles(F.col("ws"), shingle_size).alias("shingles")
+        ws = df.select(
+            F.col(id_col), F.split(F.col(text_col), " ").alias("ws")
+        ).filter(F.size("ws") >= shingle_size)
+        ex = ws.select(
+            id_col, "ws",
+            F.explode(F.sequence(F.lit(0), F.size("ws") - shingle_size)).alias("i"),
+        ).select(
+            id_col,
+            F.array_join(F.slice("ws", F.col("i") + 1, shingle_size), " ").alias("x"),
         )
-    ex = sh.select(F.col(id_col), F.explode("shingles").alias("x"))
     sig = ex.groupBy(id_col).agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("x")))).alias(f"s{s}")
@@ -393,8 +402,9 @@ def band_candidate_pairs(
     """Distinct (a_id, b_id) candidate pairs from an (id, band, bkey)
     frame — ids sharing any band bucket, a_id < b_id.
 
-    Pairs come from COLLECTED buckets, not a bands self-join: the shingle
-    UDF defeats exchange-reuse canonicalization, so a self-join would
+    Pairs come from COLLECTED buckets, not a bands self-join: a shingle
+    UDF in the input (the `shingles_df` path of minhash_band_keys)
+    defeats exchange-reuse canonicalization, so a self-join would
     compute the whole signature subtree once PER SIDE (measured 2x at
     sf10 — SCALE.md). groupBy(band,bkey) + per-bucket expansion runs
     signatures once and shuffles once; the expansion work is output-sized

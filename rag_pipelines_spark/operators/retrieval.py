@@ -10,9 +10,9 @@ store.
 Scale design (100 TB corpus, small serving batch of queries):
   * The corpus NEVER shuffles to build an index: term frequencies are
     computed per document against a broadcast list of the batch's distinct
-    query terms (`size(filter(tokens, t))` — JVM higher-order function,
-    no explode of the full token stream, no inverted-index materialization
-    step on the hot path).
+    query terms (`size(tokens) - size(array_remove(tokens, t))` — a
+    codegen'd array scan, no explode of the full token stream, no
+    inverted-index materialization step on the hot path).
   * Document frequencies reduce the (doc × term) hit frame to |terms| rows
     with a map-side partial aggregate — the only data-sized shuffle in the
     whole plan is the final (query_id, doc_id) score combine, whose input
@@ -63,7 +63,9 @@ def term_hits(docs: DataFrame, terms: DataFrame, *, id_col: str = "doc_id",
 
     `terms` must be a tiny one-column ("term") DataFrame — it is broadcast
     and the corpus is scanned exactly once with no explode: tf comes from
-    `size(filter(tokens, x == term))`, a codegen'd array scan per term.
+    `size(tokens) - size(array_remove(tokens, term))`, a codegen'd array
+    scan per term with no lambda. A NULL term gives tf 0 (array_remove
+    with a NULL element is NULL), so it never hits.
     """
     toks = _tokens(F.col(text_col))
     d = docs.select(
@@ -75,7 +77,9 @@ def term_hits(docs: DataFrame, terms: DataFrame, *, id_col: str = "doc_id",
         "doc_id",
         "dl",
         "term",
-        F.size(F.filter("toks", lambda x: x == F.col("term"))).alias("tf"),
+        F.coalesce(
+            F.size("toks") - F.size(F.array_remove("toks", F.col("term"))), F.lit(0)
+        ).alias("tf"),
     )
     return hit.filter(F.col("tf") > 0)
 

@@ -14,9 +14,10 @@ sub-document granularity.
 
 Spark-first design (and the 100 TB argument):
 
-  * grams are built per row with pure column math — ``transform`` over
-    ``sequence(0, size-n)`` slicing the token array — so gram construction
-    is embarrassingly parallel with ZERO shuffle and no Python;
+  * grams are built per row with pure column math — positions-explode of
+    ``sequence(0, size-n)``, each position slicing the once-split token
+    array — so gram construction is embarrassingly parallel with ZERO
+    shuffle, no Python and no interpreted lambda;
   * the one corpus-sized shuffle is the gram-frequency hash aggregate,
     which map-side combines (partial counts per partition before the
     exchange). Grams travel as md5 digests, not strings: fixed 32-byte
@@ -60,21 +61,16 @@ def ngram_occurrences(
 ) -> DataFrame:
     """(id, pos, gh) — every token n-gram occurrence, gh = md5 of the
     space-joined gram. pos is the 0-based index of the gram's first token.
-    Docs with fewer than n tokens contribute nothing. Pure column math."""
-    toks = F.split(F.col(text_col), " ")
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.struct(
-                i.cast("int").alias("pos"),
-                F.md5(F.array_join(F.slice(toks, i + 1, n), " ")).alias("gh"),
-            ),
-        ),
-    ).otherwise(F.array())
-    return df.select(F.col(id_col).alias("id"), F.explode(grams).alias("g")).select(
-        "id", F.col("g.pos").alias("pos"), F.col("g.gh").alias("gh")
-    )
+    Docs with fewer than n tokens contribute nothing. Positions-explode
+    (SCALE.md): the token array is materialized once, then sliced per
+    exploded position in a plain codegen'd projection."""
+    toks = df.select(
+        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("toks")
+    ).filter(F.size("toks") >= n)
+    gram = F.array_join(F.slice("toks", F.col("pos") + 1, n), " ")
+    return toks.select(
+        "id", "toks", F.explode(F.sequence(F.lit(0), F.size("toks") - n)).alias("pos")
+    ).select("id", "pos", F.md5(gram).alias("gh"))
 
 
 def _dup_occurrences(occ: DataFrame, min_count: int) -> DataFrame:

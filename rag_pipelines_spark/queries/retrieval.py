@@ -47,26 +47,25 @@ QUERY_SET: tuple[tuple[int, str], ...] = (
     (3, "customer query line"),
 )
 
-_QUERIES_SCHEMA = "query_id INT, query_text STRING"
-
 
 def _queries_df(spark):
-    return spark.createDataFrame(list(QUERY_SET), _QUERIES_SCHEMA)
+    """(query_id, query_text) — the literal batch as a LocalRelation."""
+    rows = ", ".join(f"({qid}, '{text}')" for qid, text in QUERY_SET)
+    return spark.sql(f"SELECT * FROM (VALUES {rows}) AS q(query_id, query_text)")
 
 
 def _qterms_df(spark):
-    """(query_id, term) built driver-side from the literal batch — skips
-    the explode+distinct jobs (the batch is tiny by definition)."""
-    pairs = [
-        (qid, term)
-        for qid, text in QUERY_SET
-        for term in dict.fromkeys(text.split(" "))
-    ]
-    return spark.createDataFrame(pairs, "query_id INT, term STRING")
+    """(query_id, term), distinct per query, from the literal batch.
+
+    Spark runs the oracle's own VALUES text, so both engines read one
+    literal. It plans as a LocalRelation: no explode+distinct jobs and no
+    Python worker on the serving path (a createDataFrame(list) is a
+    Python RDD, and every scan of it starts one)."""
+    return spark.sql(_sql_qterms())
 
 
 def _sql_qterms() -> str:
-    """VALUES list of (query_id, term) — the oracle's copy of the batch."""
+    """VALUES list of (query_id, term) — the batch, as SQL text."""
     rows = ", ".join(
         f"({qid}, '{term}')"
         for qid, text in QUERY_SET

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from rag_pipelines_spark.functions.text import fingerprint_key
 from rag_pipelines_spark.operators.dedup import exact_dedup, simhash64_df
+from tests.conftest import SF_DIR_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -110,6 +111,39 @@ def test_word_shingles_short_doc_semantics(spark):
         ).fetchall()
     }
     assert got == duck
+
+
+def test_minhash_band_keys_default_path_equals_shingle_set_path(spark):
+    """The positions-explode default path (every shingle occurrence, no
+    per-doc distinct) gives the same (id, band, bkey) rows as the
+    word_shingles distinct-set path: a min over a multiset is the min over
+    its set. Edge rows: NULL text, '', fewer than 3 tokens, exactly 3, and
+    a doc that repeats one shingle; then the smoke corpus."""
+    from rag_pipelines_spark.io import table
+    from rag_pipelines_spark.operators.dedup import minhash_band_keys, word_shingles
+
+    edge = spark.createDataFrame(
+        [(0, None), (1, ""), (2, "a b"), (3, "a a a"), (4, "a a a a a"),
+         (5, "a b c a b c d")],
+        "doc_id BIGINT, text STRING",
+    )
+
+    def rows(k):
+        return sorted(tuple(r) for r in k.collect())
+
+    for df in (edge, table(spark, SF_DIR_SMOKE, "documents").select("doc_id", "text")):
+        sh = df.select(
+            "doc_id", word_shingles(F.split("text", " "), 3).alias("shingles")
+        )
+        fast = rows(minhash_band_keys(df, "doc_id", "text"))
+        assert fast
+        assert fast == rows(minhash_band_keys(df, "doc_id", "text", shingles_df=sh))
+    # docs 3 and 4 share the one distinct shingle "a a a": same four keys
+    keys = {}
+    for r in minhash_band_keys(edge, "doc_id", "text").collect():
+        keys.setdefault(r.doc_id, []).append((r.band, r.bkey))
+    assert set(keys) == {3, 4, 5}
+    assert sorted(keys[3]) == sorted(keys[4])
 
 
 def test_simhash_stability_and_locality(spark):
@@ -291,7 +325,7 @@ def test_line_dedup_idempotent(spark):
     from rag_pipelines_spark.io import table
     from rag_pipelines_spark.operators.dedup import line_dedup
 
-    d = table(spark, "/root/testdata/sf0.001", "documents")
+    d = table(spark, SF_DIR_SMOKE, "documents")
     once = line_dedup(d, "doc_id", "text")
     twice = line_dedup(
         once.select("doc_id", F.col("clean_text").alias("text")), "doc_id", "text"

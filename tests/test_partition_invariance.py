@@ -22,7 +22,7 @@ import pytest
 
 from rag_pipelines_spark.registry import load_all
 
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 REG = load_all()
 
 # One per determinism mechanism: decimal-sum aggregates (tpch q1/q5),

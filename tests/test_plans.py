@@ -10,7 +10,7 @@ import pytest
 
 from rag_pipelines_spark.registry import load_all
 
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 REG = load_all()
 
 
@@ -282,3 +282,31 @@ def test_batch_assign_no_global_sort_window(spark):
     # exactly one SinglePartition exchange (the per-block offsets window),
     # fed by the counts aggregate — never by the document scan directly
     assert plan.count("SinglePartition") == 1
+
+
+def test_text_kernels_plan_no_lambda_or_python(spark):
+    """The n-gram, MinHash-shingle and BM25 tf kernels stay codegen'd
+    column math (no interpreted higher-order lambda, no Python UDF hop),
+    and the serving batch's query terms plan as a local relation, never a
+    Python RDD whose every scan starts a Python worker."""
+    from rag_pipelines_spark.io import table
+    from rag_pipelines_spark.operators.dedup import minhash_band_keys
+    from rag_pipelines_spark.operators.retrieval import term_hits
+    from rag_pipelines_spark.operators.substrdedup import ngram_occurrences
+    from rag_pipelines_spark.queries.retrieval import _qterms_df
+
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    docs = table(spark, SF, "documents")
+    qterms = _qterms_df(spark)
+    kernels = {
+        "ngram_occurrences": ngram_occurrences(docs, "doc_id", "text", 8),
+        "minhash_band_keys": minhash_band_keys(docs, "doc_id", "text"),
+        "term_hits": term_hits(docs, qterms.select("term").distinct()),
+    }
+    for name, df in kernels.items():
+        plan = executed(df)
+        for bad in ("lambdafunction", "ArrowEvalPython", "BatchEvalPython"):
+            assert bad not in plan, f"{name}: {bad} in the executed plan"
+    assert "ExistingRDD" not in executed(qterms)

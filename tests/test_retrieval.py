@@ -19,6 +19,7 @@ from rag_pipelines_spark.operators.retrieval import (
     term_hits,
     topk_per_query,
 )
+from tests.conftest import SF_DIR_SMOKE
 
 DOCS = [
     (1, "spark join join fast"),
@@ -69,6 +70,38 @@ def test_term_hits_tf_and_dl(spark):
     assert rows[(1, "join")] == (2, 4)
     assert rows[(3, "join")] == (2, 5)
     assert (4, "scan") not in rows  # tf=0 rows are dropped
+
+
+def test_term_hits_tf_equals_python_count(spark):
+    """tf = size(toks) - size(array_remove(toks, term)) counts exactly what
+    Python's list.count does, over NULL text, '', short docs and repeated
+    terms; a NULL term never hits (tf 0, dropped) and '' matches the one
+    empty token of a '' doc."""
+    docs = [
+        (0, None),
+        (1, ""),
+        (2, "scan"),
+        (3, "scan scan join scan"),
+        (4, "join  join"),
+        (5, "table"),
+    ]
+    terms = ["scan", "join", "", None, "absent"]
+    got = {
+        (r.doc_id, r.term): (r.tf, r.dl)
+        for r in term_hits(
+            spark.createDataFrame(docs, "doc_id INT, text STRING"),
+            spark.createDataFrame([(x,) for x in terms], "term STRING"),
+        ).collect()
+    }
+    want = {
+        (d, x): (text.split(" ").count(x), len(text.split(" ")))
+        for d, text in docs
+        if text is not None
+        for x in terms
+        if x is not None and text.split(" ").count(x) > 0
+    }
+    assert got == want
+    assert got[(3, "scan")] == (3, 4) and got[(4, "")] == (1, 3)
 
 
 def test_bm25_matches_python_oracle(spark):
@@ -348,7 +381,7 @@ def test_maxsim_bounded_by_token_count(spark):
     )
 
     toks = embedding_tokens(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        spark.read.parquet(f"{SF_DIR_SMOKE}/embeddings.parquet")
     )
     scored = maxsim_scores(toks.filter(F.col("id") < 4), toks,
                            exclude_self=True)
@@ -386,7 +419,7 @@ def test_maxsim_pruned_scores_equal_exact_on_shared_pairs(spark):
     )
 
     toks = embedding_tokens(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        spark.read.parquet(f"{SF_DIR_SMOKE}/embeddings.parquet")
     )
     qtoks = toks.filter(F.col("id") < 4)
     exact = {

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
@@ -52,10 +52,10 @@ def test_replicated_skew_join_matches_plain(spark):
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Bucketing both sides on the join key removes the shuffle entirely —
     the join plan must contain no Exchange over the bucketed scans."""
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"
     )
-    o = spark.read.parquet("/root/testdata/sf0.01/orders.parquet").select(
+    o = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
     )
     import shutil

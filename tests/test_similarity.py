@@ -11,7 +11,7 @@ from rag_pipelines_spark.operators.similarity import (
     cosine_topk_lsh,
 )
 
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 
 
 @pytest.fixture(scope="module")

@@ -8,7 +8,7 @@ import pytest
 
 from rag_pipelines_spark.io import TABLES, table
 
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF_DIR as SF
 
 
 @pytest.fixture(scope="module")

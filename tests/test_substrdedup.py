@@ -5,6 +5,7 @@ cases (short docs, fully-duplicated docs, within-doc repeats)."""
 
 from __future__ import annotations
 
+import hashlib
 from collections import Counter
 
 import pytest
@@ -13,6 +14,7 @@ from hypothesis import strategies as st
 
 from rag_pipelines_spark.operators.substrdedup import (
     duplicated_ngram_spans,
+    ngram_occurrences,
     substring_dedup,
 )
 
@@ -165,6 +167,38 @@ def test_min_count_three(spark):
     docs = [(0, "a b c"), (1, "a b d"), (2, "a b e")]
     assert _spark_spans(spark, docs, 2, 3) == brute_spans(docs, 2, 3)
     assert brute_spans(docs, 2, 3) == [(0, 0, 1, 2), (1, 0, 1, 2), (2, 0, 1, 2)]
+
+
+@pytest.mark.parametrize("n", [1, 3])
+def test_ngram_occurrences_match_python_reference(spark, n):
+    """Every (id, pos, md5(' '.join(toks[pos:pos+n]))) and nothing else:
+    NULL text, '' and docs shorter than n give no rows ('' is one empty
+    token, so it gives one gram at n=1); a repeated gram gives one row
+    per position."""
+    docs = [
+        (0, None),
+        (1, ""),
+        (2, "a b"),  # fewer than 3 tokens
+        (3, "a b c"),  # exactly 3 tokens
+        (4, "a b c a b c a"),  # repeats the gram "a b c"
+        (5, "x  y"),  # an empty token between two spaces
+    ]
+    got = sorted(
+        (r.id, r.pos, r.gh)
+        for r in ngram_occurrences(
+            spark.createDataFrame(docs, "doc_id INT, text STRING"), "doc_id", "text", n
+        ).collect()
+    )
+    want = sorted(
+        (i, p, hashlib.md5(" ".join(toks[p : p + n]).encode()).hexdigest())
+        for i, text in docs
+        if text is not None
+        for toks in [text.split(" ")]
+        for p in range(len(toks) - n + 1)
+    )
+    assert got == want
+    if n == 3:
+        assert [p for i, p, _ in got if i == 4] == [0, 1, 2, 3, 4]
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,7 @@ from rag_pipelines_spark.operators.wordpiece import (
     wordpiece_segment,
     wordpiece_vocab,
 )
+from tests.conftest import SF_DIR_SMOKE
 
 
 def _py_vocab(words: dict[str, int], vocab_size: int,
@@ -123,7 +124,7 @@ def test_fertility_at_least_one(spark):
     n_pieces >= n_words."""
     from rag_pipelines_spark.queries.bpe import q_tokenizer_fertility
 
-    rows = q_tokenizer_fertility(spark, "/root/testdata/sf0.001").collect()
+    rows = q_tokenizer_fertility(spark, SF_DIR_SMOKE).collect()
     assert rows
     for r in rows:
         assert r.n_pieces >= r.n_words
