@@ -6,6 +6,12 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 One shared SparkSession; per-query timing = full plan execution to a
 driver-side count/collect of the (small) result.
+
+Each measured run also runs under a `perfbench.tracing.Tracer` span, and
+its engine counters (jobs, stages, tasks, task time, driver gap, core
+utilization, shuffle, spill, GC, scan input) are read right after it.
+`BENCH_profile.json`, written next to this file, holds those counters
+and `wall_s` of the run each headline entry reports (the min run).
 """
 
 from __future__ import annotations
@@ -14,6 +20,8 @@ import json
 import os
 import sys
 import time
+
+from perfbench.tracing import Tracer
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -156,20 +164,29 @@ HEADLINE = CORE + EXTRAS + CORE_R4
 
 def main() -> None:
     t0 = time.time()
-    # SPARK_GRAFT_BENCH_QUERIES=q_a,q_b restricts the measured set (the
-    # sf1 scaling rung runs the top-10 entries only); unset = the full
-    # HEADLINE set. An unknown name exits non-zero before any work, so a
-    # typo'd list cannot emit a near-empty headline.
-    only_env = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
-    only = {s.strip() for s in only_env.split(",") if s.strip()} or None
-    unknown = sorted((only or set()) - set(HEADLINE) - {"pipeline_watcher"})
-    if unknown:
-        sys.exit(f"SPARK_GRAFT_BENCH_QUERIES: unknown names {unknown}")
-
+    # SPARK_GRAFT_BENCH_QUERIES=q_a,q_b restricts the measured set to any
+    # registered queries (plus pipeline_watcher): the sf1 scaling rung
+    # runs the top-10 entries only, and a noise adjudication re-measures
+    # the few entries in question. HEADLINE names keep HEADLINE order,
+    # others follow in the order given; unset = the full HEADLINE set. An
+    # unknown name exits non-zero before Spark starts, so a typo'd list
+    # cannot emit a near-empty headline.
     from rag_pipelines_spark.registry import load_all
-    from rag_pipelines_spark.session import get_spark
 
     registry = load_all()
+    only_env = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
+    only = list(dict.fromkeys(s.strip() for s in only_env.split(",") if s.strip()))
+    unknown = [n for n in only if n not in registry and n != "pipeline_watcher"]
+    if unknown:
+        sys.exit(f"SPARK_GRAFT_BENCH_QUERIES: unknown names {unknown}")
+    names = HEADLINE
+    if only:
+        names = [n for n in HEADLINE if n in only] + [
+            n for n in only if n not in HEADLINE and n != "pipeline_watcher"
+        ]
+
+    from rag_pipelines_spark.session import get_spark
+
     spark = get_spark("rag-pipelines-spark-bench")
     # Pin WindowExec's logger to ERROR for this bench session only. Its one
     # WARN ("No Partition Defined ... single partition") fires for the
@@ -187,15 +204,13 @@ def main() -> None:
     # warm-up: run every headline shape once at the smallest SF so JIT/
     # codegen/parquet-footer costs don't land on the first measured query
     warm_dir = "/root/testdata/sf0.001"
-    for name in HEADLINE:
-        if only is not None and name not in only:
-            continue
-        q = registry.get(name)
-        if q is not None:
-            try:
-                q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception as e:  # measured below; say why warm-up missed
-                print(f"# warm-up {name} failed: {e!r:.300}", file=sys.stderr)
+    for name in names:
+        try:
+            registry[name].fn(spark, warm_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        except Exception as e:  # measured below; say why warm-up missed
+            print(f"# warm-up {name} failed: {e!r:.300}", file=sys.stderr)
 
     # warm the measured-SF inputs too (footer parse + OS page cache):
     # without this the first measured query absorbs the whole cold-read
@@ -210,10 +225,9 @@ def main() -> None:
         except Exception as e:
             print(f"# warm-up table {tname} failed: {e!r:.300}", file=sys.stderr)
 
-    # min-of-N protocol (tools/isolated_bench.py discipline, now the
-    # default): N round-major passes, min per query. A single shared-JVM
-    # pass carries +-0.5 s of GC/codegen noise per sub-2 s entry and one
-    # box-wide load spike skews EVERY query the same direction (the r7
+    # min-of-N protocol: N round-major passes, min per query. A single
+    # shared-JVM pass carries +-0.5 s of GC/codegen noise per sub-2 s entry
+    # and one box-wide load spike skews EVERY query the same direction (the r7
     # "+12% uniform drift" cost a diagnosis round); the min of 3 erases
     # both. Since r9 EVERY reported query pays the N passes (r8 ran the
     # frozen CORE/CORE_R4/watcher sets min-of-3 but extras 1-pass, so a
@@ -224,23 +238,35 @@ def main() -> None:
     # records which regime produced each file. SPARK_GRAFT_BENCH_RUNS=1
     # restores the old single pass everywhere.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    samples: dict[str, list[float]] = {}
-    for r in range(runs):
-        for name in HEADLINE:
-            if only is not None and name not in only:
-                continue
-            q = registry.get(name)
-            if q is None:
-                continue
+    # Every measured run is one Tracer op. Its counters are read right
+    # after the span: the status store keeps only spark.ui.retainedJobs
+    # (1000) jobs, fewer than one full pass launches. bench.py's own timer
+    # sits inside the span, so the job-group calls stay unmeasured.
+    cores = spark.sparkContext.defaultParallelism
+    tracer = Tracer(spark, cores)
+    # name -> [(wall s, engine counters)], one entry per run
+    samples: dict[str, list[tuple[float, dict]]] = {}
+
+    def measure(name: str, run) -> float:
+        op = len(tracer.spans)  # one span per op: a fresh id per (query, run)
+        with tracer.span(name, op):
             start = time.time()
-            df = q.fn(spark, SF_DIR)
+            run()
+            dt = round(time.time() - start, 4)
+        samples.setdefault(name, []).append((dt, tracer.engine_counters(op)))
+        return dt
+
+    for r in range(runs):
+        for name in names:
             # noop sink: computes every column of every row (count() would
             # let Catalyst prune the projections away), writes nothing
-            df.write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - start, 4)
-            samples.setdefault(name, []).append(dt)
+            dt = measure(
+                name,
+                lambda: registry[name].fn(spark, SF_DIR).write.format("noop")
+                .mode("overwrite")
+                .save(),
+            )
             print(f"# run{r + 1} {name}: {dt:.3f}s", file=sys.stderr)
-    timings: dict[str, float] = {n: min(v) for n, v in samples.items()}
 
     # end-to-end watcher pipeline (scan -> fingerprint -> delta -> fetch):
     # the reference sustains ~0.9-1.6 rec/s on this dataflow (BASELINE.md);
@@ -266,20 +292,24 @@ def main() -> None:
             F.concat(F.lit("<table>"), F.col("body"), F.lit("</table>")).alias("html"),
         )
     )
-    if only is None or "pipeline_watcher" in only:
+    if not only or "pipeline_watcher" in only:
         n_docs = docs.count()
         for r in range(runs):
-            start = time.time()
-            res = watcher_pipeline(pages, master=None)
-            res.new_records.write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - start, 4)
-            samples.setdefault("pipeline_watcher", []).append(dt)
+            dt = measure(
+                "pipeline_watcher",
+                lambda: watcher_pipeline(pages, master=None)
+                .new_records.write.format("noop")
+                .mode("overwrite")
+                .save(),
+            )
             print(
                 f"# run{r + 1} pipeline_watcher: {dt:.3f}s ({n_docs} records, "
                 f"{n_docs / dt:.0f} rec/s vs reference ~1.6 rec/s)",
                 file=sys.stderr,
             )
-        timings["pipeline_watcher"] = min(samples["pipeline_watcher"])
+    # the reported run per entry: the min wall (first one on a tie)
+    best = {n: min(v, key=lambda s: s[0]) for n, v in samples.items()}
+    timings: dict[str, float] = {n: b[0] for n, b in best.items()}
 
     total = round(sum(timings.values()), 4)
     # core = frozen round-1 set (+ pipeline_watcher, also measured since
@@ -297,6 +327,22 @@ def main() -> None:
         sf: float | str = float(sf_tag)
     except ValueError:
         sf = sf_tag  # non-numeric dir suffix (e.g. a probe dir)
+    profile = {
+        "sf": sf,
+        "runs": runs,
+        "cores": cores,
+        "queries": {
+            n: {
+                "wall_s": wall,
+                **{k: round(v, 4) if isinstance(v, float) else v for k, v in c.items()},
+            }
+            for n, (wall, c) in best.items()
+        },
+    }
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "BENCH_profile.json"), "w") as f:
+        json.dump(profile, f, indent=1)
+        f.write("\n")
     print(
         json.dumps(
             {

@@ -84,14 +84,16 @@ def term_hits(docs: DataFrame, terms: DataFrame, *, id_col: str = "doc_id",
     return hit.filter(F.col("tf") > 0)
 
 
-def bm25_scores(docs: DataFrame, queries: DataFrame, *, id_col: str = "doc_id",
+def bm25_scores(docs: DataFrame, queries: DataFrame | None = None, *,
+                id_col: str = "doc_id",
                 text_col: str = "text",
                 corpus_stats: tuple[DataFrame, DataFrame] | None = None,
                 qterms: DataFrame | None = None) -> DataFrame:
     """BM25 score of every (query_id, doc_id) pair with ≥1 term match.
 
     `queries` is (query_id, query_text). Returns (query_id, doc_id, score)
-    with score already rounded to 9 decimals (cross-engine stable).
+    with score already rounded to 9 decimals (cross-engine stable). It is
+    read only when `qterms` is None; passing neither raises ValueError.
 
     `corpus_stats`, when given, is the (terms, totals) pair maintained by
     `merge_corpus_stats` — idf/avgdl then come from the accreted state
@@ -108,6 +110,8 @@ def bm25_scores(docs: DataFrame, queries: DataFrame, *, id_col: str = "doc_id",
     the literal fast path job-free).
     """
     if qterms is None:
+        if queries is None:
+            raise ValueError("bm25_scores needs queries or qterms")
         qterms = queries.select(
             "query_id", F.explode(F.split("query_text", " ")).alias("term")
         ).distinct()

@@ -2726,8 +2726,9 @@ def _sql_ivf_topk(seed_where: str = "") -> str:
     "nearest-cell corpus assignment, nprobe=2 query probes, exact "
     "re-rank of probed cells only — candidates come from an equi-join "
     "on the cell id, never query x corpus. The oracle-CHECKED twin of "
-    "the numpy IVF tier (q_ann_ivf stays the production rows-only path "
-    "with kmeans refinement); output contract matches q_cosine_topk so "
+    "the numpy IVF tier (q_ann_ivf stays the production rows-only path, "
+    "hash-sampled centroids without Lloyd refinement); output contract "
+    "matches q_cosine_topk so "
     "recall vs exact is directly measurable in the driver artifacts",
 )
 def q_ann_ivf_exact(spark, sf_dir):

@@ -48,12 +48,6 @@ QUERY_SET: tuple[tuple[int, str], ...] = (
 )
 
 
-def _queries_df(spark):
-    """(query_id, query_text) — the literal batch as a LocalRelation."""
-    rows = ", ".join(f"({qid}, '{text}')" for qid, text in QUERY_SET)
-    return spark.sql(f"SELECT * FROM (VALUES {rows}) AS q(query_id, query_text)")
-
-
 def _qterms_df(spark):
     """(query_id, term), distinct per query, from the literal batch.
 
@@ -136,7 +130,7 @@ def _sql_bm25_scored() -> str:
 )
 def q_bm25_topk(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
-    scored = bm25_scores(docs, _queries_df(spark), qterms=_qterms_df(spark))
+    scored = bm25_scores(docs, qterms=_qterms_df(spark))
     return topk_per_query(scored, 10).select("query_id", "doc_id", "score", "rk")
 
 
@@ -267,7 +261,7 @@ def q_rrf_fusion(spark, sf_dir):
     # output is bit-identical to the sequential composition.
     lex, vec = run_all(
         lambda: topk_per_query(
-            bm25_scores(docs, _queries_df(spark), qterms=_qterms_df(spark)),
+            bm25_scores(docs, qterms=_qterms_df(spark)),
             20,
         ).select("query_id", "doc_id", "rk"),
         lambda: _cosine_ranked(spark, sf_dir, 20).localCheckpoint(eager=True),
@@ -315,7 +309,7 @@ def q_rrf_fusion(spark, sf_dir):
 def q_retrieval_eval(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     lex = topk_per_query(
-        bm25_scores(docs, _queries_df(spark), qterms=_qterms_df(spark)), 20
+        bm25_scores(docs, qterms=_qterms_df(spark)), 20
     ).select(
         "query_id", "doc_id", "rk"
     )
@@ -447,7 +441,6 @@ def q_bm25_from_state(spark, sf_dir):
         )
     scored = bm25_scores(
         docs,
-        _queries_df(spark),
         corpus_stats=corpus_stats(spark, state),
         qterms=_qterms_df(spark),
     )
@@ -522,7 +515,7 @@ def q_term_pmi(spark, sf_dir):
 def q_hard_negatives(spark, sf_dir):
     docs = t(spark, sf_dir, "documents")
     lex = topk_per_query(
-        bm25_scores(docs, _queries_df(spark), qterms=_qterms_df(spark)), 20
+        bm25_scores(docs, qterms=_qterms_df(spark)), 20
     ).select("query_id", "doc_id", "rk")
     vec = _cosine_ranked(spark, sf_dir, 20)
     pos = vec.filter(F.col("rk") <= 1).select(
@@ -633,8 +626,8 @@ def q_maxsim_topk(spark, sf_dir):
     # fixture, (b) the MaxSim recall ladder
     # (tools/ann_recall_ladder.py --maxsim) at 2k/20k/200k.
     doc="pruned MaxSim tier (PLAID / ColBERTv2 two-stage): IVF cells "
-    "over token sub-vectors (deterministic hash-sampled centroids, "
-    "Lloyd-refined) produce candidate (query, doc) pairs from an "
+    "over token sub-vectors (deterministic hash-sampled centroids, no "
+    "Lloyd refinement) produce candidate (query, doc) pairs from an "
     "equi-join on cell + a >= min_matches distinct-query-token vote; "
     "the exact nano-quantized MaxSim re-ranks candidates only — "
     "O(candidates), never |Q|x corpus. Same top-5-per-query shape as "

@@ -115,6 +115,11 @@ def test_bm25_matches_python_oracle(spark):
         assert got[k] == pytest.approx(want[k], abs=1e-9), k
 
 
+def test_bm25_needs_queries_or_qterms(spark):
+    with pytest.raises(ValueError, match="queries or qterms"):
+        bm25_scores(_docs(spark))
+
+
 def test_bm25_rare_term_outscores_common(spark):
     """One doc holding the corpus's only occurrence of a term must rank
     first for a query on that term."""

@@ -29,14 +29,15 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 DEFAULT_DIRS = [
     "/root/testdata/sf0.1",
-    "/root/repo/_testdata/sf1",
-    "/root/repo/_testdata/sf10",
+    os.path.join(ROOT, "_testdata", "sf1"),
+    os.path.join(ROOT, "_testdata", "sf10"),
 ]
 N_QUERIES = 50
 K = 10

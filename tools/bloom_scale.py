@@ -14,7 +14,8 @@ import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rag_pipelines_spark.io import table  # noqa: E402
 from rag_pipelines_spark.operators.bloomfilter import (  # noqa: E402
@@ -26,8 +27,8 @@ from rag_pipelines_spark.session import get_spark  # noqa: E402
 
 LADDER = [
     "/root/testdata/sf0.1",
-    "/root/repo/_testdata/sf1",
-    "/root/repo/_testdata/sf10",
+    os.path.join(ROOT, "_testdata", "sf1"),
+    os.path.join(ROOT, "_testdata", "sf10"),
 ]
 
 

@@ -14,7 +14,7 @@ from the driver's sf0.1 fixtures.
 
 Usage:
     python tools/gen_sf.py [sf] [out_dir]
-    # defaults: sf=1, out_dir=/root/repo/_testdata/sf{sf}
+    # defaults: sf=1, out_dir=<checkout>/_testdata/sf{sf}
 
 Not driver data: oracle correctness always runs at the driver's sf0.01;
 these tables are for bench/scaling runs only (point SPARK_GRAFT_SF_DIR at
@@ -26,7 +26,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -310,7 +311,7 @@ def main() -> None:
         hot_user_frac = float(args[j + 1])
         del args[j : j + 2]
     sf = float(args[0]) if args else 1.0
-    out = args[1] if len(args) > 1 else f"/root/repo/_testdata/sf{sf:g}"
+    out = args[1] if len(args) > 1 else os.path.join(ROOT, "_testdata", f"sf{sf:g}")
     from rag_pipelines_spark.session import get_spark
 
     spark = get_spark("gen-sf")

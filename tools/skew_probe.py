@@ -29,7 +29,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -54,7 +55,7 @@ def main() -> None:
     from rag_pipelines_spark.session import get_spark
     from tools.gen_sf import gen_events
 
-    out = "/root/repo/_testdata/sf-skew"
+    out = os.path.join(ROOT, "_testdata", "sf-skew")
     spark = get_spark("skew-probe")
     n_users = max(n // 667, 1)  # keep the driver's ~667 events/user density
     gen_events(spark, n, n_users, hot_user_frac=frac).write.mode(
