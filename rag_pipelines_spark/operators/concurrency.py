@@ -10,9 +10,12 @@ second job's tasks back-fill executors freed by the first job's tail —
 pure wall-clock overlap, no plan or result change (each frame's rows
 are exactly what the sequential call produced).
 
-A plain thread pool is sufficient here (the guide notes
-InheritableThread only matters for JVM thread-local properties like job
-descriptions, which these short materialization jobs don't set).
+Each thunk is wrapped with `pyspark.util.inheritable_thread_target`,
+so its pool thread runs with the caller's JVM local properties (job
+group, job description, scheduler pool) and session tags. A bare pool
+thread starts with none of them: its jobs would fall outside the
+caller's job group, and a profiler that counts jobs by group (perfbench
+`Tracer`, bench.py's `BENCH_profile.json`) would miss them.
 """
 
 from __future__ import annotations
@@ -20,7 +23,8 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 __all__ = ["checkpoint_all", "run_all"]
 
@@ -45,8 +49,10 @@ def run_all(*thunks: Callable[[], _T]) -> tuple[_T, ...]:
     """
     if len(thunks) == 1:
         return (thunks[0](),)
+    # wrapping captures the caller's properties now, on this thread
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         return tuple(f.result() for f in futures)
 
 

@@ -21,11 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from rag_pipelines_spark.operators.pagerank import (
-    TOTAL_MASS,
-    pagerank,
-    personalized_pagerank,
-)
+from rag_pipelines_spark.operators.pagerank import TOTAL_MASS, pagerank
 from rag_pipelines_spark.queries._util import Key, register_checksum, t
 from rag_pipelines_spark.registry import register
 
@@ -177,8 +173,8 @@ def q_pagerank(spark, sf_dir):
 
 
 def _ppr_with(iters: int = _ITERS) -> str:
-    """WITH-chain replaying personalized_pagerank: teleport + dangling
-    mass return to the seed set only (suppliers with s_suppkey%10=0)."""
+    """WITH-chain replaying pagerank with a seed set: teleport + dangling
+    mass return to the seeds only (suppliers with s_suppkey%10=0)."""
     parts = [
         *_SQL_GRAPH,
         """seeds AS MATERIALIZED (
@@ -226,7 +222,7 @@ def _ppr_with(iters: int = _ITERS) -> str:
     "(unreachable from the seeds) are filtered — at corpus scale the "
     "output is the reachable neighborhood, not the node universe. Same "
     "scaled-BIGINT floor-division contract as q_pagerank "
-    "(operators/pagerank.py::personalized_pagerank)",
+    "(operators/pagerank.py::pagerank with a seed set)",
 )
 def q_pagerank_personalized(spark, sf_dir):
     nodes, edges = _graph_frames(spark, sf_dir)
@@ -236,7 +232,7 @@ def q_pagerank_personalized(spark, sf_dir):
         .select(_enc_s("s_suppkey").alias("node"))
     )
     return (
-        personalized_pagerank(nodes, edges, seeds, iters=_ITERS)
+        pagerank(nodes, edges, seeds, iters=_ITERS)
         .filter(F.col("rank") > 0)
         .select(_decode_node().alias("node"), F.col("rank").alias("rank_num"))
     )

@@ -9,12 +9,9 @@ from collections import Counter, defaultdict
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+import pytest
 
-from rag_pipelines_spark.operators.pagerank import (
-    TOTAL_MASS,
-    pagerank,
-    personalized_pagerank,
-)
+from rag_pipelines_spark.operators.pagerank import TOTAL_MASS, pagerank
 
 
 def _ref(nodes, edges, iters, total=TOTAL_MASS, num=85, den=100):
@@ -36,12 +33,17 @@ def _ref(nodes, edges, iters, total=TOTAL_MASS, num=85, den=100):
     return r
 
 
-def _spark_ranks(spark, nodes, edges, iters):
+def _spark_ranks(spark, nodes, edges, iters, seeds=None):
     ndf = spark.createDataFrame([(v,) for v in nodes], "node string")
     edf = spark.createDataFrame(list(edges), "src string, dst string")
+    sdf = (
+        None
+        if seeds is None
+        else spark.createDataFrame([(v,) for v in seeds], "node string")
+    )
     return {
         row["node"]: row["rank"]
-        for row in pagerank(ndf, edf, iters=iters).collect()
+        for row in pagerank(ndf, edf, sdf, iters=iters).collect()
     }
 
 
@@ -54,6 +56,8 @@ def test_hand_graph_exact(spark):
     want = _ref(nodes, edges, 4)
     assert got == want
     assert got["a"] == got["b"] > got["c"] > 0
+    # classic PageRank is the seed set of every node
+    assert _spark_ranks(spark, nodes, edges, iters=4, seeds=nodes) == got
 
 
 def test_mass_conservation_bound(spark):
@@ -97,13 +101,7 @@ def test_personalized_matches_reference_and_localizes(spark):
     # -> c and d must end at EXACTLY zero (no teleport ever reaches them)
     nodes = ["a", "b", "c", "d"]
     edges = [("a", "b"), ("b", "a"), ("c", "d"), ("d", "c")]
-    ndf = spark.createDataFrame([(v,) for v in nodes], "node string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    sdf = spark.createDataFrame([("a",)], "node string")
-    got = {
-        row["node"]: row["rank"]
-        for row in personalized_pagerank(ndf, edf, sdf, iters=4).collect()
-    }
+    got = _spark_ranks(spark, nodes, edges, iters=4, seeds=["a"])
     assert got == _ref_personalized(nodes, {"a"}, edges, 4)
     assert got["c"] == got["d"] == 0
     assert got["a"] > 0 and got["b"] > 0
@@ -122,9 +120,20 @@ def test_random_graphs_match_reference(spark, data):
         )
     )
     iters = data.draw(st.integers(min_value=1, max_value=4))
-    assert _spark_ranks(spark, nodes, edges, iters) == _ref(
-        nodes, edges, iters
+    seeds = data.draw(
+        st.none() | st.sets(st.sampled_from(nodes), min_size=1)
     )
+    want = (
+        _ref(nodes, edges, iters)
+        if seeds is None
+        else _ref_personalized(nodes, seeds, edges, iters)
+    )
+    assert _spark_ranks(spark, nodes, edges, iters, seeds) == want
+
+
+def test_empty_seed_set_raises(spark):
+    with pytest.raises(ValueError, match="seed set is empty"):
+        _spark_ranks(spark, ["a", "b"], [("a", "b")], iters=2, seeds=[])
 
 
 def test_narrow_encoding_decodes_to_reference_strings(spark):
@@ -187,3 +196,18 @@ def test_checkpoint_all_preserves_rows(spark):
     assert cb.count() == 7
     (one,) = checkpoint_all(a)
     assert one.count() == 100
+
+
+def test_checkpoint_all_jobs_keep_the_callers_job_group(spark):
+    # the pool threads must inherit the caller's local properties, or a
+    # job-group based profiler (perfbench Tracer) misses their jobs
+    from rag_pipelines_spark.operators.concurrency import checkpoint_all
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-all-group", "checkpoint_all inheritance")
+    try:
+        checkpoint_all(spark.range(10), spark.range(5))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ckpt-all-group")) == 2

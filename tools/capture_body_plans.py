@@ -88,59 +88,18 @@ def _bpe_merge_body(spark):
 def _pagerank_iter_body(spark):
     """One PageRank iteration body on the BIGINT-keyed graph, ending at
     the rank frame the production loop would checkpoint (the committed
-    q_pagerank plan shows only the final decode projection). Mirrors
-    operators/pagerank.py::pagerank's loop body exactly, on checkpointed
-    static frames built the way the operator builds them."""
-    from pyspark.sql import functions as F
-
-    from rag_pipelines_spark.operators.concurrency import checkpoint_all
-    from rag_pipelines_spark.operators.pagerank import TOTAL_MASS, _maybe_bcast
+    q_pagerank plan shows only the final decode projection). Built by
+    operators/pagerank.py's own `_prepare` and `_step`."""
+    from rag_pipelines_spark.operators.pagerank import (
+        TOTAL_MASS,
+        _prepare,
+        _step,
+    )
     from rag_pipelines_spark.queries.graphrank import _graph_frames
 
     nodes, edges = _graph_frames(spark, SF_DIR)
-    n1, ec = checkpoint_all(
-        nodes.select("node"), edges.select("src", "dst")
-    )
-    params = n1.agg(
-        F.count("*").alias("n"),
-        F.expr(f"CAST({TOTAL_MASS} AS BIGINT) div count(*)").alias("s"),
-    ).localCheckpoint(eager=True)
-    deg = ec.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("outdeg")
-    )
-    nd = n1.join(deg, "node", "left").localCheckpoint(eager=True)
-    small = params.first()["n"] <= 4_000_000
-    ranks = nd.crossJoin(F.broadcast(params)).select(
-        "node", "outdeg", F.col("s").cast("long").alias("r")
-    ).localCheckpoint(eager=True)
-    insum = (
-        _maybe_bcast(
-            ranks.select("node", F.expr("r div outdeg").alias("c")), small
-        )
-        .join(ec, F.col("node") == ec["src"])
-        .groupBy("dst")
-        .agg(F.sum("c").alias("m"))
-    )
-    dang1 = ranks.filter(F.col("outdeg").isNull()).agg(
-        F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dang")
-    )
-    base = (
-        F.expr("((100 - 85) * s) div 100")
-        + F.expr("(85 * (dang div n)) div 100")
-    )
-    return (
-        nd.crossJoin(F.broadcast(params))
-        .crossJoin(F.broadcast(dang1))
-        .join(_maybe_bcast(insum, small), nd["node"] == insum["dst"], "left")
-        .select(
-            "node",
-            "outdeg",
-            (
-                base
-                + F.expr("(85 * coalesce(m, CAST(0 AS BIGINT))) div 100")
-            ).cast("long").alias("r"),
-        )
-    )
+    g, ranks = _prepare(nodes, edges, None, TOTAL_MASS, 85, 100)
+    return _step(g, ranks)
 
 
 def _freq_merge_body(spark):
