@@ -129,8 +129,9 @@ EXTRAS = [
     # (operators/bpe.py)
     "q_bpe_encode",
     # round 9 (cont.): quantized-integer PageRank over the customer<->
-    # supplier graph — 8 iterations, each one |nodes|-row join shuffle +
-    # one map-side-combinable agg (operators/pagerank.py)
+    # supplier graph — 8 iterations, each two broadcast |nodes|-row joins
+    # (below 4M nodes) + one map-side-combinable agg shuffle
+    # (operators/pagerank.py)
     "q_pagerank",
     # round 9 (cont.): ColBERT late-interaction top-k — broadcast query
     # tokens, one map-side-combinable (q, d, q_tok) max-reduce shuffle

@@ -21,16 +21,19 @@ Design choices, each load-bearing at scale:
     the init batch): no float averaging, so the DuckDB oracle
     reproduces the whole index life cycle and the serve query is
     hash-checked against it (q_ann_from_state).
-  * **Append = postings rows only.** A batch shuffles nothing but its
-    own (cell, id) assignment pass against the broadcast seeds; state
-    grows by |batch| rows (vector-sized — this family stores the
-    vectors themselves, the price any re-rank-capable index pays).
+  * **Append = postings rows only.** A batch pays one two-phase
+    assignment pass against the stored seeds (a float64 matmul prune,
+    then ~1 exact decimal cosine per row) and shuffles only its own
+    rank window; state grows by |batch| rows (vector-sized — this
+    family stores the vectors themselves, the price any
+    re-rank-capable index pays).
   * **Exactly-once via commit markers.** The append runs under
     operators/state.py::append_state, the contract the near-dup key
     append shares: row presence is never the done signal.
 
 Assignment and serving are operators/semdedup.py's IVF core:
-postings are `nearest_seeds` against the stored seeds, and
+postings are `nearest_seeds` (the one nearest-seed kernel, which
+collects the k stored seeds per call) against the stored seeds, and
 `ann_query_from_state` is `probe_topk` over the stored seeds and
 postings — the same call ivf_topk_exact makes on a one-shot index, with
 the same output contract as q_cosine_topk.

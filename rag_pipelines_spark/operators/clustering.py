@@ -60,6 +60,10 @@ __all__ = [
 
 _DEC = "decimal(30,15)"
 
+# Scale on assign_clusters' boundary-risk margin (1e9 sends every row down
+# the decimal argmin; tests/test_clustering.py pins the equality).
+_KMEANS_GUARD = 1.0
+
 
 def _round9(c: Column) -> Column:
     return F.round(c, 9)
@@ -124,14 +128,11 @@ def assign_clusters(
     # contract bit-for-bit. The published `dist` is ALWAYS the winner's
     # exact decimal fold (one CASE branch — evaluated only when a
     # caller selects the column; Lloyd's intermediate passes never do).
-    # SPARK_GRAFT_KMEANS_GUARD scales the margin (1e9 forces the
-    # decimal argmin on every row; equality is pinned in
-    # tests/test_clustering.py and by the unchanged oracle hashes).
-    import os as _os
-
+    # _KMEANS_GUARD scales the margin (1e9 forces the decimal argmin on
+    # every row; equality is pinned in tests/test_clustering.py and by
+    # the unchanged oracle hashes).
     from rag_pipelines_spark.operators.vecexpr import hof_sqdist_dec_sql
 
-    guard = float(_os.environ.get("SPARK_GRAFT_KMEANS_GUARD", "1.0"))
     dec_structs = [
         f"named_struct('dist', {hof_sqdist_dec_sql(f'`{vec_col}`', [float(c) for c in cen])},"
         f" 'cluster', {int(j)})"
@@ -142,7 +143,7 @@ def assign_clusters(
         f"WHEN {int(j)} THEN {hof_sqdist_dec_sql(f'`{vec_col}`', [float(c) for c in cen])}"
         for j, cen in centroids
     ) + " END"
-    am = _guarded_argmin_udf(centroids, guard)
+    am = _guarded_argmin_udf(centroids, _KMEANS_GUARD)
     cluster_expr = (
         "CASE WHEN NOT _g.risky THEN _g.j"
         f" ELSE ({dec_best}).cluster END"

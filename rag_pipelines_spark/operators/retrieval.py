@@ -52,6 +52,10 @@ BM25_K1_PLUS_1 = BM25_K1 + 1.0
 BM25_ONE_MINUS_B = 1.0 - BM25_B
 RRF_K = 60.0
 
+# Scale on maxsim_scores' boundary-risk margin (1e9 sends every pair down
+# the exact-decimal branch; tests/test_retrieval.py pins the equality).
+_MAXSIM_GUARD = 1.0
+
 
 def _tokens(text_col: Column) -> Column:
     return F.split(text_col, " ")
@@ -558,8 +562,8 @@ def maxsim_scores(q_tokens: DataFrame, d_tokens: DataFrame, *,
     # every row's published value still comes from arithmetic that
     # provably equals the full-decimal evaluation. Equality with the
     # always-decimal path is pinned in tests/test_retrieval.py
-    # (SPARK_GRAFT_MAXSIM_GUARD=1e9 forces the decimal branch on every
-    # row) and by the unchanged oracle hashes.
+    # (_MAXSIM_GUARD=1e9 forces the decimal branch on every row) and by
+    # the unchanged oracle hashes.
     dot = flat_dot_dec_sql(
         [f"CAST(q_vec[{i}] AS DOUBLE)" for i in range(token_dim)],
         [f"CAST(d_vec[{i}] AS DOUBLE)" for i in range(token_dim)],
@@ -572,11 +576,10 @@ def maxsim_scores(q_tokens: DataFrame, d_tokens: DataFrame, *,
         f"ABS(CAST(q_vec[{i}] AS DOUBLE) * CAST(d_vec[{i}] AS DOUBLE))"
         for i in range(token_dim)
     )
-    guard = float(os.environ.get("SPARK_GRAFT_MAXSIM_GUARD", "1.0"))
     denom = "(SQRT(qn2) * SQRT(dn2))"
     y_dbl = f"(({dot_dbl}) / {denom} * {dlit(1e9)} + {dlit(0.5)})"
     margin = (
-        f"({dlit(guard)} * ({dlit(1e-5)}"
+        f"({dlit(_MAXSIM_GUARD)} * ({dlit(1e-5)}"
         f" + ({dlit(token_dim * 0.5e-15)} + {dlit(2e-15)} * ({abs_dot}))"
         f" * {dlit(1e9)} / {denom}))"
     )
@@ -614,45 +617,28 @@ def maxsim_candidates_ivf(q_tokens: DataFrame, d_tokens: DataFrame, *,
 
     Machinery is shared with the cosine family
     (operators/similarity.py): centroids are a deterministic
-    hash-ordered sample of corpus token vectors (optionally
-    Lloyd-refined), the centroid matrix rides inside one Arrow-batched
-    matmul UDF (corpus never shuffles to be assigned), and candidates
-    come from an equi-join on cell — shuffle volume O(matching tokens).
+    hash-ordered sample of corpus token vectors, optionally
+    Lloyd-refined (`_hash_cells`, as in cosine_topk_ivf), the centroid
+    matrix rides inside one Arrow-batched matmul UDF (corpus never
+    shuffles to be assigned), and candidates come from an equi-join on
+    cell — shuffle volume O(matching tokens).
     The per-(query, doc) distinct-q_tok count is a map-side-combinable
     hash agg, one row per surviving pair, before the exact tier pays
     n_tok² cosines on it.
     """
-    from pyspark.sql import Window
-
     from rag_pipelines_spark.operators.similarity import (
-        _collect_cents,
+        _hash_cells,
         _nearest_cells_udf,
-        kmeans_refine,
     )
 
-    cents = (
+    cells, mat = _hash_cells(
         d_tokens.select(
             F.concat_ws("#", F.col("id").cast("string"),
                         F.col("tok").cast("string")).alias("cent_src"),
             F.col("tvec").alias("cent_emb"),
-        )
-        .withColumn("h", F.xxhash64(F.col("cent_src"), F.lit(seed)))
-        .orderBy("h", "cent_src")
-        .limit(n_cells)
-        .withColumn(
-            "cell",
-            # tiny-frame window (n_cells rows by construction) — same
-            # allowlisted shape as cosine_topk_ivf
-            F.row_number().over(Window.orderBy(F.col("h"), F.col("cent_src"))),
-        )
-        .select("cell", "cent_emb")
+        ),
+        n_cells, seed, refine_iters,
     )
-    if refine_iters > 0:
-        cents = kmeans_refine(
-            d_tokens.select(F.col("tvec").alias("embedding")),
-            cents, n_iters=refine_iters,
-        )
-    cells, mat = _collect_cents(cents)
     q_assign = _nearest_cells_udf(cells, mat, nprobe)
     d_assign = _nearest_cells_udf(cells, mat, 1)
     qa = q_tokens.select(

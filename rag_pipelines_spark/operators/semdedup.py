@@ -16,19 +16,15 @@ Spark-first, oracle-checkable design:
     corpus vectors with the smallest (md5(id), id) — layout-stable,
     engine-portable (DuckDB computes the identical seed set), and no
     float averaging, so the "centroids" are exact fp32 data vectors.
-    Callers with real cluster structure can pass kmeans-refined
-    centroids (operators/similarity.py::kmeans_refine) via `seeds`
-    instead; the hash-seeded default is the oracle-checked tier.
-  * **Assignment is the IVF pattern, two-phase**: one Arrow-batched
-    float64 matmul pass over the corpus against the driver-collected
-    seed matrix prunes each row's k seeds to a provably-sufficient
-    margin set (~1 candidate), and only those pay the exact decimal
-    fold — |N|·k FLOPs plus |N| exact dots, corpus never shuffles. k
-    derives from a target cluster size, so cluster populations — and
-    with them the within-cluster pair count — stay bounded as the
-    corpus grows. (One-phase scored all |N|·k pairs through the
-    interpreted decimal fold: |N|²/target interpreted BigDecimal ops,
-    the scale bug the sf100 rung caught in r8.)
+  * **Assignment is the IVF pattern, two-phase** (`nearest_seeds`, the
+    one kernel semantic_dedup, ivf_topk_exact and the incremental ANN
+    state share): one Arrow-batched float64 matmul pass over the corpus
+    against the driver-collected seed matrix prunes each row's k seeds
+    to a provably-sufficient margin set (~1 candidate), and only those
+    pay the exact decimal fold — |N|·k FLOPs plus ~|N| exact dots,
+    corpus never shuffles to be scored. k derives from a target cluster
+    size, so cluster populations — and with them the within-cluster
+    pair count — stay bounded as the corpus grows.
   * **Bitwise-deterministic scores**: operators/vecexpr.py's
     dot_dec / norm2 / cos9, the exact-cosine scheme q_cosine_topk
     shares, so assignment, tie-breaks, and the threshold test make
@@ -45,9 +41,8 @@ Spark-first, oracle-checkable design:
 window (partitioned by doc id — re-expressible as max_by if the window
 ever shows up in a profile) and the within-cluster self-equi-join whose
 volume is sum_c |c|^2 — bounded by target_cluster_size * N, tunable,
-and the exact knob SemDeDup's k controls. Seeds broadcast is k·dim
-floats; for k beyond broadcast limits, assignment switches to the LSH /
-IVF machinery in operators/similarity.py.
+and the exact knob SemDeDup's k controls. The seed table is collected
+and broadcast: k·dim floats.
 """
 
 from __future__ import annotations
@@ -76,56 +71,53 @@ __all__ = [
 # cos9: the decimal(30,15) per-element rounding perturbs a 64-dim dot by
 # <= 3.2e-14, float64 accumulation by ~1e-14, and round-9 by 5e-10 —
 # 1e-6 is ~1000x the worst stack-up, so the pruned candidate set
-# provably contains the exact argmax.
+# provably contains the exact top n.
 _ASSIGN_MARGIN = 1e-6
 
 
-def _margin_candidates_udf(seed_mat, margin=_ASSIGN_MARGIN):
-    """array<int> of seed INDICES (positions in the caller's id-sorted
-    seed list) whose float64 cosine is within `margin` of the row's max
-    — the cheap Arrow-batched pre-pass that prunes the n x k assignment
-    down to ~1 exact-scored candidate per row.
+def _margin_candidates_udf(seed_mat, n):
+    """array<int> of seed INDICES (rows of `seed_mat`) whose float64
+    cosine is within _ASSIGN_MARGIN of the row's n-th best float cosine —
+    the cheap Arrow-batched pre-pass that prunes each row's k seeds down
+    to ~n exact-scored candidates.
 
-    Index-keyed on purpose: the caller maps indices back to seed ids
-    through a broadcast (index, seed_id) frame, so the id type stays
-    opaque — string / decimal ids work (the r8 form returned
-    array<long> of ids and crashed on non-integer id columns).
-
-    Null / zero-norm vectors return [0] (= the smallest seed_id, since
-    the seed list is id-sorted): the exact path ranks their
-    all-null/NaN scores by (nulls-last, seed_id asc), which always
-    elects the smallest seed — the fallback reproduces that with one
-    candidate instead of k. A vector whose length differs from the
+    Exact because each float cosine sits within half the margin of its
+    exact cos9: a seed below the n-th best float cosine minus the margin has n
+    seeds strictly above it in the exact order too. A row with fewer than
+    n finite scores (null or zero-norm vector, n >= k) keeps every seed,
+    so the exact rank decides it. Index-keyed so the id type stays opaque
+    (string / decimal ids work). A vector whose length differs from the
     seed dimension fails fast with a clear message (np.asarray over a
     ragged batch would otherwise build an object array and surface an
     opaque executor-side matmul error).
     """
+    k, dim = seed_mat.shape
+    every = list(range(k))
     mat_t = seed_mat.T  # (d, k)
     seed_norms = np.sqrt((seed_mat * seed_mat).sum(axis=1))
-    dim = seed_mat.shape[1]
 
     @pandas_udf("array<int>")
     def f(v: pd.Series) -> pd.Series:
         vals = v.tolist()
-        out = [[0]] * len(vals)  # index 0 = smallest seed_id
+        out = [every] * len(vals)
         live = [i for i, t in enumerate(vals) if t is not None]
-        if live:
+        if live and k:
             bad = next((i for i in live if len(vals[i]) != dim), None)
             if bad is not None:
                 raise ValueError(
-                    f"semantic_dedup: embedding length {len(vals[bad])} "
+                    f"nearest_seeds: embedding length {len(vals[bad])} "
                     f"!= seed dimension {dim} — ragged vector column"
                 )
+        if live and n < k:
             x = np.asarray([vals[i] for i in live], dtype=np.float64)
             xn = np.sqrt((x * x).sum(axis=1))
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = (x @ mat_t) / (xn[:, None] * seed_norms[None, :])
             cos = np.where(np.isfinite(cos), cos, -np.inf)
-            mx = cos.max(axis=1)
+            nth = -np.partition(-cos, n - 1, axis=1)[:, n - 1]
             for j, i in enumerate(live):
-                if mx[j] != -np.inf:
-                    sel = np.nonzero(cos[j] >= mx[j] - margin)[0]
-                    out[i] = [int(s) for s in sel]
+                if nth[j] != -np.inf:
+                    out[i] = np.flatnonzero(cos[j] >= nth[j] - _ASSIGN_MARGIN).tolist()
         return pd.Series(out, dtype=object)
 
     return f
@@ -137,106 +129,29 @@ def semantic_dedup(
     vec_col: str,
     threshold: float = 0.3,
     target_cluster: int = 32,
-    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """(id_col, cluster_id, kept) for every input row; kept = 0 iff a
-    smaller-id same-cluster row has cosine >= threshold.
-
-    `seeds`: optional (seed_id, seed_vec) frame of centroid vectors (e.g.
-    kmeans-refined). Default: k = ceil(n / target_cluster) hash-seeded
-    corpus vectors (deterministic, oracle-portable).
-    """
+    smaller-id same-cluster row has cosine >= threshold. Clusters are the
+    k = ceil(n / target_cluster) hash-seeded corpus vectors
+    (deterministic, oracle-portable), each row in its nearest one."""
     norms = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         norm2(F.col(vec_col)).alias("n2"),
     )
-    if seeds is None:
-        n = emb.count()
-        seed_frame = hash_min_seeds(norms, max(1, math.ceil(n / target_cluster)))
-    else:
-        seed_frame = seeds.select(
-            F.col(seeds.columns[0]).alias("seed_id"),
-            F.col(seeds.columns[1]).alias("sv"),
-        ).withColumn("sn2", norm2(F.col("sv")))
-
-    # Assignment is two-phase (r8 — the sf100 rung exposed the one-phase
-    # form): a float64 Arrow matmul against the driver-collected seed
-    # matrix prunes each row's k seeds to the within-margin candidate
-    # set (~1), and ONLY those pay the exact decimal-fold cos9 + rank.
-    # One-phase scored every n x k pair through the INTERPRETED
-    # BigDecimal fold — n^2/target_cluster interpreted decimal ops, 45+
-    # min at sf100 (200k x 6250 seeds) vs seconds for the matmul. The
-    # margin argument (above _ASSIGN_MARGIN) makes the pruned result
-    # bitwise-identical to the full rank, so the DuckDB oracle is
-    # unchanged. Seed collect is centroid-sized (k x dim doubles — same
-    # driver-size tier as similarity.py::_collect_cents).
-    seed_rows = sorted(
-        seed_frame.select("seed_id", "sv").collect(), key=lambda r: r[0]
-    )
-    dims = {len(r[1]) for r in seed_rows if r[1] is not None}
-    if len(dims) > 1:
-        raise ValueError(
-            f"semantic_dedup: seed vectors have mixed lengths {sorted(dims)}"
-            " — ragged vector column"
-        )
-    dim = dims.pop() if dims else 0
-    # null-vector seeds keep their index slot as a zero row: zero norm
-    # -> -inf cosine in the margin pass, so they are never emitted as a
-    # candidate — matching the exact path, where their null score sorts
-    # nulls-last and can only be elected via the [index 0] tie fallback
-    seed_mat = np.asarray(
-        [r[1] if r[1] is not None else [0.0] * dim for r in seed_rows],
-        dtype=np.float64,
-    )
-    cand_udf = _margin_candidates_udf(seed_mat)
-    # index -> seed_id mapping as a broadcast k-row frame, typed from
-    # the seed frame itself so ids of ANY orderable type survive the
-    # round trip (ints, strings, decimals — not just int64)
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    seed_idx = emb.sparkSession.createDataFrame(
-        [(i, r[0]) for i, r in enumerate(seed_rows)],
-        StructType(
-            [
-                StructField("_sidx", IntegerType(), False),
-                StructField("seed_id", seed_frame.schema["seed_id"].dataType, True),
-            ]
-        ),
-    )
-    scored = (
-        norms.withColumn("_sidx", F.explode(cand_udf(F.col("v"))))
-        .join(F.broadcast(seed_idx), "_sidx")
-        .drop("_sidx")
-        .join(F.broadcast(seed_frame), "seed_id")
-        .select(
-            "id",
-            "v",
-            "n2",
-            "seed_id",
-            cos9(
-                dot_dec(F.col("v"), F.col("sv")), F.col("n2"), F.col("sn2")
-            ).alias("scos"),
-        )
-    )
-    # nulls last on BOTH engines (DuckDB DESC defaults nulls-first)
-    w = Window.partitionBy("id").orderBy(F.desc_nulls_last("scos"), F.asc("seed_id"))
-    assigned = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("id", "v", "n2", F.col("seed_id").alias("cluster_id"))
-    )
+    seeds = hash_min_seeds(norms, max(1, math.ceil(emb.count() / target_cluster)))
+    assigned = nearest_seeds(norms, seeds, 1)
     a = assigned.select(
         F.col("id").alias("a_id"),
         F.col("v").alias("av"),
         F.col("n2").alias("an2"),
-        "cluster_id",
+        F.col("cell").alias("cluster_id"),
     )
     b = assigned.select(
         F.col("id").alias("b_id"),
         F.col("v").alias("bv"),
         F.col("n2").alias("bn2"),
-        "cluster_id",
+        F.col("cell").alias("cluster_id"),
     )
     dropped = (
         a.join(b, "cluster_id")
@@ -252,7 +167,7 @@ def semantic_dedup(
         assigned.join(dropped, assigned["id"] == dropped["b_id"], "left")
         .select(
             F.col("id").alias(id_col),
-            "cluster_id",
+            F.col("cell").alias("cluster_id"),
             F.when(F.col("b_id").isNull(), 1).otherwise(0).alias("kept"),
         )
     )
@@ -277,17 +192,58 @@ def hash_min_seeds(norms: DataFrame, k: int) -> DataFrame:
 
 
 def nearest_seeds(frame: DataFrame, seeds: DataFrame, n: int) -> DataFrame:
-    """(id, v, n2, cell) — each (id, v, n2) row's n nearest seeds, by
-    (round-9 cosine desc, seed_id asc), nulls last on both engines."""
-    scored = frame.crossJoin(F.broadcast(seeds)).select(
-        frame["id"],
-        frame["v"],
-        frame["n2"],
-        "seed_id",
-        cos9(dot_dec(frame["v"], F.col("sv")), frame["n2"], F.col("sn2")).alias(
-            "scos"
+    """(id, v, n2, cell) — each (id, v, n2) row's n nearest (seed_id, sv,
+    sn2) seeds, by (round-9 cosine desc, seed_id asc), nulls last on both
+    engines.
+
+    Two-phase, so no row pays k interpreted decimal folds: the seeds are
+    collected (k x dim doubles, centroid-sized), one float64 Arrow matmul
+    per batch keeps each row's within-margin candidates
+    (`_margin_candidates_udf`, ~n per row), and only those join the
+    broadcast seed table for the exact cos9 and the rank. The corpus
+    never shuffles for scoring; the rank window is the only exchange.
+    """
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    seeds = seeds.select("seed_id", "sv", "sn2")
+    rows = seeds.collect()
+    dims = {len(r.sv) for r in rows if r.sv is not None}
+    if len(dims) > 1:
+        raise ValueError(
+            f"nearest_seeds: seed vectors have mixed lengths {sorted(dims)}"
+            " — ragged vector column"
+        )
+    dim = dims.pop() if dims else 0
+    # a null-vector seed keeps its index as a zero row: -inf float cosine,
+    # so it is a candidate only where every seed is
+    seed_mat = np.asarray(
+        [r.sv if r.sv is not None else [0.0] * dim for r in rows],
+        dtype=np.float64,
+    ).reshape(len(rows), dim)
+    cand_udf = _margin_candidates_udf(seed_mat, n)
+    table = frame.sparkSession.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)],
+        StructType(
+            [StructField("_sidx", IntegerType(), False)]
+            + [
+                StructField(f.name, f.dataType, True) for f in seeds.schema
+            ]
         ),
     )
+    scored = (
+        frame.withColumn("_sidx", F.explode(cand_udf(F.col("v"))))
+        .join(F.broadcast(table), "_sidx")
+        .select(
+            "id",
+            "v",
+            "n2",
+            "seed_id",
+            cos9(dot_dec(F.col("v"), F.col("sv")), F.col("n2"), F.col("sn2")).alias(
+                "scos"
+            ),
+        )
+    )
+    # nulls last on BOTH engines (DuckDB DESC defaults nulls-first)
     w = Window.partitionBy("id").orderBy(F.desc_nulls_last("scos"), F.asc("seed_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -356,18 +312,21 @@ def ivf_topk_exact(
     reproduces cells, assignments, probes, and scores bit-for-bit, and
     recall against q_cosine_topk's exact answer is directly measurable.
 
-    Scale: one N·k_seeds assignment pass against broadcast seeds (the
-    corpus never shuffles for index build) + candidate scoring sized
-    |queries|·nprobe·(N/k_seeds). k_seeds is fixed here for the
-    verification tier; production sizing (k ~ sqrt(N), kmeans-refined
-    centroids, multi-probe) lives in operators/similarity.py.
+    Scale: the seed top-k runs once (checkpointed, then collected by
+    both `nearest_seeds` passes); each pass is a float64 matmul against
+    the k_seeds-row seed matrix plus ~1 exact decimal cosine per corpus
+    row (~nprobe per query), with no corpus shuffle for index build;
+    candidate scoring is sized |queries|·nprobe·(N/k_seeds). k_seeds is
+    fixed here for the verification tier; production sizing (k ~
+    sqrt(N), kmeans-refined centroids, multi-probe) lives in
+    operators/similarity.py.
     """
     norms = corpus.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         norm2(F.col(vec_col)).alias("n2"),
     )
-    seeds = hash_min_seeds(norms, k_seeds)
+    seeds = hash_min_seeds(norms, k_seeds).localCheckpoint(eager=True)
     qnorms = queries.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),

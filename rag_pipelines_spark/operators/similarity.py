@@ -3,14 +3,17 @@
 Three tiers, same output contract (query id, candidate id, cosine, rank):
 
 1. `cosine_topk_bruteforce` — exact baseline. Broadcast the (small) query
-   set against the corpus; dot products via JVM higher-order functions.
-   O(|Q|·N·d) but embarrassingly parallel, no shuffle of the corpus.
+   set against the corpus; cosines from one Arrow-batched numpy pass
+   (`_cosine_udf`, the scorer every tier here shares). O(|Q|·N·d) but
+   embarrassingly parallel, no shuffle of the corpus.
 2. `cosine_topk_lsh` — random-hyperplane LSH: sign-bit sketches bucket the
    corpus; candidates come from an equi-join on (table, bucket), exact
    cosine re-scores candidates only. Recall tunable via tables/bits.
 3. `cosine_topk_ivf` — IVF-style: k sampled centroids partition the corpus
    (nearest-centroid assignment); queries probe `nprobe` nearest cells.
-   The centroid assignment is itself a broadcast dot-product pass.
+   The centroid assignment is one Arrow-batched matmul against the
+   driver-collected centroids (`_hash_cells`, shared with the MaxSim
+   pruned tier in operators/retrieval.py).
 
 At 100 TB the corpus never moves: buckets/cells are computed in place and
 the join key is the bucket id — shuffle volume is O(candidates).
@@ -26,23 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def _dot(a, b):
-    """JVM-side double dot product of two float arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    return df.withColumn(out, _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b))))
-
-
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -50,13 +36,16 @@ def cosine_topk_bruteforce(
     vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k: broadcast queries × corpus, window-rank per query."""
+    """Exact top-k: broadcast queries × corpus, window-rank per query.
+    A null embedding scores a null cosine, ranked last."""
     q = queries.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_emb")
     )
     c = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_emb"))
     pairs = F.broadcast(q).crossJoin(c).filter(F.col("q_id") != F.col("c_id"))
-    scored = with_cosine(pairs, "q_emb", "c_emb")
+    scored = pairs.withColumn(
+        "cosine", _cosine_udf()(F.col("q_emb"), F.col("c_emb"))
+    )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -118,8 +107,8 @@ def _buckets_udf(planes):
 def _cosine_udf():
     """Arrow-batched cosine over candidate pairs (numpy row-wise).
 
-    Null on either side yields null cosine — comparison predicates then
-    drop the pair, as the column-expression dot would."""
+    Null on either side (or a zero norm) yields a null cosine: comparison
+    predicates drop the pair, and a descending rank puts it last."""
     @pandas_udf("double")
     def f(a: pd.Series, b: pd.Series) -> pd.Series:
         av, bv = a.tolist(), b.tolist()
@@ -340,6 +329,38 @@ def kmeans_refine(
     return cents
 
 
+def _hash_cells(src: DataFrame, n_cells: int, seed: int, refine_iters: int):
+    """IVF cells of a (cent_src, cent_emb) frame, collected as (cells,
+    matrix): the `n_cells` vectors first in (xxhash64(cent_src, seed),
+    cent_src) order, numbered 1.. in that order, then `refine_iters`
+    Lloyd passes over every `cent_emb` of `src` (`kmeans_refine`).
+
+    xxhash64 takes the seed as a second argument; string + int would cast
+    the id to double (NULL for non-numeric ids) and break determinism.
+    orderBy+limit compiles to TakeOrderedAndProject (top-N per partition,
+    merge on driver) — no global sort. The row_number window then runs on
+    the n_cells-row survivor frame only.
+    """
+    cents = (
+        src.withColumn("h", F.xxhash64(F.col("cent_src"), F.lit(seed)))
+        .orderBy("h", "cent_src")
+        .limit(n_cells)
+        .withColumn(
+            "cell",
+            # deliberately-unpartitioned window over the n_cells-row survivor
+            # frame (tiny by construction); it runs in the collect below, so
+            # no query plan carries it
+            F.row_number().over(Window.orderBy(F.col("h"), F.col("cent_src"))),
+        )
+        .select("cell", "cent_emb")
+    )
+    if refine_iters > 0:
+        cents = kmeans_refine(
+            src.select("cent_emb"), cents, vec_col="cent_emb", n_iters=refine_iters
+        )
+    return _collect_cents(cents)
+
+
 def cosine_topk_ivf(
     queries: DataFrame,
     corpus: DataFrame,
@@ -358,35 +379,17 @@ def cosine_topk_ivf(
     recall per probe, same dataflow). Corpus rows are assigned to their
     nearest centroid once; queries probe their `nprobe` nearest cells only.
     """
-    # xxhash64 takes the seed as a second argument; string + int would cast
-    # the id to double (NULL for non-numeric ids) and break determinism.
-    # orderBy+limit compiles to TakeOrderedAndProject (top-N per partition,
-    # merge on driver) — no global sort. The row_number window then runs on
-    # the n_cells-row survivor frame only.
-    cents = (
-        corpus.select(F.col(id_col).alias("cent_src"), F.col(vec_col).alias("cent_emb"))
-        .withColumn("h", F.xxhash64(F.col("cent_src"), F.lit(seed)))
-        .orderBy("h", "cent_src")
-        .limit(n_cells)
-        .withColumn(
-            "cell",
-            # deliberately-unpartitioned window over the n_cells-row survivor
-            # frame (tiny by construction) — allowlisted in the
-            # tests/test_plans.py tiny-frame lint
-            F.row_number().over(Window.orderBy(F.col("h"), F.col("cent_src"))),
-        )
-        .select("cell", "cent_emb")
-    )
-    if refine_iters > 0:
-        cents = kmeans_refine(
-            corpus.select(vec_col), cents, vec_col=vec_col, n_iters=refine_iters
-        )
     # Nearest-cell assignment is one Arrow-batched matmul against the
     # driver-collected centroid matrix (embedded in the UDF closure —
     # Spark broadcasts the serialized function to executors once). Zero
     # shuffle of the corpus; the only data-sized shuffle in the whole
     # operator is the (cell) candidate equi-join below.
-    cells, mat = _collect_cents(cents)
+    cells, mat = _hash_cells(
+        corpus.select(
+            F.col(id_col).alias("cent_src"), F.col(vec_col).alias("cent_emb")
+        ),
+        n_cells, seed, refine_iters,
+    )
 
     def assign(df: DataFrame, idc: str, vecc: str, prefix: str, probes: int) -> DataFrame:
         nearest = _nearest_cells_udf(cells, mat, probes)
@@ -406,7 +409,9 @@ def cosine_topk_ivf(
         .select("q_id", "q_emb", "c_id", "c_emb")
         .dropDuplicates(["q_id", "c_id"])
     )
-    scored = with_cosine(cand, "q_emb", "c_emb")
+    scored = cand.withColumn(
+        "cosine", _cosine_udf()(F.col("q_emb"), F.col("c_emb"))
+    )
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

@@ -159,9 +159,10 @@ def _graph_frames(spark, sf_dir):
     {_FINAL_SELECT}
     """,
     doc="quantized-integer PageRank (8 iterations, damping 85/100) over "
-    "the customer<->supplier interaction graph — per iteration one "
-    "|nodes|-row join shuffle + one map-side-combinable agg back to "
-    "|nodes| rows; edges build once; all arithmetic is scaled-BIGINT "
+    "the customer<->supplier interaction graph — per iteration the "
+    "|nodes|-row sides broadcast into both joins (below 4M nodes; a "
+    "join shuffle above) and one map-side-combinable agg shuffles back "
+    "to |nodes| rows; edges build once; all arithmetic is scaled-BIGINT "
     "floor division so the served ranks are bit-identical across "
     "engines BY CONSTRUCTION (operators/pagerank.py)",
 )

@@ -109,13 +109,13 @@ def test_seed_centroids_partitioning_invariant(spark):
     assert a == b
 
 
-def test_guarded_argmin_equals_forced_decimal_argmin(spark):
+def test_guarded_argmin_equals_forced_decimal_argmin(spark, monkeypatch):
     """The r10 guarded fast path (double argmin unless boundary-risky)
     must be row-identical — cluster AND exact decimal dist — to the
-    all-decimal argmin (SPARK_GRAFT_KMEANS_GUARD=1e9 pushes every row
-    down the decimal branch). Runs a full Lloyd fit so the pin covers
-    the iterated assignment, not just one pass."""
-    import os
+    all-decimal argmin (_KMEANS_GUARD=1e9 pushes every row down the
+    decimal branch). Runs a full Lloyd fit so the pin covers the
+    iterated assignment, not just one pass."""
+    from rag_pipelines_spark.operators import clustering
 
     emb = _emb(spark)
 
@@ -130,9 +130,6 @@ def test_guarded_argmin_equals_forced_decimal_argmin(spark):
         )
 
     fast = rows()
-    os.environ["SPARK_GRAFT_KMEANS_GUARD"] = "1e9"
-    try:
-        slow = rows()
-    finally:
-        del os.environ["SPARK_GRAFT_KMEANS_GUARD"]
+    monkeypatch.setattr(clustering, "_KMEANS_GUARD", 1e9)
+    slow = rows()
     assert fast == slow

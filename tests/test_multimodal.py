@@ -180,8 +180,8 @@ def test_lsh_pairs_superset_of_threshold_pairs_on_fixture(spark):
     from pyspark.sql import functions as F
 
     from rag_pipelines_spark.operators.similarity import (
+        _cosine_udf,
         cosine_pairs_lsh,
-        with_cosine,
     )
     from rag_pipelines_spark.sources.binary import image_features_stub
 
@@ -191,8 +191,9 @@ def test_lsh_pairs_superset_of_threshold_pairs_on_fixture(spark):
     a = feats.select(F.col("path").alias("a_id"), F.col("features").alias("fa"))
     b = feats.select(F.col("path").alias("b_id"), F.col("features").alias("fb"))
     brute = (
-        with_cosine(a.crossJoin(b).filter(F.col("a_id") < F.col("b_id")), "fa", "fb")
-        .select("a_id", "b_id", "cosine")
+        a.crossJoin(b)
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", _cosine_udf()(F.col("fa"), F.col("fb")).alias("cosine"))
         .collect()
     )
     assert len(brute) == 15  # 6 fixture files -> C(6,2) all-pairs oracle

@@ -207,7 +207,6 @@ TINY_FRAME_WINDOW_OK = {
     "q_batch_assign",  # per-block offsets, |blocks| = rows/1024 (indexing.py)
     "q_quality_bins",  # per-block offsets + grand total (global_ntile)
     "q_lang_dist",  # grand total over #langs aggregated rows
-    "q_ann_ivf",  # centroid numbering over the n_cells-row survivor frame
     # kmv phase-2 rank on a KEYLESS sketch: input is structurally
     # <= fanout*k = 8192 rows (phase-1 survivors), never data-sized;
     # phase 1's data-sized window partitions by the salt (kmv.py)
@@ -269,6 +268,19 @@ def test_registry_wide_plan_lints(spark):
         if marks:
             offenders[name] = marks
     assert not offenders, offenders
+
+
+def test_nearest_seed_queries_have_no_nested_loop_join(spark):
+    """The IVF family assigns rows to seeds through the two-phase
+    `nearest_seeds` kernel (margin-pruned candidates, equi-joined on the
+    seed index), never a rows x seeds nested loop: once executed, their
+    plans carry no BroadcastNestedLoopJoin or CartesianProduct."""
+    for name in ("q_semantic_dedup", "q_ann_ivf_exact", "q_ann_from_state"):
+        df = REG[name].fn(spark, SF)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for bad in ("BroadcastNestedLoopJoin", "CartesianProduct"):
+            assert bad not in plan, f"{name}: {bad} in the executed plan"
 
 
 def test_batch_assign_no_global_sort_window(spark):

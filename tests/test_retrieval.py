@@ -495,6 +495,7 @@ def test_maxsim_guarded_double_equals_decimal_path(spark, monkeypatch):
 
     import numpy as np
 
+    from rag_pipelines_spark.operators import retrieval
     from rag_pipelines_spark.operators.retrieval import (
         embedding_tokens,
         maxsim_scores,
@@ -535,14 +536,13 @@ def test_maxsim_guarded_double_equals_decimal_path(spark, monkeypatch):
     )
     q = toks.filter(F.col("id") < 2)
 
-    monkeypatch.delenv("SPARK_GRAFT_MAXSIM_GUARD", raising=False)
     got = {
         (r.query_id, r.doc_id): r.maxsim
         for r in maxsim_scores(
             q, toks, exclude_self=True, token_dim=4
         ).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_MAXSIM_GUARD", "1e9")
+    monkeypatch.setattr(retrieval, "_MAXSIM_GUARD", 1e9)
     want = {
         (r.query_id, r.doc_id): r.maxsim
         for r in maxsim_scores(

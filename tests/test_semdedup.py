@@ -1,7 +1,7 @@
 """Semantic near-dedup (operators/semdedup.py): equality with an
 in-Python brute-force reference (hand cases + hypothesis random vector
 sets), hash-seeded centroid determinism, witness-rule keeper semantics,
-and the seeds= override path."""
+and the IVF twin built on the same nearest-seed kernel."""
 
 from __future__ import annotations
 
@@ -27,16 +27,15 @@ def _cos9(a, b):
     return round(d / (math.sqrt(na) * math.sqrt(nb)), 9)
 
 
-def brute(vectors, threshold, target_cluster, seed_ids=None):
+def brute(vectors, threshold, target_cluster):
     """The operator's exact rules: hash-seeded centroids, nearest-seed by
     (cos9 desc, seed_id asc), drop iff a smaller-id same-cluster row has
     cos9 >= threshold."""
     ids = sorted(vectors)
-    if seed_ids is None:
-        k = max(1, math.ceil(len(ids) / target_cluster))
-        seed_ids = sorted(
-            ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
-        )[:k]
+    k = max(1, math.ceil(len(ids) / target_cluster))
+    seed_ids = sorted(
+        ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )[:k]
     assign = {}
     for i in ids:
         best = min(
@@ -55,7 +54,7 @@ def brute(vectors, threshold, target_cluster, seed_ids=None):
     return sorted(out)
 
 
-def _run(spark, vectors, threshold, target_cluster, seeds=None):
+def _run(spark, vectors, threshold, target_cluster):
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in sorted(vectors.items())],
         "vec_id: long, embedding: array<float>",
@@ -66,7 +65,6 @@ def _run(spark, vectors, threshold, target_cluster, seeds=None):
         "embedding",
         threshold=threshold,
         target_cluster=target_cluster,
-        seeds=seeds,
     )
     return sorted((r.vec_id, r.cluster_id, r.kept) for r in sdf.collect())
 
@@ -105,25 +103,6 @@ def test_exact_dups_always_co_cluster(spark):
     clusters = {c for i, c, _ in got if i < 8}
     assert len(clusters) == 1
     assert got == brute(vecs, 0.999999, 3)
-
-
-def test_seeds_override(spark):
-    """Explicit centroids: 0,1,2 -> seed 100; 3,4 -> seed 200; the
-    orthogonal loners 5,6 tie at cos 0 and break to the min seed id."""
-    seeds = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0, 0.0]), (200, [0.0, 1.0, 0.0, 0.0])],
-        "seed_id: long, embedding: array<float>",
-    )
-    got = _run(spark, PLANTED, 0.95, 4, seeds=seeds)
-    by_cluster = {}
-    for i, c, _ in got:
-        by_cluster.setdefault(c, []).append(i)
-    assert {c: sorted(m) for c, m in by_cluster.items()} == {
-        100: [0, 1, 2, 5, 6],
-        200: [3, 4],
-    }
-    kept = {i: k for i, _, k in got}
-    assert kept == {0: 1, 1: 0, 2: 0, 3: 1, 4: 0, 5: 1, 6: 1}
 
 
 _comp = st.integers(-3, 3)
@@ -240,8 +219,10 @@ def test_ivf_probes_restrict_candidates(spark):
 
 
 @settings(max_examples=8, deadline=None)
-@given(vectors=_vecs, nprobe=st.integers(1, 3))
+@given(vectors=_vecs, nprobe=st.integers(1, 5))
 def test_ivf_property_matches_brute_force(spark, vectors, nprobe):
+    """nprobe spans 1..k_seeds+1: the probe kernel keeps every seed within
+    the margin of the n-th best float cosine, and n > k_seeds keeps all."""
     qids = [i for i in vectors if i % 3 == 0]
     assert _run_ivf(spark, vectors, qids, 4, nprobe, 3) == _brute_ivf(
         vectors, qids, 4, nprobe, 3

@@ -72,6 +72,21 @@ def test_ivf_kmeans_refined_recall(frames):
     assert recall >= 0.4, f"refined-IVF recall too low: {recall:.2f}"
 
 
+def test_bruteforce_null_embedding_scores_null_ranked_last(spark):
+    """A null corpus embedding scores a null cosine and ranks after every
+    live candidate; a null query embedding scores null against all."""
+    rows = [(1, [1.0, 0.0]), (2, None), (3, [0.0, 1.0]), (4, [1.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {
+        (r.q_id, r.rank): (r.c_id, r.cosine)
+        for r in cosine_topk_bruteforce(df, df, k=3).collect()
+    }
+    assert got[(1, 1)] == (4, pytest.approx(2 ** -0.5))
+    assert got[(1, 2)] == (3, 0.0)
+    assert got[(1, 3)] == (2, None)
+    assert [got[(2, rk)] for rk in (1, 2, 3)] == [(1, None), (3, None), (4, None)]
+
+
 def test_lsh_null_embedding_rows_dropped_not_crashed(spark):
     """A null embedding must yield zero candidate rows for that id (null
     bucket array -> posexplode drops it), never a worker crash."""
