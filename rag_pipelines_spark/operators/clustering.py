@@ -14,10 +14,13 @@ Spark-first / 100 TB posture:
     iteration — the same centroid-sized collect precedent as
     operators/similarity.py:254). The corpus never leaves executors
     and is scanned once per iteration.
-  * Assignment is pure column math: the k candidate distances fold
-    LITERAL centroid arrays per row (whole-stage codegen; zero join,
-    zero shuffle, no window). argmin = array_min over (dist, cluster)
-    structs, so ties break to the lowest cluster id.
+  * Assignment is per-row math at any k (zero join, zero shuffle, no
+    window): one Arrow float64 pass keeps each row's candidate
+    centroids, those whose double distance is within the decimal error
+    margin of its best (almost always one), and only candidates pay the
+    exact decimal fold against the literal centroid array. argmin =
+    array_min over (dist, pos) structs with centroids sorted by cluster
+    id, so ties break to the lowest cluster id.
   * The per-iteration update is ONE map-side-combinable hash agg whose
     shuffle is k rows x d decimal sums — never the corpus. This is
     exactly MLlib KMeans' physical shape (broadcast centers + one
@@ -40,6 +43,8 @@ match_fda_pubmed.py; clustering is the corpus-curation generalization).
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pandas as pd
 
@@ -52,7 +57,6 @@ from rag_pipelines_spark.queries._util import dec_to_dbl
 __all__ = [
     "seed_centroids",
     "assign_clusters",
-    "assign_clusters_join",
     "centroid_update",
     "kmeans_fit",
     "cluster_balanced_topm",
@@ -108,146 +112,93 @@ def assign_clusters(
             "assign_clusters needs at least one centroid (empty input "
             "frame? seed_centroids returns [] on one)"
         )
-    # r10 (vecexpr.py rationale): built as ONE parsed SQL string instead
-    # of k*d py4j-assembled Column nodes — measured 1.31 s -> 0.28 s plan
-    # construction per assignment pass at k=8, d=64.
+    # Built as parsed SQL strings instead of k*d py4j-assembled Column
+    # nodes (the vecexpr.py hof_* rationale). The centroids, sorted by
+    # cluster id, are ONE literal array<array<double>>: JSON text that
+    # constant-folds once and round-trips doubles exactly, so plan
+    # construction stays ~0.1 s at any k (k*d CAST literals took 0.25 s
+    # at k=8 and 2.1 s at k=256, d=64; local[4], sf0.1).
     #
-    # r10 second pass (the maxsim_scores guarded-evaluation recipe): the
-    # k exact-decimal distance folds pay one CAST(double AS DECIMAL)
-    # BigDecimal construction per dim per centroid per row (~1.9 s per
-    # assignment pass at sf0.1), but the argmin only needs the ORDER of
-    # the distances. Each decimal distance differs from its plain-double
-    # twin by <= 64*0.5e-15 (per-term HALF_UP quantization) +
-    # (d-1)*eps*dist (left-to-right summation; terms are squares, so
-    # sum of |terms| = the distance itself). So when the two smallest
-    # DOUBLE distances are separated by more than the summed margins,
-    # the decimal order is provably the same and the winner needs no
-    # decimal at all; only boundary-risky rows (and exact decimal ties,
-    # which land inside any margin) fall back to the full decimal
-    # argmin — preserving the lexicographic tie-to-lowest-cluster
-    # contract bit-for-bit. The published `dist` is ALWAYS the winner's
-    # exact decimal fold (one CASE branch — evaluated only when a
-    # caller selects the column; Lloyd's intermediate passes never do).
-    # _KMEANS_GUARD scales the margin (1e9 forces the decimal argmin on
-    # every row; equality is pinned in tests/test_clustering.py and by
+    # Guarded evaluation (the maxsim_scores recipe): an exact decimal
+    # distance pays one CAST(double AS DECIMAL) per dim, but the argmin
+    # only needs the ORDER of the distances. _centroid_candidates_udf keeps
+    # each row's candidates — the centroids whose double distance is
+    # within the decimal-vs-double error margin of the row's best — so
+    # the decimal winner is always among them. Most rows have one
+    # candidate and pay no decimal fold; the rest take array_min over
+    # (exact dist, pos) of their candidates only — pos order is cluster
+    # id order, so ties still go to the lowest cluster id. The published
+    # `dist` is the winner's exact decimal fold, evaluated only when a
+    # caller selects the column (Lloyd's intermediate passes never do).
+    # _KMEANS_GUARD scales the margin (1e9 makes every centroid a
+    # candidate; equality is pinned in tests/test_clustering.py and by
     # the unchanged oracle hashes).
     from rag_pipelines_spark.operators.vecexpr import hof_sqdist_dec_sql
 
-    dec_structs = [
-        f"named_struct('dist', {hof_sqdist_dec_sql(f'`{vec_col}`', [float(c) for c in cen])},"
-        f" 'cluster', {int(j)})"
-        for j, cen in centroids
-    ]
-    dec_best = f"array_min(array({', '.join(dec_structs)}))"
-    dist_expr = "CASE cluster " + " ".join(
-        f"WHEN {int(j)} THEN {hof_sqdist_dec_sql(f'`{vec_col}`', [float(c) for c in cen])}"
-        for j, cen in centroids
-    ) + " END"
-    am = _guarded_argmin_udf(centroids, _KMEANS_GUARD)
-    cluster_expr = (
-        "CASE WHEN NOT _g.risky THEN _g.j"
-        f" ELSE ({dec_best}).cluster END"
+    order = sorted(centroids, key=lambda t: t[0])
+    cents = (
+        f"from_json('{json.dumps([c for _, c in order])}',"
+        " 'array<array<double>>')"
     )
+    ids = "array(" + ", ".join(str(int(j)) for j, _ in order) + ")"
+
+    def dist(pos: str) -> str:
+        return hof_sqdist_dec_sql(f"`{vec_col}`", f"{cents}[{pos}]")
+
+    pos_expr = (
+        "CASE WHEN size(_c) = 1 THEN _c[0] ELSE array_min(transform(_c,"
+        f" p -> named_struct('dist', {dist('p')}, 'pos', p))).pos END"
+    )
+    am = _centroid_candidates_udf(order, _KMEANS_GUARD)
     return (
-        df.withColumn("_g", am(F.col(vec_col)))
+        df.withColumn("_c", am(F.col(vec_col)))
+        .selectExpr(f"`{id_col}`", f"`{vec_col}`", f"{pos_expr} AS _pos")
         .selectExpr(
-            f"`{id_col}`", f"`{vec_col}`", f"{cluster_expr} AS cluster"
-        )
-        .selectExpr(
-            f"`{id_col}`", f"`{vec_col}`", "cluster", f"{dist_expr} AS dist"
+            f"`{id_col}`",
+            f"`{vec_col}`",
+            f"{ids}[_pos] AS cluster",
+            f"{dist('_pos')} AS dist",
         )
     )
 
 
-def _guarded_argmin_udf(centroids: list[tuple[int, list[float]]],
-                        guard: float):
-    """Arrow-vectorized double argmin + boundary-risk flag for the
-    guarded assignment (one numpy broadcast per batch — the
+def _centroid_candidates_udf(
+    order: list[tuple[int, list[float]]], guard: float
+):
+    """Arrow-vectorized candidate positions (into the id-sorted `order`)
+    for the guarded assignment: one numpy broadcast per batch — the
     operators/similarity.py LSH-bucketize precedent for exactly this
-    interpreted-per-element trap; measured ~1 s/pass as an aggregate-HOF
-    fold at sf0.1, ~0.1 s vectorized).
+    interpreted-per-element trap.
 
     Per-dim (x - c)^2 is the identical IEEE double math the decimal fold
     quantizes; numpy's pairwise summation error is <= ceil(log2 d)*eps*
-    dist (tighter than the left-to-right bound). risky = the two
-    smallest double distances sit within margin = guard * (1e-12 +
-    d*1e-15 + 1.4e-14*(d0+d1)) of each other — covering 2x the per-term
-    HALF_UP quantization (d*0.5e-15 per distance) plus summation, so a
-    non-risky double winner IS the decimal winner. Decimal ties (equal
-    exact distances) have double gap <= margin, so the tie-to-lowest-
-    cluster contract always reaches the decimal branch."""
+    dist (tighter than the left-to-right bound). Centroid j is a
+    candidate when d_j - d_best <= guard * (1e-12 + d*1e-15 +
+    1.4e-14*(d_best + d_j)) — covering 2x the per-term HALF_UP
+    quantization (d*0.5e-15 per distance) plus summation, so any
+    centroid outside the margin is provably farther in exact decimal
+    too. Decimal ties (equal exact distances) have double gap <= margin,
+    so every tied centroid stays a candidate and the exact stage breaks
+    the tie to the lowest cluster id."""
     from pyspark.sql.functions import pandas_udf
 
-    order = sorted(centroids, key=lambda t: t[0])
     C = np.asarray([c for _, c in order], dtype=np.float64)  # (k, d)
-    js = np.asarray([j for j, _ in order], dtype=np.int32)
     d = C.shape[1]
-    k = C.shape[0]
 
-    @pandas_udf("struct<j: int, risky: boolean>")
-    def f(s: pd.Series) -> pd.DataFrame:
+    @pandas_udf("array<int>")
+    def f(s: pd.Series) -> pd.Series:
         if len(s) == 0:  # Arrow can hand a 0-row batch; np.stack([]) raises
-            return pd.DataFrame(
-                {"j": np.array([], dtype=np.int32),
-                 "risky": np.array([], dtype=bool)}
-            )
+            return pd.Series([], dtype=object)
         X = np.stack(s.to_numpy())  # (n, d) float64
         dists = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        best = dists.argmin(axis=1)  # first (lowest j) on exact ties
-        if k > 1:
-            two = np.partition(dists, 1, axis=1)[:, :2]
-            margin = guard * (1e-12 + d * 1e-15 + 1.4e-14 * two.sum(axis=1))
-            risky = (two[:, 1] - two[:, 0]) <= margin
-        else:
-            risky = np.zeros(len(best), dtype=bool)
-        return pd.DataFrame({"j": js[best], "risky": risky})
+        best = dists.min(axis=1, keepdims=True)
+        margin = guard * (1e-12 + d * 1e-15 + 1.4e-14 * (best + dists))
+        return pd.Series(
+            [np.flatnonzero(m) for m in (dists - best) <= margin],
+            dtype=object,
+        )
 
     return f
-
-
-def assign_clusters_join(
-    df: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Same contract as assign_clusters, built as a broadcast-join plan.
-
-    The literal-expression path embeds k*d fold nodes in the plan —
-    ideal for small k (zero shuffle, whole-stage codegen) but plan
-    compile cost grows O(k*d). Past ~1k centroid cells the broadcast
-    nested-loop join + one map-side-combinable min(struct) agg wins:
-    the k-row seeds frame broadcasts, every (row, centroid) distance is
-    the SAME decimal fold, and the argmin is min over (dist, cluster)
-    structs — lexicographic, so ties still break to the lowest cluster
-    id and the output is row-identical to assign_clusters (pinned in
-    tests/test_clustering.py). Shuffle = one partial-aggregated n-row
-    min shuffle."""
-    spark = df.sparkSession
-    seeds = spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in centroids],
-        "cluster int, cen array<double>",
-    )
-    sq = F.zip_with(
-        F.col(vec_col),
-        F.col("cen"),
-        lambda x, y: ((x.cast("double") - y) * (x.cast("double") - y)).cast(
-            _DEC
-        ),
-    )
-    dist = F.aggregate(sq, F.lit(0).cast(_DEC), lambda a, s: (a + s).cast(_DEC))
-    scored = df.crossJoin(F.broadcast(seeds)).select(
-        F.col(id_col), F.col(vec_col), F.col("cluster"), dist.alias("dist")
-    )
-    best = scored.groupBy(id_col).agg(
-        F.min(F.struct("dist", "cluster", vec_col)).alias("_b")
-    )
-    return best.select(
-        F.col(id_col),
-        F.col(f"_b.{vec_col}").alias(vec_col),
-        F.col("_b.cluster").alias("cluster"),
-        F.col("_b.dist").alias("dist"),
-    )
 
 
 def centroid_update(

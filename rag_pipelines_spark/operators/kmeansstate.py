@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.clustering import (
     assign_clusters,
-    assign_clusters_join,
     seed_centroids,
 )
 from rag_pipelines_spark.operators.rollup import merge_rollup, read_rollup
@@ -77,7 +76,6 @@ def merge_kmeans_state(
     vec_col: str,
     *,
     k: int,
-    d: int,
     epoch: int | None = None,
 ) -> None:
     """Fold one batch of embeddings into the centroid state.
@@ -101,10 +99,9 @@ def merge_kmeans_state(
         ).coalesce(1).write.mode("overwrite").parquet(_seeds_dir(state_path))
     else:
         seeds = read_kmeans_seeds(spark, state_path)
-    # literal-expression assignment for small k (zero shuffle); the
-    # broadcast-join form past ~1k cells, where plan size would dominate
-    assign = assign_clusters if k * d <= 1024 else assign_clusters_join
-    assigned = assign(emb, seeds, id_col, vec_col)
+    # zero-shuffle assignment at any k: literal centroids, exact decimal
+    # distances only for each row's float-margin candidates
+    assigned = assign_clusters(emb, seeds, id_col, vec_col)
     long = assigned.select(
         "cluster", F.posexplode(F.col(vec_col)).alias("pos", "_x")
     ).select(
@@ -151,6 +148,4 @@ def kmeans_assign_from_state(
         (c, [dims[j + 1] for j in range(len(dims))])
         for c, dims in sorted(byc.items())
     ]
-    d = len(cents[0][1]) if cents else 0
-    assign = assign_clusters if len(cents) * d <= 1024 else assign_clusters_join
-    return assign(df, cents, id_col, vec_col)
+    return assign_clusters(df, cents, id_col, vec_col)

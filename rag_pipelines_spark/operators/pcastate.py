@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.rollup import merge_rollup, read_rollup
+from rag_pipelines_spark.operators.vecexpr import dlit
 from rag_pipelines_spark.queries._util import dec_to_dbl
 
 __all__ = [
@@ -180,9 +181,9 @@ def pca_component_from_state(
     # rounded in both engines. Same trick for n2 on a 1e-12 grid.
     k19 = "decimal(19,0)"
     for _ in range(iters):
-        vdf = full.sparkSession.createDataFrame(
-            [(j + 1, v[j]) for j in range(d)], "j int, vj double"
-        )
+        # a VALUES LocalRelation: no Python RDD (and worker) per step
+        vals = ", ".join(f"({j + 1}, {dlit(v[j])})" for j in range(d))
+        vdf = spark.sql(f"SELECT * FROM (VALUES {vals}) AS t(j, vj)")
         kc = F.floor(F.col("c") * 1e9 + F.lit(0.5)).cast(k19)
         kv = F.floor(F.col("vj") * 1e9 + F.lit(0.5)).cast(k19)
         w = (

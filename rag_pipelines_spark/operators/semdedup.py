@@ -42,11 +42,12 @@ window (partitioned by doc id — re-expressible as max_by if the window
 ever shows up in a profile) and the within-cluster self-equi-join whose
 volume is sum_c |c|^2 — bounded by target_cluster_size * N, tunable,
 and the exact knob SemDeDup's k controls. The seed table is collected
-and broadcast: k·dim floats.
+and embedded in the plan as a literal: k·dim floats.
 """
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -199,11 +200,12 @@ def nearest_seeds(frame: DataFrame, seeds: DataFrame, n: int) -> DataFrame:
     Two-phase, so no row pays k interpreted decimal folds: the seeds are
     collected (k x dim doubles, centroid-sized), one float64 Arrow matmul
     per batch keeps each row's within-margin candidates
-    (`_margin_candidates_udf`, ~n per row), and only those join the
-    broadcast seed table for the exact cos9 and the rank. The corpus
-    never shuffles for scoring; the rank window is the only exchange.
+    (`_margin_candidates_udf`, ~n per row), and only those index the
+    seed rows, embedded in the plan as one literal array, for the exact
+    cos9 and the rank. The corpus never shuffles for scoring and no seed
+    table is joined or broadcast; the rank window is the only exchange.
     """
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    from pyspark.sql.types import ArrayType
 
     seeds = seeds.select("seed_id", "sv", "sn2")
     rows = seeds.collect()
@@ -221,26 +223,25 @@ def nearest_seeds(frame: DataFrame, seeds: DataFrame, n: int) -> DataFrame:
         dtype=np.float64,
     ).reshape(len(rows), dim)
     cand_udf = _margin_candidates_udf(seed_mat, n)
-    table = frame.sparkSession.createDataFrame(
-        [(i, *r) for i, r in enumerate(rows)],
-        StructType(
-            [StructField("_sidx", IntegerType(), False)]
-            + [
-                StructField(f.name, f.dataType, True) for f in seeds.schema
-            ]
-        ),
+    # the seed rows as ONE plan literal: JSON text parsed against the
+    # seed schema (constant-folded once; doubles round-trip exactly), so
+    # the id stays type-opaque (string / decimal ids work) and plan
+    # construction is one string, not k*dim literal nodes
+    table = F.from_json(
+        F.lit(json.dumps([r.asDict() for r in rows], default=str)),
+        ArrayType(seeds.schema),
     )
     scored = (
         frame.withColumn("_sidx", F.explode(cand_udf(F.col("v"))))
-        .join(F.broadcast(table), "_sidx")
+        .withColumn("_s", table[F.col("_sidx")])
         .select(
             "id",
             "v",
             "n2",
-            "seed_id",
-            cos9(dot_dec(F.col("v"), F.col("sv")), F.col("n2"), F.col("sn2")).alias(
-                "scos"
-            ),
+            F.col("_s.seed_id").alias("seed_id"),
+            cos9(
+                dot_dec(F.col("v"), F.col("_s.sv")), F.col("n2"), F.col("_s.sn2")
+            ).alias("scos"),
         )
     )
     # nulls last on BOTH engines (DuckDB DESC defaults nulls-first)

@@ -159,16 +159,14 @@ def hof_dot_dec_sql(a_arr_sql: str, b_arr_sql: str,
     )
 
 
-def hof_sqdist_dec_sql(vec_arr_sql: str, lit_vals: list[float]) -> str:
-    """Exact squared-L2 distance to a literal centroid (the k-means
-    assignment distance): per-dim double (CAST(x AS DOUBLE) - c)^2 cast
-    to DECIMAL(30,15), exact fold, with the centroid embedded as a
-    literal double array."""
-    arr = dbl_array_sql(lit_vals)
+def hof_sqdist_dec_sql(vec_arr_sql: str, cen_arr_sql: str) -> str:
+    """Exact squared-L2 distance to a centroid array<double> expression
+    (the k-means assignment distance): per-dim double
+    (CAST(x AS DOUBLE) - c)^2 cast to DECIMAL(30,15), exact fold."""
     body = (
         f"CAST((CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)"
         f" AS {_DEC})"
     )
     return hof_fold_dec_sql(
-        f"zip_with({vec_arr_sql}, {arr}, (x, y) -> {body})"
+        f"zip_with({vec_arr_sql}, {cen_arr_sql}, (x, y) -> {body})"
     )

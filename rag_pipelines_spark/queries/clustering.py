@@ -294,7 +294,6 @@ def q_kmeans_from_state(spark, sf_dir):
             "vec_id",
             "embedding",
             k=_K,
-            d=_D,
             epoch=epoch,
         )
     incoming = e.filter(F.col("vec_id") % 3 == 2)

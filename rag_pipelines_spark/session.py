@@ -63,16 +63,12 @@ def get_spark(
         # The flag also steers the STATIC planner, which picks SHJ
         # whenever stats say the build side fits a local hash map — the
         # 256m AQE bound does not apply there, so a misestimated build
-        # side on a skewed or stats-poor source can OOM an executor.
-        # Both knobs are env-overridable for cluster postures where
-        # build-side memory is tighter.
+        # side on a skewed or stats-poor source can OOM an executor. A
+        # cluster posture with tighter build-side memory turns the flag
+        # back on or lowers the threshold here.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "256m"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m"
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -544,7 +544,7 @@ def continuous_ingest_pipeline(
 
             merge_kmeans_state(
                 s, emb, os.path.join(root, "kmeans"), id_col, "embedding",
-                k=kmeans_k, d=64, epoch=epoch_id,
+                k=kmeans_k, epoch=epoch_id,
             )
             crash("kmeans")
         if pca_moments:

@@ -14,7 +14,6 @@ from pyspark.sql.window import Window
 from rag_pipelines_spark.io import table
 from rag_pipelines_spark.operators.clustering import (
     assign_clusters,
-    assign_clusters_join,
     cluster_balanced_topm,
     kmeans_fit,
     seed_centroids,
@@ -74,30 +73,25 @@ def test_empty_clusters_drop_identically(spark):
     assert len(cents) == 1 and cents[0][0] == 0
 
 
-def test_assignment_plan_is_zero_shuffle(spark):
+def test_assignment_plan_is_zero_shuffle(spark, tmp_path):
     """The assignment stage must be pure column math: no Exchange, no
-    join, no window in the physical plan (centroids are literals)."""
-    cents = seed_centroids(_emb(spark), k=8)
-    plan = assign_clusters(_emb(spark), cents)._jdf.queryExecution().executedPlan().toString()
-    for mark in ("Exchange", "Join", "Window"):
-        assert mark not in plan, f"assignment plan contains {mark}:\n{plan}"
+    join, no window in the physical plan (centroids are literals) — at
+    small k and past k*d = 1024 (k=32, d=64), for the batch assignment
+    and for the state-served one."""
+    from rag_pipelines_spark.operators.kmeansstate import (
+        kmeans_assign_from_state,
+        merge_kmeans_state,
+    )
 
-
-def test_join_assignment_equals_literal_assignment(spark):
-    """The broadcast-join assignment (large-k path, used by the kmeans
-    state family) must be row-identical to the literal-expression path —
-    same decimal distances, same (dist, cluster) tie-break."""
     emb = _emb(spark)
-    cents = seed_centroids(emb, k=8)
-    lit = sorted(
-        (r["vec_id"], r["cluster"], r["dist"])
-        for r in assign_clusters(emb, cents).collect()
-    )
-    jn = sorted(
-        (r["vec_id"], r["cluster"], r["dist"])
-        for r in assign_clusters_join(emb, cents).collect()
-    )
-    assert jn == lit
+    state = str(tmp_path / "kmeans")
+    merge_kmeans_state(spark, emb, state, "vec_id", "embedding", k=32, epoch=0)
+    frames = [assign_clusters(emb, seed_centroids(emb, k=k)) for k in (8, 32)]
+    frames.append(kmeans_assign_from_state(spark, emb, state))
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for mark in ("Exchange", "Join", "Window"):
+            assert mark not in plan, f"assignment plan contains {mark}:\n{plan}"
 
 
 def test_seed_centroids_partitioning_invariant(spark):
@@ -110,17 +104,17 @@ def test_seed_centroids_partitioning_invariant(spark):
 
 
 def test_guarded_argmin_equals_forced_decimal_argmin(spark, monkeypatch):
-    """The r10 guarded fast path (double argmin unless boundary-risky)
-    must be row-identical — cluster AND exact decimal dist — to the
-    all-decimal argmin (_KMEANS_GUARD=1e9 pushes every row down the
-    decimal branch). Runs a full Lloyd fit so the pin covers the
-    iterated assignment, not just one pass."""
+    """The guarded path (exact decimal distances only for the float-margin
+    candidates) must be row-identical — cluster AND exact decimal dist —
+    to the all-decimal argmin (_KMEANS_GUARD=1e9 makes every centroid a
+    candidate). Runs a full Lloyd fit so the pin covers the iterated
+    assignment, not just one pass, at k=8 and at k=32 (k*d = 2048)."""
     from rag_pipelines_spark.operators import clustering
 
     emb = _emb(spark)
 
-    def rows():
-        assigned, cents = kmeans_fit(emb, k=8, iters=2, d=64)
+    def rows(k):
+        assigned, cents = kmeans_fit(emb, k=k, iters=2, d=64)
         return (
             sorted(
                 (r["vec_id"], r["cluster"], r["dist"])
@@ -129,7 +123,9 @@ def test_guarded_argmin_equals_forced_decimal_argmin(spark, monkeypatch):
             cents,
         )
 
-    fast = rows()
-    monkeypatch.setattr(clustering, "_KMEANS_GUARD", 1e9)
-    slow = rows()
-    assert fast == slow
+    for k in (8, 32):
+        monkeypatch.setattr(clustering, "_KMEANS_GUARD", 1.0)
+        fast = rows(k)
+        monkeypatch.setattr(clustering, "_KMEANS_GUARD", 1e9)
+        slow = rows(k)
+        assert fast == slow, f"k={k} diverged"

@@ -163,7 +163,7 @@ def run(spark, sf_dir: str, batch_sizes: list[int]) -> list[dict]:
             t0 = time.time()
             merge_kmeans_state(
                 spark, emb, os.path.join(root, "kmeans"), "doc_id",
-                "embedding", k=64, d=64, epoch=bi,
+                "embedding", k=64, epoch=bi,
             )
             rec["kmeans_s"] = round(time.time() - t0, 2)
             t0 = time.time()
