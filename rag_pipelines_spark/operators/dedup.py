@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -21,6 +21,7 @@ from rag_pipelines_spark.operators.state import (
     live_version_dir,
 )
 from rag_pipelines_spark.operators.statefs import backend_for
+from rag_pipelines_spark.operators.textstats import word_ngrams
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -63,9 +64,9 @@ def word_shingles(ws, shingle_size: int = 3):
 
     Only callers that need the distinct *set* as one array use it:
     near_dedup_pairs (exact Jaccard verification) and minhash_candidates
-    (HashingTF input). minhash_band_keys' default path needs no array —
-    it explodes shingle strings by positions-explode (SCALE.md), which
-    is codegen'd and beats this UDF's Python hop. Within an array, the
+    (HashingTF input). minhash_band_keys needs no array — it takes
+    shingle rows from textstats.word_ngrams, which is codegen'd and
+    beats this UDF's Python hop. Within an array, the
     Arrow-batched join beats a column-expression formulation (transform
     over sequence): higher-order lambdas evaluate interpreted per element,
     measured ~9 s for 5000 docs × ~100 shingles at sf0.1 vs ~0.3 s
@@ -343,7 +344,6 @@ def minhash_band_keys(
     n_hashes: int = 8,
     bands: int = 4,
     shingle_size: int = 3,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """(id, band, bkey) deterministic md5 min-hash band keys.
 
@@ -354,27 +354,15 @@ def minhash_band_keys(
     any engine/partitioning (md5 is md5), so state written today matches
     signatures computed by any future job.
 
-    `shingles_df` lets a caller that already built the (id, shingles)
-    frame (e.g. near_dedup_pairs, which also needs the sets for exact
-    verification) share the construction instead of duplicating it.
-    Without it, shingles are built by positions-explode (SCALE.md) with no
+    Shingles are textstats.word_ngrams over single-space splits, with no
     per-doc distinct: a min over a multiset equals the min over its set,
-    so the signatures match the distinct-set path exactly.
+    so the signatures equal those of the distinct shingle set
+    (word_shingles).
     """
     rows_per_band = n_hashes // bands
-    if shingles_df is not None:
-        ex = shingles_df.select(F.col(id_col), F.explode("shingles").alias("x"))
-    else:
-        ws = df.select(
-            F.col(id_col), F.split(F.col(text_col), " ").alias("ws")
-        ).filter(F.size("ws") >= shingle_size)
-        ex = ws.select(
-            id_col, "ws",
-            F.explode(F.sequence(F.lit(0), F.size("ws") - shingle_size)).alias("i"),
-        ).select(
-            id_col,
-            F.array_join(F.slice("ws", F.col("i") + 1, shingle_size), " ").alias("x"),
-        )
+    ex = word_ngrams(
+        df, F.split(F.col(text_col), " "), shingle_size, id_col
+    ).select(id_col, F.col("gram").alias("x"))
     sig = ex.groupBy(id_col).agg(
         *[
             F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("x")))).alias(f"s{s}")
@@ -402,12 +390,12 @@ def band_candidate_pairs(
     """Distinct (a_id, b_id) candidate pairs from an (id, band, bkey)
     frame — ids sharing any band bucket, a_id < b_id.
 
-    Pairs come from COLLECTED buckets, not a bands self-join: a shingle
-    UDF in the input (the `shingles_df` path of minhash_band_keys)
-    defeats exchange-reuse canonicalization, so a self-join would
-    compute the whole signature subtree once PER SIDE (measured 2x at
-    sf10 — SCALE.md). groupBy(band,bkey) + per-bucket expansion runs
-    signatures once and shuffles once; the expansion work is output-sized
+    Pairs come from COLLECTED buckets, not a bands self-join: a self-join
+    computes the whole signature subtree once PER SIDE whenever anything
+    in it defeats exchange-reuse canonicalization (a Python UDF does;
+    measured 2x at sf10 — SCALE.md). groupBy(band,bkey) + per-bucket
+    expansion runs signatures once and shuffles once; the expansion work
+    is output-sized
     (LSH buckets hold a handful of near-dups each), never corpus-sized.
 
     Expansion is TWO chained Generates — (pos, a) rows, then each row
@@ -496,6 +484,24 @@ def band_candidate_pairs(
     )
 
 
+def band_losers(bands: DataFrame, id_col: str) -> DataFrame:
+    """(id,) of every doc that shares some (band, bkey) bucket with a
+    smaller id — the deterministic smaller-id-keeps rule of near-dedup.
+
+    "Drop a if SOME smaller id shares a bucket" == "drop a if the bucket
+    min is smaller", so a min-window over (band, bkey) replaces a bands
+    self-join: the signature subtree runs once instead of once per join
+    side, and the bucket pass is one hashed window shuffle.
+    """
+    w_bucket = Window.partitionBy("band", "bkey")
+    return (
+        bands.withColumn("_min_id", F.min(id_col).over(w_bucket))
+        .filter(F.col("_min_id") < F.col(id_col))
+        .select(id_col)
+        .distinct()
+    )
+
+
 def near_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -522,13 +528,13 @@ def near_dedup_pairs(
     fetches the two shingle arrays per candidate via two equi-joins on id
     (shuffle keyed on id, candidate-sized probe side), so post-LSH work
     is output-sized. `array_intersect` on the already-distinct shingle
-    arrays gives the exact intersection cardinality. The shingle frame
-    feeds three plan branches (band keys + both verify sides) and the
-    Arrow-UDF subtree defeats exchange reuse, so it is materialized ONCE
-    via localCheckpoint (r10: Spark recomputed it per branch — three
-    full shingle passes). The storage cost is the distinct-shingle
-    arrays — the frame a scale deployment persists or writes out anyway
-    (SCALE.md signatures-once discipline).
+    arrays gives the exact intersection cardinality. The shingle-set
+    frame feeds both verify sides and the Arrow-UDF subtree defeats
+    exchange reuse, so it is materialized ONCE via localCheckpoint (r10:
+    Spark recomputed it per branch). The storage cost is the
+    distinct-shingle arrays — the frame a scale deployment persists or
+    writes out anyway (SCALE.md signatures-once discipline). Band keys
+    are built from the text, not from these arrays.
     """
     toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("ws"))
     sh = (
@@ -539,9 +545,7 @@ def near_dedup_pairs(
         .filter(F.size("shingles") > 0)
         .localCheckpoint(eager=True)
     )
-    keys = minhash_band_keys(
-        df, id_col, text_col, n_hashes, bands, shingle_size, shingles_df=sh
-    )
+    keys = minhash_band_keys(df, id_col, text_col, n_hashes, bands, shingle_size)
     cand = band_candidate_pairs(keys, id_col)
     a_sh = sh.select(F.col(id_col).alias("a_id"), F.col("shingles").alias("a_sh"))
     b_sh = sh.select(F.col(id_col).alias("b_id"), F.col("shingles").alias("b_sh"))
@@ -624,7 +628,7 @@ def incremental_neardup(
     state_exists = live is not None and any(
         n.endswith(".parquet") for n in backend_for(live).listdir(live)
     )
-    dup_vs_state = None
+    dups = band_losers(new_bands, id_col)
     if state_exists:
         state = spark.read.parquet(live)
         if epoch is not None:
@@ -634,26 +638,8 @@ def incremental_neardup(
             state = state.filter(
                 F.col("epoch").isNull() | (F.col("epoch") < epoch)
             )
-        dup_vs_state = (
-            new_bands.join(state, ["band", "bkey"], "left_semi")
-            .select(id_col)
-            .distinct()
-        )
-    a = new_bands.select(
-        F.col(id_col).alias("_a_id"), "band", "bkey"
-    )
-    b = new_bands.select(F.col(id_col).alias("_b_id"), "band", "bkey")
-    dup_in_batch = (
-        a.join(b, ["band", "bkey"])
-        .filter(F.col("_b_id") < F.col("_a_id"))
-        .select(F.col("_a_id").alias(id_col))
-        .distinct()
-    )
-    dups = (
-        dup_in_batch.unionByName(dup_vs_state).distinct()
-        if dup_vs_state is not None
-        else dup_in_batch
-    )
+        dup_vs_state = new_bands.join(state, ["band", "bkey"], "left_semi")
+        dups = dups.unionByName(dup_vs_state.select(id_col)).distinct()
     clean = batch.join(dups, id_col, "left_anti").localCheckpoint(eager=True)
 
     def _append(vdir: str) -> None:

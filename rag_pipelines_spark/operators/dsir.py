@@ -19,10 +19,8 @@ mixture family: quality_model scores words against fixed weights, DSIR
 scores them against a target CORPUS).
 
 Spark-first / 100 TB posture:
-  * Feature extraction is a per-row explode (unigrams + bigrams are
-    assembled AFTER a positions-explode, the same
-    InferFiltersFromGenerate-safe pattern as q_decontaminate) — no
-    corpus shuffle.
+  * Feature extraction is a per-row explode (textstats.word_ngrams for
+    unigrams and bigrams) — no corpus shuffle.
   * Both distributions are bucket-count hash-aggs with map-side
     combine: the shuffle is n_buckets rows per side, never the corpus.
   * The per-bucket log-ratio table is n_buckets rows -> broadcast; the
@@ -43,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rag_pipelines_spark.operators.textstats import word_ngrams
 from rag_pipelines_spark.queries._util import dec_to_dbl
 
 __all__ = [
@@ -72,34 +71,14 @@ def hashed_ngram_features(
     """(id, bucket) rows — one per word unigram AND bigram occurrence
     (with multiplicity: DSIR features are a bag, not a set).
 
-    Tokens are lowercased whitespace splits. The bigram is assembled
-    after a positions-explode over an int sequence (generator input
-    stays cheap; the string concat never clones into scan filters).
-    A doc with n tokens emits n unigrams + max(n-1, 0) bigrams.
+    Tokens are lowercased whitespace splits; both n-gram orders come
+    from textstats.word_ngrams. A doc with n tokens emits n unigrams +
+    max(n-1, 0) bigrams.
     """
-    toks = df.select(
-        F.col(id_col), F.split(F.lower(F.col(text_col)), r"\s+").alias("_ws")
-    )
-    n = F.size("_ws")
-    pos = toks.select(
-        id_col,
-        "_ws",
-        F.explode(F.sequence(F.lit(1), F.greatest(n, F.lit(1)))).alias("_i"),
-    ).filter(F.col("_i") <= n)
-    uni = pos.select(id_col, F.element_at("_ws", F.col("_i")).alias("_g"))
-    bi = (
-        pos.filter(F.col("_i") < F.size("_ws"))
-        .select(
-            id_col,
-            F.concat_ws(
-                " ",
-                F.element_at("_ws", F.col("_i")),
-                F.element_at("_ws", F.col("_i") + 1),
-            ).alias("_g"),
-        )
-    )
+    ws = F.split(F.lower(F.col(text_col)), r"\s+")
+    uni, bi = (word_ngrams(df, ws, k, id_col) for k in (1, 2))
     return uni.unionByName(bi).select(
-        id_col, _bucket(F.col("_g"), n_buckets).alias("bucket")
+        id_col, _bucket(F.col("gram"), n_buckets).alias("bucket")
     )
 
 

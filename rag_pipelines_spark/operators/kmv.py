@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from rag_pipelines_spark.operators.freqsketch import _join_null_safe
+
 __all__ = [
     "kmv_sketch",
     "kmv_estimate",
@@ -121,16 +123,12 @@ def kmv_intersect(
     members of both sketches estimate the Jaccard; J * union_est is the
     overlap. Inner join on keys (groups missing a side have overlap 0
     by definition — callers union those in if they need them)."""
-    bb = b
-    for kcol in keys:
-        bb = bb.withColumnRenamed(kcol, f"__k_{kcol}")
-    cond = None
-    for kcol in keys:
-        c = F.col(kcol).eqNullSafe(F.col(f"__k_{kcol}"))
-        cond = c if cond is None else cond & c
-    j = a.withColumnRenamed("kmv", "kmv_a").join(
-        bb.withColumnRenamed("kmv", "kmv_b"), cond, "inner"
-    ).drop(*[f"__k_{kcol}" for kcol in keys])
+    j = _join_null_safe(
+        a.withColumnRenamed("kmv", "kmv_a"),
+        b.withColumnRenamed("kmv", "kmv_b"),
+        keys,
+        "inner",
+    )
     union_k = F.slice(
         F.array_sort(F.array_union("kmv_a", "kmv_b")), 1, k
     )

@@ -55,14 +55,8 @@ def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def prefix_candidates(
-    toks: DataFrame, num: int, den: int
-) -> DataFrame:
-    """(a_id, b_id) candidate pairs from the prefix equi-join — every
-    qualifying pair is here (lemma), plus the prefix-collision extras the
-    verify step rejects. Exposed so the scale harness can measure the
-    candidate count the pruning argument rests on."""
-    freq = toks.groupBy("tok").agg(F.count("*").alias("df"))
+def _prefixes(toks: DataFrame, freq: DataFrame, num: int, den: int) -> DataFrame:
+    """Rarest-p prefix tokens per doc under a SHARED frequency order."""
     # rarest-first global order; token string breaks frequency ties so the
     # order is total (any consistent total order preserves the lemma)
     w = Window.partitionBy("id").orderBy("df", "tok")
@@ -78,7 +72,50 @@ def prefix_candidates(
         - F.expr(f"({num} * sz + {den - 1}) div {den}")
         + F.lit(1)
     )
-    prefix = ranked.filter(F.col("rnk") <= prefix_len).select("id", "tok")
+    return ranked.filter(F.col("rnk") <= prefix_len).select("id", "tok")
+
+
+def _verified(
+    cand: DataFrame, a_toks: DataFrame, b_toks: DataFrame, num: int, den: int
+) -> DataFrame:
+    """(a, b, jaccard) for the candidate pairs (a, b) = cand.columns whose
+    distinct-token Jaccard >= num/den; a_toks / b_toks are the (id, tok)
+    frames the two sides' ids come from."""
+    a, b = cand.columns
+
+    def sets(toks, side):
+        return toks.groupBy("id").agg(
+            F.collect_set("tok").alias(f"{side}_set"),
+            F.count("*").alias(f"{side}_n"),
+        ).withColumnRenamed("id", side)
+
+    inter = F.size(F.array_intersect(f"{a}_set", f"{b}_set")).cast("long")
+    return (
+        cand.join(sets(a_toks, a), a)
+        .join(sets(b_toks, b), b)
+        .withColumn("inter", inter)
+        .withColumn("u", F.col(f"{a}_n") + F.col(f"{b}_n") - F.col("inter"))
+        # exact integer threshold test — floats only in the reported value
+        .filter(F.col("inter") * F.lit(den) >= F.lit(num) * F.col("u"))
+        .select(
+            a,
+            b,
+            (F.col("inter").cast("double") / F.col("u").cast("double")).alias(
+                "jaccard"
+            ),
+        )
+    )
+
+
+def prefix_candidates(
+    toks: DataFrame, num: int, den: int
+) -> DataFrame:
+    """(a_id, b_id) candidate pairs from the prefix equi-join — every
+    qualifying pair is here (lemma), plus the prefix-collision extras the
+    verify step rejects. Exposed so the scale harness can measure the
+    candidate count the pruning argument rests on."""
+    freq = toks.groupBy("tok").agg(F.count("*").alias("df"))
+    prefix = _prefixes(toks, freq, num, den)
     return (
         prefix.alias("a")
         .join(prefix.alias("b"), "tok")
@@ -100,49 +137,7 @@ def jaccard_prefix_join(
     spaces, empties dropped (mirrors the DuckDB oracle exactly)."""
     num, den = threshold_num, threshold_den
     toks = _tokens(docs, id_col, text_col)
-    cand = prefix_candidates(toks, num, den)
-    sets = toks.groupBy("id").agg(
-        F.collect_set("tok").alias("set"), F.count("*").alias("n")
-    )
-    pairs = (
-        cand.join(sets.select(F.col("id").alias("a_id"),
-                              F.col("set").alias("a_set"),
-                              F.col("n").alias("a_n")), "a_id")
-        .join(sets.select(F.col("id").alias("b_id"),
-                          F.col("set").alias("b_set"),
-                          F.col("n").alias("b_n")), "b_id")
-    )
-    inter = F.size(F.array_intersect("a_set", "b_set")).cast("long")
-    union = F.col("a_n") + F.col("b_n") - F.col("inter")
-    return (
-        pairs.withColumn("inter", inter)
-        .withColumn("u", union)
-        # exact integer threshold test — floats only in the reported value
-        .filter(F.col("inter") * F.lit(den) >= F.lit(num) * F.col("u"))
-        .select(
-            "a_id",
-            "b_id",
-            (F.col("inter").cast("double") / F.col("u").cast("double")).alias(
-                "jaccard"
-            ),
-        )
-    )
-
-
-def _prefixes(toks: DataFrame, freq: DataFrame, num: int, den: int) -> DataFrame:
-    """Rarest-p prefix tokens per doc under a SHARED frequency order."""
-    w = Window.partitionBy("id").orderBy("df", "tok")
-    ranked = (
-        toks.join(freq, "tok")
-        .withColumn("rnk", F.row_number().over(w))
-        .withColumn("sz", F.count("*").over(Window.partitionBy("id")))
-    )
-    prefix_len = (
-        F.col("sz")
-        - F.expr(f"({num} * sz + {den - 1}) div {den}")
-        + F.lit(1)
-    )
-    return ranked.filter(F.col("rnk") <= prefix_len).select("id", "tok")
+    return _verified(prefix_candidates(toks, num, den), toks, toks, num, den)
 
 
 def jaccard_prefix_join_bipartite(
@@ -178,26 +173,4 @@ def jaccard_prefix_join_bipartite(
         .select(F.col("a.id").alias("left_id"), F.col("b.id").alias("right_id"))
         .distinct()
     )
-
-    def sets(toks, idc):
-        return toks.groupBy("id").agg(
-            F.collect_set("tok").alias(f"{idc}_set"),
-            F.count("*").alias(f"{idc}_n"),
-        ).withColumnRenamed("id", idc)
-
-    pairs = cand.join(sets(lt, "left_id"), "left_id").join(
-        sets(rt, "right_id"), "right_id"
-    )
-    inter = F.size(F.array_intersect("left_id_set", "right_id_set")).cast("long")
-    return (
-        pairs.withColumn("inter", inter)
-        .withColumn("u", F.col("left_id_n") + F.col("right_id_n") - F.col("inter"))
-        .filter(F.col("inter") * F.lit(den) >= F.lit(num) * F.col("u"))
-        .select(
-            "left_id",
-            "right_id",
-            (F.col("inter").cast("double") / F.col("u").cast("double")).alias(
-                "jaccard"
-            ),
-        )
-    )
+    return _verified(cand, lt, rt, num, den)

@@ -14,10 +14,10 @@ sub-document granularity.
 
 Spark-first design (and the 100 TB argument):
 
-  * grams are built per row with pure column math — positions-explode of
-    ``sequence(0, size-n)``, each position slicing the once-split token
-    array — so gram construction is embarrassingly parallel with ZERO
-    shuffle, no Python and no interpreted lambda;
+  * grams are built per row with pure column math (textstats.word_ngrams,
+    a positions-explode slicing the once-split token array), so gram
+    construction is embarrassingly parallel with ZERO shuffle, no Python
+    and no interpreted lambda;
   * the one corpus-sized shuffle is the gram-frequency hash aggregate,
     which map-side combines (partial counts per partition before the
     exchange). Grams travel as md5 digests, not strings: fixed 32-byte
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.dedup import rebuild_affected
+from rag_pipelines_spark.operators.textstats import word_ngrams
 
 __all__ = [
     "ngram_occurrences",
@@ -60,17 +61,11 @@ def ngram_occurrences(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """(id, pos, gh) — every token n-gram occurrence, gh = md5 of the
-    space-joined gram. pos is the 0-based index of the gram's first token.
-    Docs with fewer than n tokens contribute nothing. Positions-explode
-    (SCALE.md): the token array is materialized once, then sliced per
-    exploded position in a plain codegen'd projection."""
-    toks = df.select(
-        F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("toks")
-    ).filter(F.size("toks") >= n)
-    gram = F.array_join(F.slice("toks", F.col("pos") + 1, n), " ")
-    return toks.select(
-        "id", "toks", F.explode(F.sequence(F.lit(0), F.size("toks") - n)).alias("pos")
-    ).select("id", "pos", F.md5(gram).alias("gh"))
+    space-joined gram (textstats.word_ngrams over single-space splits).
+    pos is the 0-based index of the gram's first token. Docs with fewer
+    than n tokens contribute nothing."""
+    grams = word_ngrams(df, F.split(F.col(text_col), " "), n, id_col)
+    return grams.select(F.col(id_col).alias("id"), "pos", F.md5("gram").alias("gh"))
 
 
 def _dup_occurrences(occ: DataFrame, min_count: int) -> DataFrame:

@@ -1,9 +1,11 @@
 """Text analytics operators (north star §2.11): token counts, quality
-ratios and the fixed-size chunker.
+ratios, word n-grams and the fixed-size chunker.
 
 All per-row JVM expressions — no shuffle, safe at any scale.
 The ratios feed the pretraining quality filter (plans/pretraining.py);
-`char_chunks` is the body of the oracle-checked `q_chunking`.
+`word_ngrams` is the one n-gram enumerator of every dedup,
+decontamination, DSIR and text-statistics stage; `char_chunks` is the
+body of the oracle-checked `q_chunking`.
 """
 
 from __future__ import annotations
@@ -38,6 +40,38 @@ def stopword_ratio(col: Column | str, stopwords: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda x: F.array_contains(arr, x))).cast(
         "double"
     ) / F.size(toks)
+
+
+def word_ngrams(df: DataFrame, toks: Column | str, n: int, *keep: str) -> DataFrame:
+    """(*keep, pos, gram) — one row per n-token window of the token-array
+    column `toks`: pos is the window's 0-based start, gram its tokens
+    joined with single spaces. Fewer than n tokens, or NULL, gives no
+    rows; a repeated gram gives one row per position. The caller owns
+    the tokenization (split pattern, lowercasing, empty-token policy).
+
+    Positions-explode (SCALE.md "Explode discipline"): the generator
+    child is the cheap int `sequence(0, greatest(size - n, 0))` and the
+    gram string is assembled AFTER the Generate from the once-split
+    array. Exploding a gram-string array instead lets
+    InferFiltersFromGenerate clone the whole string chain into the
+    scan's DataFilters, where it runs interpreted (measured ~8 s extra
+    on q_decontaminate at sf0.1). The `pos <= size - n` filter sits
+    after the Generate too: a size filter before it is pushed below the
+    projection and splits every document twice.
+    """
+    ws = df.select(*keep, _c(toks).alias("_ws"))
+    last = F.size("_ws") - n
+    return (
+        ws.select(
+            *keep, "_ws",
+            F.explode(F.sequence(F.lit(0), F.greatest(last, F.lit(0)))).alias("pos"),
+        )
+        .filter(F.col("pos") <= last)
+        .select(
+            *keep, "pos",
+            F.array_join(F.slice("_ws", F.col("pos") + 1, n), " ").alias("gram"),
+        )
+    )
 
 
 def char_chunks(df: DataFrame, id_col: str, text_col: str, size: int = 100,

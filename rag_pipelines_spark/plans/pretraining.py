@@ -19,12 +19,17 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rag_pipelines_spark.operators.dedup import line_dedup, minhash_band_keys
+from rag_pipelines_spark.operators.dedup import (
+    band_losers,
+    line_dedup,
+    minhash_band_keys,
+)
 from rag_pipelines_spark.operators.packing import pack_sequences
 from rag_pipelines_spark.operators.textstats import (
     punct_ratio,
     stopword_ratio,
     whitespace_token_count,
+    word_ngrams,
 )
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "it")
@@ -98,57 +103,23 @@ def pretraining_prep_pipeline(
 
         lined = lined.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # 3. minhash near-dedup: band collisions keep the smaller id.
-    # "drop a if SOME smaller id shares a bucket" == "drop a if the bucket
-    # min is smaller", so a min-window over (band, bkey) replaces the bands
-    # self-join: the expensive signature computation (shingle UDF + hash
-    # agg) runs ONCE instead of once per join side, and the bucket pass is
-    # one hashed window shuffle instead of a join
-    from pyspark.sql import Window
-
-    bands = minhash_band_keys(lined, id_col, text_col)
-    w_bucket = Window.partitionBy("band", "bkey")
-    dup_ids = (
-        bands.withColumn("_min_id", F.min(id_col).over(w_bucket))
-        .filter(F.col("_min_id") < F.col(id_col))
-        .select(id_col)
-        .distinct()
-    )
+    # 3. minhash near-dedup: band collisions keep the smaller id
+    dup_ids = band_losers(minhash_band_keys(lined, id_col, text_col), id_col)
     deduped = lined.join(dup_ids, id_col, "left_anti")
     if persist_stages:
         from pyspark import StorageLevel
 
         deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # 4. decontamination: any shared gram_n-gram with bench drops the doc.
-    # Positions-explode (SCALE.md) + broadcast bench grams.
-    def grams(df, idc, text_c):
-        ws = F.split(F.lower(text_c), r"\s+")
-        with_ws = df.select(F.col(idc), ws.alias("_ws"))
-        n = F.size("_ws") - (gram_n - 1)
-        return (
-            with_ws.select(
-                idc, "_ws",
-                F.explode(F.sequence(F.lit(1), F.greatest(n, F.lit(1)))).alias("_i"),
-            )
-            .filter(F.col("_i") <= n)
-            .select(
-                idc,
-                F.concat_ws(
-                    " ",
-                    *[F.element_at("_ws", F.col("_i") + k) for k in range(gram_n)],
-                ).alias("_gram"),
-            )
-        )
-
+    # 4. decontamination: any shared gram_n-gram with bench drops the doc;
+    # the bench gram set broadcasts
+    ws = F.split(F.lower(text_col), r"\s+")
     bench_grams = F.broadcast(
-        grams(bench.select(F.col("bench_id"), F.col(text_col)), "bench_id", text_col)
-        .select("_gram")
-        .distinct()
+        word_ngrams(bench, ws, gram_n).select("gram").distinct()
     )
     contaminated = (
-        grams(deduped, id_col, text_col)
-        .join(bench_grams, "_gram", "left_semi")
+        word_ngrams(deduped, ws, gram_n, id_col)
+        .join(bench_grams, "gram", "left_semi")
         .select(id_col)
         .distinct()
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from rag_pipelines_spark.operators.textstats import word_ngrams
 from rag_pipelines_spark.operators.vecexpr import cos9, dot_dec, norm2
 from rag_pipelines_spark.registry import register
 from rag_pipelines_spark.queries._util import (
@@ -904,32 +905,17 @@ def q_split_leakage_safe(spark, sf_dir):
 )
 def q_ngram_diversity(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    ws = d.select("lang", F.split("text", r"\s+").alias("ws"))
-    uni = ws.select(
-        "lang", F.explode("ws").alias("g")
-    ).filter(F.col("g") != "")
-    bi = (
-        ws.filter(F.size("ws") >= 2)
-        .select(
-            "lang",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1),"
-                    " j -> struct(element_at(ws, j) AS a,"
-                    "             element_at(ws, j + 1) AS b))"
-                )
-            ).alias("p"),
-        )
-        .filter((F.col("p.a") != "") & (F.col("p.b") != ""))
-        .select("lang", F.concat_ws(" ", "p.a", "p.b").alias("g"))
-    )
+    # under \s+ an empty token occurs only at the two ends, so removing it
+    # drops exactly the oracle's uni- and bigrams that touch an empty token
+    ws = F.array_remove(F.split("text", r"\s+"), "")
+    uni, bi = (word_ngrams(d, ws, k, "lang") for k in (1, 2))
     u = uni.groupBy("lang").agg(
         F.count("*").alias("n_words"),
-        F.countDistinct("g").alias("n_distinct_words"),
+        F.countDistinct("gram").alias("n_distinct_words"),
     )
     b = bi.groupBy("lang").agg(
         F.count("*").alias("n_bigrams"),
-        F.countDistinct("g").alias("n_distinct_bigrams"),
+        F.countDistinct("gram").alias("n_distinct_bigrams"),
     )
     return u.join(b, "lang").select(
         "lang",
@@ -1365,35 +1351,13 @@ def q_bpe_token_count(spark, sf_dir):
 )
 def q_decontaminate(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split(F.lower("text"), " ").alias("ws"))
-
-    # Positions-explode pattern: the generator child is a cheap int
-    # sequence, and the gram string is assembled AFTER the explode.
-    # Exploding the shingle-string array directly triggers
-    # InferFiltersFromGenerate, which clones the whole transform chain
-    # into the parquet scan's DataFilters where it runs interpreted —
-    # measured ~8s extra at sf0.1 for zero benefit. Duplicate grams per
-    # doc are harmless here: COUNT(DISTINCT bench_id) absorbs them, so
-    # the result matches the oracle's list_distinct formulation exactly.
-    def grams(df, id_alias):
-        n_sh = F.size("ws") - 4
-        return (
-            df.select(
-                F.col("doc_id").alias(id_alias),
-                "ws",
-                F.explode(F.sequence(F.lit(1), F.greatest(n_sh, F.lit(1)))).alias("i"),
-            )
-            .filter(F.col("i") <= n_sh)
-            .select(
-                id_alias,
-                F.concat_ws(
-                    " ", *[F.element_at("ws", F.col("i") + k) for k in range(5)]
-                ).alias("gram"),
-            )
-        )
-
-    bench = grams(toks.filter(F.col("doc_id") % 50 == 0), "bench_id")
-    corpus = grams(toks, "doc_id")
+    ws = F.split(F.lower("text"), " ")
+    # duplicate grams per doc are harmless: COUNT(DISTINCT bench_id)
+    # absorbs them, so the result matches the oracle's list_distinct form
+    bench = word_ngrams(
+        d.filter(F.col("doc_id") % 50 == 0), ws, 5, "doc_id"
+    ).select(F.col("doc_id").alias("bench_id"), "gram")
+    corpus = word_ngrams(d, ws, 5, "doc_id")
     return (
         corpus.join(F.broadcast(bench), "gram")
         .filter(F.col("doc_id") != F.col("bench_id"))
@@ -1444,22 +1408,8 @@ def q_repetition_score(spark, sf_dir):
         F.size(F.array_distinct(lines)).alias("n_uniq"),
         F.split(F.lower("text"), " ").alias("ws"),
     )
-    # positions-explode (see q_decontaminate): cheap generator child, gram
-    # assembled post-explode — keeps the scan's inferred filter trivial
-    n_g = F.size("ws") - 1
     gc = (
-        base.select(
-            "doc_id",
-            "ws",
-            F.explode(F.sequence(F.lit(1), F.greatest(n_g, F.lit(1)))).alias("i"),
-        )
-        .filter(F.col("i") <= n_g)
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ", F.element_at("ws", F.col("i")), F.element_at("ws", F.col("i") + 1)
-            ).alias("gram"),
-        )
+        word_ngrams(base, "ws", 2, "doc_id")
         .groupBy("doc_id", "gram")
         .agg(F.count("*").alias("c"))
     )

@@ -113,31 +113,46 @@ def test_word_shingles_short_doc_semantics(spark):
     assert got == duck
 
 
+def _py_band_keys(text, n_hashes=8, bands=4, k=3):
+    """md5-min over the DISTINCT shingle set, then md5 of each band's
+    concatenated signatures — the band-key scheme in plain Python."""
+    toks = text.split(" ")
+    shingles = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+    if not shingles:
+        return []
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    sig = [min(md5(f"{h}|{x}") for x in shingles) for h in range(n_hashes)]
+    r = n_hashes // bands
+    return [(b, md5("".join(sig[b * r : (b + 1) * r]))) for b in range(bands)]
+
+
 def test_minhash_band_keys_default_path_equals_shingle_set_path(spark):
-    """The positions-explode default path (every shingle occurrence, no
-    per-doc distinct) gives the same (id, band, bkey) rows as the
-    word_shingles distinct-set path: a min over a multiset is the min over
-    its set. Edge rows: NULL text, '', fewer than 3 tokens, exactly 3, and
-    a doc that repeats one shingle; then the smoke corpus."""
+    """minhash_band_keys (every shingle occurrence, no per-doc distinct)
+    gives the (id, band, bkey) rows of a Python md5-min over the distinct
+    shingle set: a min over a multiset is the min over its set. Edge
+    rows: NULL text, '', fewer than 3 tokens, exactly 3, and a doc that
+    repeats one shingle; then the smoke corpus."""
     from rag_pipelines_spark.io import table
-    from rag_pipelines_spark.operators.dedup import minhash_band_keys, word_shingles
+    from rag_pipelines_spark.operators.dedup import minhash_band_keys
 
     edge = spark.createDataFrame(
         [(0, None), (1, ""), (2, "a b"), (3, "a a a"), (4, "a a a a a"),
          (5, "a b c a b c d")],
         "doc_id BIGINT, text STRING",
     )
-
-    def rows(k):
-        return sorted(tuple(r) for r in k.collect())
-
     for df in (edge, table(spark, SF_DIR_SMOKE, "documents").select("doc_id", "text")):
-        sh = df.select(
-            "doc_id", word_shingles(F.split("text", " "), 3).alias("shingles")
+        got = sorted(tuple(r) for r in minhash_band_keys(df, "doc_id", "text").collect())
+        want = sorted(
+            (r.doc_id, b, key)
+            for r in df.collect()
+            if r.text is not None
+            for b, key in _py_band_keys(r.text)
         )
-        fast = rows(minhash_band_keys(df, "doc_id", "text"))
-        assert fast
-        assert fast == rows(minhash_band_keys(df, "doc_id", "text", shingles_df=sh))
+        assert got
+        assert got == want
     # docs 3 and 4 share the one distinct shingle "a a a": same four keys
     keys = {}
     for r in minhash_band_keys(edge, "doc_id", "text").collect():

@@ -297,14 +297,19 @@ def test_batch_assign_no_global_sort_window(spark):
 
 
 def test_text_kernels_plan_no_lambda_or_python(spark):
-    """The n-gram, MinHash-shingle and BM25 tf kernels stay codegen'd
-    column math (no interpreted higher-order lambda, no Python UDF hop),
-    and the serving batch's query terms plan as a local relation, never a
-    Python RDD whose every scan starts a Python worker."""
+    """The n-gram, MinHash-shingle, DSIR-feature, n-gram-diversity and
+    BM25 tf kernels stay codegen'd column math (no interpreted
+    higher-order lambda, no Python UDF hop), and the serving batch's query
+    terms plan as a local relation, never a Python RDD whose every scan
+    starts a Python worker."""
+    from pyspark.sql import functions as F
+
     from rag_pipelines_spark.io import table
     from rag_pipelines_spark.operators.dedup import minhash_band_keys
+    from rag_pipelines_spark.operators.dsir import hashed_ngram_features
     from rag_pipelines_spark.operators.retrieval import term_hits
     from rag_pipelines_spark.operators.substrdedup import ngram_occurrences
+    from rag_pipelines_spark.operators.textstats import word_ngrams
     from rag_pipelines_spark.queries.retrieval import _qterms_df
 
     def executed(df):
@@ -316,6 +321,9 @@ def test_text_kernels_plan_no_lambda_or_python(spark):
         "ngram_occurrences": ngram_occurrences(docs, "doc_id", "text", 8),
         "minhash_band_keys": minhash_band_keys(docs, "doc_id", "text"),
         "term_hits": term_hits(docs, qterms.select("term").distinct()),
+        "word_ngrams": word_ngrams(docs, F.split("text", " "), 5, "doc_id"),
+        "hashed_ngram_features": hashed_ngram_features(docs, "doc_id", "text"),
+        "q_ngram_diversity": REG["q_ngram_diversity"].fn(spark, SF),
     }
     for name, df in kernels.items():
         plan = executed(df)

@@ -11,12 +11,14 @@ from collections import Counter
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from rag_pipelines_spark.operators.substrdedup import (
     duplicated_ngram_spans,
     ngram_occurrences,
     substring_dedup,
 )
+from rag_pipelines_spark.operators.textstats import word_ngrams
 
 
 # ---------------------------------------------------------------------------
@@ -169,36 +171,47 @@ def test_min_count_three(spark):
     assert brute_spans(docs, 2, 3) == [(0, 0, 1, 2), (1, 0, 1, 2), (2, 0, 1, 2)]
 
 
-@pytest.mark.parametrize("n", [1, 3])
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
 def test_ngram_occurrences_match_python_reference(spark, n):
-    """Every (id, pos, md5(' '.join(toks[pos:pos+n]))) and nothing else:
-    NULL text, '' and docs shorter than n give no rows ('' is one empty
-    token, so it gives one gram at n=1); a repeated gram gives one row
-    per position."""
+    """Every (id, pos, md5(' '.join(toks[pos:pos+n]))) and nothing else,
+    and textstats.word_ngrams gives the same (id, pos) rows with the gram
+    strings themselves: NULL text, '' and docs shorter than n give no rows
+    ('' is one empty token, so it gives one gram at n=1); a repeated gram
+    gives one row per position."""
     docs = [
         (0, None),
         (1, ""),
-        (2, "a b"),  # fewer than 3 tokens
+        (2, "a b"),  # fewer than 3 tokens, exactly 2
         (3, "a b c"),  # exactly 3 tokens
         (4, "a b c a b c a"),  # repeats the gram "a b c"
         (5, "x  y"),  # an empty token between two spaces
+        (6, "a b c d e"),  # exactly 5 tokens
+        (7, "a b c d e a b c d e"),  # repeats the gram "a b c d e"
     ]
-    got = sorted(
-        (r.id, r.pos, r.gh)
-        for r in ngram_occurrences(
-            spark.createDataFrame(docs, "doc_id INT, text STRING"), "doc_id", "text", n
-        ).collect()
-    )
+    df = spark.createDataFrame(docs, "doc_id INT, text STRING")
     want = sorted(
-        (i, p, hashlib.md5(" ".join(toks[p : p + n]).encode()).hexdigest())
+        (i, p, " ".join(toks[p : p + n]))
         for i, text in docs
         if text is not None
         for toks in [text.split(" ")]
         for p in range(len(toks) - n + 1)
     )
-    assert got == want
+    grams = sorted(
+        tuple(r)
+        for r in word_ngrams(df, F.split("text", " "), n, "doc_id").collect()
+    )
+    assert grams == want
+    got = sorted(
+        (r.id, r.pos, r.gh)
+        for r in ngram_occurrences(df, "doc_id", "text", n).collect()
+    )
+    assert got == [
+        (i, p, hashlib.md5(g.encode()).hexdigest()) for i, p, g in want
+    ]
     if n == 3:
         assert [p for i, p, _ in got if i == 4] == [0, 1, 2, 3, 4]
+    if n == 5:
+        assert [g for i, _, g in grams if i == 7].count("a b c d e") == 2
 
 
 # ---------------------------------------------------------------------------
