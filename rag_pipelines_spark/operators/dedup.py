@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -62,11 +62,11 @@ def word_shingles(ws, shingle_size: int = 3):
       * distinct keeps FIRST occurrence order (array_distinct semantics =
         dict.fromkeys).
 
-    Only callers that need the distinct *set* as one array use it:
-    near_dedup_pairs (exact Jaccard verification) and minhash_candidates
-    (HashingTF input). minhash_band_keys needs no array — it takes
-    shingle rows from textstats.word_ngrams, which is codegen'd and
-    beats this UDF's Python hop. Within an array, the
+    Callers: minhash_candidates (HashingTF input) and q_ngram_jaccard.
+    minhash_band_keys and near_dedup_pairs take shingle rows from
+    textstats.word_ngrams instead (near_dedup_pairs collects its
+    verification sets from those rows), which is codegen'd and beats this
+    UDF's Python hop. Within an array, the
     Arrow-batched join beats a column-expression formulation (transform
     over sequence): higher-order lambdas evaluate interpreted per element,
     measured ~9 s for 5000 docs × ~100 shingles at sf0.1 vs ~0.3 s
@@ -359,16 +359,25 @@ def minhash_band_keys(
     so the signatures equal those of the distinct shingle set
     (word_shingles).
     """
-    rows_per_band = n_hashes // bands
-    ex = word_ngrams(
+    grams = word_ngrams(
         df, F.split(F.col(text_col), " "), shingle_size, id_col
-    ).select(id_col, F.col("gram").alias("x"))
-    sig = ex.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("x")))).alias(f"s{s}")
-            for s in range(n_hashes)
-        ]
     )
+    sig = grams.groupBy(id_col).agg(*_min_hashes(n_hashes))
+    return _band_keys(sig, id_col, n_hashes, bands)
+
+
+def _min_hashes(n_hashes: int) -> list[Column]:
+    """Per-seed md5 min over a `gram` column, as aggregate columns s0..s{n-1}."""
+    return [
+        F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("gram")))).alias(f"s{s}")
+        for s in range(n_hashes)
+    ]
+
+
+def _band_keys(sig: DataFrame, id_col: str, n_hashes: int, bands: int) -> DataFrame:
+    """(id, band, bkey) from a frame of _min_hashes columns: `bands` md5
+    keys of n_hashes/bands signatures each."""
+    rows_per_band = n_hashes // bands
     band_arr = F.array(
         *[
             F.md5(
@@ -517,9 +526,9 @@ def near_dedup_pairs(
 
     The full near-dedup pipeline (candidates -> verify) in one operator,
     hash-checkable in any engine because every stage is deterministic:
-    md5 min-hashes (minhash_band_keys), bucket-collected candidate pairs
-    (band_candidate_pairs), then exact Jaccard over the distinct shingle
-    sets. The threshold compare is INTEGER cross-multiplication
+    md5 min-hashes (minhash_band_keys' scheme), bucket-collected candidate
+    pairs (band_candidate_pairs), then exact Jaccard over the distinct
+    shingle sets. The threshold compare is INTEGER cross-multiplication
     (den*inter >= num*union) — float division would flip rows whose exact
     Jaccard is a representable boundary like 4/5 (same rule as PPJoin in
     operators/setjoin.py).
@@ -528,24 +537,26 @@ def near_dedup_pairs(
     fetches the two shingle arrays per candidate via two equi-joins on id
     (shuffle keyed on id, candidate-sized probe side), so post-LSH work
     is output-sized. `array_intersect` on the already-distinct shingle
-    arrays gives the exact intersection cardinality. The shingle-set
-    frame feeds both verify sides and the Arrow-UDF subtree defeats
-    exchange reuse, so it is materialized ONCE via localCheckpoint (r10:
-    Spark recomputed it per branch). The storage cost is the
-    distinct-shingle arrays — the frame a scale deployment persists or
-    writes out anyway (SCALE.md signatures-once discipline). Band keys
-    are built from the text, not from these arrays.
+    arrays gives the exact intersection cardinality.
+
+    One split and one textstats.word_ngrams pass feed everything: a
+    single hash-agg per doc yields both the distinct shingle set
+    (collect_set) and the min-hash signatures, and that (id, shingles,
+    s0..) frame is materialized ONCE via localCheckpoint, because it
+    feeds the band keys and both verify sides (r10: Spark recomputed the
+    shingle frame per branch). The storage cost is the distinct-shingle
+    arrays — the frame a scale deployment persists or writes out anyway
+    (SCALE.md signatures-once discipline).
     """
-    toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("ws"))
+    grams = word_ngrams(
+        df, F.split(F.col(text_col), " "), shingle_size, id_col
+    )
     sh = (
-        toks.select(
-            F.col(id_col),
-            word_shingles(F.col("ws"), shingle_size).alias("shingles"),
-        )
-        .filter(F.size("shingles") > 0)
+        grams.groupBy(id_col)
+        .agg(F.collect_set("gram").alias("shingles"), *_min_hashes(n_hashes))
         .localCheckpoint(eager=True)
     )
-    keys = minhash_band_keys(df, id_col, text_col, n_hashes, bands, shingle_size)
+    keys = _band_keys(sh, id_col, n_hashes, bands)
     cand = band_candidate_pairs(keys, id_col)
     a_sh = sh.select(F.col(id_col).alias("a_id"), F.col("shingles").alias("a_sh"))
     b_sh = sh.select(F.col(id_col).alias("b_id"), F.col("shingles").alias("b_sh"))
