@@ -359,9 +359,7 @@ def minhash_band_keys(
     so the signatures equal those of the distinct shingle set
     (word_shingles).
     """
-    grams = word_ngrams(
-        df, F.split(F.col(text_col), " "), shingle_size, id_col
-    )
+    grams = word_ngrams(df, F.split(F.col(text_col), " "), shingle_size, id_col)
     sig = grams.groupBy(id_col).agg(*_min_hashes(n_hashes))
     return _band_keys(sig, id_col, n_hashes, bands)
 
@@ -388,9 +386,7 @@ def _band_keys(sig: DataFrame, id_col: str, n_hashes: int, bands: int) -> DataFr
             for b in range(bands)
         ]
     )
-    return sig.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band", "bkey")
-    )
+    return sig.select(F.col(id_col), F.posexplode(band_arr).alias("band", "bkey"))
 
 
 def band_candidate_pairs(
@@ -539,18 +535,14 @@ def near_dedup_pairs(
     is output-sized. `array_intersect` on the already-distinct shingle
     arrays gives the exact intersection cardinality.
 
-    One split and one textstats.word_ngrams pass feed everything: a
-    single hash-agg per doc yields both the distinct shingle set
-    (collect_set) and the min-hash signatures, and that (id, shingles,
-    s0..) frame is materialized ONCE via localCheckpoint, because it
-    feeds the band keys and both verify sides (r10: Spark recomputed the
-    shingle frame per branch). The storage cost is the distinct-shingle
-    arrays — the frame a scale deployment persists or writes out anyway
-    (SCALE.md signatures-once discipline).
+    One textstats.word_ngrams pass feeds one per-doc hash-agg yielding
+    the distinct shingle set (collect_set) and the min-hashes; that frame
+    feeds the band keys and both verify sides, so it is materialized ONCE
+    via localCheckpoint (r10: Spark recomputed it per branch). Its storage
+    is the frame a scale deployment persists anyway (SCALE.md
+    signatures-once discipline).
     """
-    grams = word_ngrams(
-        df, F.split(F.col(text_col), " "), shingle_size, id_col
-    )
+    grams = word_ngrams(df, F.split(F.col(text_col), " "), shingle_size, id_col)
     sh = (
         grams.groupBy(id_col)
         .agg(F.collect_set("gram").alias("shingles"), *_min_hashes(n_hashes))

@@ -57,11 +57,9 @@ def word_ngrams(df: DataFrame, toks: Column | str, n: int, *keep: str) -> DataFr
     scan's DataFilters, where it runs interpreted (measured ~8 s extra
     on q_decontaminate at sf0.1). The `pos <= size - n` filter sits
     after the Generate too: a size filter before it is pushed below the
-    projection and splits every document twice. The gram is
-    `concat_ws` over the slice, not `array_join`: concat_ws is
-    non-nullable, so a join on `gram` infers no `isnotnull(gram)` filter,
-    which would assemble every gram twice (measured +20% on
-    q_decontaminate at sf0.1).
+    projection and splits every document twice. `concat_ws`, unlike
+    `array_join`, is non-nullable, so a join on `gram` infers no
+    `isnotnull(gram)` filter that would assemble every gram twice.
     """
     ws = df.select(*keep, _c(toks).alias("_ws"))
     last = F.size("_ws") - n
